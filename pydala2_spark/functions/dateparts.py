@@ -12,7 +12,7 @@ partition pruning on e.g. ``year=2024/month=3`` is free at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # name -> expression factory (matches the reference's datepart vocabulary:
@@ -72,18 +72,3 @@ def with_truncated_columns(
     """Add a timestamp column truncated to ``unit`` (year/month/week/day/hour/minute)."""
     name = name or f"{timestamp_column}_{unit}"
     return df.withColumn(name, F.date_trunc(unit, F.col(timestamp_column)))
-
-
-def with_row_count(df: DataFrame, name: str = "row_nr", order_by: str | None = None) -> Column:
-    """Monotonic row ids.
-
-    Without ``order_by``: ``monotonically_increasing_id`` — distributed,
-    no shuffle, ids unique but not dense. With ``order_by``: a global
-    ``row_number`` window (single-partition shuffle — small data only).
-    """
-    from pyspark.sql import Window
-
-    if order_by is None:
-        return df.withColumn(name, F.monotonically_increasing_id())
-    w = Window.orderBy(F.col(order_by))
-    return df.withColumn(name, F.row_number().over(w))

@@ -101,13 +101,6 @@ def str_to_bool(col: str | Column) -> Column:
     )
 
 
-def int_to_timestamp(col: str | Column, unit: str = "us") -> Column:
-    """Epoch integer → timestamp (`pydala/schema.py:230-293` int→ts cast)."""
-    c = F.col(col) if isinstance(col, str) else col
-    divisor = {"s": 1, "ms": 1_000, "us": 1_000_000, "ns": 1_000_000_000}[unit]
-    return F.timestamp_micros((c.cast("decimal(38,0)") * 1_000_000 / divisor).cast("long"))
-
-
 # ---------------------------------------------------------------------------
 # opt_dtype (`pydala/dataset.py:2490-2603`)
 # ---------------------------------------------------------------------------

@@ -473,17 +473,6 @@ def hll_estimate_from_registers(
 # ---------------------------------------------------------------------------
 
 
-def kmv_hashes(df: DataFrame, value_col: str) -> DataFrame:
-    """Distinct 60-bit hashes of ``value_col`` — the substrate every
-    KMV estimate is computed from (one map-side-combined distinct of
-    the corpus; NULLs are not values, same rule as HLL)."""
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .select(hash60(F.col(value_col)).alias("h"))
-        .distinct()
-    )
-
-
 def kmv_bottom_k(hashes: DataFrame, k: int = 64) -> DataFrame:
     """The k smallest distinct hashes — the KMV state (Bar-Yossef et
     al. 2002). ``orderBy(h).limit(k)`` compiles to Spark's

@@ -49,18 +49,3 @@ def to_sort_columns(sort_by: SortSpec) -> list[Column]:
         c = F.col(col)
         cols.append(c.desc() if order == "desc" else c.asc())
     return cols
-
-
-def sort_column_names(sort_by: SortSpec) -> list[str]:
-    """Just the column names of a sort spec (for validation)."""
-    if sort_by is None:
-        return []
-    if isinstance(sort_by, str):
-        return [p.strip().split()[0] for p in sort_by.split(",") if p.strip()]
-    names = []
-    for entry in sort_by:
-        if isinstance(entry, str):
-            names.append(entry.strip().split()[0])
-        else:
-            names.append(entry[0])
-    return names

@@ -52,7 +52,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydala2_spark.functions.sortspec import SortSpec, to_sort_columns
-from pydala2_spark.plans.fs import delete_paths, list_files, rename
+from pydala2_spark.plans.fs import (
+    delete_paths,
+    input_file_col,
+    list_files,
+    rename,
+    schemeless_col,
+)
 from pydala2_spark.plans.stats import collect_file_stats
 
 DEFAULT_MAX_ROWS_PER_FILE = 10_000_000  # reference default, pydala/dataset.py:2100
@@ -80,50 +86,38 @@ def _publish_staging_swap(spark: SparkSession, path: str, staging: str) -> None:
 
 
 class CompactionPlan:
-    """Per-group rewrite plan; ``groups`` maps a group key (partition
-    path, interval label, or "<all>") to its member files.
+    """Per-group rewrite plan over ONE candidates frame: one row per
+    group (``__key`` — partition path, interval label or "<all>"),
+    its member ``files`` and their total ``rows``.
 
-    At 10⁶ hive partitions the per-group dict itself is driver-bound,
-    so a plan built from a candidates DataFrame stays LAZY: the frame
-    is locally checkpointed at planning time (one distributed job —
-    snapshot-consistent even after the compaction deletes the input
-    files), and the executing branches consume DataFrame forms
-    (``files`` — the flat list Spark's own FileIndex holds anyway;
-    ``pairs_df`` — the (file, group) mapping as a frame;
-    ``max_outputs_per_group`` — a one-row aggregate). The per-group
-    dicts materialize only when a caller actually reads ``.groups`` /
-    ``.rows`` (dry-run inspection, tests); ``preview(limit)`` caps the
-    collect for display at scale."""
+    The frame is locally checkpointed lazily: the first action pins the
+    row set, so the plan stays readable after the compaction deletes
+    its input files, and a dry-run plan nobody inspects costs no job.
 
-    def __init__(
-        self,
-        groups: dict[str, list[str]] | None = None,
-        rows: dict[str, int] | None = None,
-        df: DataFrame | None = None,
-    ) -> None:
-        self._groups: dict[str, list[str]] = dict(groups or {})
-        self._rows: dict[str, int] = dict(rows or {})
-        #: lazy backing frame: (__key string, files array<string>, rows long)
-        self._df = df
-        self._materialized = df is None
+    The execute paths read ONE flat list: :meth:`files_and_max_outputs`
+    collects every candidate file next to its group's
+    ``ceil(rows / max_rows_per_file)`` in a single job — the same
+    metadata Spark's own FileIndex holds for the rewrite's scan.
+    ``pairs_df`` is the (file, group) mapping as a join side. The
+    per-group dicts ``groups``/``rows`` are memoized collects for
+    inspection (dry runs, tests); the only execute path that reads them
+    is M2's loop for intervals that need more than one output file.
+    ``preview(limit)`` caps the collect for display at 10⁶ groups."""
 
-    @classmethod
-    def from_candidates(cls, df: DataFrame) -> "CompactionPlan":
-        """Wrap a candidates frame — localCheckpoint pins the row set
-        (on first action) so later (post-delete) materialization cannot
-        re-read footers of files the compaction already removed; lazy
-        so a dry-run plan nobody inspects costs zero jobs."""
-        return cls(df=df.localCheckpoint(eager=False))
+    def __init__(self, candidates: DataFrame) -> None:
+        self._df = candidates.localCheckpoint(eager=False)
+        self._groups: dict[str, list[str]] | None = None
+        self._rows: dict[str, int] = {}
 
     def _materialize(self) -> None:
-        if self._materialized:
+        if self._groups is not None:
             return
-        for r in self._df.select("__key", "files", "rows").collect():
-            self._groups[r["__key"]] = sorted(r["files"])
-            self._rows[r["__key"]] = int(r["rows"])
-        self._groups = dict(sorted(self._groups.items()))
-        self._rows = {k: self._rows[k] for k in self._groups}
-        self._materialized = True
+        got = sorted(
+            (r["__key"], sorted(r["files"]), int(r["rows"] or 0))
+            for r in self._df.select("__key", "files", "rows").collect()
+        )
+        self._groups = {k: fs for k, fs, _ in got}
+        self._rows = {k: n for k, _, n in got}
 
     @property
     def groups(self) -> dict[str, list[str]]:
@@ -136,66 +130,29 @@ class CompactionPlan:
         return self._rows
 
     def preview(self, limit: int = 20) -> dict[str, list[str]]:
-        """First ``limit`` groups (by key) WITHOUT materializing the
-        rest — the dry-run display path at millions of partitions."""
-        if self._materialized:
-            return dict(list(sorted(self._groups.items()))[:limit])
+        """First ``limit`` groups (by key) WITHOUT collecting the rest —
+        the dry-run display path at millions of partitions."""
         return {
             r["__key"]: sorted(r["files"])
             for r in self._df.select("__key", "files").sort("__key").limit(limit).collect()
         }
 
-    @property
-    def files(self) -> list[str]:
-        if self._materialized:
-            return sorted(f for fs in self._groups.values() for f in fs)
-        return sorted(
-            r["f"] for r in self._df.select(F.explode("files").alias("f")).collect()
-        )
+    def files_and_max_outputs(self, max_rows_per_file: int) -> tuple[list[str], int]:
+        """Every candidate file (sorted) and the max over groups of
+        ``ceil(rows / max_rows_per_file)`` (at least 1), from ONE
+        collect: ``explode(files)`` next to the group's ceil."""
+        got = self._df.select(
+            F.explode("files").alias("f"),
+            F.ceil(F.col("rows") / F.lit(max_rows_per_file)).alias("n"),
+        ).collect()
+        return sorted(r["f"] for r in got), max([1] + [int(r["n"] or 1) for r in got])
 
     def pairs_df(self) -> DataFrame:
         """(__file, __grp) rows as a DataFrame — the join side for
         group-routed rewrites, never a driver-side dict."""
-        if self._df is not None:
-            return self._df.select(
-                F.explode("files").alias("__file"), F.col("__key").alias("__grp")
-            )
-        spark = SparkSession.getActiveSession()
-        return spark.createDataFrame(
-            [(f, k) for k, fs in self._groups.items() for f in fs],
-            "__file string, __grp string",
+        return self._df.select(
+            F.explode("files").alias("__file"), F.col("__key").alias("__grp")
         )
-
-    def max_outputs_per_group(self, max_rows_per_file: int) -> int:
-        """max over groups of ceil(rows / max_rows_per_file) — a one-row
-        aggregate on the lazy frame, a driver loop only if already
-        materialized."""
-        if self._materialized:
-            return max(
-                (max(1, math.ceil(r / max_rows_per_file)) for r in self._rows.values()),
-                default=1,
-            )
-        row = self._df.agg(
-            F.max(F.ceil(F.col("rows") / F.lit(max_rows_per_file))).alias("m")
-        ).first()
-        return max(1, int(row["m"] or 1))
-
-    def __bool__(self) -> bool:
-        if self._materialized:
-            return bool(self._groups)
-        return not self._df.isEmpty()
-
-
-def _partition_key(parts: dict[str, str]) -> str:
-    return "/".join(f"{k}={v}" for k, v in sorted(parts.items())) or "<root>"
-
-
-def _partition_filter(parts_key: str):
-    cond = F.lit(True)
-    for seg in parts_key.split("/"):
-        k, _, v = seg.partition("=")
-        cond = cond & (F.col(k).cast("string") == v)
-    return cond
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +208,7 @@ def plan_compact_partitions(
         "files",
         "rows",
     )
-    return CompactionPlan.from_candidates(keyed)
+    return CompactionPlan(keyed)
 
 
 def compact_partitions(
@@ -268,43 +225,31 @@ def compact_partitions(
     plan = plan_compact_partitions(spark, path, max_rows_per_file, sort_by)
     if dry_run:
         return plan
-    # one collect materializes the whole plan (groups + rows + files —
-    # same metadata scale as Spark's own FileIndex): every later probe
-    # (.files emptiness, .max_outputs_per_group, the fallback loop's
-    # .groups/.rows) is then a driver dict read instead of one Spark
-    # job each (r15, guide §1.2)
-    _ = plan.groups
-    all_files = plan.files
+    all_files, _ = plan.files_and_max_outputs(max_rows_per_file)
     if not all_files:
         return plan
 
+    # ONE scan → shuffle → append rewrites every selected group,
+    # partitioned or not: a backlogged dataset with 10⁴–10⁶ candidate
+    # partitions pays one job's scheduling latency instead of one PER
+    # GROUP. Write-new-then-delete-old, so concurrent appends into the
+    # same partitions survive (dynamic partition OVERWRITE would delete
+    # files the planning snapshot never saw).
     part_cols = _discover_partition_cols(spark, path)
-    # Single-job fast path: when every group compacts to ONE output
-    # file (true by construction for the default candidate rule —
-    # rows < max_rows_per_file), all selected partitions rewrite in a
-    # single Spark job: one scan of every candidate file, one hash
-    # repartition on the partition columns (each hive partition lands
-    # on exactly one task → exactly one output file), one append. A
-    # backlogged dataset with 10⁴–10⁶ candidate partitions pays one
-    # job's scheduling latency instead of one PER GROUP — the serial
-    # driver loop was the 100 TB bottleneck (round-3 verdict #4). The
-    # write-new-then-delete-old discipline is unchanged, so concurrent
-    # appends into the same partitions survive (dynamic partition
-    # OVERWRITE would delete files the planning snapshot never saw).
-    # the aggregate only runs when the branch needs it (sorted rewrites
-    # never ask) — every plan probe here is one small job, not a
-    # per-group driver loop
-    if (
-        part_cols
-        and not sort_by
-        and plan.max_outputs_per_group(max_rows_per_file) == 1
-    ):
-        df = spark.read.option("basePath", path).parquet(*all_files)
+    df = spark.read.option("basePath", path).parquet(*all_files)
+    if sort_by:
+        # a sort_by rewrite selects EVERY partition: one range shuffle
+        # on (partition cols, sort cols) gives each task a contiguous
+        # key range, sortWithinPartitions orders it, and partitionBy
+        # routes rows to their hive dirs — files come out sorted with
+        # (near-)non-overlapping ranges; maxRecordsPerFile bounds them
+        range_cols = [F.col(c) for c in part_cols] + list(to_sort_columns(sort_by))
+        df = df.repartitionByRange(*range_cols).sortWithinPartitions(*range_cols)
+    else:
         if unique:
-            # per-partition dedup semantics (the loop reads one
-            # partition at a time): a subset key is widened with the
-            # partition columns so rows in different partitions never
-            # collapse; unique=True compares all columns, which
+            # per-partition dedup semantics: a subset key is widened
+            # with the partition columns so rows in different partitions
+            # never collapse; unique=True compares all columns, which
             # already include the partition columns
             subset = unique if isinstance(unique, list) else None
             df = (
@@ -312,64 +257,20 @@ def compact_partitions(
                 if subset
                 else df.dropDuplicates()
             )
-        (
-            df.repartition(*[F.col(c) for c in part_cols])
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-        delete_paths(spark, all_files)
-        return plan
-
-    # Single-job SORTED path: a sort_by rewrite selects EVERY partition
-    # (no candidate filter), so the per-group loop was the worst serial
-    # case — 10⁶ partitions, 10⁶ jobs. One range shuffle on
-    # (partition cols, sort cols) replaces it: each output task holds a
-    # contiguous key range, sortWithinPartitions orders it, and
-    # partitionBy routes rows to their hive dirs — per-partition files
-    # come out sorted with (near-)non-overlapping ranges, strictly
-    # better for later stats pruning than the loop's coalesce (which
-    # merged arbitrary partitions into overlapping sorted files).
-    # maxRecordsPerFile still bounds file sizes.
-    if part_cols and sort_by:
-        sort_cols = to_sort_columns(sort_by)
-        df = spark.read.option("basePath", path).parquet(*all_files)
-        range_cols = [F.col(c) for c in part_cols] + list(sort_cols)
-        (
-            df.repartitionByRange(*range_cols)
-            .sortWithinPartitions(*range_cols)
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-        delete_paths(spark, all_files)
-        return plan
-
-    # precise fallback: per-group coalesce(n_out) file-count control
-    # (unpartitioned datasets — a single group, so the loop is one job)
-    for key, files in plan.groups.items():
-        df = spark.read.option("basePath", path).parquet(*files)
-        if unique:
-            subset = unique if isinstance(unique, list) else None
-            df = df.dropDuplicates(subset) if subset else df.dropDuplicates()
-        if sort_by:
-            df = df.sortWithinPartitions(*to_sort_columns(sort_by))
-        n_rows = plan.rows.get(key, 0)
-        n_out = max(1, math.ceil(n_rows / max_rows_per_file))
-        df = df.coalesce(n_out)
-        writer = (
-            df.write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-        )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(path)
-        delete_paths(spark, files)
+        # the candidate rule (rows < max_rows_per_file) makes one output
+        # file per group correct: hash on the partition columns puts
+        # each hive partition on one task; the unpartitioned dataset is
+        # a single group
+        df = df.repartition(*[F.col(c) for c in part_cols]) if part_cols else df.coalesce(1)
+    writer = (
+        df.write.mode("append")
+        .option("compression", compression)
+        .option("maxRecordsPerFile", str(max_rows_per_file))
+    )
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(path)
+    delete_paths(spark, all_files)
     return plan
 
 
@@ -438,22 +339,22 @@ def plan_compact_by_timeperiod(
         warnings.warn(
             f"{len(statless)} parquet file(s) "
             f"under {path!r} have no footer min/max for "
-            f"{timestamp_column!r} (INT96 timestamps carry no stats); "
+            f"{timestamp_column!r} (INT96 timestamps and hive partition "
+            "columns carry none); "
             "falling back to a data scan of that column to bucket them",
             MissingFooterStatsWarning,
             stacklevel=2,
         )
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+        # basePath keeps hive partition columns in the scan (a dataset
+        # partitioned by its timestamp column has no footer stats for it)
         scanned = (
-            spark.read.parquet(*statless)
-            .select(
-                F.input_file_name().alias("__f"),
-                F.col(timestamp_column).alias("__ts"),
-            )
-            .groupBy(norm(F.col("__f")).alias("__nf"))
+            spark.read.option("basePath", path)
+            .parquet(*statless)
+            .select(input_file_col().alias("__f"), F.col(timestamp_column).alias("__ts"))
+            .groupBy("__f")
             .agg(F.min("__ts").alias("__scan_min"))
         )
-        st = st.join(scanned, norm(F.col("file_path")) == F.col("__nf"), "left")
+        st = st.join(scanned, schemeless_col(F.col("file_path")) == F.col("__f"), "left")
         min_ts = F.coalesce(min_ts, F.col("__scan_min"))
     bucket = F.floor(F.unix_timestamp(min_ts) / step)
     per_bucket = (
@@ -475,7 +376,7 @@ def plan_compact_by_timeperiod(
             "rows",
         )
     )
-    return CompactionPlan.from_candidates(per_bucket)
+    return CompactionPlan(per_bucket)
 
 
 def compact_by_timeperiod(
@@ -491,43 +392,37 @@ def compact_by_timeperiod(
     plan = plan_compact_by_timeperiod(spark, path, interval, timestamp_column)
     if dry_run:
         return plan
-    # materialize the plan dicts with ONE collect: .files and
-    # .max_outputs_per_group below then run driver-side instead of one
-    # Spark job each (the flat file list was already being collected,
-    # so driver metadata scale is unchanged — r15, guide §1.2)
-    _ = plan.groups
-    all_files = plan.files  # flat list doubles as emptiness check
+    all_files, max_outputs = plan.files_and_max_outputs(max_rows_per_file)
     if not all_files:
         return plan
     part_cols = _discover_partition_cols(spark, path)
-    one_file_groups = plan.max_outputs_per_group(max_rows_per_file) == 1
-    if one_file_groups:
-        # single-job fast path (round-3 verdict #4): rows rejoin their
-        # file's interval bucket via input_file_name() against the
-        # (file → group) map the planner already holds — a broadcast
-        # equi-join, no literal map in the plan — then ONE shuffle on
-        # (bucket, partition cols) gives each group one task and so
-        # one output file per (interval, partition), the same output
-        # granularity as the per-group loop. One scan + one append
+    # partition columns lead the order, so the partitioned writer's
+    # required ordering is already met and adds no re-sort
+    order = [F.col(c) for c in part_cols] + list(
+        to_sort_columns(sort_by or timestamp_column)
+    )
+    if max_outputs == 1:
+        # single-job fast path: rows rejoin their file's interval
+        # bucket through a broadcast equi-join against the plan's
+        # (file → group) frame, then ONE shuffle on (bucket, partition
+        # cols) puts each (interval, partition) on one task, so no
+        # interval is split across files. A task can hold SEVERAL
+        # intervals, which then share one file. One scan + one append
         # replaces 10⁴–10⁶ serial driver-looped jobs on a backlogged
-        # dataset; write-new-then-delete-old discipline unchanged.
-        # Hadoop qualifies as file:/x, input_file_name() as file:///x —
-        # compare on the scheme-free absolute path (plans/fs rule)
-        from pydala2_spark.plans.fs import schemeless_col
-
+        # dataset; write-new-then-delete-old as everywhere here.
         fmap = plan.pairs_df().select(
             schemeless_col(F.col("__file")).alias("__file"), "__grp"
         )
         df = (
             spark.read.option("basePath", path)
             .parquet(*all_files)
-            .withColumn("__file", schemeless_col(F.input_file_name()))
+            .withColumn("__file", input_file_col())
             .join(F.broadcast(fmap), "__file")
             .drop("__file")
         )
         df = df.repartition(
             F.col("__grp"), *[F.col(c) for c in part_cols]
-        ).sortWithinPartitions(*to_sort_columns(sort_by or timestamp_column))
+        ).sortWithinPartitions(*order)
         writer = (
             df.drop("__grp")
             .write.mode("append")
@@ -540,12 +435,15 @@ def compact_by_timeperiod(
         delete_paths(spark, all_files)
         return plan
 
+    # some interval needs several output files: one write per interval,
+    # coalesced to its file count FIRST — sorting before the coalesce
+    # would concatenate separately sorted partitions into unsorted files
     for key, files in plan.groups.items():
+        n_out = max(1, math.ceil(plan.rows[key] / max_rows_per_file))
         df = spark.read.option("basePath", path).parquet(*files)
-        df = df.sortWithinPartitions(*to_sort_columns(sort_by or timestamp_column))
-        n_out = max(1, math.ceil(plan.rows.get(key, 0) / max_rows_per_file))
         writer = (
             df.coalesce(n_out)
+            .sortWithinPartitions(*order)
             .write.mode("append")
             .option("compression", compression)
             .option("maxRecordsPerFile", str(max_rows_per_file))
@@ -583,15 +481,22 @@ def compact_by_rows(
             dry_run=dry_run,
             compression=compression,
         )
-    st = collect_file_stats(spark, path)
-    agg = st.agg(F.sum("num_rows").alias("rows"), F.collect_list("file_path").alias("files")).first()
-    total, files = int(agg["rows"] or 0), sorted(agg["files"] or [])
-    n_target = max(1, math.ceil(total / max_rows_per_file))
-    if len(files) > n_target or unique or sort_by:
-        plan = CompactionPlan(groups={"<all>": files}, rows={"<all>": total})
-    else:
-        plan = CompactionPlan()
-    if dry_run or not plan:
+    # the whole dataset is one "<all>" group, kept only when the rewrite
+    # changes something: more files than ceil(rows / cap), or a dedup
+    # or sort was asked for
+    cand = collect_file_stats(spark, path).agg(
+        F.lit("<all>").alias("__key"),
+        F.collect_list("file_path").alias("files"),
+        F.sum("num_rows").alias("rows"),
+    )
+    if not (unique or sort_by):
+        n_out = F.ceil(F.col("rows") / F.lit(max_rows_per_file))
+        cand = cand.filter(F.size("files") > F.greatest(n_out, F.lit(1)))
+    plan = CompactionPlan(cand)
+    if dry_run:
+        return plan
+    files, n_target = plan.files_and_max_outputs(max_rows_per_file)
+    if not files:
         return plan
 
     df = spark.read.parquet(*files)

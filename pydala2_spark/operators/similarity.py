@@ -45,10 +45,6 @@ def norm_expr(a: str) -> Column:
     )
 
 
-def cosine_expr(a: str, b: str) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def unit_expr(a: str) -> Column:
     """L2-normalized copy of a vector column (array<double>).
 

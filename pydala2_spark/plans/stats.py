@@ -89,11 +89,11 @@ def _pa_fs(path: str, registry: dict | None = None):
     """``(pyarrow.fs.FileSystem, fs-internal path)`` for any URI scheme
     the engine supports — executor-safe (pure pyarrow, no JVM gateway).
 
-    Hadoop qualifies local paths as ``file:/x`` (one slash) while
-    pyarrow's ``from_uri`` wants ``file:///x``; ``s3a://`` is Hadoop's
-    S3 connector name for what pyarrow calls ``s3://`` (credentials
-    resolve from the environment/instance profile on the executors).
-    Scheme-less paths go straight to LocalFileSystem. ``registry``
+    Hadoop qualifies local paths as ``file:/x`` (one slash); ``s3a://``
+    is Hadoop's S3 connector name for what pyarrow calls ``s3://``
+    (credentials resolve from the environment/instance profile on the
+    executors). Scheme-less and ``file:`` paths go straight to
+    LocalFileSystem, with no URI parsing. ``registry``
     (default: the process-global :func:`register_scheme_filesystem`
     table) is the explicit-filesystem override, passed BY VALUE into
     executor closures by the distributed footer scans."""
@@ -107,6 +107,10 @@ def _pa_fs(path: str, registry: dict | None = None):
     fs = reg.get(scheme)
     if fs is not None:
         return fs, p.split("://", 1)[1]
+    if scheme == "file":
+        # a Hadoop path is literal, not percent-encoded: from_uri would
+        # reject a space and decode a hive dir's "%3A" into ":"
+        return pafs.LocalFileSystem(), p[len("file://"):]
     filesystem, inner = pafs.FileSystem.from_uri(p)
     return filesystem, inner
 

@@ -780,9 +780,10 @@ def m1_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     files) inside the query itself: a silent row loss OR a bloated
     layout both fail loudly.
 
-    100 TB shape: compaction is the per-partition rewrite with
-    staging-dir atomic swap (operators/maintenance.compact_partitions
-    — lazy CompactionPlan, no driver-side group materialization)."""
+    100 TB shape: one scan → shuffle → append rewrites every candidate
+    file, then the old files are deleted; the execute path collects the
+    flat candidate file list once and never builds the per-group dict
+    (operators/maintenance.compact_partitions)."""
     import shutil
 
     from pydala2_spark.operators.maintenance import compact_partitions
@@ -1173,8 +1174,10 @@ def m2_compact_timeperiod_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     input) pins inside the query.
 
     100 TB shape: the single-job fast path — rows rejoin their
-    interval bucket via a broadcast (file → group) equi-join, ONE
-    shuffle on the bucket gives each (interval) one output file
+    interval bucket via a broadcast (file → group) equi-join, and ONE
+    shuffle on the bucket puts each interval on one task, so no
+    interval is split across files; a task can hold several
+    intervals, which then share a file
     (operators/maintenance.compact_by_timeperiod)."""
     import glob as _g
     import shutil

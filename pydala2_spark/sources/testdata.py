@@ -23,19 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 # Session-scoped SCHEMA cache: re-opening the same source parquet
 # re-reads a footer for schema inference — ~80-105 ms per open
@@ -77,11 +64,3 @@ def _fix_event_ts(df: DataFrame) -> DataFrame:
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

@@ -309,19 +309,38 @@ def test_compact_partitions_one_write_job(spark, tmp_ds_path):
         sc.setJobGroup("", "")
     assert len(plan.groups) == 8
     jobs = sc.statusTracker().getJobIdsForGroup("compact-single-job")
-    # loop path: >= 8 write jobs + planning; single-job path: planning
-    # (stats collect + candidate collect + schema discovery) + 1 write
-    assert len(jobs) < 8, f"{len(jobs)} jobs for 8 groups — still looping?"
+    # planning (footer scan + ONE collect of files and max outputs) +
+    # one write; a per-group loop would pay >= 8 write jobs alone
+    assert len(jobs) <= 5, f"{len(jobs)} jobs for 8 groups (pinned at 5)"
     assert len(list_files(spark, tmp_ds_path)) == 8  # one file per partition
     assert _snapshot(spark, tmp_ds_path) == before
+
+
+def _write_interleaved(spark, path, n_files=4, n_rows=400, **cols):
+    """``n_files`` single-file appends whose ids interleave (file i
+    holds i, i+n_files, ...): concatenating any two files' rows, each
+    file sorted, is never sorted."""
+    for i in range(n_files):
+        pdf = pd.DataFrame({"id": list(range(i, n_rows, n_files))})
+        for name, value in cols.items():
+            pdf[name] = value
+        spark.createDataFrame(pdf).repartition(1).write.mode("append").parquet(path)
+
+
+def _assert_files_sorted(spark, path, col="id"):
+    import pyarrow.parquet as pq
+
+    from pydala2_spark.plans.fs import schemeless
+
+    for f in list_files(spark, path):
+        vals = pq.read_table(schemeless(f), columns=[col])[col].to_pylist()
+        assert vals == sorted(vals), f"unsorted file {f}"
 
 
 def test_compact_sorted_single_job_and_sorted_files(spark, tmp_ds_path):
     """sort_by rewrites select EVERY partition, so they were the worst
     serial-loop case — now one range-shuffle job. Files must come out
     internally sorted and rows preserved."""
-    import pyarrow.parquet as pq
-
     pdf = make_simple_pdf(64, seed=1)
     pdf["part"] = [f"p{j % 8}" for j in range(64)]
     for _ in range(2):
@@ -342,10 +361,20 @@ def test_compact_sorted_single_job_and_sorted_files(spark, tmp_ds_path):
     # SAMPLING + one write ≈ 6; the loop path would be planning + 8
     assert len(jobs) < 8, f"{len(jobs)} jobs for 8 sorted groups — still looping?"
     assert _snapshot(spark, tmp_ds_path) == before
-    # every output file is internally sorted by id
-    for f in list_files(spark, tmp_ds_path):
-        ids = pq.read_table(f.removeprefix("file:"), columns=["id"])["id"].to_pylist()
-        assert ids == sorted(ids), f"unsorted file {f}"
+    _assert_files_sorted(spark, tmp_ds_path)
+
+
+def test_compact_unpartitioned_sorted_output_is_sorted(spark, tmp_ds_path):
+    """An unpartitioned sort_by rewrite goes through the same range
+    shuffle as the partitioned one; sorting before a coalesce(1) wrote
+    one unsorted file."""
+    _write_interleaved(spark, tmp_ds_path)
+    before = _snapshot(spark, tmp_ds_path)
+    plan = compact_partitions(spark, tmp_ds_path, sort_by="id")
+    assert list(plan.groups) == ["<root>"]
+    assert len(list_files(spark, tmp_ds_path)) < 4
+    assert _snapshot(spark, tmp_ds_path) == before
+    _assert_files_sorted(spark, tmp_ds_path)
 
 
 def test_compact_partitions_unique_subset_stays_per_partition(spark, tmp_ds_path):
@@ -466,6 +495,76 @@ def test_compact_by_timeperiod_mixed_stats_scans_only_statless(
         compact_by_timeperiod(spark, tmp_ds_path, "1d", "timestamp")
     assert len(list_files(spark, tmp_ds_path)) == 2
     assert _snapshot(spark, tmp_ds_path) == before
+
+
+def test_compact_by_timeperiod_job_count(spark, tmp_ds_path):
+    """8 day intervals of 2 files each, unpartitioned, compact in a
+    fixed number of jobs: footer scan, one plan collect, one write —
+    not one write per interval."""
+    for day in range(1, 9):
+        for half in range(2):
+            pdf = make_simple_pdf(10, seed=100 * day + 10 * half)
+            pdf["timestamp"] = pd.Timestamp(f"2024-03-{day:02d}")
+            spark.createDataFrame(pdf).repartition(1).write.mode("append").parquet(
+                tmp_ds_path
+            )
+    before = _snapshot(spark, tmp_ds_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-m2-jobs", "M2 job-count probe")
+    try:
+        plan = compact_by_timeperiod(spark, tmp_ds_path, "1d", "timestamp")
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("compact-m2-jobs")
+    assert len(plan.groups) == 8
+    assert len(jobs) <= 7, f"{len(jobs)} jobs for 8 intervals (pinned at 7)"
+    assert len(list_files(spark, tmp_ds_path)) < 16
+    assert _snapshot(spark, tmp_ds_path) == before
+
+
+def test_compact_by_timeperiod_oversized_interval_output_is_sorted(
+    spark, tmp_ds_path
+):
+    """An interval with more rows than max_rows_per_file takes the
+    per-interval loop; it must coalesce to the file count BEFORE it
+    sorts, or the files concatenate separately sorted partitions."""
+    _write_interleaved(spark, tmp_ds_path, n_rows=80, timestamp=pd.Timestamp("2024-01-01"))
+    before = _snapshot(spark, tmp_ds_path)
+    plan = compact_by_timeperiod(
+        spark, tmp_ds_path, "1d", "timestamp", max_rows_per_file=50, sort_by="id"
+    )
+    assert plan.rows == {"t1704067200": 80}
+    assert len(list_files(spark, tmp_ds_path)) == 2
+    assert _snapshot(spark, tmp_ds_path) == before
+    _assert_files_sorted(spark, tmp_ds_path)
+
+
+def test_compact_by_timeperiod_on_date_and_timestamp_partition_column(
+    spark, tmp_path
+):
+    """A dataset partitioned by its own time column has no footer stats
+    for it, so planning scans the column — which must keep the hive
+    column (basePath). A timestamp-typed partition dir holds a space and
+    "%3A" (``day=2024-01-01 00%3A00%3A00``): the footer reader must not
+    URI-parse it, and the rewrite must match rows to those files."""
+    from pydala2_spark.errors import MissingFooterStatsWarning
+
+    for kind in ("date", "timestamp"):
+        path = str(tmp_path / kind)
+        for i in range(3):
+            pdf = make_simple_pdf(8, seed=10 * i)
+            pdf["day"] = pd.to_datetime(["2024-01-01"] * 4 + ["2024-01-02"] * 4)
+            df = spark.createDataFrame(pdf.drop(columns=["timestamp"]))
+            df = df.withColumn("day", F.col("day").cast(kind))
+            df.repartition(1).write.mode("append").partitionBy("day").parquet(path)
+        assert len(list_files(spark, path)) == 6
+        before = _snapshot(spark, path)
+        with pytest.warns(MissingFooterStatsWarning, match="6 parquet file"):
+            plan = compact_by_timeperiod(spark, path, "1d", "day")
+        assert len(plan.groups) == 2, kind
+        assert dict(spark.read.parquet(path).dtypes)["day"] == kind
+        assert len(list_files(spark, path)) == 2, kind  # one file per day
+        assert _snapshot(spark, path) == before, kind
 
 
 # -- M4 repartition ------------------------------------------------------
