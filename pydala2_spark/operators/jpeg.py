@@ -12,7 +12,7 @@ correction bits, per-scan DHT redefinition, partial-stream previews),
 8-bit, 1- or 3-component, any sampling factors up to 2x2 (4:4:4 /
 4:2:2 / 4:2:0), restart markers, byte unstuffing, generic DHT tables.
 Arithmetic coding, hierarchical, and 12-bit return None — the
-caller's stub ladder handles them honestly.
+caller reports null pixels plus a ``decode_error``.
 
 Encoders: a baseline quality-parameterized writer and a progressive
 one (``encode_jpeg_progressive`` — full Annex-G scan script), used as

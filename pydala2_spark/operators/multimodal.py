@@ -9,27 +9,24 @@ training-data-pipeline extension surface, built on the conventions a
 - media is an opaque ``binary`` column plus a typed metadata struct —
   content-addressed, schema-stable, partitionable;
 - palette-PNG channel semantics: the header parser reports 1 channel
-  (index samples, header truth) where PIL reports the post-expansion
-  3 — deployments that install PIL and want expanded-channel counts
-  should reorder the decode ladder (header parse runs first here);
+  (index samples, header truth); decoded pixels are the expanded RGB;
 - cheap metadata (size, container format via magic numbers) is computed
   JVM-side with built-in functions — no Python in that path;
 - decode / feature-extract / resize / frame-sample run as Arrow-batched
   ``mapInPandas`` / ``pandas_udf`` stages (the slow path, but batched
   and columnar), sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 
-Decode is a LADDER: real codec-free header parsing first
+Every decode stage is one LADDER: codec-free header parsing
 (:func:`parse_image_header` — PNG IHDR with chunk validation, GIF
-screen descriptor, JPEG SOF segment walk; :func:`parse_wav_header` —
-RIFF chunk walk), then a PIL hook if installed, then a
-**deterministic stub** (stable pseudo-dimensions/features from an md5
-of the payload) for unrecognized payloads. Dimensions and audio
-parameters are therefore REAL for the common containers with zero
-codec dependencies; pixel/spectral kernels (resize payloads, MFCCs)
-still need PIL/ffmpeg/librosa — absent in this container — and stay
-stubbed behind the same batch shape. The Spark-side plumbing —
-schemas, UDF signatures, batch iteration, partition behavior — is
-real and tested throughout.
+screen descriptor, JPEG SOF segment walk, WebP, TIFF, BMP, netpbm;
+:func:`parse_audio_header` — WAV chunk walk, FLAC STREAMINFO, MP3
+frame header; :func:`parse_mp4_header` — ISO-BMFF box walk), then the
+pure-Python pixel / sample kernels (:func:`decode_image_pixels`,
+:func:`decode_wav_samples`), then **null fields plus a
+``decode_error`` string** naming the step that failed. A field the
+ladder could not derive is null, never invented; header values stay
+when only the pixel or sample decode fails; a row that decoded fully
+has a null ``decode_error``.
 """
 
 from __future__ import annotations
@@ -140,51 +137,14 @@ def with_media_metadata(df: DataFrame, binary_col: str, out_col: str = "media_me
     )
 
 
-# ---------------------------------------------------------------------------
-# deterministic stub kernels (swap for PIL/ffmpeg/librosa in production)
-# ---------------------------------------------------------------------------
-
-
-def _h32(payload: bytes, lo: int, hi: int) -> int:
-    return int(hashlib.md5(payload).hexdigest()[lo:hi], 16)
-
-
-def _fake_image_decode(payload: bytes) -> tuple[int, int, int]:
-    """Stable pseudo (width, height, channels) from content md5.
-    Width/height formula is mirrored in SQL oracles: 16 + hex%1008."""
-    return 16 + _h32(payload, 0, 4) % 1008, 16 + _h32(payload, 4, 8) % 1008, 3
-
-
-def _fake_embedding(payload: bytes, dim: int) -> list[float]:
-    h = hashlib.md5(payload).digest()
-    out = []
-    for i in range(dim):
-        b = h[i % 16]
-        out.append(round((b / 255.0) * 2 - 1, 6))
-        h = hashlib.md5(h).digest() if i % 16 == 15 else h
-    return out
-
-
-def _try_real_image_decode(payload: bytes):
-    try:
-        import io
-
-        from PIL import Image  # not in this container; hook for production
-
-        img = Image.open(io.BytesIO(payload))
-        return img.width, img.height, len(img.getbands())
-    except ImportError:
-        return None
-
-
 def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
-    """REAL codec-free dimension extraction from container headers —
-    no PIL needed: PNG IHDR, GIF logical screen descriptor, and a JPEG
-    segment walk to the SOF frame header all carry (width, height,
-    channels) in plain bytes. This is the exact metadata the decode
-    stage reports, so for these formats the pipeline is fully real in
-    this container; pixel access still needs a codec (PIL hook above).
-    Returns None for unrecognized payloads (fake-kernel fallback).
+    """REAL codec-free dimension extraction from container headers:
+    PNG IHDR, GIF logical screen descriptor, and a JPEG segment walk
+    to the SOF frame header all carry (width, height, channels) in
+    plain bytes. This is the exact metadata the decode stage reports;
+    pixel access is :func:`decode_image_pixels`. Returns None for
+    unrecognized payloads (the decode stages then report null
+    dimensions plus ``decode_error``).
     """
     if (
         payload[:8] == b"\x89PNG\r\n\x1a\n"
@@ -196,7 +156,7 @@ def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
         # zero or int32-overflowing dims are hostile-header territory:
         # the downstream Arrow columns are int32 and a resize scale of
         # max(0, 0) divides by zero — same rejection rule as
-        # parse_wav_header (fall back to the stub, never crash a batch)
+        # parse_wav_header (reject, never crash a batch)
         if not (0 < w < 2**31 and 0 < h < 2**31):
             return None
         # color type -> sample channels (palette indexes expand to 3
@@ -238,8 +198,8 @@ def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
                 # follows SOS and its stuffed 0xFF bytes are NOT
                 # segment markers — walking on would misread them and
                 # a spurious 0xC0-0xCF pair would yield garbage
-                # dimensions. No SOF can validly follow SOS, so fall
-                # back to the stub instead.
+                # dimensions. No SOF can validly follow SOS, so
+                # reject instead.
                 return None
             if marker == 0x01 or 0xD0 <= marker <= 0xD8:
                 i += 2  # standalone markers carry no length
@@ -248,7 +208,7 @@ def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
             if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
                 h = int.from_bytes(payload[i + 5 : i + 7], "big")
                 w = int.from_bytes(payload[i + 7 : i + 9], "big")
-                if not (w and h):  # h=0 is legal pre-DNL; stub instead
+                if not (w and h):  # h=0 is legal pre-DNL; reject instead
                     return None
                 return w, h, payload[i + 9]
             i += 2 + seglen
@@ -281,7 +241,7 @@ def parse_wav_header(payload: bytes) -> tuple[int, int, int] | None:
             # length would be fabricated
             data_len = min(clen, max(0, len(payload) - (i + 8)))
         i += 8 + clen + (clen & 1)  # chunks are word-aligned
-    # hostile/corrupt headers must fall back to the stub, not crash the
+    # hostile/corrupt headers must be rejected, not crash the
     # Arrow batch downstream: the output schema is int32 (sample_rate,
     # n_channels), so reject values that don't fit sane WAV reality
     if not rate or not ch or not bits or data_len is None:
@@ -393,8 +353,8 @@ def parse_audio_header(payload: bytes) -> tuple[int, int, int] | None:
 # raw pixel arrays; PCM WAV carries raw integer samples. Decoding them
 # needs nothing beyond numpy, which makes decode → feature-extract →
 # resize REAL end-to-end for these formats in any environment; the
-# compressed formats (PNG/JPEG/GIF, MP3/AAC) keep the header-parse +
-# stub ladder until a codec library is present.
+# compressed image formats have their own pure kernels below, and
+# compressed audio (FLAC/MP3) stops at the header parse.
 
 
 def _parse_bmp_header(payload: bytes):
@@ -479,7 +439,7 @@ def _png_unfilter(raw: bytes, pos: int, h: int, rowbytes: int, bpp: int):
     spec's byte-wise predictors at pixel width ``bpp`` bytes. Returns
     ``(uint8 array (h, rowbytes), next_pos)`` or None on an invalid
     filter byte. Sub/Average/Paeth carry intra-row dependencies —
-    sequential per byte, the cost the C-codec fast path exists for."""
+    sequential per byte, the dominant cost of pure-Python PNG decode."""
     import numpy as np
 
     out = np.zeros((h, rowbytes), np.int32)
@@ -558,10 +518,8 @@ def decode_png_pixels(payload: bytes):
     the expanded truth.
 
     Per-row Python cost is real for the sequential filters (Sub/
-    Average/Paeth carry intra-row dependencies); decode_image_pixels
-    prefers the Pillow C codec when importable behind the identical
-    signature — correctness here is pinned by forward-filter
-    round-trip tests over every filter type.
+    Average/Paeth carry intra-row dependencies); correctness is pinned
+    by forward-filter round-trip tests over every filter type.
     """
     import zlib
 
@@ -716,8 +674,7 @@ def decode_gif_pixels(payload: bytes):
     """REAL GIF pixel decode — pure-Python LZW + palette expansion +
     Adam-style 4-pass deinterlace; first image frame of GIF87a/89a.
     Returns ``(H, W, 3) uint8`` or None (corrupt / truncated /
-    palette-less). With PNG, BMP, and netpbm this leaves JPEG as the
-    only image format whose pixels still need an external codec."""
+    palette-less)."""
     import numpy as np
 
     if payload[:6] not in (b"GIF87a", b"GIF89a") or len(payload) < 14:
@@ -1121,61 +1078,6 @@ def encode_png(arr) -> bytes:
     )
 
 
-_PIL_CACHE: list = []  # memoized [Image_module_or_None]
-
-
-def _load_pil():
-    """Resolve ``PIL.Image`` once per process — None when Pillow is
-    absent (this container). Split out as a module-level hook so tests
-    can monkeypatch a fake codec and pin the ladder's preference
-    order without the real dependency."""
-    if not _PIL_CACHE:
-        try:
-            from PIL import Image  # type: ignore
-
-            _PIL_CACHE.append(Image)
-        except Exception:
-            _PIL_CACHE.append(None)
-    return _PIL_CACHE[0]
-
-
-def _codec_decode_lossless(payload: bytes):
-    """C-codec fast path: decode via Pillow when importable. Only ever
-    invoked for payloads where the codec output is BIT-IDENTICAL to
-    the pure-Python kernels (lossless containers have exactly one
-    correct pixel grid), so swapping it in cannot move any oracle —
-    but it replaces the per-byte Python unfilter/LZW loops with
-    libpng/giflib, the ~100x production win the scale notes call for.
-    Returns None when Pillow is absent or refuses the payload; the
-    caller falls back to the deterministic pure-Python kernel."""
-    Image = _load_pil()
-    if Image is None:
-        return None
-    import io
-
-    import numpy as np
-
-    try:
-        with Image.open(io.BytesIO(payload)) as im:
-            # header-only at this point; apply the same bomb guard the
-            # pure kernels enforce BEFORE pixel allocation
-            if im.width * im.height > 64_000_000:
-                return None
-            if im.mode == "P":
-                # match the pure-Python decoders' palette expansion
-                im = im.convert("RGB")
-            arr = np.asarray(im)
-    except Exception:
-        return None
-    if arr.dtype != np.uint8:
-        return None  # 16-bit etc: pure kernel owns the semantics
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    if arr.ndim != 3 or arr.size == 0:
-        return None
-    return np.ascontiguousarray(arr)
-
-
 def encode_png_ext(samples, bitd: int, ct: int, interlace: int, plte=None) -> bytes:
     """Generalized PNG encoder (filter-0 scanlines): any legal bit
     depth 1/2/4/8/16, any color type, non-interlaced or Adam7 — the
@@ -1236,7 +1138,7 @@ def encode_png_ext(samples, bitd: int, ct: int, interlace: int, plte=None) -> by
     return out + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
 
 
-def decode_image_pixels(payload: bytes, prefer_codec: str = "auto"):
+def decode_image_pixels(payload: bytes):
     """REAL pixel decode: ``(H, W, C) uint8`` numpy array for every
     common image container, all dependency-free — BMP 24/32-bit BI_RGB
     (bottom-up and top-down, row padding honored, BGR→RGB), binary
@@ -1249,21 +1151,11 @@ def decode_image_pixels(payload: bytes, prefer_codec: str = "auto"):
     WebP-lossless / VP8L (prefix codes + LZ77 + color cache + all four
     transforms, `operators/vp8l.decode_webp_pixels`), and baseline
     TIFF (strips, none/PackBits compression,
-    `operators/tiff.decode_tiff_pixels`) — or None (arithmetic JPEG /
-    lossy VP8 / tiled-LZW TIFF / unrecognized: the deterministic stub
-    ladder).
-
-    ``prefer_codec`` picks the PNG/GIF execution engine:
-
-    - ``"auto"`` (default): Pillow when importable for 8-bit PNG and
-      GIF — bit-identical output, C-speed — falling back to the
-      pure-Python kernels. JPEG always uses the in-repo decoder
-      (libjpeg's IDCT rounding differs at the last bit, and the
-      oracle queries pin OUR rounding).
-    - ``"pure"``: force the dependency-free kernels (determinism
-      audits, codec-diff testing).
-    - ``"codec"``: prefer Pillow for everything including JPEG —
-      opt-in, because lossy output is codec-specific."""
+    `operators/tiff.decode_tiff_pixels`). Returns None for everything
+    else (arithmetic JPEG / lossy VP8 / tiled-LZW TIFF / corrupt /
+    unrecognized); the decode stages turn that into null pixel fields
+    plus ``decode_error``. These kernels are the only decode path, so
+    every output is reproducible bit for bit on any platform."""
     import numpy as np
 
     bmp = _parse_bmp_header(payload)
@@ -1295,36 +1187,16 @@ def decode_image_pixels(payload: bytes, prefer_codec: str = "auto"):
             .copy()
         )
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        # codec path only for 8-bit depth (payload[24] is IHDR bitd —
-        # IHDR is mandated first): 8-bit decode is bit-identical in
-        # every conformant codec; 16-bit→8-bit reduction semantics are
-        # ours, so the pure kernel owns them
-        if prefer_codec != "pure" and len(payload) > 24 and payload[24] == 8:
-            arr = _codec_decode_lossless(payload)
-            if arr is not None:
-                return arr
         return decode_png_pixels(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
-        if prefer_codec != "pure":
-            arr = _codec_decode_lossless(payload)
-            if arr is not None:
-                return arr
         return decode_gif_pixels(payload)
     if payload[:3] == b"\xff\xd8\xff":
-        if prefer_codec == "codec":  # opt-in only: lossy, codec-specific rounding
-            arr = _codec_decode_lossless(payload)
-            if arr is not None:
-                return arr
         from pydala2_spark.operators.jpeg import decode_jpeg_pixels
 
         return decode_jpeg_pixels(payload)
     if payload[:4] in (b"II*\x00", b"MM\x00*"):
         from pydala2_spark.operators.tiff import decode_tiff_pixels
 
-        if prefer_codec != "pure":
-            arr = _codec_decode_lossless(payload)
-            if arr is not None:
-                return arr
         return decode_tiff_pixels(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
         from pydala2_spark.operators.vp8l import (
@@ -1333,10 +1205,6 @@ def decode_image_pixels(payload: bytes, prefer_codec: str = "auto"):
         )
 
         if _find_vp8l_chunk(payload) is not None:  # lossless: one true grid
-            if prefer_codec != "pure":
-                arr = _codec_decode_lossless(payload)
-                if arr is not None:
-                    return arr
             return decode_webp_pixels(payload)
         return None  # lossy VP8 frame data: out of dependency-free scope
     return None
@@ -1661,15 +1529,27 @@ def decode_wav_samples(payload: bytes):
 # decode / feature-extract / resize / frame-sample — mapInPandas stages
 # ---------------------------------------------------------------------------
 
+DECODE_ERROR_FIELD = T.StructField("decode_error", T.StringType())
+
+# decode_error values: which rung of the ladder a payload fell off
+IMAGE_UNRECOGNIZED = "unrecognized image container"
+IMAGE_UNDECODABLE = "undecodable image pixels"
+AUDIO_UNRECOGNIZED = "unrecognized audio container"
+AUDIO_UNDECODABLE = "undecodable audio samples"
+VIDEO_UNRECOGNIZED = "unrecognized video container"
+
 IMAGE_DECODE_FIELDS = [
     T.StructField("width", T.IntegerType()),
     T.StructField("height", T.IntegerType()),
     T.StructField("channels", T.IntegerType()),
+    DECODE_ERROR_FIELD,
 ]
 
 
 def decode_images(df: DataFrame, binary_col: str, passthrough: list[str]) -> DataFrame:
-    """Decode dimensions for an image column.
+    """Decode dimensions for an image column from its container header
+    (:func:`parse_image_header`); an unrecognized payload gets null
+    dimensions and a ``decode_error``.
 
     Runs as ``mapInPandas`` (Arrow batches in/out); each batch decodes
     row-wise inside the worker — at scale the cost is pure CPU on the
@@ -1683,19 +1563,11 @@ def decode_images(df: DataFrame, binary_col: str, passthrough: list[str]) -> Dat
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            # real decode ladder: header parse (always available, no
-            # codec) → PIL if installed → deterministic fake for
-            # unrecognized payloads (the test corpus's text blobs)
-            dims = [
-                parse_image_header(bytes(b))
-                or _try_real_image_decode(b)
-                or _fake_image_decode(bytes(b))
-                for b in pdf[binary_col]
-            ]
+            dims = [parse_image_header(bytes(b)) for b in pdf[binary_col]]
             out = pdf[passthrough].copy()
-            out["width"] = [d[0] for d in dims]
-            out["height"] = [d[1] for d in dims]
-            out["channels"] = [d[2] for d in dims]
+            for k, name in enumerate(("width", "height", "channels")):
+                out[name] = pd.array([d[k] if d else None for d in dims], dtype="Int32")
+            out["decode_error"] = [None if d else IMAGE_UNRECOGNIZED for d in dims]
             yield out
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
@@ -1731,31 +1603,35 @@ def extract_features(
     binary_col: str,
     passthrough: list[str],
     dim: int = 64,
-    prefer_codec: str = "auto",
 ) -> DataFrame:
     """Embedding extraction stage: binary → ``array<float>`` feature
-    vector. Decodable payloads (BMP/PPM/PGM/PNG/GIF/baseline JPEG —
-    :func:`decode_image_pixels`) get REAL grid features from their
-    pixels (note the PNG/JPEG per-row Python cost rides here); other
-    payloads keep the deterministic stub (production swaps in a model
-    call per Arrow batch). Output feeds operators.similarity /
-    operators.dedup directly."""
+    vector of REAL grid features from the decoded pixels
+    (:func:`decode_image_pixels` — the PNG/JPEG per-row Python cost
+    rides here). A payload the kernels cannot decode gets null
+    ``features`` and a ``decode_error``. Output feeds
+    operators.similarity / operators.dedup directly."""
     out_schema = T.StructType(
         [df.schema[c] for c in passthrough]
-        + [T.StructField("features", T.ArrayType(T.FloatType()))]
+        + [T.StructField("features", T.ArrayType(T.FloatType())), DECODE_ERROR_FIELD]
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = pdf[passthrough].copy()
-            feats = []
+            feats, errors = [], []
             for b in pdf[binary_col]:
                 p = bytes(b)
-                arr = decode_image_pixels(p, prefer_codec=prefer_codec)
-                feats.append(
-                    _grid_features(arr, dim) if arr is not None else _fake_embedding(p, dim)
-                )
+                arr = decode_image_pixels(p)
+                if arr is not None:
+                    feats.append(_grid_features(arr, dim))
+                    errors.append(None)
+                else:
+                    feats.append(None)
+                    errors.append(
+                        IMAGE_UNDECODABLE if parse_image_header(p) else IMAGE_UNRECOGNIZED
+                    )
+            out = pdf[passthrough].copy()
             out["features"] = feats
+            out["decode_error"] = errors
             yield out
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
@@ -1773,30 +1649,26 @@ IMAGE_PIXEL_STATS_FIELDS = [
 ]
 
 
-def image_pixel_stats(
-    df: DataFrame,
-    binary_col: str,
-    passthrough: list[str],
-    prefer_codec: str = "auto",
-) -> DataFrame:
+def image_pixel_stats(df: DataFrame, binary_col: str, passthrough: list[str]) -> DataFrame:
     """REAL pixel statistics per image — width/height/channels plus
     ``px_sum`` (over every channel byte), min/max, and the top-left
     first-channel value (which pins row order and stride handling: a
     decoder that mis-walks BMP bottom-up storage or row padding gets
-    these wrong). Non-decodable payloads keep their header/stub
-    dimensions with null pixel stats — the honest answer, never a
-    fabricated one. Arrow-batched ``mapInPandas``; numpy reductions
-    per image, no per-pixel Python."""
+    these wrong). A payload whose pixels do not decode keeps its
+    header dimensions (null when the container is unrecognized) with
+    null pixel stats and a ``decode_error``. Arrow-batched
+    ``mapInPandas``; numpy reductions per image, no per-pixel Python."""
     out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + IMAGE_PIXEL_STATS_FIELDS
+        [df.schema[c] for c in passthrough] + IMAGE_PIXEL_STATS_FIELDS + [DECODE_ERROR_FIELD]
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             cols: dict[str, list] = {f.name: [] for f in IMAGE_PIXEL_STATS_FIELDS}
+            errors = []
             for b in pdf[binary_col]:
                 p = bytes(b)
-                arr = decode_image_pixels(p, prefer_codec=prefer_codec)
+                arr = decode_image_pixels(p)
                 if arr is not None:
                     h, w, c = arr.shape
                     cols["width"].append(w)
@@ -1807,8 +1679,11 @@ def image_pixel_stats(
                     cols["px_min"].append(int(arr.min()))
                     cols["px_max"].append(int(arr.max()))
                     cols["px_topleft"].append(int(arr[0, 0, 0]))
+                    errors.append(None)
                 else:
-                    dims = parse_image_header(p) or _fake_image_decode(p)
+                    dims = parse_image_header(p)
+                    errors.append(IMAGE_UNDECODABLE if dims else IMAGE_UNRECOGNIZED)
+                    dims = dims or (None, None, None)
                     cols["width"].append(dims[0])
                     cols["height"].append(dims[1])
                     cols["channels"].append(dims[2])
@@ -1820,6 +1695,7 @@ def image_pixel_stats(
                     cols[f.name],
                     dtype="Int64" if isinstance(f.dataType, T.LongType) else "Int32",
                 )
+            out["decode_error"] = errors
             yield out
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
@@ -1844,8 +1720,8 @@ def gif_frame_stats(
     n_frames: int | None = None,
 ) -> DataFrame:
     """REAL video-style frame sampling over animated GIFs — unlike
-    :func:`sample_frames` (whose per-frame content is a stub for
-    opaque containers), every row here comes from an actually DECODED,
+    :func:`sample_frames` (whose per-frame content is a digest of the
+    opaque container), every row here comes from an actually DECODED,
     disposal-composed canvas: ``ts_ms`` is the frame's true position
     on the GCE-delay timeline and the pixel stats are reductions over
     the composed frame. ``n_frames=None`` emits every frame;
@@ -1917,17 +1793,19 @@ def audio_pcm_stats(df: DataFrame, binary_col: str, passthrough: list[str]) -> D
     sum, min/max, and channel-0 zero crossings (strict sign change:
     ``s[i-1]*s[i] < 0``) — all from :func:`decode_wav_samples`'s
     integer samples, so the numbers are exact and oracle-mirrorable.
-    Non-PCM payloads yield null stats (rate/channels from the header
-    walk when recognizable, stub otherwise)."""
+    Non-PCM payloads yield null stats and a ``decode_error``; rate and
+    channels stay when :func:`parse_audio_header` recognizes the
+    container, and are null otherwise."""
     import numpy as np
 
     out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + AUDIO_PCM_STATS_FIELDS
+        [df.schema[c] for c in passthrough] + AUDIO_PCM_STATS_FIELDS + [DECODE_ERROR_FIELD]
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             cols: dict[str, list] = {f.name: [] for f in AUDIO_PCM_STATS_FIELDS}
+            errors = []
             for b in pdf[binary_col]:
                 p = bytes(b)
                 dec = decode_wav_samples(p)
@@ -1941,12 +1819,12 @@ def audio_pcm_stats(df: DataFrame, binary_col: str, passthrough: list[str]) -> D
                     cols["s_min"].append(int(s.min()) if s.size else None)
                     cols["s_max"].append(int(s.max()) if s.size else None)
                     cols["zero_crossings"].append(int((c0[:-1] * c0[1:] < 0).sum()))
+                    errors.append(None)
                 else:
                     w = parse_audio_header(p)
-                    cols["sample_rate"].append(
-                        w[0] if w else [8000, 16000, 22050, 44100][_h32(p, 12, 14) % 4]
-                    )
-                    cols["n_channels"].append(w[1] if w else 1 + _h32(p, 14, 15) % 2)
+                    errors.append(AUDIO_UNDECODABLE if w else AUDIO_UNRECOGNIZED)
+                    cols["sample_rate"].append(w[0] if w else None)
+                    cols["n_channels"].append(w[1] if w else None)
                     for k in ("n_samples", "abs_sum", "s_min", "s_max", "zero_crossings"):
                         cols[k].append(None)
             out = pdf[passthrough].copy()
@@ -1955,6 +1833,7 @@ def audio_pcm_stats(df: DataFrame, binary_col: str, passthrough: list[str]) -> D
                     cols[f.name],
                     dtype="Int64" if isinstance(f.dataType, T.LongType) else "Int32",
                 )
+            out["decode_error"] = errors
             yield out
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
@@ -1965,6 +1844,7 @@ AUDIO_FEATURE_FIELDS = [
     T.StructField("duration_ms", T.LongType()),
     T.StructField("n_channels", T.IntegerType()),
     T.StructField("mfcc", T.ArrayType(T.FloatType())),
+    DECODE_ERROR_FIELD,
 ]
 
 
@@ -2046,42 +1926,36 @@ def extract_audio_features(
     df: DataFrame, binary_col: str, passthrough: list[str], n_mfcc: int = 13
 ) -> DataFrame:
     """Audio decode + feature stage: (sample_rate, duration, channels,
-    MFCC-like vector). Real WAV payloads get REAL parameters via the
-    codec-free metadata ladder (:func:`parse_audio_header` — WAV chunk
-    walk, FLAC STREAMINFO, MP3 frame header), and
-    integer-PCM payloads additionally get a REAL mel-cepstral vector
-    from their decoded samples (:func:`decode_wav_samples` →
-    :func:`_mfcc_features`); compressed formats and unrecognized
-    payloads fall back to the deterministic md5 stub (librosa/ffmpeg
-    absent in this container), schema and batch shape identical."""
+    MFCC-like vector). Recognized containers get REAL parameters via
+    the codec-free metadata ladder (:func:`parse_audio_header` — WAV
+    chunk walk, FLAC STREAMINFO, MP3 frame header), and decodable WAV
+    payloads additionally get a REAL mel-cepstral vector from their
+    samples (:func:`decode_wav_samples` → :func:`_mfcc_features`).
+    Compressed audio keeps its header fields with a null ``mfcc``;
+    unrecognized payloads are null throughout. Either way the row
+    carries a ``decode_error``."""
     out_schema = T.StructType([df.schema[c] for c in passthrough] + AUDIO_FEATURE_FIELDS)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = pdf[passthrough].copy()
-            payloads = [bytes(b) for b in pdf[binary_col]]
-            parsed = [parse_audio_header(p) for p in payloads]
-            out["sample_rate"] = [
-                w[0] if w else [8000, 16000, 22050, 44100][_h32(p, 12, 14) % 4]
-                for w, p in zip(parsed, payloads)
-            ]
-            out["duration_ms"] = [
-                w[2] if w else 1000 + _h32(p, 8, 12) % 59_000
-                for w, p in zip(parsed, payloads)
-            ]
-            out["n_channels"] = [
-                w[1] if w else 1 + _h32(p, 14, 15) % 2
-                for w, p in zip(parsed, payloads)
-            ]
-            mfcc = []
-            for p in payloads:
-                dec = decode_wav_samples(p)
-                mfcc.append(
-                    _mfcc_features(dec[1], dec[0], n_mfcc)
-                    if dec is not None
-                    else _fake_embedding(p, n_mfcc)
+            rates, durs, chans, mfcc, errors = [], [], [], [], []
+            for b in pdf[binary_col]:
+                p = bytes(b)
+                w = parse_audio_header(p)
+                dec = decode_wav_samples(p) if w else None
+                rates.append(w[0] if w else None)
+                durs.append(w[2] if w else None)
+                chans.append(w[1] if w else None)
+                mfcc.append(None if dec is None else _mfcc_features(dec[1], dec[0], n_mfcc))
+                errors.append(
+                    None if dec is not None else AUDIO_UNDECODABLE if w else AUDIO_UNRECOGNIZED
                 )
+            out = pdf[passthrough].copy()
+            out["sample_rate"] = pd.array(rates, dtype="Int32")
+            out["duration_ms"] = pd.array(durs, dtype="Int64")
+            out["n_channels"] = pd.array(chans, dtype="Int32")
             out["mfcc"] = mfcc
+            out["decode_error"] = errors
             yield out
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
@@ -2093,19 +1967,20 @@ def resize_images(
     passthrough: list[str],
     max_side: int = 256,
     emit_payload: bool = False,
-    prefer_codec: str = "auto",
 ) -> DataFrame:
     """Resize stage. Default: emits the clamped target dimensions
-    computed from the decoded size (pure projection over the decode
-    stage — no pixel work, oracle-mirrorable for every format).
+    computed from the header dimensions (:func:`decode_images` plus a
+    pure projection — no pixel work, oracle-mirrorable for every
+    format); an unrecognized payload has null dimensions throughout.
 
     ``emit_payload=True`` adds a ``resized_payload`` column holding a
     REAL re-encoded image: decodable payloads (BMP/PPM/PGM/PNG/GIF/
-    baseline JPEG) are nearest-neighbor resampled on their actual
-    pixels and re-encoded as 24-bit BMP (:func:`encode_bmp` — itself
-    decodable, so resize chains); non-decodable payloads carry a null
-    payload with their header/stub dimensions. One decode per image,
-    inside the same Arrow batch stage."""
+    JPEG/TIFF/WebP-lossless) are nearest-neighbor resampled on their
+    actual pixels and re-encoded as 24-bit BMP (:func:`encode_bmp` —
+    itself decodable, so resize chains); the rest carry a null
+    payload, their header dimensions when the container parses, and a
+    ``decode_error``. One decode per image, inside the same Arrow
+    batch stage."""
     if not emit_payload:
         decoded = decode_images(df, binary_col, passthrough)
         scale = F.least(
@@ -2118,6 +1993,7 @@ def resize_images(
             "height",
             F.ceil(F.col("width") * scale).cast("int").alias("resized_width"),
             F.ceil(F.col("height") * scale).cast("int").alias("resized_height"),
+            "decode_error",
         )
 
     import math
@@ -2132,6 +2008,7 @@ def resize_images(
             T.StructField("resized_width", T.IntegerType()),
             T.StructField("resized_height", T.IntegerType()),
             T.StructField("resized_payload", T.BinaryType()),
+            DECODE_ERROR_FIELD,
         ]
     )
 
@@ -2143,10 +2020,10 @@ def resize_images(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            ws, hs, rws, rhs, payloads = [], [], [], [], []
+            ws, hs, rws, rhs, payloads, errors = [], [], [], [], [], []
             for b in pdf[binary_col]:
                 p = bytes(b)
-                arr = decode_image_pixels(p, prefer_codec=prefer_codec)
+                arr = decode_image_pixels(p)
                 if arr is not None:
                     h, w = arr.shape[:2]
                     rw, rh = target(w, h)
@@ -2160,11 +2037,13 @@ def resize_images(
                     elif small.shape[2] == 2:  # gray+alpha: replicate luma
                         small = np.repeat(small[:, :, :1], 3, axis=2)
                     payloads.append(encode_bmp(small))
+                    errors.append(None)
                 else:
-                    dims = parse_image_header(p) or _fake_image_decode(p)
-                    w, h = dims[0], dims[1]
-                    rw, rh = target(w, h)
+                    dims = parse_image_header(p)
+                    w, h = dims[:2] if dims else (None, None)
+                    rw, rh = target(w, h) if dims else (None, None)
                     payloads.append(None)
+                    errors.append(IMAGE_UNDECODABLE if dims else IMAGE_UNRECOGNIZED)
                 ws.append(w)
                 hs.append(h)
                 rws.append(rw)
@@ -2175,6 +2054,7 @@ def resize_images(
             out["resized_width"] = pd.array(rws, dtype="Int32")
             out["resized_height"] = pd.array(rhs, dtype="Int32")
             out["resized_payload"] = payloads
+            out["decode_error"] = errors
             yield out
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
@@ -2187,20 +2067,25 @@ def sample_frames(
     n_frames: int = 4,
 ) -> DataFrame:
     """Video frame sampling: one input row → ``n_frames`` output rows
-    (frame_index, ts_ms, frame md5 stub). The row explosion happens
-    inside ``mapInPandas`` so a 1 GB video never materializes more than
-    once per task; at scale, repartition upstream so large videos
-    spread across executors."""
+    (frame_index, ts_ms, frame_md5 = md5 of the payload followed by
+    the frame index). ``ts_ms`` spreads the frames evenly over the
+    REAL duration of a parseable MP4 container (moov/mvhd box walk,
+    :func:`parse_mp4_header`); any other payload gets a null ``ts_ms``
+    and a ``decode_error``. The row explosion happens inside
+    ``mapInPandas`` so a 1 GB video never materializes more than once
+    per task; at scale, repartition upstream so large videos spread
+    across executors."""
     out_schema = T.StructType(
         [df.schema[c] for c in passthrough]
         + [
             T.StructField("frame_index", T.IntegerType()),
             T.StructField("ts_ms", T.LongType()),
             T.StructField("frame_md5", T.StringType()),
+            DECODE_ERROR_FIELD,
         ]
     )
 
-    cols = passthrough + ["frame_index", "ts_ms", "frame_md5"]
+    cols = passthrough + ["frame_index", "ts_ms", "frame_md5", "decode_error"]
     suffixes = [str(i).encode() for i in range(n_frames)]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2212,21 +2097,14 @@ def sample_frames(
                 yield pd.DataFrame({c: [] for c in cols})
                 continue
             payloads = [bytes(p) for p in pdf[binary_col]]
-            # vectorized explosion: frame_index tiles, everything
-            # row-level repeats — no per-row pandas iteration.
-            # Durations are REAL for parseable MP4 containers (moov/
-            # mvhd box walk), deterministic stub otherwise.
-            def dur_of(p: bytes) -> int:
-                mp4 = parse_mp4_header(p) if p[4:8] == b"ftyp" else None
-                if mp4 and mp4[0] > 0:
-                    return mp4[0]
-                return 1000 + _h32(p, 8, 12) % 59_000
-
-            idx = np.tile(np.arange(n_frames, dtype=np.int64), n)
-            durs = np.fromiter(
-                (dur_of(p) for p in payloads), dtype=np.int64, count=n
-            )
-            ts = np.repeat(durs, n_frames) * idx // n_frames
+            # frame_index tiles, everything row-level repeats — no
+            # per-row pandas iteration
+            mp4 = [parse_mp4_header(p) for p in payloads]
+            ts = [
+                None if m is None else m[0] * i // n_frames
+                for m in mp4
+                for i in range(n_frames)
+            ]
             # each payload hashes ONCE; per-frame digests fork from the
             # shared md5 state (identical to md5(payload + str(i)))
             md5s: list[str] = []
@@ -2237,9 +2115,12 @@ def sample_frames(
                     h.update(s)
                     md5s.append(h.hexdigest())
             out = {c: pdf[c].to_numpy().repeat(n_frames) for c in passthrough}
-            out["frame_index"] = idx.astype(np.int32)
-            out["ts_ms"] = ts
+            out["frame_index"] = np.tile(np.arange(n_frames, dtype=np.int32), n)
+            out["ts_ms"] = pd.array(ts, dtype="Int64")
             out["frame_md5"] = md5s
+            out["decode_error"] = [
+                None if m else VIDEO_UNRECOGNIZED for m in mp4 for _ in range(n_frames)
+            ]
             yield pd.DataFrame(out)
 
     return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)

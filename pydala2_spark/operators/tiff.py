@@ -8,7 +8,7 @@ Compression 1 (none) and 32773 (PackBits RLE), PhotometricInterpretation
 8-bit samples at 1/3/4 samples per pixel plus 16-bit grayscale
 (reduced to its most-significant byte, the same 16→8 rule as the PNG
 decoder). Tiled TIFFs, LZW/JPEG-compressed TIFFs and planar config 2
-return None — the honest stub ladder.
+return None — the caller reports null pixels plus a ``decode_error``.
 
 Reference parity: legout/pydala2 has no media surface (SURVEY.md
 §2.10) — beyond-reference multimodal extension; same plumbing
@@ -116,7 +116,7 @@ def _unpackbits(data: bytes, expected: int):
 
 def decode_tiff_pixels(payload: bytes):
     """REAL baseline-TIFF pixel decode: ``(H, W, C) uint8`` or None
-    (tiled / LZW / planar-separate / exotic depths: stub ladder)."""
+    (tiled / LZW / planar-separate / exotic depths)."""
     import numpy as np
 
     try:

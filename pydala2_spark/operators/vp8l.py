@@ -14,14 +14,12 @@ transforms, color cache, distance-mapped LZ77 runs, simple and full
 prefix-code forms — and round-trips bit-exactly, which is what the
 property tests pin. Compression uses balanced complete prefix codes
 (depth ≤ 9, always inside the spec's 15-bit limit) rather than true
-Huffman; production writers would plug libwebp behind the same
-signatures, exactly like the Pillow fast path in
-``decode_image_pixels``.
+Huffman.
 
 Reference parity: legout/pydala2 has no media surface (SURVEY.md
 §2.10) — this module is part of the beyond-reference multimodal
 extension; the plumbing contract (binary column in, numpy out, None
-for undecodable payloads so the stub ladder stays honest) matches
+for undecodable payloads, reported as null plus ``decode_error``) matches
 `operators/multimodal.decode_image_pixels`.
 
 Scale note: pure-Python per-pixel work, same tier as the PNG/GIF/JPEG
@@ -574,7 +572,7 @@ def _find_vp8l_chunk(payload: bytes):
 def decode_webp_pixels(payload: bytes, max_pixels: int = _MAX_PIXELS):
     """REAL WebP-lossless pixel decode: ``(H, W, 3|4) uint8`` numpy
     array, or None for lossy VP8 / malformed / bomb payloads (the
-    caller's deterministic stub ladder). Channel count follows the
+    caller reports null plus ``decode_error``). Channel count follows the
     stream's alpha flag, mirroring the PNG decoder's convention of
     reporting the container's declared truth."""
     import numpy as np

@@ -57,12 +57,12 @@ def analyze_dataset(
         _position_words,
     )
     from pydala2_spark.plans.fs import (
+        input_file_col,
         list_files,
         path_exists,
         qualified,
         replace_dir,
         schemeless,
-        schemeless_col,
     )
     from pydala2_spark.plans.stats import StatsIndex, ndv_sidecar_path
 
@@ -216,7 +216,7 @@ def analyze_dataset(
                 *[current[k] for k in sorted(needed)]
             )
         scan = src.select(
-            schemeless_col(F.input_file_name()).alias("__file"),
+            input_file_col().alias("__file"),
             *[F.col(c) for c in needed_cols],
         ).persist()
 

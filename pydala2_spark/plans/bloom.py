@@ -43,11 +43,11 @@ from pyspark.sql import functions as F
 
 from pydala2_spark.functions.safety import quote_identifier
 
-# Hadoop qualifies local paths as file:/x, input_file_name() as
-# file:///x — all sidecar paths are stored and compared scheme-free
-# through the package-wide rule in plans/fs.py
+# Hadoop qualifies local paths as file:/x, input_file_name() as a
+# URI-encoded file:///x — all sidecar paths are stored and compared
+# in the listing's scheme-free spelling through plans/fs.py
+from pydala2_spark.plans.fs import input_file_col as _input_file_col
 from pydala2_spark.plans.fs import schemeless as _schemeless
-from pydala2_spark.plans.fs import schemeless_col as _schemeless_col
 
 #: sentinel word_index marking "this file was indexed" even when the
 #: indexed column held no non-null values in it.
@@ -115,7 +115,7 @@ def build_bloom_index(
     df = spark.read.parquet(path)
     value_type = df.schema[column].dataType.simpleString()
     values = df.select(
-        _schemeless_col(F.input_file_name()).alias("file_path"),
+        _input_file_col().alias("file_path"),
         F.col(column).alias("__v"),
     ).where(F.col("__v").isNotNull())
 
@@ -194,7 +194,7 @@ def refresh_bloom_index(
         values = (
             spark.read.parquet(*[current[k] for k in added])
             .select(
-                _schemeless_col(F.input_file_name()).alias("file_path"),
+                _input_file_col().alias("file_path"),
                 # xxhash64 is TYPE-sensitive: cast to the sidecar's
                 # stored type so schema drift in appended files (int32
                 # vs the indexed bigint) cannot silently diverge the

@@ -691,9 +691,9 @@ def build_ndv_sketches(
     ipath = index_path or ndv_sidecar_path(path)
 
     df = spark.read.parquet(path)
-    from pydala2_spark.plans.fs import schemeless_col
+    from pydala2_spark.plans.fs import input_file_col
 
-    fp = schemeless_col(F.input_file_name())
+    fp = input_file_col()
     parts = None
     for c in columns:
         p = (
@@ -744,11 +744,11 @@ def refresh_ndv_sketches(
     would silently yield estimates of zero forever.
     Returns ``{"added": n, "removed": m, "total": k, "new_columns": c}``."""
     from pydala2_spark.plans.fs import (
+        input_file_col,
         list_files,
         qualified,
         replace_dir,
         schemeless,
-        schemeless_col,
     )
 
     from pydala2_spark.plans.fs import path_exists
@@ -785,7 +785,7 @@ def refresh_ndv_sketches(
         # new columns need sketches for EVERY current file, not just
         # the appended ones
         all_df = spark.read.parquet(*current.values())
-        fp_all = schemeless_col(F.input_file_name())
+        fp_all = input_file_col()
         for c in new_columns:
             parts.append(
                 all_df.select(fp_all.alias("file_path"), F.col(c).alias("__v"))
@@ -800,7 +800,7 @@ def refresh_ndv_sketches(
             )
     if added:
         df = spark.read.parquet(*[current[k] for k in added])
-        fp = schemeless_col(F.input_file_name())
+        fp = input_file_col()
         for c in tracked:
             parts.append(
                 df.select(fp.alias("file_path"), F.col(c).alias("__v"))

@@ -21,6 +21,75 @@ from pydala2_spark.sources.testdata import read_table
 # =====================================================================
 
 
+def _keep_text(docs: DataFrame, payload) -> DataFrame:
+    """``(doc_id, payload)``: ``payload``, except that one doc in ten
+    (doc_id % 10 = 9) keeps its UTF-8 text. No decoder recognizes the
+    text, so the oracles also pin the null + decode_error rows."""
+    return docs.select(
+        "doc_id",
+        F.when(F.col("doc_id") % 10 == 9, F.encode("text", "UTF-8"))
+        .otherwise(payload)
+        .alias("payload"),
+    )
+
+
+def _gradient_image_udf():
+    """pandas UDF doc_id → image: the gradient ``v(x, y) = (7x + 11y +
+    doc_id) % 256`` on a ``(8 + doc_id % 5) x (8 + doc_id % 7)`` grid,
+    all three channels equal, encoded per doc_id % 4 as 24-bit BMP /
+    8-bit PNG / binary PPM / GIF."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from pydala2_spark.operators.multimodal import encode_bmp, encode_gif, encode_png
+
+    @pandas_udf("binary")
+    def synth(doc_id):
+        out = []
+        for d in doc_id:
+            d = int(d)
+            w, h = 8 + d % 5, 8 + d % 7
+            v = (np.arange(w)[None, :] * 7 + np.arange(h)[:, None] * 11 + d) % 256
+            arr = np.repeat(v[:, :, None], 3, axis=2).astype(np.uint8)
+            if d % 4 == 0:
+                out.append(encode_bmp(arr))
+            elif d % 4 == 1:
+                out.append(encode_png(arr))
+            elif d % 4 == 2:
+                out.append(f"P6\n{w} {h}\n255\n".encode("ascii") + arr.tobytes())
+            else:
+                out.append(encode_gif(arr))
+        return pd.Series(out)
+
+    return synth
+
+
+def _pcm_wav_udf():
+    """pandas UDF doc_id → 16-bit mono PCM WAV: ``64 + doc_id % 64``
+    samples ``(i * 73 + doc_id * 97) % 65536 - 32768`` at
+    ``8000 + (doc_id % 5) * 1000`` Hz."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from pydala2_spark.operators.multimodal import encode_wav_pcm16
+
+    @pandas_udf("binary")
+    def synth(doc_id):
+        out = []
+        for d in doc_id:
+            d = int(d)
+            n = 64 + d % 64
+            s = ((np.arange(n, dtype=np.int64) * 73 + d * 97) % 65536 - 32768).astype(
+                np.int16
+            )
+            out.append(encode_wav_pcm16(s, 8000 + (d % 5) * 1000))
+        return pd.Series(out)
+
+    return synth
+
+
 @query(
     "mm_media_meta",
     """
@@ -50,21 +119,22 @@ def mm_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_image_decode",
     """
     SELECT doc_id,
-           CAST(16 + ('0x' || substr(md5(text), 1, 4))::BIGINT % 1008 AS INTEGER) AS width,
-           CAST(16 + ('0x' || substr(md5(text), 5, 4))::BIGINT % 1008 AS INTEGER) AS height,
-           CAST(3 AS INTEGER) AS channels
+           CAST(CASE WHEN doc_id % 10 <> 9 THEN 8 + doc_id % 5 END AS INTEGER) AS width,
+           CAST(CASE WHEN doc_id % 10 <> 9 THEN 8 + doc_id % 7 END AS INTEGER) AS height,
+           CAST(CASE WHEN doc_id % 10 <> 9 THEN 3 END AS INTEGER) AS channels,
+           CAST(CASE WHEN doc_id % 10 = 9 THEN 'unrecognized image container' END
+                AS VARCHAR) AS decode_error
     FROM documents
     """,
 )
 def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Arrow-batched mapInPandas decode stage; the deterministic stub
-    # kernel (md5-derived dims) lets the oracle verify the full batch
-    # plumbing — swap the kernel for PIL in production, the plan is
-    # identical (see operators/multimodal.py).
+    # Arrow-batched mapInPandas header decode over the shared gradient
+    # images (BMP / PNG / PPM / GIF); the text slice pins the null
+    # dimensions + decode_error rows.
     from pydala2_spark.operators.multimodal import decode_images
 
-    docs = _t(spark, sf_dir, "documents").withColumn("blob", F.encode("text", "UTF-8"))
-    return decode_images(docs, "blob", passthrough=["doc_id"])
+    docs = _keep_text(_t(spark, sf_dir, "documents"), _gradient_image_udf()("doc_id"))
+    return decode_images(docs, "payload", passthrough=["doc_id"])
 
 
 
@@ -72,24 +142,56 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_frame_sample",
     """
     WITH d AS (
-      SELECT doc_id, text, md5(text) AS h,
-             1000 + ('0x' || substr(md5(text), 9, 4))::BIGINT % 59000 AS dur
+      SELECT doc_id,
+             doc_id % 10 = 9 AS is_text,
+             CASE WHEN doc_id % 10 = 9 THEN text ELSE decode(from_hex(
+               '00000018' || '66747970' || '69736f6d' || '00000000' || '69736f6d69736f32'
+               || '00000074' || '6d6f6f76'
+               || '0000006c' || '6d766864' || repeat('00', 12) || '00000064'
+               || printf('0000%02x%02x', 1 + doc_id % 64, doc_id % 128)
+               || repeat('00', 80))) END AS payload,
+             ((1 + doc_id % 64) * 256 + doc_id % 128) * 10 AS dur
       FROM documents
     )
     SELECT doc_id,
            CAST(i AS INTEGER) AS frame_index,
-           dur * i // 4 AS ts_ms,
-           md5(text || CAST(i AS VARCHAR)) AS frame_md5
+           CAST(CASE WHEN NOT is_text THEN dur * i // 4 END AS BIGINT) AS ts_ms,
+           md5(payload || CAST(i AS VARCHAR)) AS frame_md5,
+           CAST(CASE WHEN is_text THEN 'unrecognized video container' END
+                AS VARCHAR) AS decode_error
     FROM d, unnest(generate_series(0, 3)) AS u(i)
     """,
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one row in → n_frames rows out, exploded INSIDE the Python worker
-    # (a 1 GB video never materializes twice per task).
+    """One row in → n_frames rows out, exploded INSIDE the Python
+    worker (a 1 GB video never materializes twice per task). Each
+    document carries a minimal MP4: an ``ftyp`` box, then
+    ``moov/mvhd`` (version 0) with timescale 100 and a duration of
+    ``(1 + doc_id % 64) * 256 + doc_id % 128`` ticks, so ``ts_ms``
+    comes from the real mvhd duration. Every byte stays below 0x80,
+    so the oracle rebuilds the payload as text for ``frame_md5``."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
     from pydala2_spark.operators.multimodal import sample_frames
 
-    docs = _t(spark, sf_dir, "documents").withColumn("blob", F.encode("text", "UTF-8"))
-    return sample_frames(docs, "blob", passthrough=["doc_id"], n_frames=4)
+    def box(typ: bytes, body: bytes) -> bytes:
+        return (8 + len(body)).to_bytes(4, "big") + typ + body
+
+    ftyp = box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
+
+    @pandas_udf("binary")
+    def synth(doc_id):
+        out = []
+        for d in doc_id:
+            d = int(d)
+            ticks = bytes([0, 0, 1 + d % 64, d % 128])
+            mvhd = box(b"mvhd", bytes(12) + (100).to_bytes(4, "big") + ticks + bytes(80))
+            out.append(ftyp + box(b"moov", mvhd))
+        return pd.Series(out)
+
+    docs = _keep_text(_t(spark, sf_dir, "documents"), synth("doc_id"))
+    return sample_frames(docs, "payload", passthrough=["doc_id"], n_frames=4)
 
 
 
@@ -121,7 +223,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video-frame sampling, no stub anywhere: synthesize a
+    """REAL video-frame sampling: synthesize a
     doc_id-derived ANIMATED GIF per document (2–4 frames, per-frame
     GCE delays), decode and compose every frame with the
     dependency-free animation decoder
@@ -192,12 +294,13 @@ def mm_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(3 * list_sum(vals) AS BIGINT) AS px_sum,
            CAST(list_min(vals) AS INTEGER) AS px_min,
            CAST(list_max(vals) AS INTEGER) AS px_max,
-           CAST(doc_id % 256 AS INTEGER) AS px_topleft
+           CAST(doc_id % 256 AS INTEGER) AS px_topleft,
+           CAST(NULL AS VARCHAR) AS decode_error
     FROM px
     """,
 )
 def mm_image_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL end-to-end image decode — no stub anywhere in the path:
+    """REAL end-to-end image decode:
     synthesize the SAME doc_id-derived gradient into a different
     container per document (doc_id mod 4: 24-bit BMP / 8-bit PNG /
     binary PPM / GIF) and decode the ACTUAL pixel bytes
@@ -213,37 +316,10 @@ def mm_image_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: synthesis stands in for the corpus's stored payloads —
     the decode/stats stage is one Arrow-batched pass, no shuffle, and
     only the (small) stats columns survive the stage."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pydala2_spark.operators.multimodal import image_pixel_stats
 
-    from pydala2_spark.operators.multimodal import (
-        encode_bmp,
-        encode_gif,
-        encode_png,
-        image_pixel_stats,
-    )
-
-    @pandas_udf("binary")
-    def synth(doc_id):
-        out = []
-        for d in doc_id:
-            d = int(d)
-            w, h = 8 + d % 5, 8 + d % 7
-            v = (np.arange(w)[None, :] * 7 + np.arange(h)[:, None] * 11 + d) % 256
-            arr = np.repeat(v[:, :, None], 3, axis=2).astype(np.uint8)
-            if d % 4 == 0:
-                out.append(encode_bmp(arr))
-            elif d % 4 == 1:
-                out.append(encode_png(arr))
-            elif d % 4 == 2:
-                out.append(f"P6\n{w} {h}\n255\n".encode("ascii") + arr.tobytes())
-            else:
-                out.append(encode_gif(arr))
-        return pd.Series(out)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id").withColumn(
-        "img", synth("doc_id")
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", _gradient_image_udf()("doc_id").alias("img")
     )
     return image_pixel_stats(docs, "img", ["doc_id"])
 
@@ -277,7 +353,8 @@ def mm_image_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(list_min(dec) AS INTEGER) AS px_min,
            CAST(list_max(dec) AS INTEGER) AS px_max,
            CAST(CASE WHEN m = 2 THEN (doc_id % 256 % 16) * 17
-                     ELSE doc_id % 256 END AS INTEGER) AS px_topleft
+                     ELSE doc_id % 256 END AS INTEGER) AS px_topleft,
+           CAST(NULL AS VARCHAR) AS decode_error
     FROM t
     """,
 )
@@ -358,7 +435,8 @@ def mm_image_extended_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS px_sum,
            CAST(list_min(vals) AS INTEGER) AS px_min,
            CAST(list_max(vals) AS INTEGER) AS px_max,
-           CAST(doc_id % 256 AS INTEGER) AS px_topleft
+           CAST(doc_id % 256 AS INTEGER) AS px_topleft,
+           CAST(NULL AS VARCHAR) AS decode_error
     FROM px
     """,
 )
@@ -434,7 +512,8 @@ def mm_image_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(list_min(dec) AS INTEGER) AS px_min,
            CAST(list_max(dec) AS INTEGER) AS px_max,
            CAST(CASE WHEN m = 2 THEN (doc_id % 256 % 8) * 31
-                     ELSE doc_id % 256 END AS INTEGER) AS px_topleft
+                     ELSE doc_id % 256 END AS INTEGER) AS px_topleft,
+           CAST(NULL AS VARCHAR) AS decode_error
     FROM t
     """,
 )
@@ -510,7 +589,8 @@ def mm_image_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(list_min(smp) AS INTEGER) AS s_min,
            CAST(list_max(smp) AS INTEGER) AS s_max,
            CAST(len(list_filter(range(1, len(smp)), j ->
-             smp[j] * smp[j + 1] < 0)) AS BIGINT) AS zero_crossings
+             smp[j] * smp[j + 1] < 0)) AS BIGINT) AS zero_crossings,
+           CAST(NULL AS VARCHAR) AS decode_error
     FROM s
     """,
 )
@@ -526,26 +606,10 @@ def mm_audio_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same 100 TB shape as the image path: one Arrow-batched scan stage,
     payloads never cross a shuffle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pydala2_spark.operators.multimodal import audio_pcm_stats
 
-    from pydala2_spark.operators.multimodal import audio_pcm_stats, encode_wav_pcm16
-
-    @pandas_udf("binary")
-    def synth(doc_id):
-        out = []
-        for d in doc_id:
-            d = int(d)
-            n = 64 + d % 64
-            s = ((np.arange(n, dtype=np.int64) * 73 + d * 97) % 65536 - 32768).astype(
-                np.int16
-            )
-            out.append(encode_wav_pcm16(s, 8000 + (d % 5) * 1000))
-        return pd.Series(out)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id").withColumn(
-        "wav", synth("doc_id")
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", _pcm_wav_udf()("doc_id").alias("wav")
     )
     return audio_pcm_stats(docs, "wav", ["doc_id"])
 
@@ -555,33 +619,36 @@ def mm_audio_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_audio_features",
     """
     SELECT doc_id,
-           ([8000, 16000, 22050, 44100])[1 + ('0x' || substr(md5(text), 13, 2))::BIGINT % 4]
-             AS sample_rate,
-           1000 + ('0x' || substr(md5(text), 9, 4))::BIGINT % 59000 AS duration_ms,
-           CAST(1 + ('0x' || substr(md5(text), 15, 1))::BIGINT % 2 AS INTEGER) AS n_channels,
-           13 AS n_mfcc,
-           round((('0x' || substr(md5(text), 1, 2))::BIGINT / 255.0) * 2 - 1, 4) AS mfcc_0
+           CAST(CASE WHEN doc_id % 10 <> 9 THEN 8000 + (doc_id % 5) * 1000 END
+                AS INTEGER) AS sample_rate,
+           CAST(CASE WHEN doc_id % 10 <> 9
+                     THEN (64 + doc_id % 64) * 1000 // (8000 + (doc_id % 5) * 1000) END
+                AS BIGINT) AS duration_ms,
+           CAST(CASE WHEN doc_id % 10 <> 9 THEN 1 END AS INTEGER) AS n_channels,
+           CAST(CASE WHEN doc_id % 10 <> 9 THEN 13 END AS INTEGER) AS n_mfcc,
+           doc_id % 10 <> 9 AS has_mfcc,
+           CAST(CASE WHEN doc_id % 10 = 9 THEN 'unrecognized audio container' END
+                AS VARCHAR) AS decode_error
     FROM documents
     """,
 )
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # audio decode stage over mapInPandas: the deterministic stub
-    # kernel (md5-derived rate/duration/channels/MFCCs) lets the oracle
-    # verify the full Arrow-batch plumbing; production swaps in
-    # librosa/ffmpeg per batch with the identical schema.
+    # audio decode + MFCC stage over mapInPandas on the shared PCM WAVs
+    # (header fields exact; the MFCC values themselves are pinned by
+    # the unit tests, so the oracle checks their presence and length).
     from pydala2_spark.operators.multimodal import extract_audio_features
 
-    docs = _t(spark, sf_dir, "documents").withColumn("blob", F.encode("text", "UTF-8"))
-    feats = extract_audio_features(docs, "blob", passthrough=["doc_id"], n_mfcc=13)
+    docs = _keep_text(_t(spark, sf_dir, "documents"), _pcm_wav_udf()("doc_id"))
+    feats = extract_audio_features(docs, "payload", passthrough=["doc_id"], n_mfcc=13)
+    has_mfcc = F.col("mfcc").isNotNull()
     return feats.select(
         "doc_id",
         "sample_rate",
         "duration_ms",
         "n_channels",
-        F.size("mfcc").alias("n_mfcc"),
-        # float32 storage → widen then re-round so both engines emit
-        # the same double (stub writes 6-dp values; 4-dp is exact)
-        F.round(F.element_at("mfcc", 1).cast("double"), 4).alias("mfcc_0"),
+        F.when(has_mfcc, F.size("mfcc")).alias("n_mfcc"),
+        has_mfcc.alias("has_mfcc"),
+        "decode_error",
     )
 
 
@@ -591,25 +658,30 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH d AS (
       SELECT doc_id,
-             CAST(16 + ('0x' || substr(md5(text), 1, 4))::BIGINT % 1008 AS INTEGER) AS width,
-             CAST(16 + ('0x' || substr(md5(text), 5, 4))::BIGINT % 1008 AS INTEGER) AS height
+             CASE WHEN doc_id % 10 <> 9 THEN 8 + doc_id % 5 END AS width,
+             CASE WHEN doc_id % 10 <> 9 THEN 8 + doc_id % 7 END AS height
       FROM documents
     )
-    SELECT doc_id, width, height,
-           CAST(ceil(width * least(1.0, 256.0 / greatest(width, height))) AS INTEGER)
+    SELECT doc_id,
+           CAST(width AS INTEGER) AS width,
+           CAST(height AS INTEGER) AS height,
+           CAST(ceil(width * least(1.0, 10.0 / greatest(width, height))) AS INTEGER)
              AS resized_width,
-           CAST(ceil(height * least(1.0, 256.0 / greatest(width, height))) AS INTEGER)
-             AS resized_height
+           CAST(ceil(height * least(1.0, 10.0 / greatest(width, height))) AS INTEGER)
+             AS resized_height,
+           CAST(CASE WHEN width IS NULL THEN 'unrecognized image container' END
+                AS VARCHAR) AS decode_error
     FROM d
     """,
 )
 def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # resize stage: decode (stub) → clamp longest side to 256 — the
+    # resize stage: header decode → clamp the longest side to 10 (the
+    # gradient images are 8-12 x 8-14, so both branches run) — the
     # aspect-preserving scale math runs JVM-side on the decoded dims.
     from pydala2_spark.operators.multimodal import resize_images
 
-    docs = _t(spark, sf_dir, "documents").withColumn("blob", F.encode("text", "UTF-8"))
-    return resize_images(docs, "blob", passthrough=["doc_id"], max_side=256)
+    docs = _keep_text(_t(spark, sf_dir, "documents"), _gradient_image_udf()("doc_id"))
+    return resize_images(docs, "payload", passthrough=["doc_id"], max_side=10)
 
 
 

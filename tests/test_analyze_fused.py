@@ -279,3 +279,84 @@ def test_read_pruned_safe_under_stale_index(spark, tmp_ds_path):
     assert got == 40  # the unindexed file's rows all arrive
     # prune() itself stays index-only (documented): no unindexed paths
     assert len(idx.prune("id", 5000, 5039)) == 0
+
+
+def test_sidecars_key_every_file_under_escaped_partition_dirs(spark, tmp_ds_path):
+    """A hive dir written for a timestamp string holds a space and an
+    escaped ':' (``ts=2024-01-01 00%3A00%3A00``), which
+    ``input_file_name()`` reports as ``%20`` / ``%253A``. Every
+    per-file sidecar row must still carry the listing's spelling, or
+    the words/sketches never meet their file: bloom build, NDV
+    build/refresh, and the fused analyze (full and incremental) must
+    each cover every file."""
+    import shutil
+
+    from pydala2_spark.plans.fs import list_files, qualified, schemeless
+
+    def write(seed, stamps):
+        pdf = make_simple_pdf(20 * len(stamps), seed=seed)
+        pdf["ts"] = [stamps[i % len(stamps)] for i in range(len(pdf))]
+        spark.createDataFrame(pdf).repartition(1).write.mode("append").partitionBy(
+            "ts"
+        ).parquet(tmp_ds_path)
+
+    def listing():
+        return {
+            schemeless(qualified(spark, f))
+            for f in list_files(spark, tmp_ds_path, suffixes=(".parquet",))
+        }
+
+    def word_files(col="id"):
+        return {
+            r[0] for r in _bloom_rows(spark, tmp_ds_path, col) if r[1] != _SENTINEL
+        }
+
+    def sketch_files():
+        return {f for f, c, _ in _ndv_membership(spark, tmp_ds_path) if c == "id"}
+
+    def probe_hits_every_file():
+        # one id per file: its bloom probe must keep that file
+        rows = spark.read.parquet(tmp_ds_path).select("id", "ts").collect()
+        for ts in {r["ts"] for r in rows}:
+            some_id = min(r["id"] for r in rows if r["ts"] == ts)
+            kept = bloom_prune(spark, tmp_ds_path, "id", [some_id])
+            assert any(
+                f"ts={str(ts)[:10]}" in k for k in kept
+            ), (ts, kept)
+
+    write(0, ["2024-01-01 00:00:00", "2024-01-02 12:30:00"])
+    files = listing()
+    assert len(files) == 2 and all("%3A" in f and " " in f for f in files)
+
+    # sequential builders
+    refresh_bloom_index(spark, tmp_ds_path, "id")
+    build_ndv_sketches(spark, tmp_ds_path, ["id"])
+    assert word_files() == files
+    assert sketch_files() == files
+    probe_hits_every_file()
+    assert estimate_ndv(spark, tmp_ds_path, "id") == 40
+    StatsIndex(spark, tmp_ds_path).refresh()
+    assert StatsIndex(spark, tmp_ds_path).read_pruned("id", 0, 39).count() == 40
+
+    write(40, ["2024-01-03 06:45:00"])
+    refresh_bloom_index(spark, tmp_ds_path, "id")
+    refresh_ndv_sketches(spark, tmp_ds_path)
+    files = listing()
+    assert len(files) == 3
+    assert word_files() == files and sketch_files() == files
+    assert estimate_ndv(spark, tmp_ds_path, "id") == 60
+
+    # fused analyze: full build, then an incremental append
+    for side in ("_bloom_index", "_ndv_sketches", "_stats_index"):
+        shutil.rmtree(f"{tmp_ds_path}/{side}", ignore_errors=True)
+    analyze_dataset(spark, tmp_ds_path, bloom_columns=["id"], ndv_columns=["id"])
+    assert word_files() == files and sketch_files() == files
+    probe_hits_every_file()
+    write(60, ["2024-01-04 18:15:00"])
+    analyze_dataset(spark, tmp_ds_path, bloom_columns=["id"], ndv_columns=["id"])
+    files = listing()
+    assert len(files) == 4
+    assert word_files() == files and sketch_files() == files
+    probe_hits_every_file()
+    assert estimate_ndv(spark, tmp_ds_path, "id") == 80
+    assert StatsIndex(spark, tmp_ds_path).read_pruned("id", 0, 79).count() == 80

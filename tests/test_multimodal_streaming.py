@@ -40,23 +40,26 @@ def test_decode_images_deterministic(spark):
     """Decode follows the documented ladder: real header parse first
     (the GIF rows here carry a real magic, so their body bytes ARE the
     header-parsed dimensions — garbage in, faithfully decoded out),
-    deterministic fake for everything unparseable (the PNG rows fail
-    IHDR validation, the JPEG rows fail the segment walk)."""
-    from pydala2_spark.operators.multimodal import (
-        _fake_image_decode,
-        decode_images,
-        parse_image_header,
-    )
+    null dimensions plus ``decode_error`` for everything unparseable
+    (the PNG rows fail IHDR validation, the JPEG rows fail the segment
+    walk, the MP4 rows are not images)."""
+    from pydala2_spark.operators.multimodal import decode_images, parse_image_header
 
     src = _media_df(spark, n=10)
     out = decode_images(src, "blob", passthrough=["id"]).collect()
     assert len(out) == 10
     raw = {r["id"]: bytes(r["blob"]) for r in src.collect()}
     for r in out:
-        w, h, c = parse_image_header(raw[r["id"]]) or _fake_image_decode(raw[r["id"]])
-        assert (r["width"], r["height"], r["channels"]) == (w, h, c)
-    # the fake-magic PNG/JPEG payloads fail validation -> fake kernel
+        dims = parse_image_header(raw[r["id"]])
+        if dims is None:
+            assert (r["width"], r["height"], r["channels"]) == (None, None, None)
+            assert r["decode_error"] == "unrecognized image container"
+        else:
+            assert (r["width"], r["height"], r["channels"]) == dims
+            assert r["decode_error"] is None
+    # the fake-magic PNG/JPEG payloads fail validation -> null + error
     assert parse_image_header(raw[0]) is None and parse_image_header(raw[1]) is None
+    assert parse_image_header(raw[2]) is not None  # GIF screen descriptor
     # deterministic across runs
     again = decode_images(src, "blob", passthrough=["id"]).collect()
     assert sorted(map(str, out)) == sorted(map(str, again))
@@ -98,10 +101,9 @@ def _wav_bytes(rate, ch, n_samples, bits=16):
 
 def test_decode_images_real_headers(spark):
     """Recognized containers get REAL header-derived dimensions (no
-    codec lib needed); unrecognized payloads keep the deterministic
-    fake — the ladder the decode stage documents."""
+    codec lib needed); unrecognized payloads get null dimensions and
+    a ``decode_error`` — the ladder the decode stage documents."""
     from pydala2_spark.operators.multimodal import (
-        _fake_image_decode,
         decode_images,
         parse_image_header,
         sniff_format,
@@ -116,14 +118,14 @@ def test_decode_images_real_headers(spark):
     ]
     df = spark.createDataFrame(blobs, "id long, blob binary")
     got = {
-        r["id"]: (r["width"], r["height"], r["channels"])
+        r["id"]: (r["width"], r["height"], r["channels"], r["decode_error"])
         for r in decode_images(df, "blob", passthrough=["id"]).collect()
     }
-    assert got[1] == (640, 480, 4)
-    assert got[2] == (320, 200, 3)
-    assert got[3] == (1920, 1080, 3)
-    assert got[4] == (12, 7, 3)
-    assert got[5] == _fake_image_decode(b"not an image at all")
+    assert got[1] == (640, 480, 4, None)
+    assert got[2] == (320, 200, 3, None)
+    assert got[3] == (1920, 1080, 3, None)
+    assert got[4] == (12, 7, 3, None)
+    assert got[5] == (None, None, None, "unrecognized image container")
     assert parse_image_header(b"not an image at all") is None
     # the JVM-side magic sniffer agrees on the container formats
     fmts = {
@@ -131,6 +133,115 @@ def test_decode_images_real_headers(spark):
         for r in df.select("id", sniff_format("blob").alias("f")).collect()
     }
     assert fmts[1] == "png" and fmts[2] == "gif" and fmts[3] == "jpeg"
+
+
+def _mp4_bytes(duration_ms):
+    """Minimal ISO-BMFF file: ``ftyp`` then ``moov/mvhd`` (version 0,
+    timescale 1000)."""
+
+    def box(typ, body):
+        return (8 + len(body)).to_bytes(4, "big") + typ + body
+
+    mvhd = box(b"mvhd", bytes(12) + (1000).to_bytes(4, "big") + duration_ms.to_bytes(4, "big"))
+    return box(b"ftyp", b"isom" + bytes(4) + b"isomiso2") + box(b"moov", mvhd)
+
+
+# stage -> (keyword args, payload kind, fields the ladder derives)
+_LADDER_STAGES = {
+    "decode_images": ({}, "image", ["width", "height", "channels"]),
+    "extract_features": ({"dim": 4}, "image", ["features"]),
+    "image_pixel_stats": (
+        {},
+        "image",
+        ["width", "height", "channels", "n_pixels", "px_sum", "px_min", "px_max", "px_topleft"],
+    ),
+    "audio_pcm_stats": (
+        {},
+        "audio",
+        ["sample_rate", "n_channels", "n_samples", "abs_sum", "s_min", "s_max", "zero_crossings"],
+    ),
+    "extract_audio_features": (
+        {},
+        "audio",
+        ["sample_rate", "duration_ms", "n_channels", "mfcc"],
+    ),
+    "resize_images": (
+        {"max_side": 4},
+        "image",
+        ["width", "height", "resized_width", "resized_height"],
+    ),
+    "resize_images[emit_payload]": (
+        {"max_side": 4, "emit_payload": True},
+        "image",
+        ["width", "height", "resized_width", "resized_height", "resized_payload"],
+    ),
+    "sample_frames": ({"n_frames": 3}, "video", ["ts_ms"]),
+}
+
+
+@pytest.mark.parametrize("stage", list(_LADDER_STAGES))
+def test_decode_stage_ladder_real_row_and_not_media(spark, stage):
+    """Every decode stage ends its ladder in null fields plus a
+    ``decode_error``: a real payload decodes with a null error, and
+    ``b"not media"`` gets null derived fields and a named reason —
+    never a value invented from the bytes."""
+    import numpy as np
+
+    from pydala2_spark.operators import multimodal as mm
+
+    kwargs, kind, derived = _LADDER_STAGES[stage]
+    real = {
+        "image": _gradient_bmp(6, 5, seed=4)[0],
+        "audio": mm.encode_wav_pcm16(np.array([100, -50, 25, -25], np.int16), 8000),
+        "video": _mp4_bytes(3000),
+    }[kind]
+    df = spark.createDataFrame([(0, real), (1, b"not media")], "id long, blob binary")
+    rows = getattr(mm, stage.split("[")[0])(df, "blob", ["id"], **kwargs).collect()
+    assert {r["id"] for r in rows} == {0, 1}
+    for r in rows:
+        if r["id"] == 0:
+            assert r["decode_error"] is None, r
+            assert all(r[c] is not None for c in derived), r
+        else:
+            assert r["decode_error"] == f"unrecognized {kind} container", r
+            assert all(r[c] is None for c in derived), r
+
+
+def test_header_values_stay_when_only_pixels_or_samples_fail(spark):
+    """A container the header parser recognizes but the pure kernels
+    cannot decode (lossy VP8 WebP, FLAC) keeps its real header fields;
+    only the pixel / sample fields are null, and ``decode_error``
+    names the failed rung."""
+    from pydala2_spark.operators.multimodal import (
+        extract_audio_features,
+        extract_features,
+        image_pixel_stats,
+        resize_images,
+    )
+
+    vp8 = (
+        b"RIFF" + (30).to_bytes(4, "little") + b"WEBP" + b"VP8 "
+        + (24).to_bytes(4, "little") + bytes(3) + b"\x9d\x01\x2a"
+        + (320).to_bytes(2, "little") + (240).to_bytes(2, "little") + bytes(10)
+    )
+    img = spark.createDataFrame([(0, vp8)], "id long, blob binary")
+    r = image_pixel_stats(img, "blob", ["id"]).collect()[0]
+    assert (r["width"], r["height"], r["channels"]) == (320, 240, 3)
+    assert r["px_sum"] is None and r["decode_error"] == "undecodable image pixels"
+    r = resize_images(img, "blob", ["id"], max_side=32, emit_payload=True).collect()[0]
+    assert (r["resized_width"], r["resized_height"]) == (32, 24)
+    assert r["resized_payload"] is None and r["decode_error"] == "undecodable image pixels"
+    r = extract_features(img, "blob", ["id"], dim=4).collect()[0]
+    assert r["features"] is None and r["decode_error"] == "undecodable image pixels"
+
+    # FLAC STREAMINFO: 16 kHz, 2 channels, 32000 samples -> 2000 ms
+    packed = (16000 << 44) | (1 << 41) | (15 << 36) | 32000
+    flac = b"fLaC" + bytes([0]) + (34).to_bytes(3, "big") + bytes(10)
+    flac += packed.to_bytes(8, "big") + bytes(16)
+    aud = spark.createDataFrame([(0, flac)], "id long, blob binary")
+    r = extract_audio_features(aud, "blob", ["id"]).collect()[0]
+    assert (r["sample_rate"], r["n_channels"], r["duration_ms"]) == (16000, 2, 2000)
+    assert r["mfcc"] is None and r["decode_error"] == "undecodable audio samples"
 
 
 def test_media_header_parsers_hostile_inputs():
@@ -167,7 +278,7 @@ def test_media_header_parsers_hostile_inputs():
     # SOS before any SOF: entropy-coded data follows, and its stuffed
     # bytes must NOT be misread as segments — a 0xFF 0xC0 pair inside
     # the scan stream previously yielded garbage dimensions. The walk
-    # must stop at SOS (and at EOI) and fall back to the stub.
+    # must stop at SOS (and at EOI) and reject the payload.
     sos = b"\xff\xda" + struct.pack(">H", 8) + b"\x01\x01\x00\x00\x3f\x00"
     fake_sof_in_scan = b"\x12\xff\xc0" + struct.pack(">HBHHB", 17, 8, 9, 9, 3)
     assert parse_image_header(b"\xff\xd8" + app0 + sos + fake_sof_in_scan) is None
@@ -187,25 +298,45 @@ def test_audio_features_real_wav_header(spark):
         [(1, wav), (2, b"compressed-or-unknown payload")], "id long, blob binary"
     )
     got = {
-        r["id"]: (r["sample_rate"], r["n_channels"], r["duration_ms"], len(r["mfcc"]))
-        for r in extract_audio_features(df, "blob", passthrough=["id"]).collect()
+        r["id"]: r for r in extract_audio_features(df, "blob", passthrough=["id"]).collect()
     }
-    assert got[1] == (44100, 2, 3000, 13)
-    # fallback stays in the stub's documented ranges
-    assert got[2][0] in (8000, 16000, 22050, 44100) and got[2][1] in (1, 2)
-    assert 1000 <= got[2][2] <= 60000
+    r = got[1]
+    assert (r["sample_rate"], r["n_channels"], r["duration_ms"], len(r["mfcc"])) == (
+        44100,
+        2,
+        3000,
+        13,
+    )
+    assert r["decode_error"] is None
+    # unrecognized payload: every field null, the reason named
+    r = got[2]
+    assert (r["sample_rate"], r["n_channels"], r["duration_ms"], r["mfcc"]) == (
+        None,
+        None,
+        None,
+        None,
+    )
+    assert r["decode_error"] == "unrecognized audio container"
 
 
 def test_extract_features_shape(spark):
     from pydala2_spark.operators.multimodal import extract_features
 
-    out = extract_features(_media_df(spark, n=6), "blob", passthrough=["id"], dim=32)
+    imgs = [(100 + i, _gradient_bmp(5 + i, 4, seed=i)[0]) for i in range(3)]
+    src = _media_df(spark, n=6).union(spark.createDataFrame(imgs, "id long, blob binary"))
+    out = extract_features(src, "blob", passthrough=["id"], dim=32)
     assert dict(out.dtypes)["features"] == "array<float>"
     rows = out.collect()
-    assert all(len(r["features"]) == 32 for r in rows)
-    assert all(all(-1.0 <= v <= 1.0 for v in r["features"]) for r in rows)
+    real = [r for r in rows if r["id"] >= 100]
+    assert len(real) == 3 and all(r["decode_error"] is None for r in real)
+    assert all(len(r["features"]) == 32 for r in real)
+    assert all(all(-1.0 <= v <= 1.0 for v in r["features"]) for r in real)
+    # magic-only payloads decode to nothing: null features, reason named
+    for r in rows:
+        if r["id"] < 100:
+            assert r["features"] is None and r["decode_error"] is not None
     # deterministic across runs
-    again = extract_features(_media_df(spark, n=6), "blob", passthrough=["id"], dim=32).collect()
+    again = extract_features(src, "blob", passthrough=["id"], dim=32).collect()
     assert sorted(map(str, rows)) == sorted(map(str, again))
 
 
@@ -214,8 +345,13 @@ def test_resize_and_frame_sample(spark):
 
     resized = resize_images(_media_df(spark, n=8), "blob", passthrough=["id"], max_side=64).collect()
     for r in resized:
+        if r["width"] is None:  # no parseable header: nothing to scale
+            assert r["resized_width"] is None and r["resized_height"] is None
+            assert r["decode_error"] == "unrecognized image container"
+            continue
         assert max(r["resized_width"], r["resized_height"]) <= 64
         assert r["resized_width"] <= r["width"] and r["resized_height"] <= r["height"]
+    assert any(r["width"] is not None for r in resized)  # the GIF rows
 
     frames = sample_frames(_media_df(spark, n=5), "blob", passthrough=["id"], n_frames=3)
     rows = frames.collect()
@@ -225,8 +361,10 @@ def test_resize_and_frame_sample(spark):
         by_id.setdefault(r["id"], []).append(r)
     for vid_frames in by_id.values():
         assert sorted(f["frame_index"] for f in vid_frames) == [0, 1, 2]
-        ts = [f["ts_ms"] for f in sorted(vid_frames, key=lambda f: f["frame_index"])]
-        assert ts == sorted(ts) and ts[0] == 0
+        # magic-only payloads carry no moov/mvhd: timestamps unknown
+        assert all(f["ts_ms"] is None for f in vid_frames)
+        assert all(f["decode_error"] == "unrecognized video container" for f in vid_frames)
+        assert len({f["frame_md5"] for f in vid_frames}) == 3
 
 
 # -- streaming -----------------------------------------------------------
@@ -727,7 +865,8 @@ def test_sniff_format_structural_guards(spark):
 
 def test_image_pixel_stats_real_and_null_ladder(spark):
     """Decodable payloads yield EXACT numpy-verified pixel stats; text
-    payloads keep stub dims with null stats — never fabricated."""
+    payloads are null throughout with a ``decode_error`` — never
+    fabricated."""
     import numpy as np
 
     from pydala2_spark.operators.multimodal import image_pixel_stats
@@ -746,7 +885,9 @@ def test_image_pixel_stats_real_and_null_ladder(spark):
         assert r["px_sum"] == int(a.sum(dtype="int64"))
         assert r["px_min"] == int(a.min()) and r["px_max"] == int(a.max())
         assert r["px_topleft"] == int(a[0, 0, 0])  # pins row order
-    assert got[2]["px_sum"] is None and got[2]["width"] > 0
+    assert all(got[i]["decode_error"] is None for i in (0, 1))
+    assert got[2]["px_sum"] is None and got[2]["width"] is None
+    assert got[2]["decode_error"] == "unrecognized image container"
 
 
 def test_audio_pcm_stats_exact(spark):
@@ -771,7 +912,9 @@ def test_audio_pcm_stats_exact(spark):
     assert (r["s_min"], r["s_max"]) == (-50, 100)
     assert r["zero_crossings"] == 3
     assert got[1]["n_channels"] == 2 and got[1]["abs_sum"] == 2 * r["abs_sum"]
-    assert got[2]["n_samples"] is None and got[2]["sample_rate"] > 0
+    assert got[0]["decode_error"] is None and got[1]["decode_error"] is None
+    assert got[2]["n_samples"] is None and got[2]["sample_rate"] is None
+    assert got[2]["decode_error"] == "unrecognized audio container"
 
 
 def test_extract_features_real_grid(spark):
@@ -846,12 +989,11 @@ def test_mel_filterbank_centers_and_tone_recovery():
 
 def test_extract_audio_features_real_mfcc(spark):
     """Decodable PCM drives REAL mel-cepstral features through the
-    Arrow-batched stage; text payloads keep the md5 stub (ladder
-    unchanged); the distributed result equals the local kernel."""
+    Arrow-batched stage; text payloads get a null ``mfcc`` and a
+    ``decode_error``; the distributed result equals the local kernel."""
     import numpy as np
 
     from pydala2_spark.operators.multimodal import (
-        _fake_embedding,
         _mfcc_features,
         encode_wav_pcm16,
         extract_audio_features,
@@ -869,8 +1011,9 @@ def test_extract_audio_features_real_mfcc(spark):
     want = _mfcc_features(s[:, None], rate, 13)
     assert np.allclose(got[0]["mfcc"], want, atol=1e-5)
     assert got[0]["sample_rate"] == rate and got[0]["duration_ms"] == 1000
-    stub = [round(x, 4) for x in _fake_embedding(text, 13)]
-    assert [round(x, 4) for x in got[1]["mfcc"]] == stub
+    assert got[0]["decode_error"] is None
+    assert got[1]["mfcc"] is None and got[1]["sample_rate"] is None
+    assert got[1]["decode_error"] == "unrecognized audio container"
 
 
 def test_resize_images_emit_payload_real(spark):
@@ -905,8 +1048,10 @@ def test_resize_images_emit_payload_real(spark):
     # nearest-neighbor: output column j samples source column j*32//8
     expect = (np.arange(8) * 32 // 8 * 8).astype(np.uint8)
     assert np.array_equal(small[0, :, 0], expect)
-    assert got[1]["resized_payload"] is None and got[1]["resized_width"] > 0
-    # stub path (default) unchanged: no payload column
+    assert r["decode_error"] is None
+    assert got[1]["resized_payload"] is None and got[1]["resized_width"] is None
+    assert got[1]["decode_error"] == "unrecognized image container"
+    # default (header-only) path: no payload column
     assert "resized_payload" not in resize_images(df, "blob", ["id"]).columns
 
 
@@ -1222,98 +1367,6 @@ def test_image_bomb_ratio_guards_and_wav_fmt_clen():
     assert parse_wav_header(short_fmt) is None
 
 
-def test_codec_ladder_prefers_pil_for_lossless(monkeypatch):
-    """decode_image_pixels prefers the C codec (Pillow) when
-    importable — but ONLY where its output is bit-identical: 8-bit
-    PNG and GIF take the codec path; JPEG and 16-bit PNG stay on the
-    deterministic pure-Python kernels unless explicitly opted in;
-    a codec failure falls back to the pure kernel."""
-    import io
-
-    import numpy as np
-
-    from pydala2_spark.operators import multimodal as mm
-    from pydala2_spark.operators.jpeg import encode_jpeg
-    from pydala2_spark.operators.multimodal import (
-        decode_image_pixels,
-        decode_png_pixels,
-        encode_gif,
-        encode_png,
-    )
-
-    sentinel = np.full((3, 4, 3), 7, dtype=np.uint8)
-
-    class FakeIm:
-        def __init__(self, arr):
-            self._arr, self.width, self.height = arr, arr.shape[1], arr.shape[0]
-            self.mode = "RGB"
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def convert(self, mode):
-            return self
-
-        def __array__(self, dtype=None, copy=None):
-            return self._arr
-
-    class FakePIL:
-        def __init__(self, arr, fail=False):
-            self._arr, self._fail, self.calls = arr, fail, 0
-
-        def open(self, fp):
-            assert isinstance(fp, io.BytesIO)
-            self.calls += 1
-            if self._fail:
-                raise OSError("cannot identify image file")
-            return FakeIm(self._arr)
-
-    rng = np.random.default_rng(23)
-    a = rng.integers(0, 256, (5, 6, 3), dtype=np.uint8)
-    png, gif, jpg = encode_png(a), encode_gif((a // 32) * 32), encode_jpeg(a)
-    # default (no PIL in this container): cache resolves to None → pure
-    monkeypatch.setattr(mm, "_PIL_CACHE", [None])
-    assert np.array_equal(decode_image_pixels(png), a)
-    # fake codec present: lossless formats take the codec path
-    fake = FakePIL(sentinel)
-    monkeypatch.setattr(mm, "_PIL_CACHE", [fake])
-    assert np.array_equal(decode_image_pixels(png), sentinel)
-    assert fake.calls == 1
-    assert np.array_equal(decode_image_pixels(gif), sentinel)
-    # prefer_codec='pure' forces the dependency-free kernel
-    assert np.array_equal(decode_image_pixels(png, prefer_codec="pure"), a)
-    # JPEG: codec NOT consulted under auto (lossy rounding is ours)...
-    calls_before = fake.calls
-    out = decode_image_pixels(jpg)
-    assert fake.calls == calls_before and out is not None
-    # ...but opt-in prefer_codec='codec' uses it
-    assert np.array_equal(decode_image_pixels(jpg, prefer_codec="codec"), sentinel)
-    # 16-bit PNG: pure kernel owns the reduction semantics
-    a16 = rng.integers(0, 65536, (4, 4, 3), dtype=np.uint16)
-    png16 = _encode_png_any(a16, 16, 2, 0)
-    calls_before = fake.calls
-    assert np.array_equal(decode_image_pixels(png16), (a16 >> 8).astype(np.uint8))
-    assert fake.calls == calls_before
-    # codec failure → pure fallback, same pixels as the kernel
-    monkeypatch.setattr(mm, "_PIL_CACHE", [FakePIL(sentinel, fail=True)])
-    assert np.array_equal(decode_image_pixels(png), a)
-    # bomb guard applies inside the codec path too
-    big = FakeIm(sentinel)
-    big.width = big.height = 10_000  # 100M px > 64M guard
-
-    class FakePILBig(FakePIL):
-        def open(self, fp):
-            self.calls += 1
-            return big
-
-    monkeypatch.setattr(mm, "_PIL_CACHE", [FakePILBig(sentinel)])
-    assert np.array_equal(decode_image_pixels(png), a)  # guard → pure fallback
-    assert np.array_equal(decode_png_pixels(png), a)
-
-
 def test_gif_decode_roundtrip_interlace_and_rejects():
     """Real GIF decode: LZW inverts the encoder across palette sizes
     (incl. the 256-color width-growth path), interlaced storage
@@ -1598,9 +1651,10 @@ def test_mp4_and_webp_headers_real(spark):
     )
     got = {}
     for r in sample_frames(df, "blob", ["id"], n_frames=4).collect():
-        got.setdefault(r["id"], []).append(r["ts_ms"])
-    assert sorted(got[0]) == [0, 5500 * 1 // 4, 5500 * 2 // 4, 5500 * 3 // 4]
-    assert len(got[1]) == 4 and max(got[1]) > 0  # stub path intact
+        got.setdefault(r["id"], []).append((r["ts_ms"], r["decode_error"]))
+    assert sorted(got[0]) == [(5500 * i // 4, None) for i in range(4)]
+    # not a video: four frame rows, unknown timestamps, the reason named
+    assert got[1] == [(None, "unrecognized video container")] * 4
 
 
 def test_resize_emit_payload_handles_every_channel_count(spark):
@@ -1650,7 +1704,7 @@ def test_hostile_media_findings_round6_review():
     assert parse_image_header(zero_png) is None
     big_png = _png_bytes(0x80000005, 7)
     assert parse_image_header(big_png) is None
-    # JPEG SOF with h=0 (pre-DNL form) -> stub, not a 0-height image
+    # JPEG SOF with h=0 (pre-DNL form) -> None, not a 0-height image
     app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
     sof0 = b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, 0, 64, 3)
     assert parse_image_header(b"\xff\xd8" + app0 + sof0) is None

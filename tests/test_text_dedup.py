@@ -292,18 +292,27 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_extract_audio_features_shape(spark):
-    from pydala2_spark.operators.multimodal import extract_audio_features
+    import numpy as np
 
-    df = spark.createDataFrame(
-        [(i, f"audio-{i}".encode() * 10) for i in range(6)], "id long, blob binary"
-    )
+    from pydala2_spark.operators.multimodal import encode_wav_pcm16, extract_audio_features
+
+    rates = [8000, 16000, 22050, 44100]
+    wavs = [
+        (i, encode_wav_pcm16(np.arange(rates[i] // 10, dtype=np.int16) * 7, rates[i]))
+        for i in range(4)
+    ]
+    text = [(i, f"audio-{i}".encode() * 10) for i in range(4, 6)]
+    df = spark.createDataFrame(wavs + text, "id long, blob binary")
     out = extract_audio_features(df, "blob", passthrough=["id"], n_mfcc=13).collect()
     assert len(out) == 6
     for r in out:
-        assert r["sample_rate"] in (8000, 16000, 22050, 44100)
-        assert 1000 <= r["duration_ms"] <= 60000
-        assert r["n_channels"] in (1, 2)
-        assert len(r["mfcc"]) == 13
+        if r["id"] < 4:
+            assert r["sample_rate"] == rates[r["id"]]
+            assert r["duration_ms"] == 100 and r["n_channels"] == 1
+            assert len(r["mfcc"]) == 13 and r["decode_error"] is None
+        else:
+            assert r["sample_rate"] is None and r["mfcc"] is None
+            assert r["decode_error"] == "unrecognized audio container"
 
 
 def test_duplicate_clusters_transitive(spark):

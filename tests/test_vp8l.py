@@ -203,31 +203,19 @@ def test_bitreader_truncation_and_lsb_order():
         br.read(1)
 
 
-def test_ladder_dispatch_and_pure_parity(monkeypatch):
+def test_ladder_dispatch_and_pure_parity():
     """decode_image_pixels routes RIFF/WEBP payloads with a VP8L chunk
-    to the pure decoder (and through the Pillow fast path on 'auto'
-    when importable), and returns None for lossy VP8."""
+    to the pure decoder (same pixels as calling it directly), and
+    returns None for lossy VP8."""
     from pydala2_spark.operators import multimodal as mm
+    from pydala2_spark.operators.vp8l import decode_webp_pixels
 
     a = _rand(5, 6, 3, 10)
     payload = encode_webp_lossless(a, use_lz77=True)
     assert np.array_equal(mm.decode_image_pixels(payload), a)
-    assert np.array_equal(mm.decode_image_pixels(payload, prefer_codec="pure"), a)
+    assert np.array_equal(decode_webp_pixels(payload), a)
     lossy = b"RIFF" + (20).to_bytes(4, "little") + b"WEBPVP8 " + bytes(12)
     assert mm.decode_image_pixels(lossy) is None
-    # auto path consults the codec hook for VP8L exactly once
-    calls = []
-
-    def fake_codec(p):
-        calls.append(p)
-        return None
-
-    monkeypatch.setattr(mm, "_codec_decode_lossless", fake_codec)
-    assert np.array_equal(mm.decode_image_pixels(payload), a)
-    assert len(calls) == 1
-    calls.clear()
-    assert np.array_equal(mm.decode_image_pixels(payload, prefer_codec="pure"), a)
-    assert calls == []  # pure mode never consults the codec
 
 
 @settings(max_examples=40, deadline=None)
