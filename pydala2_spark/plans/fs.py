@@ -188,17 +188,25 @@ def schemeless_col(col):
     return F.regexp_replace(col, SCHEME_RE, "/")
 
 
-def input_file_col():
-    """``input_file_name()`` in the :func:`schemeless` spelling of the
-    Hadoop listing. Spark URI-encodes the name it reports, so a hive
-    dir written for a timestamp value (``ts=2024-01-01 00%3A00%3A00``
-    on disk) reads back as ``ts=2024-01-01%2000%253A00%253A00``; it is
-    decoded here. A URI keeps ``+`` literal while URL decoding would
-    turn it into a space, so ``+`` is protected first."""
+def decoded_path_col(col):
+    """A file path Spark reports URI-encoded (``input_file_name()``,
+    ``_metadata.file_path``) in the :func:`schemeless` spelling of the
+    Hadoop listing. A hive dir written for a timestamp value
+    (``ts=2024-01-01 00%3A00%3A00`` on disk) reads back as
+    ``ts=2024-01-01%2000%253A00%253A00``; it is decoded here. A URI
+    keeps ``+`` literal while URL decoding would turn it into a space,
+    so ``+`` is protected first."""
     from pyspark.sql import functions as F
 
-    raw = F.regexp_replace(F.input_file_name(), r"\+", "%2B")
-    return schemeless_col(F.url_decode(raw))
+    return schemeless_col(F.url_decode(F.regexp_replace(col, r"\+", "%2B")))
+
+
+def input_file_col():
+    """``input_file_name()`` in the listing's spelling
+    (:func:`decoded_path_col`)."""
+    from pyspark.sql import functions as F
+
+    return decoded_path_col(F.input_file_name())
 
 
 def file_mtimes(spark: SparkSession, path: str) -> dict[str, int]:

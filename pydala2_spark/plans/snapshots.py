@@ -457,7 +457,7 @@ class SnapshotDataset:
         publish loses the optimistic race cleanly
         (SnapshotConflictError — re-run against the new head; blind
         retry could resurrect rows a racing overwrite removed)."""
-        from pydala2_spark.plans.fs import qualified, schemeless, schemeless_col
+        from pydala2_spark.plans.fs import decoded_path_col, qualified, schemeless
 
         self._publish_guard()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -479,13 +479,13 @@ class SnapshotDataset:
         # matched files from the manifest: silent row loss). The base
         # comes from Hadoop makeQualified, the same qualification
         # _metadata.file_path carries, so './', '//' and relative
-        # spellings of self.path all land on the manifest's spelling.
+        # spellings of self.path all land on the manifest's spelling;
+        # the path itself comes back URI-encoded (a hive dir holding a
+        # space or an escaped ':') and is decoded to the listing's.
         base = schemeless(qualified(self.spark, self.path)).rstrip("/") + "/"
         tagged = df.withColumn("__f", F.col("_metadata.file_path")).withColumn(
             "__rel",
-            F.substring(
-                schemeless_col(F.col("__f")), len(base) + 1, 1 << 30
-            ),
+            F.substring(decoded_path_col(F.col("__f")), len(base) + 1, 1 << 30),
         )
         hit = F.coalesce(pred, F.lit(False))
         per_file = tagged.filter(hit).groupBy("__rel").count().collect()

@@ -1693,8 +1693,8 @@ def doc_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-centrality keyword miner beside doc_rake_keyphrases'
     degree-based one, REUSING the verified weighted-pagerank core
     (same round-12/decimal iteration contract, oracle unrolled on the
-    token graph). The graph is Zipf-small, so the whole loop is
-    broadcast-sized at any corpus scale.
+    token graph). The graph is Zipf-small, so it stays below the
+    driver edge budget and the loop runs on the driver from one fetch.
     See operators/curate.token_cooccurrence_edges, graph.pagerank."""
     from pydala2_spark.operators.curate import token_cooccurrence_edges
     from pydala2_spark.operators.graph import pagerank

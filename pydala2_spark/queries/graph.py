@@ -37,7 +37,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CC. The oracle unrolls the identical decimal-accumulated
     # arithmetic. See operators/graph.pagerank for the 100 TB notes
     # (the heavy step is the one window shuffle building edges; the
-    # rank loop runs on |vocabulary| rows).
+    # |vocabulary|-sized edge frame is fetched once and the rank loop
+    # runs on the driver).
     from pydala2_spark.operators.graph import pagerank, transition_edges
 
     return pagerank(
@@ -313,9 +314,10 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse co-purchase slice — the clustering primitive next to
     pagerank's centrality and k-core's cohesion. Synchronous rounds +
     (count DESC, label ASC) tie-break make LPA (famously run-to-run
-    unstable in its async/random form) exactly reproducible; the
-    per-round argmax is a struct-max, not a per-node window sort, and
-    every reused frame localCheckpoints.
+    unstable in its async/random form) exactly reproducible. The edge
+    frame is checkpointed once; below the driver edge budget (every
+    registry scale) it is fetched once and the rounds run on the
+    driver, bit-identical to the distributed loop.
     See operators/graph.label_propagation."""
     from pydala2_spark.operators.graph import label_propagation
 
@@ -472,11 +474,11 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         u.select(F.col("d").alias("src"), F.col("s").alias("dst"), "w")
     )
+    # personalized_pagerank deduplicates the seeds itself
     seeds = (
         _t(spark, sf_dir, "lineitem")
         .filter((F.col("l_quantity") >= 45) & (F.col("l_partkey") % 97 == 0))
         .select(F.col("l_partkey").alias("node"))
-        .distinct()
     )
     return personalized_pagerank(edges, seeds, iterations=3)
 
@@ -584,9 +586,10 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     centrality next to pagerank's random walk: authoritative parts
     are bought by discerning customers and vice versa. Four L1-
     normalized iterations with the pagerank determinism ladder
-    (round-12 scores, DECIMAL(38,12) contribution sums, one-row
-    broadcast normalizers); per-iteration frames localCheckpoint so
-    lineage stays one edge-derivation deep.
+    (round-12 scores, DECIMAL(38,12) contribution sums). The edge
+    frame is checkpointed once; below the driver edge budget (every
+    registry scale) it is fetched once and the iterations run on the
+    driver, bit-identical to the distributed loop.
     See operators/graph.hits."""
     from pydala2_spark.operators.graph import hits
 

@@ -57,3 +57,24 @@ def pytest_configure(config):
         "a co-tenant-load red is machine-adjudicated (retry) rather "
         "than prose-adjudicated (NOTES)",
     )
+
+
+def spark_jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it issued,
+    counted through a job group of its own and ``statusTracker()``
+    (which works with the UI disabled)."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the tracker through the async listener bus
+    with contextlib.suppress(Exception):
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

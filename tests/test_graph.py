@@ -1,5 +1,6 @@
 """PageRank + transition-edge contracts: known closed forms, mass
-conservation, dangling redistribution, determinism, and plan shape."""
+conservation, dangling redistribution, determinism, and plan shape;
+the graph loops' driver path against their distributed path."""
 
 from __future__ import annotations
 
@@ -475,3 +476,170 @@ def test_personalized_pagerank_locality_and_mass(spark):
     assert pr[7] == 0.0 and pr[8] == 0.0
     with pytest.raises(ValueError):
         personalized_pagerank(edges, seeds, iterations=0)
+
+
+# -- driver loop vs distributed loop: bit-identical rows ---------------
+
+
+def _adversarial_edges(kind: str):
+    """A deterministic random graph plus every awkward shape at once:
+    duplicate edges, self-loops, null ids on either side, a sink, a
+    node whose only neighbor is null, and weights up to 7. ``string``
+    ids are the decimal strings, so their order ("10" < "9") differs
+    from the ``long`` order the tie-breaks see."""
+    import random
+
+    rng = random.Random(20240)
+    rows = [(rng.randrange(40), rng.randrange(40), rng.randrange(1, 8)) for _ in range(240)]
+    rows += rows[:30]  # duplicates
+    rows += [(3, 3, 2), (17, 17, 1)]  # self-loops
+    rows += [(None, 5, 1), (6, None, 2), (None, None, 1), (90, None, 1)]
+    rows += [(7, 99, 3), (8, 99, 1)]  # 99 is a sink
+    if kind == "string":
+        rows = [
+            (None if a is None else str(a), None if b is None else str(b), w)
+            for a, b, w in rows
+        ]
+    return rows
+
+
+def _ids(kind: str, vals):
+    return [None if v is None else (str(v) if kind == "string" else v) for v in vals]
+
+
+def _both_paths(spark, monkeypatch, run):
+    """``run()`` on the driver path, then with the budget at 0 (the
+    distributed loop) while the fetch helper refuses to run — the
+    scale contract: over budget nothing is fetched to the driver.
+    Returns both results as (schema, sorted row reprs)."""
+    from pydala2_spark.operators import graph as G
+
+    def shape(df):
+        rows = sorted(repr(tuple(r)) for r in df.collect())
+        return [(f.name, f.dataType) for f in df.schema.fields], rows
+
+    fetched = []
+    real = G._fetch_local
+    monkeypatch.setattr(
+        G, "_fetch_local", lambda df, label: fetched.append(label) or real(df, label)
+    )
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        local = shape(run())
+        # the fetch labels its job, then hands the caller's label back
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert fetched, "the driver path did not run"
+    assert all(l.startswith("graph.") and l.endswith(": fetch edges") for l in fetched)
+
+    def refuse(df, label):
+        raise AssertionError(f"fetched over budget: {label}")
+
+    monkeypatch.setattr(G, "DRIVER_EDGE_BUDGET", 0)
+    monkeypatch.setattr(G, "_fetch_local", refuse)
+    distributed = shape(run())
+    monkeypatch.undo()
+    return local, distributed
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_pagerank_driver_loop_matches_distributed(spark, monkeypatch, kind):
+    from pydala2_spark.operators.graph import pagerank
+
+    schema = f"src {kind}, dst {kind}, w long"
+    for rows in (_adversarial_edges(kind), []):
+        e = spark.createDataFrame(rows, schema)
+        local, dist = _both_paths(spark, monkeypatch, lambda: pagerank(e, iterations=4))
+        assert local == dist
+        assert bool(local[1]) == bool(rows)
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_ppr_driver_loop_matches_distributed(spark, monkeypatch, kind):
+    from pydala2_spark.operators.graph import personalized_pagerank
+
+    e = spark.createDataFrame(
+        _adversarial_edges(kind), f"src {kind}, dst {kind}, w long"
+    )
+    empty = spark.createDataFrame([], f"src {kind}, dst {kind}, w long")
+    # duplicate seeds, a seed outside the graph (500), a null seed, a
+    # seed on the sink
+    seeds = spark.createDataFrame(
+        [(v,) for v in _ids(kind, [1, 1, 500, None, 99, 12])], f"node {kind}"
+    )
+    no_seeds = spark.createDataFrame([], f"node {kind}")
+    outside = f"({_ids(kind, [500])[0]!r},"
+    for edges, s in ((e, seeds), (e, no_seeds), (empty, seeds), (empty, no_seeds)):
+        local, dist = _both_paths(
+            spark, monkeypatch, lambda: personalized_pagerank(edges, s, iterations=3)
+        )
+        assert local == dist
+        # a seed outside the graph still holds teleport mass
+        assert any(r.startswith(outside) for r in local[1]) == (s is seeds)
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_hits_driver_loop_matches_distributed(spark, monkeypatch, kind):
+    from pydala2_spark.operators.graph import hits
+
+    rows = [(a, b) for a, b, _ in _adversarial_edges(kind)]
+    for data in (rows, []):
+        e = spark.createDataFrame(data, f"c {kind}, p {kind}")
+        local, dist = _both_paths(
+            spark, monkeypatch, lambda: hits(e, iterations=4, hub_col="c", auth_col="p")
+        )
+        assert local == dist
+        assert bool(local[1]) == bool(data)
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_label_propagation_driver_loop_matches_distributed(spark, monkeypatch, kind):
+    from pydala2_spark.operators.graph import label_propagation
+
+    rows = [(a, b) for a, b, _ in _adversarial_edges(kind)]
+    # a node whose only neighbor is null drops out after one round
+    rows += [(_ids(kind, [70])[0], None)]
+    for data in (rows, []):
+        e = spark.createDataFrame(data, f"src {kind}, dst {kind}")
+        for rounds in (1, 4):
+            local, dist = _both_paths(
+                spark, monkeypatch, lambda: label_propagation(e, rounds=rounds)
+            )
+            assert local == dist
+
+
+def test_decimal_steps_match_python_decimal():
+    """The driver loops' vectorized DECIMAL steps against a per-value
+    ``decimal`` reference: HALF_UP on the shortest repr (ties at the
+    13th and 16th decimal, whose binary values sit on either side of
+    the tie — numpy's rint misses about half of them — plus random
+    values), and correctly rounded decimal -> double, also past 2^52
+    where the fast division stops."""
+    import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from pydala2_spark.operators.graph import _half_up, _to_double
+
+    rng = random.Random(7)
+    xs = [float(f"0.{rng.randrange(10**12):012d}5") for _ in range(2000)]
+    xs += [float(f"0.000{rng.randrange(10**12):012d}5") for _ in range(2000)]
+    xs += [float(f"0.{rng.randrange(10**15):015d}5") for _ in range(2000)]
+    xs += [rng.random() * rng.choice([1e-6, 1e-3, 1.0, 7.0]) for _ in range(4000)]
+    xs += [-v for v in xs[:500]] + [0.0, 1.0, 123456.0]
+    x = np.array(xs)
+    for scale in (12, 15):
+        want = [
+            int(Decimal(repr(v)).scaleb(scale).quantize(Decimal(1), ROUND_HALF_UP))
+            for v in xs
+        ]
+        assert _half_up(x, scale).tolist() == want
+    ints = np.array([rng.randrange(-(2**60), 2**60) for _ in range(500)] + [2**52, 12345])
+    for scale in (12, 15):
+        got = _to_double(ints, scale)
+        assert [repr(v) for v in got] == [repr(int(i) / 10**scale) for i in ints]
+    with pytest.raises(Exception):
+        _half_up(np.array([float("nan")]), 12)

@@ -866,3 +866,35 @@ def test_row_level_dml_with_unnormalized_paths(spark, tmp_path):
         2: 20.0,
         3: 30.0,
     }
+
+
+def test_row_level_dml_under_escaped_partition_dirs(spark, tmp_path):
+    """A hive dir written for a timestamp string holds a space and an
+    escaped ':' (``ts=2024-01-01 00%3A00%3A00``), which
+    ``_metadata.file_path`` reports URI-encoded (``%20`` / ``%253A``).
+    delete_where and update_where must still name each touched file
+    in the manifest's spelling: the rows go, the other files carry by
+    name, and no version drops a file it did not rewrite."""
+    ds = SnapshotDataset(spark, str(tmp_path / "esc"))
+    stamps = ["2024-01-01 00:00:00", "2024-01-02 12:30:00"]
+    df = spark.createDataFrame(
+        [(i, float(i), stamps[i % 2]) for i in range(10)],
+        "id long, x double, ts string",
+    )
+    ds.commit(df.repartition("ts"), mode="overwrite", partition_by=["ts"])
+    files = ds._read_manifest(1)["files"]
+    assert len(files) == 2 and all(" " in f and "%3A" in f for f in files)
+
+    out = ds.delete_where("id >= 8")
+    assert out["rows"] == 2 and out["version"] == 2
+    assert set(out["matched_files"]) == set(files)
+    assert sorted(r["id"] for r in ds.read().collect()) == list(range(8))
+
+    up = ds.update_where("id = 1", set={"x": "-1.0"})
+    assert up["rows"] == 1 and up["version"] == 3
+    m2, m3 = ds._read_manifest(2), ds._read_manifest(3)
+    assert len(up["matched_files"]) == 1
+    assert set(m2["files"]) - set(up["matched_files"]) <= set(m3["files"])
+    got = {r["id"]: r["x"] for r in ds.read().collect()}
+    assert got == {i: (-1.0 if i == 1 else float(i)) for i in range(8)}
+    assert sorted(r["id"] for r in ds.read(1).collect()) == list(range(10))
