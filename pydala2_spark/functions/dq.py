@@ -16,6 +16,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 _DEC = "decimal(38,6)"
 
 
@@ -515,9 +517,12 @@ def categorical_mutual_info(
     scanned once); totals join back as one-row broadcasts — no global
     window, no funnel.
     """
-    joint = df.groupBy(
-        F.col(x).alias("__x"), F.col(y).alias("__y")
-    ).agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    joint = materialize(
+        df.groupBy(F.col(x).alias("__x"), F.col(y).alias("__y")).agg(
+            F.count(F.lit(1)).alias("c")
+        ),
+        "categorical_mutual_info: joint counts",
+    )
     tot = joint.agg(F.sum("c").cast("long").alias("n"))
     mx = joint.groupBy("__x").agg(F.sum("c").alias("cx"))
     my = joint.groupBy("__y").agg(F.sum("c").alias("cy"))
@@ -793,10 +798,11 @@ def chi2_independence(
     frame; marginals re-aggregate THAT frame (corpus scanned once);
     totals join back as one-row broadcasts. No window, no funnel.
     """
-    joint = (
-        df.groupBy(F.col(x).alias("__x"), F.col(y).alias("__y"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+    joint = materialize(
+        df.groupBy(F.col(x).alias("__x"), F.col(y).alias("__y")).agg(
+            F.count(F.lit(1)).alias("c")
+        ),
+        "chi2_independence: joint counts",
     )
     tot = joint.agg(
         F.sum("c").cast("long").alias("n"),
@@ -1591,7 +1597,6 @@ def iqr_outliers(
     window.
     """
     from pydala2_spark.functions.skew import distributed_prefix
-    from pydala2_spark.operators.dedup import _materialize_once
 
     if not cols:
         raise ValueError("cols must be non-empty")
@@ -1611,7 +1616,7 @@ def iqr_outliers(
     # counts ride as LONGs: integer addition is exact and associative
     # (the helper's DECIMAL requirement exists for fractional sums;
     # row counts cannot overflow 2^63)
-    g = _materialize_once(
+    g = materialize(
         base.groupBy("col", "v").agg(F.count(F.lit(1)).alias("cnt"))
     )
     pre = distributed_prefix(g, ["col", "v"], sum_col="cnt", cum_col="__cum")
@@ -1732,9 +1737,8 @@ def sequence_gaps(
     rank+1 — successor differences without a global window funnel.
     """
     from pydala2_spark.functions.skew import distributed_prefix
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    g = _materialize_once(
+    g = materialize(
         df.select(F.col(id_col).cast("long").alias("i"))
         .filter(F.col("i").isNotNull())
         .groupBy("i")
@@ -1944,11 +1948,10 @@ def winsorized_mean(
     scanned once, clamping never touches it.
     """
     from pydala2_spark.functions.skew import distributed_prefix
-    from pydala2_spark.operators.dedup import _materialize_once
 
     if not 0 <= lo_q < hi_q <= 1:
         raise ValueError(f"need 0 <= lo_q < hi_q <= 1, got {lo_q}, {hi_q}")
-    g = _materialize_once(
+    g = materialize(
         df.select(F.col(value_col).cast("double").alias("v"))
         .filter(F.col("v").isNotNull())
         .groupBy("v")

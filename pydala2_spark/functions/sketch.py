@@ -31,6 +31,8 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 #: shared 2^-k literal table (k = 1..61), rounded to 20 decimals —
 #: imported by the oracle-SQL builders so both engines sum the exact
 #: same decimal values.
@@ -336,10 +338,10 @@ def cms_estimate(
     else:
         # unstamped external frame (explicit width): the hash-row set
         # is unknown — materialize the bounded counter table once
-        # (lazy one-partition checkpoint; its lineage may be a corpus
-        # scan, and the collect + join would otherwise each re-run it)
-        # and discover the rows with one driver collect.
-        counters = counters.coalesce(1).localCheckpoint(eager=False)
+        # (lazy, one partition; its lineage may be a corpus scan, and
+        # the collect + join would otherwise each re-run it) and
+        # discover the rows with one driver collect.
+        counters = materialize(counters.coalesce(1))
         row_ids = sorted(
             r["row_id"] for r in counters.select("row_id").distinct().collect()
         )
@@ -917,7 +919,7 @@ def ddsketch_quantiles(
     # materialization each leg replays the caller's full corpus scan
     # (observed: 4 FileScans for a two-half merge). The state is
     # O(log range / alpha) rows — the checkpoint is ~free.
-    state = state.localCheckpoint(eager=False)
+    state = materialize(state)
     w = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

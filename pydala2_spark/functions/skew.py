@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 
 def distinct_count_two_phase(
     df: DataFrame, keys: list[str], value_col: str, alias: str = "n_distinct"
@@ -87,7 +89,7 @@ def distributed_prefix(
     Shape: one range shuffle + two tiny aggregations over
     |partitions| rows; no task ever sees more than its range.
 
-    The ranged frame is materialized ONCE (lazy localCheckpoint,
+    The ranged frame is materialized ONCE (lazy :func:`materialize`,
     released by the ContextCleaner): the per-partition offsets join
     references it on both sides, and without materialization each
     side may re-evaluate the range shuffle with DIFFERENT sampled
@@ -116,10 +118,10 @@ def distributed_prefix(
     # the result bit-identical for ANY partition count.
     if n_partitions is None:
         n_partitions = df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(n_partitions, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    ranged = materialize(
+        df.repartitionByRange(n_partitions, *order_cols).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
     w_local = Window.partitionBy("__pid").orderBy(*order_cols)
     w_run = w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -421,13 +423,15 @@ def theil_decomposition(
     base = df.select(
         F.col(group_col).alias("g"), F.col(value_col).alias("v")
     ).filter(F.col("v").isNotNull() & (F.col("v") > 0))
-    per = base.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum(F.col("v").cast("decimal(38,6)")).alias("a_g"),
-        F.sum(
-            F.round(F.col("v") * F.log("v"), 12).cast("decimal(38,12)")
-        ).alias("l_g"),
-    ).localCheckpoint(eager=False)  # |groups| rows feed totals AND terms
+    per = materialize(  # |groups| rows feed totals AND terms
+        base.groupBy("g").agg(
+            F.count(F.lit(1)).cast("long").alias("n_g"),
+            F.sum(F.col("v").cast("decimal(38,6)")).alias("a_g"),
+            F.sum(
+                F.round(F.col("v") * F.log("v"), 12).cast("decimal(38,12)")
+            ).alias("l_g"),
+        )
+    )
     tot = per.agg(
         F.sum("n_g").cast("long").alias("n"),
         F.sum("a_g").alias("a"),

@@ -24,6 +24,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 
 def _margin(feature_cols: list[str], w: list[float], b: float):
     z = F.lit(b)
@@ -54,10 +56,12 @@ def logreg_fit(
     if iters < 1 or lr <= 0:
         raise ValueError(f"need iters >= 1 and lr > 0, got {iters}, {lr}")
 
-    base = df.select(
-        *[F.col(c).cast("double").alias(c) for c in feature_cols],
-        F.col(label_col).cast("double").alias("__y"),
-    ).localCheckpoint(eager=False)  # iterated over: materialize once
+    base = materialize(  # iterated over: materialize once
+        df.select(
+            *[F.col(c).cast("double").alias(c) for c in feature_cols],
+            F.col(label_col).cast("double").alias("__y"),
+        )
+    )
 
     stats_row = base.agg(
         F.count(F.lit(1)).alias("n"),

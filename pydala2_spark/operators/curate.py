@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize, materialize_counted
 from pydala2_spark.functions.text import quality_score
 from pydala2_spark.operators.dedup import duplicate_clusters, ngram_jaccard_pairs
 
@@ -74,11 +75,11 @@ def curate_corpus(
         F.split(F.col(text), " ").alias("__tk"),
     )
     # scored feeds two branches (low + passing) and with_keeper feeds
-    # three (exact, pairs, kept) — cache both so the scan / scoring /
-    # dedup-window run once, not once per branch. Storage is
-    # MEMORY_AND_DISK and Spark LRU-evicts, so this is safe at scale;
-    # on a 100 TB corpus these frames are the post-filter minority.
-    scored = toks.withColumn("__q", quality_score(text, tokens_col="__tk")).cache()
+    # three (exact, pairs, kept) — materialize both so the scan /
+    # scoring / dedup-window run once, not once per branch. The
+    # checkpoints are released with the returned plan, so nothing stays
+    # pinned in the session's cache manager after the caller is done.
+    scored = materialize(toks.withColumn("__q", quality_score(text, tokens_col="__tk")))
     passes = (F.col("__q") >= min_quality) & F.col(lang_col).isin(*langs)
 
     low = scored.filter(~passes).select(
@@ -88,13 +89,11 @@ def curate_corpus(
 
     grp = Window.partitionBy(F.md5(F.col(text)))
     # ONE md5-window pass: with_keeper feeds both the exact-dup branch
-    # and the survivor frame, so cache IT (minus the heavy token/score
-    # columns — the pair screen re-tokenizes from text) instead of
-    # caching survivors and re-running the window for `exact`
-    with_keeper = (
-        passing.withColumn("__keeper", F.min(id_col).over(grp))
-        .drop("__q", "__tk")
-        .cache()
+    # and the survivor frame, so materialize IT (minus the heavy
+    # token/score columns — the pair screen re-tokenizes from text)
+    # instead of survivors, which would re-run the window for `exact`
+    with_keeper = materialize(
+        passing.withColumn("__keeper", F.min(id_col).over(grp)).drop("__q", "__tk")
     )
     exact = with_keeper.filter(F.col(id_col) != F.col("__keeper")).select(
         F.col(id_col), F.lit(STATUS_EXACT_DUP).alias("status")
@@ -417,7 +416,6 @@ def tfidf_top_terms(
     evaluate ln over the same doubles, and the rounding absorbs
     last-ulp libm differences.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text), " ")).alias("term")
@@ -425,7 +423,7 @@ def tfidf_top_terms(
     # materialize the (doc, term, tf) frame once: its two consumers
     # (the DF aggregate and the scoring join) would otherwise each
     # re-scan the corpus through the plan fork (no ReusedExchange)
-    tf = _materialize_once(
+    tf = materialize(
         toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -475,7 +473,7 @@ def bm25_search(
 
     100 TB notes: the corpus reads ONCE — the (doc, term, count) frame
     is aggregated from a single explode and materialized via
-    `dedup._materialize_once` (Catalyst pushes the query-term filter
+    `frames.materialize` (Catalyst pushes the query-term filter
     below a shared aggregate, which forks the plan into one corpus
     scan per consumer otherwise — measured 4 FileScans before the
     checkpoint, 1 after). Doc lengths, postings and df all derive from
@@ -483,7 +481,6 @@ def bm25_search(
     aggregate — no driver collect. The final top-k is
     ``orderBy().limit()`` → TakeOrderedAndProject, a distributed
     partial top-k, never a global sort."""
-    from pydala2_spark.operators.dedup import _materialize_once
 
     terms = query_terms.split() if isinstance(query_terms, str) else list(query_terms)
     if not terms:
@@ -491,7 +488,7 @@ def bm25_search(
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text), " ")).alias("term")
     )
-    per_doc = _materialize_once(
+    per_doc = materialize(
         toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     dl = per_doc.groupBy(id_col).agg(F.sum("tf").alias("dl"))
@@ -557,7 +554,7 @@ def dsir_resample(
     ``id_col`` tiebreak (deterministic-top-k rule).
 
     100 TB notes: the raw corpus reads ONCE — its (doc, tok, count)
-    frame materializes via `dedup._materialize_once` and feeds both
+    frame materializes via `frames.materialize` and feeds both
     the raw unigram table and the per-doc scoring join (the fork would
     otherwise re-scan the corpus per consumer); the target corpus
     reads once more. The log-ratio table is one row per raw-vocab
@@ -568,12 +565,11 @@ def dsir_resample(
     selection is ``orderBy().limit(n)`` → distributed partial top-k.
     Target-only tokens never score (every scored token comes from a
     raw document, hence the raw vocab)."""
-    from pydala2_spark.operators.dedup import _materialize_once
 
     raw_toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text), " ")).alias("tok")
     )
-    per_doc = _materialize_once(
+    per_doc = materialize(
         raw_toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
     )
     q_counts = per_doc.groupBy("tok").agg(F.sum("c").alias("qc"))
@@ -587,7 +583,7 @@ def dsir_resample(
     # engines smooth over the identical event space. The table is
     # vocab-sized — materialize it so its two consumers (consts + the
     # ratio join) don't re-scan the target corpus through the fork.
-    table = _materialize_once(
+    table = materialize(
         q_counts.join(p_counts, "tok", "left").na.fill({"pc": 0})
     )
     consts = table.agg(
@@ -648,19 +644,18 @@ def unigram_logprob_scores(
     join keyed on the already-deduplicated (doc, token, count)
     frame otherwise. Total-token count arrives as a broadcast
     single-row frame — no driver collect anywhere. The (doc, token,
-    count) frame materializes once (`dedup._materialize_once`): its
+    count) frame materializes once (`frames.materialize`): its
     two consumers — the vocab aggregate and the scoring join — would
     otherwise each re-scan the corpus (Catalyst emits no
     ReusedExchange across the fork; measured 3 FileScans before,
     1 after).
     Reference analogue: none (extension surface).
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text), " ")).alias("tok")
     )
-    per_doc = _materialize_once(
+    per_doc = materialize(
         toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
     )
     vocab = per_doc.groupBy("tok").agg(F.sum("c").alias("cc"))
@@ -714,14 +709,13 @@ def bigram_logprob_scores(
     100 TB notes: one corpus explode to (prev, word) pairs, then every
     further stage runs on the deduplicated (doc, prev, word, count)
     frame — Zipf-small relative to the corpus — which materializes once
-    (`dedup._materialize_once`; its three consumers — bigram table,
+    (`frames.materialize`; its three consumers — bigram table,
     context table via an aggregate OF the bigram table, scoring join —
     would otherwise each re-explode the corpus). The bigram vocabulary
     is deliberately NOT broadcast-hinted (can reach 10⁹ rows at
     web scale; AQE broadcasts it when actually small).
     Reference analogue: none (extension surface).
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
     toks = df.select(
         F.col(id_col), F.split(F.col(text), " ").alias("__t")
@@ -735,7 +729,7 @@ def bigram_logprob_scores(
             )
         ).alias("bg"),
     ).select(id_col, F.col("bg.p").alias("p"), F.col("bg.w").alias("w"))
-    per_doc = _materialize_once(
+    per_doc = materialize(
         pairs.groupBy(id_col, "p", "w").agg(F.count(F.lit(1)).alias("c"))
     )
     bi = per_doc.groupBy("p", "w").agg(F.sum("c").alias("cpw"))
@@ -888,9 +882,8 @@ def token_pmi(
     frame twice. The corpus count is a broadcast one-row frame — no
     driver collect.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    toks = _materialize_once(
+    toks = materialize(
         df.select(
             F.col(id_col),
             F.array_sort(F.array_distinct(F.split(F.col(text), " "))).alias("__t"),
@@ -1102,9 +1095,7 @@ def refresh_text_index(
     per_doc = per_doc.withColumn("bucket", _term_bucket(F.col("term"), buckets))
     # materialize the delta before any index table it feeds is
     # overwritten/appended (lazy reads of a path being written race)
-    from pydala2_spark.operators.dedup import _materialize_once
-
-    per_doc = _materialize_once(per_doc)
+    per_doc = materialize(per_doc)
     per_doc.count()
     delta_df = per_doc.groupBy("term", "bucket").agg(
         F.count(F.lit(1)).alias("df")
@@ -1116,7 +1107,7 @@ def refresh_text_index(
         .groupBy("term", "bucket")
         .agg(F.sum("df").cast("long").alias("df"))
     )
-    merged = _materialize_once(merged)
+    merged = materialize(merged)
     merged.count()  # read old terms fully BEFORE overwriting them
     per_doc.write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")
     per_doc.groupBy(id_col).agg(F.sum("tf").alias("dl")).write.mode(
@@ -1478,8 +1469,10 @@ def learn_bpe_merges(
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
-    w = _bpe_word_table(df, text, max_word_len).localCheckpoint()
-    if driver_word_budget and w.count() <= driver_word_budget:
+    w, n_words = materialize_counted(
+        _bpe_word_table(df, text, max_word_len), "learn_bpe_merges: word table"
+    )
+    if driver_word_budget and n_words <= driver_word_budget:
         return _bpe_driver_finish(w, n_merges)
     merges: list[tuple[str, str, int]] = []
     sep = _BPE_R + _BPE_L
@@ -1522,7 +1515,7 @@ def learn_bpe_merges(
             ),
         )
         if (r + 1) % checkpoint_every == 0 and r + 1 < n_merges:
-            w = w.localCheckpoint()
+            w = materialize(w, "learn_bpe_merges: merged words")
     return merges
 
 
@@ -1700,7 +1693,7 @@ def bpe_encode_token_counts(
             ),
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < len(merges):
-            vocab = vocab.localCheckpoint(eager=False)
+            vocab = materialize(vocab)
     enc = vocab.select(
         "word",
         F.size(
@@ -1816,7 +1809,6 @@ def collocation_llr(
     back without broadcast hints (AQE decides). Top-k is one
     TakeOrderedAndProject.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
     toks = df.select(F.split(F.col(text), " ").alias("__t")).filter(
         F.size("__t") >= 2
@@ -1830,7 +1822,7 @@ def collocation_llr(
             )
         ).alias("bg")
     ).select(F.col("bg.a").alias("tok_a"), F.col("bg.b").alias("tok_b"))
-    bi = _materialize_once(
+    bi = materialize(
         pairs.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("k11"))
     )
     left = bi.groupBy("tok_a").agg(F.sum("k11").alias("ca"))
@@ -1948,9 +1940,8 @@ def js_divergence_by_group(
     large; AQE broadcasts when actually small). The constant attaches
     as one-row broadcasts. No second corpus pass, no windows.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    gt = _materialize_once(
+    gt = materialize(
         df.select(
             F.col(group_col).alias("grp"),
             F.explode(F.split(F.col(text), " ")).alias("tok"),
@@ -2059,7 +2050,6 @@ def nb_domain_classifier(
     test tokens to it keyed on token (fanout <= |classes|); the
     |classes|-row prior frame attaches broadcast. No windows over
     corpus-sized data, no driver collect."""
-    from pydala2_spark.operators.dedup import _materialize_once
 
     dec = "decimal(38,12)"
     toks = df.select(
@@ -2067,7 +2057,7 @@ def nb_domain_classifier(
         F.col(class_col).alias("cls"),
         F.explode(F.split(F.col(text), " ")).alias("tok"),
     ).filter(F.col("tok") != "")
-    model = _materialize_once(
+    model = materialize(
         toks.filter(F.col("doc") % 2 == 0)
         .groupBy("tok", "cls")
         .agg(F.count(F.lit(1)).alias("ctc"))
@@ -2097,7 +2087,7 @@ def nb_domain_classifier(
             F.log((F.col("t_c") + F.col("v")).cast("double")).alias("ln_den"),
         )
     )
-    tcnt = _materialize_once(
+    tcnt = materialize(
         toks.filter(F.col("doc") % 2 == 1)
         .groupBy("doc", F.col("cls").alias("true_cls"), "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -25,61 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pydala2_spark.frames import materialize, materialize_counted, spread
 from pydala2_spark.functions.text import content_hash, shingles_sql
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition up to session parallelism when the source arrives in
-    fewer files than cores. The hash/tokenize stages of these
-    operators are the expensive per-row work; a corpus stored as a few
-    single-row-group files would otherwise serialize them onto a
-    handful of tasks. A many-file 100 TB input already arrives spread,
-    so this is a no-op there (no extra shuffle).
-
-    The probe is ``df.inputFiles()`` — file metadata the scan has
-    already listed — NOT ``df.rdd.getNumPartitions()``, which would
-    force a full non-AQE physical plan + RDD conversion on every call
-    (a real driver pause against a 100 TB file index). Trade-off: a
-    dataset stored as one splittable multi-GB file would be
-    repartitioned despite the scan already splitting it; at scale
-    datasets are many-file, so the condition only fires on small
-    inputs where the extra shuffle is cheap.
-    """
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    try:
-        nfiles = len(df.inputFiles())
-    except Exception:  # non-file-backed plan (e.g. createDataFrame)
-        return df
-    if 0 < nfiles < n:
-        return df.repartition(n, *[F.col(c) for c in cols]) if cols else df.repartition(n)
-    return df
-
-
-def _materialize_once(df: DataFrame) -> DataFrame:
-    """Compute a self-joined frame ONCE instead of per join side.
-
-    Catalyst does not emit ReusedExchange for these self-joins
-    (measured: 0 reuse across every pair operator), so without this
-    the tokenize pipeline — the expensive per-row stage — runs twice.
-    ``localCheckpoint(eager=False)`` materializes on first use at
-    MEMORY_AND_DISK, both join sides read the stored copy, and unlike
-    ``persist()`` (which the cache manager pins until an explicit
-    unpersist) the backing RDD is released by the ContextCleaner as
-    soon as the plan is garbage collected — safe for operators that
-    return lazy frames.
-
-    Applied ONLY where measurement showed a win: the ngram token
-    frame (2x — per-token xxhash64 + md5 min-hash is a genuinely
-    expensive map stage), the SRP-widened unit frame, and the per-doc
-    SIMHASH signature frame (2x — the 48-bit-sum aggregation is the
-    heavy stage, and the checkpointed row is just id + int64). For the
-    minhash signature and shingle frames the interleaved A/B showed
-    steady-state parity (their per-row stages are cheap arithmetic),
-    so those stay lazy. Cost at 100 TB: one spill-to-disk copy of a
-    frame strictly smaller than recomputing its pipeline twice.
-    """
-    return df.localCheckpoint(eager=False)
 
 
 # -- exact ------------------------------------------------------------
@@ -144,7 +91,7 @@ def minhash_signature(df: DataFrame, text: str = "text", id_col: str = "doc_id",
     num_hashes rows per document.
     """
     a_consts, b_consts = _minhash_consts(num_hashes)
-    tk = _spread(df, id_col).select(F.col(id_col), F.split(F.col(text), " ").alias("__tk"))
+    tk = spread(df, id_col).select(F.col(id_col), F.split(F.col(text), " ").alias("__tk"))
     sh = tk.select(F.col(id_col), F.explode(F.expr(shingles_sql(text, k, "__tk"))).alias("s"))
     h0 = sh.select(
         id_col,
@@ -297,7 +244,7 @@ def incremental_near_dups(
     p = spark.read.parquet(f"{index_path}/_params").first()
     id_col = p["id_col"]
     if new_mh is None:
-        new_mh = _materialize_once(
+        new_mh = materialize(
             minhash_signature(new_docs, text, id_col, p["num_hashes"], p["k"])
         )
     # else: caller precomputed the batch signatures (MUST be built with
@@ -415,7 +362,7 @@ def ngram_jaccard_pairs(
     else:
         mb_cols = []
     toks = (
-        _spread(df, id_col)
+        spread(df, id_col)
         .select(
             F.col(id_col),
             *[F.col(c) for c in block_cols],
@@ -436,7 +383,7 @@ def ngram_jaccard_pairs(
         toks = toks.select(
             "*", F.posexplode("__mbs").alias("band", "mb")
         ).drop("__mbs")
-    toks = _materialize_once(toks)
+    toks = materialize(toks)
     jac = F.round(
         F.size(F.array_intersect("a.tk", "b.tk")) / F.size(F.array_union("a.tk", "b.tk")), 4
     )
@@ -495,7 +442,7 @@ def simhash(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFr
     from functools import reduce
     from operator import add
 
-    tok = _spread(df, id_col).select(
+    tok = spread(df, id_col).select(
         F.col(id_col), F.explode(F.array_distinct(F.split(F.col(text), " "))).alias("t")
     ).select(
         id_col,
@@ -543,14 +490,14 @@ def simhash_near_pairs(
     cross join. Verify with bit_count(a XOR b).
 
     The per-doc signature frame is materialized once across the two
-    self-join sides (``_materialize_once``): Catalyst emits no
+    self-join sides (:func:`materialize`): Catalyst emits no
     ReusedExchange here, so the lazy form runs the token explode +
     48-bit-sum aggregation — the expensive stage — twice. Unlike the
     token-level frames this checkpoint is one narrow row per document
     (id + int64), so the write cost is negligible at any scale;
     interleaved A/B at sf0.1: min 1.59 s -> 0.76 s.
     """
-    sh = _materialize_once(simhash(df, text, id_col))
+    sh = materialize(simhash(df, text, id_col))
     return hamming_near_pairs(
         sh, "simhash", id_col, SIMHASH_BITS, max_hamming, chunks
     )
@@ -649,7 +596,7 @@ def embedding_near_duplicates(
 
     dim = vector_dim(df, vec_col)
     keep = [id_col] + ([block_col] if block_col else [])
-    base = _spread(df, id_col).select(*keep, vec_col).withColumn(
+    base = spread(df, id_col).select(*keep, vec_col).withColumn(
         "__srp", srp_bucket(vec_col, srp_planes, dim)
     )
     # widen to scalar columns: keeps the O(pairs) dot-product stage in
@@ -661,7 +608,7 @@ def embedding_near_duplicates(
     # distribution shifted down (round-3's contrary note predates the
     # in-session A/B; cross-session bench deltas at this scale are
     # co-tenancy noise, NOTES_r04.md).
-    v = _materialize_once(unit_scalar_frame(base, vec_col, keep + ["__srp"], dim))
+    v = materialize(unit_scalar_frame(base, vec_col, keep + ["__srp"], dim))
     cond = (F.col("a.__srp") == F.col("b.__srp")) & (
         F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     )
@@ -776,8 +723,8 @@ def semantic_dedup(
             quantizer == "auto" and k * d <= _KMEANS_LITERAL_LIMIT
         )
         if use_kmeans and k * d <= _KMEANS_LITERAL_LIMIT:
-            # fit only (assign=False skips kmeans' final assignment
-            # pass + eager checkpoint); re-derive the identical argmin
+            # fit only (assign=False: no assignment frame over kmeans'
+            # materialized copy); re-derive the identical argmin
             # as a projection over the corpus scan — same centroid
             # literal, same left-to-right distance fold, same cid-asc
             # tiebreak as _assign_frame's literal path
@@ -791,10 +738,10 @@ def semantic_dedup(
                 assign=False,
             )
             cast_vec = f"transform({vec_col}, x -> cast(x as double))"
-            # _spread: the per-row widening downstream needs more than
+            # spread: the per-row widening downstream needs more than
             # the source file count of partitions on tiny inputs; the
             # old join's exchange provided that incidentally
-            base = _spread(df, id_col).select(
+            base = spread(df, id_col).select(
                 F.col(id_col),
                 F.col(vec_col),
                 _assign_expr(_centroid_literal_sql(cents), vec=cast_vec)[
@@ -814,7 +761,7 @@ def semantic_dedup(
             # projection — same pair screen, O(n) quantizer; the
             # bucket expression rides the corpus scan directly.
             planes = max(1, math.ceil(math.log2(max(2, k))))
-            base = _spread(df, id_col).select(
+            base = spread(df, id_col).select(
                 F.col(id_col),
                 F.col(vec_col),
                 srp_bucket(vec_col, planes, d).alias("cid"),
@@ -823,7 +770,7 @@ def semantic_dedup(
         base = df.select(id_col, vec_col).join(
             assignments.select(id_col, "cid"), id_col, "left"
         )
-    v = _materialize_once(unit_scalar_frame(base, vec_col, [id_col, "cid"], d))
+    v = materialize(unit_scalar_frame(base, vec_col, [id_col, "cid"], d))
     cond = (F.col("a.cid") == F.col("b.cid")) & (
         F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     )
@@ -864,20 +811,16 @@ def _cc_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
     ``stepped`` (the post-neighbour-join min-label frame) feeds BOTH
     sides of the pointer-doubling self-join; without materialization
     the neighbour-join/aggregate pipeline — the round's entire cost —
-    runs twice per round (Catalyst emits no ReusedExchange here, the
-    same measurement as ``_materialize_once``). ``localCheckpoint
-    (eager=False)`` rewrites the plan to a single RDD scan: the first
-    stage that needs it computes and stores it, the second side reads
-    the stored copy, and materialization folds into the caller's
-    eager round checkpoint (no extra job)."""
+    runs twice per round (Catalyst emits no ReusedExchange here). A
+    lazy :func:`materialize` rewrites the plan to a single RDD scan:
+    the first stage that needs it computes and stores it, the second
+    side reads the stored copy, and materialization folds into the
+    caller's eager round checkpoint (no extra job)."""
     neighbour = edges.join(
         labels.withColumnRenamed("node", "dst"), "dst"
     ).select(F.col("src").alias("node"), "label")
-    stepped = (
-        neighbour.union(labels)
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-        .localCheckpoint(eager=False)
+    stepped = materialize(
+        neighbour.union(labels).groupBy("node").agg(F.min("label").alias("label"))
     )
     # pointer doubling: label(v) <- label(label(v)). Every label is
     # itself a node, so the lookup frame is `stepped` re-keyed.
@@ -919,20 +862,22 @@ def duplicate_clusters(
       flavour, Rastogi et al., "Finding Connected Components in
       Map-Reduce in Logarithmic Rounds", ICDE'13). Each round is one
       join against the static edge frame + a label-frame self-join;
-      ``localCheckpoint`` truncates lineage round-over-round.
+      an eager :func:`materialize` truncates lineage round-over-round.
       Convergence is detected by the monotone label sum.
 
     The reference has no graph operator at all; this extends its dedup
     story (row-level ``unique``, pydala/io.py:242-259) to corpus level.
     """
     spark = pairs.sparkSession
-    # one eager materialization: pair generation is the expensive part
-    # (LSH / blocked join upstream) — never recompute it per round
-    undirected = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).distinct().localCheckpoint(eager=True)
+    # one eager materialization, counted in the same job: pair
+    # generation is the expensive part (LSH / blocked join upstream) —
+    # never recompute it per round
+    undirected, n_edges = materialize_counted(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).distinct(),
+        "duplicate_clusters: edges",
+    )
 
-    if undirected.count() <= driver_edge_limit:
+    if n_edges <= driver_edge_limit:
         parent: dict = {}
 
         def find(x):
@@ -972,26 +917,26 @@ def duplicate_clusters(
             F.count(F.lit(1)).over(size).alias("cluster_size"),
         )
 
-    edges = (
+    edges = materialize(
         undirected.union(
             undirected.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "duplicate_clusters: symmetric edges",
     )
     # round 1 fused into init: label(v) = min(v, min(neighbours)) —
     # cliques (the common near-dup shape) converge immediately
-    labels = (
+    labels = materialize(
         edges.groupBy("src")
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
+        .withColumnRenamed("src", "node"),
+        "duplicate_clusters: initial labels",
     )
     # labels only ever decrease, so sum(label) is strictly monotone:
     # unchanged sum == fixpoint. One cheap job on checkpointed data
     # replaces a join-based change count.
     prev_sum = labels.agg(F.sum("label")).first()[0]
     for _ in range(max_iter):
-        labels = _cc_step(edges, labels).localCheckpoint(eager=True)
+        labels = materialize(_cc_step(edges, labels), "duplicate_clusters: round")
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
             break
@@ -1030,7 +975,7 @@ def cross_doc_segment_dups(
     have no segments and are absent from the output (mirrored by the
     oracle).
     """
-    t = _spread(df, id_col).select(
+    t = spread(df, id_col).select(
         F.col(id_col), F.split(F.col(text), " ").alias("__t")
     ).filter(F.size("__t") >= k)
     segs = t.select(
@@ -1101,7 +1046,7 @@ def duplicated_substring_spans(
         raise ValueError(f"k must be >= 1, got {k}")
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    t = _spread(df, id_col).select(
+    t = spread(df, id_col).select(
         F.col(id_col), F.split(F.col(text), " ").alias("__t")
     ).filter(F.size("__t") >= k)
     base = t.select(F.col(id_col), F.size("__t").cast("long").alias("n_tokens"))
@@ -1223,11 +1168,11 @@ def exact_substring_matches(
             f"max_occ_per_anchor must be >= 2, got {max_occ_per_anchor}"
         )
     t = (
-        _spread(df, id_col)
+        spread(df, id_col)
         .select(F.col(id_col), F.split(F.col(text), " ").alias("__t"))
         .filter(F.size("__t") >= k)
     )
-    toks = _materialize_once(t)  # consumed by anchors + both extension sides
+    toks = materialize(t)  # consumed by anchors + both extension sides
     sh = toks.select(
         F.col(id_col),
         F.explode(
@@ -1244,7 +1189,7 @@ def exact_substring_matches(
         F.col("s.h").alias("h"),
         F.col("s.prev").alias("prev"),
     )
-    sh = _materialize_once(sh)  # pair join consumes it twice
+    sh = materialize(sh)  # pair join consumes it twice
     good = (
         sh.groupBy("h")
         .agg(
@@ -1414,10 +1359,10 @@ def remove_exact_substrings(
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    t = _spread(df, id_col).select(
+    t = spread(df, id_col).select(
         F.col(id_col), F.split(F.col(text), " ").alias("__t")
     )
-    toks = _materialize_once(t)
+    toks = materialize(t)
     sh = toks.filter(F.size("__t") >= k).select(
         F.col(id_col),
         F.explode(
@@ -1428,7 +1373,7 @@ def remove_exact_substrings(
             )
         ).alias("s"),
     ).select(F.col(id_col), F.col("s.pos").alias("pos"), F.col("s.h").alias("h"))
-    sh = _materialize_once(sh)  # ownership agg + coverage probe
+    sh = materialize(sh)  # ownership agg + coverage probe
     owner = (
         sh.groupBy("h")
         .agg(
@@ -1556,7 +1501,7 @@ def remove_boilerplate_segments(
         raise ValueError(f"k must be >= 1, got {k}")
     if min_docs < 1:
         raise ValueError(f"min_docs must be >= 1, got {min_docs}")
-    t = _spread(df, id_col).select(
+    t = spread(df, id_col).select(
         F.col(id_col),
         F.split(F.col(text), " ").alias("__t"),
     ).withColumn("__nseg", F.expr(f"int(size(__t) / {k})"))
@@ -1859,7 +1804,7 @@ def containment_pairs(
         if shingle_k == 1
         else shingles(text, shingle_k, tokens_col="__tk")
     )
-    t = _materialize_once(
+    t = materialize(
         base.select(F.col(id_col), *blocks, elems.alias("__tk")).withColumn(
             "__n", F.size("__tk")
         )
@@ -1945,7 +1890,7 @@ def lsh_band_tuning(
     """
     from pydala2_spark.functions.text import shingles_sql
 
-    sh = _materialize_once(
+    sh = materialize(
         docs.select(
             F.col(id_col).alias("__i"), F.split(F.col(text), " ").alias("__tk")
         ).select("__i", F.expr(shingles_sql(text, k, "__tk")).alias("sh"))

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 
 def funnel_counts(
     ev: DataFrame,
@@ -30,16 +32,15 @@ def funnel_counts(
     candidate broadcast. No windows, no self-join on the raw stream.
 
     The event table reads ONCE: the step-filtered (user, type, ts)
-    projection materializes via `dedup._materialize_once` before the
+    projection materializes via `frames.materialize` before the
     stage loop — each stage plus its count branch would otherwise
     re-scan the corpus (measured: 2·k FileScans for a k-step funnel,
     1 after).
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
     if not steps:
         raise ValueError("steps must be non-empty")
-    base = _materialize_once(
+    base = materialize(
         ev.filter(F.col(type_col).isin(steps)).select(user_col, type_col, ts_col)
     )
     stage = (
@@ -77,9 +78,8 @@ def cohort_retention(
     that SAME deduped frame (min over distinct days ≡ min over raw
     events), so the event table reads once, not twice.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    a = _materialize_once(
+    a = materialize(
         ev.select(user_col, F.to_date(ts_col).alias("day")).distinct()
     )
     f = a.groupBy(user_col).agg(F.min("day").alias("cohort"))
@@ -246,12 +246,11 @@ def resample_locf(
             F.col(ts_col).desc(), F.col(id_col).desc()
         )
     )
-    from pydala2_spark.operators.dedup import _materialize_once
 
     # materialized: per_bucket feeds the grid bounds, the global end
     # and the grid join — three corpus-scan + dedup-window re-runs
     # otherwise, and the stored frame is |users x buckets| (reduced)
-    per_bucket = _materialize_once(
+    per_bucket = materialize(
         ev.select(
             F.col(user_col),
             bucket.alias("bucket"),
@@ -487,11 +486,10 @@ def resample_interp(
         Window.partitionBy(F.col(user_col), F.date_trunc("day", F.col(ts_col)))
         .orderBy(F.col(ts_col).desc(), F.col(id_col).desc())
     )
-    from pydala2_spark.operators.dedup import _materialize_once
 
     # materialized: per_day feeds the grid bounds and the grid join —
     # two corpus-scan + dedup-window re-runs otherwise (reduced frame)
-    per_day = _materialize_once(
+    per_day = materialize(
         ev.select(
             F.col(user_col),
             F.date_trunc("day", F.col(ts_col)).alias("__d"),
@@ -801,14 +799,13 @@ def lag_autocorr(
     series + a map-side-combined moment agg; events never join."""
     if not lags or any(k < 1 for k in lags):
         raise ValueError(f"lags must be positive, got {lags}")
-    from pydala2_spark.operators.dedup import _materialize_once
 
     dec = "decimal(38,12)"
     # materialized: each lag's self-join consumes the series twice
     # (|lags| x 2 evaluations of the caller's corpus-scale daily
     # aggregate otherwise), and the stored frame is calendar-bounded —
     # the small-output/heavy-compute shape where a checkpoint pays
-    base = _materialize_once(
+    base = materialize(
         series.select(
             F.col(group_col),
             F.col(time_index_col).alias("__i"),
@@ -1375,7 +1372,7 @@ def rfm_scores(
     populated (r,f,m) cell with user count and mean spend.
 
     100 TB shape: one map-side-combined groupBy collapses the event
-    log to the user grain (localCheckpoint-ed — three downstream
+    log to the user grain (materialized — three downstream
     consumers must not re-run the scan); each score is a
     distributed_ntile = range shuffle + tiny offset aggregation on the
     USER frame, never a global window; the final cell rollup is
@@ -1384,7 +1381,7 @@ def rfm_scores(
 
     p = events.filter(F.col("event_type") == purchase_type)
     mx = p.agg(F.max("ts").alias("__mx"))
-    users = (
+    users = materialize(
         p.groupBy("user_id")
         .agg(
             F.max("ts").alias("__last"),
@@ -1396,8 +1393,8 @@ def rfm_scores(
             "recency_days",
             F.datediff(F.to_date("__mx"), F.to_date("__last")).cast("long"),
         )
-        .drop("__mx", "__last")
-        .localCheckpoint()
+        .drop("__mx", "__last"),
+        "rfm_scores: users",
     )
     # checkpoint BETWEEN scoring passes, not just before the first:
     # each distributed_ntile references its input from several plan
@@ -1405,15 +1402,18 @@ def rfm_scores(
     # chaining three of them un-checkpointed compounds the lineage
     # (measured: 59 shuffle exchanges vs 17 with the checkpoints —
     # the triangle_counts disease in miniature)
-    scored = distributed_ntile(
-        users,
-        [F.desc("recency_days"), F.asc("user_id")],
-        k,
-        out_col="r_score",
-    ).localCheckpoint()
-    scored = distributed_ntile(
-        scored, [F.asc("frequency"), F.asc("user_id")], k, out_col="f_score"
-    ).localCheckpoint()
+    scored = materialize(
+        distributed_ntile(
+            users, [F.desc("recency_days"), F.asc("user_id")], k, out_col="r_score"
+        ),
+        "rfm_scores: recency scores",
+    )
+    scored = materialize(
+        distributed_ntile(
+            scored, [F.asc("frequency"), F.asc("user_id")], k, out_col="f_score"
+        ),
+        "rfm_scores: frequency scores",
+    )
     scored = distributed_ntile(
         scored, [F.asc("monetary"), F.asc("user_id")], k, out_col="m_score"
     )
@@ -1493,14 +1493,14 @@ def concurrency_sweep(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     flagged = events.withColumn(
         "__new", F.when(gap | F.lag("ts").over(w).isNull(), 1).otherwise(0)
     )
-    sess = (
+    sess = materialize(
         flagged.withColumn(
             "__sid",
             F.sum("__new").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
         )
         .groupBy("user_id", "__sid")
-        .agg(F.min("ts").alias("__s"), F.max("ts").alias("__e"))
-        .localCheckpoint()
+        .agg(F.min("ts").alias("__s"), F.max("ts").alias("__e")),
+        "concurrency_sweep: sessions",
     )
     # ONE scan of the session checkpoint emits both sweep deltas per
     # interval (explode), instead of a two-branch union scanning it
@@ -1523,12 +1523,15 @@ def concurrency_sweep(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             )
         ).alias("__ev"),
     ).select("user_id", "__sid", "__ev.t", "__ev.pri", "__ev.d")
-    cum = distributed_prefix(
-        deltas,
-        [F.asc("t"), F.asc("pri"), F.asc("user_id"), F.asc("__sid")],
-        sum_col="d",
-        cum_col="__cum",
-    ).localCheckpoint()
+    cum = materialize(
+        distributed_prefix(
+            deltas,
+            [F.asc("t"), F.asc("pri"), F.asc("user_id"), F.asc("__sid")],
+            sum_col="d",
+            cum_col="__cum",
+        ),
+        "concurrency_sweep: running count",
+    )
     # peak AND first-peak-time in ONE pass over the checkpoint: the
     # lexicographic max of (cum, -epoch_us) is (max cum, -min t among
     # argmax rows) — exact integer/decimal compare, no tie hazard
@@ -1608,18 +1611,18 @@ def anova_oneway(
     left to the caller's F-table (the welch_ttest rationale).
 
     100 TB shape: ONE map-side-combined aggregation to the k-row group
-    frame (localCheckpoint-ed: totals and terms both consume it);
+    frame (materialized: totals and terms both consume it);
     everything after is one-row broadcast arithmetic."""
     d = F.col(value_col).cast("decimal(38,6)")
-    g = (
+    g = materialize(
         values.filter(F.col(value_col).isNotNull())
         .groupBy(group_col)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(d).alias("s"),
             F.sum(d * d).alias("ss"),
-        )
-        .localCheckpoint()
+        ),
+        "anova_oneway: groups",
     )
     t = g.agg(
         F.sum("n").cast("long").alias("n_tot"),
@@ -2560,9 +2563,8 @@ def dau_wau_mau(
     days past the observed calendar are dropped by the final inner
     join on the dau leg.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    ud = _materialize_once(
+    ud = materialize(
         events.select(
             F.to_date(F.col(ts_col)).alias("d"), F.col(user_col).alias("u")
         ).distinct()
@@ -2652,9 +2654,8 @@ def growth_accounting(
     churn count are equi-joins on (week, user) — no windows, no range
     joins, everything hash-partitions on bounded-skew keys.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    uw = _materialize_once(
+    uw = materialize(
         events.select(
             F.date_trunc("week", F.col(ts_col)).cast("date").alias("w"),
             F.col(user_col).alias("u"),
@@ -3417,9 +3418,8 @@ def retention_halflife(
     map-side-combined aggregations (user-day dedup -> first-seen
     join); everything after runs on the O(cohorts x offsets) frame
     against one-row broadcast bounds."""
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    a = _materialize_once(
+    a = materialize(
         events.select(user_col, F.to_date(ts_col).alias("day"))
         .filter(F.col(user_col).isNotNull())
         .distinct()
@@ -3430,9 +3430,8 @@ def retention_halflife(
     # `full` feeds BOTH the activity join and the base agg; `r` feeds
     # BOTH the OLS moments and the rate pivot — without a checkpoint
     # each consumer re-runs the first-seen aggregate / the activity
-    # join (Catalyst emits no ReusedExchange here, the
-    # _materialize_once measurement)
-    full = _materialize_once(
+    # join (Catalyst emits no ReusedExchange here)
+    full = materialize(
         f.crossJoin(F.broadcast(bounds))
         .filter(F.datediff(F.col("__mx"), F.col("cohort")) >= max_offset)
         .select(user_col, "cohort")
@@ -3448,7 +3447,7 @@ def retention_halflife(
         F.count(F.lit(1)).cast("long").alias("cohort_users"),
         F.count_distinct("cohort").cast("long").alias("n_cohorts"),
     )
-    r = _materialize_once(
+    r = materialize(
         act.crossJoin(F.broadcast(base)).withColumn(
             "rate",
             F.col("n_active").cast("double")

@@ -33,14 +33,13 @@ exact scaled integers (:func:`_half_up`, :func:`_sum_by`).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.errors import PySparkTypeError
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DataType,
@@ -50,6 +49,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pydala2_spark.frames import job_description, materialize, materialize_counted
 
 DRIVER_EDGE_BUDGET = 2_000_000
 """Edge frames with fewer rows than this (counted after the
@@ -94,29 +95,6 @@ def _symmetrize(
 # -- driver loops: sizing, fetch, exact decimal arithmetic -------------
 
 
-@contextmanager
-def _job_description(spark: SparkSession, text: str):
-    """Label the Spark jobs issued inside the block, then restore the
-    caller's description (a bench's job group keeps its own)."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(text)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
-
-
-def _counted_checkpoint(df: DataFrame, label: str) -> tuple[DataFrame, int]:
-    """Eager localCheckpoint of ``df`` plus its row count, both from
-    ONE job: the count is an Observation on the checkpoint's own scan,
-    so sizing a frame costs no job beyond materializing it."""
-    obs = Observation()
-    with _job_description(df.sparkSession, label):
-        ck = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    return ck, obs.get["n"]
-
-
 def _fetch_local(df: DataFrame, label: str) -> pa.Table:
     """The one driver fetch of the graph operators: a single labeled
     job returning an Arrow table. Arrow keeps nullable ``long`` ids
@@ -125,7 +103,7 @@ def _fetch_local(df: DataFrame, label: str) -> pa.Table:
     a per-Row dict build measured 19.1 s against 5.2 s for an Arrow
     transfer plus a zip over the columns. Falls back to ``collect()``
     if Arrow conversion refuses the column types."""
-    with _job_description(df.sparkSession, label):
+    with job_description(df.sparkSession, label):
         try:
             return df.toArrow()
         except PySparkTypeError:  # raised before any job runs
@@ -140,7 +118,7 @@ def _local_edges(df: DataFrame, op: str) -> tuple[pa.Table | None, DataFrame]:
     loop). Returns ``(table or None, checkpointed frame)`` — the
     distributed loop runs on the checkpoint, so the caller's edge
     derivation never replays."""
-    ck, n = _counted_checkpoint(df, f"graph.{op}: checkpoint edges")
+    ck, n = materialize_counted(df, f"graph.{op}: checkpoint edges")
     if n >= DRIVER_EDGE_BUDGET:
         return None, ck
     return _fetch_local(ck, f"graph.{op}: fetch edges"), ck
@@ -444,7 +422,6 @@ def pagerank(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
-    from pydala2_spark.operators.dedup import _materialize_once
 
     t = _node_type(edges.select("src"), edges.select("dst"))
     local, edges = _local_edges(
@@ -464,20 +441,20 @@ def pagerank(
     # (edge window included) per iteration per join side — measured
     # 206 exchanges / 81 Window recomputes at k=3 before this, 1
     # edge-derivation after
-    nodes = _materialize_once(
+    nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     ncnt = nodes.agg(F.count(F.lit(1)).alias("__n"))
-    outw = _materialize_once(edges.groupBy("src").agg(F.sum("w").alias("ow")))
+    outw = materialize(edges.groupBy("src").agg(F.sum("w").alias("ow")))
     pr = nodes.crossJoin(F.broadcast(ncnt)).select(
         "node",
         F.round(F.lit(1.0) / F.col("__n"), 12).alias("pr"),
     )
     base = 1.0 - damping
     for _ in range(iterations):
-        pr = _materialize_once(pr)
+        pr = materialize(pr)
         contrib = (
             edges.join(pr.withColumnRenamed("node", "src"), "src")
             .join(outw, "src")
@@ -591,7 +568,7 @@ def triangle_counts(
     is why this shape survives power-law graphs where the naive
     3-way self-join dies on the hottest hub. The normalized edge
     frame, the degree table, and the oriented-edge frame are each
-    consumed 2-3 times downstream, so all three are localCheckpoint-ed
+    consumed 2-3 times downstream, so all three are materialized
     (the kcore pattern): without it, every reuse re-runs the caller's
     full edge-derivation lineage — on the co-purchase graph that is
     a lineitem scan + self-join + distinct repeated up to 8 times
@@ -603,18 +580,18 @@ def triangle_counts(
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge list as canonical ``(a, b)`` with a < b, each
-    pair once, self-loops dropped — localCheckpoint-ed because the
+    pair once, self-loops dropped — materialized because the
     triangle pass consumes it three times (degree table, orientation
     join, wedge-closing join) and the caller's edge-derivation lineage
     must not replay per consumer."""
-    return (
+    return materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "graph: canonical edges",
     )
 
 
@@ -629,11 +606,9 @@ def _triangle_pass(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     keeps composed transitivity queries at one enumeration instead of
     replaying the pass per leg (the 289-exchange plan this module's
     checkpoint discipline eliminated)."""
-    deg = (
-        _endpoints(e, "a", "b")
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint()
+    deg = materialize(
+        _endpoints(e, "a", "b").groupBy("n").agg(F.count(F.lit(1)).alias("d")),
+        "graph.triangle_pass: degrees",
     )
     ed = e.join(
         deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a"
@@ -641,10 +616,13 @@ def _triangle_pass(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    o = ed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()
+    o = materialize(
+        ed.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        ),
+        "graph.triangle_pass: oriented edges",
+    )
     ov = o.join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
     w1 = ov.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     w2 = ov.select("u", F.col("v").alias("z"), F.col("dv").alias("dz"))
@@ -759,7 +737,7 @@ def kcore(
     only ever SHRINKS. Rounds are peeled in BATCHES of
     ``checkpoint_every`` between lineage truncations: a batch stacks
     its peels lazily (Catalyst plans them as one multi-stage job), so
-    the serial per-round localCheckpoint+count action chain — the
+    the serial per-round checkpoint+count action chain — the
     dominant constant in the 100x sweep (27x at r9, driven by job
     round-trips, not data) — is paid once per batch instead of once
     per round. A converged peel is a no-op, so testing the fixpoint
@@ -778,7 +756,7 @@ def kcore(
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     if checkpoint_every < 1:
         raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    adj, n_edges = _counted_checkpoint(
+    adj, n_edges = materialize_counted(
         _symmetrize(edges, "src", "dst"), "graph.kcore: checkpoint adjacency"
     )
     rounds_left = max_iter
@@ -797,7 +775,7 @@ def kcore(
             pruned = pruned.join(keep, "u", "left_semi").join(
                 keep.withColumnRenamed("u", "v"), "v", "left_semi"
             )
-        pruned, n_pruned = _counted_checkpoint(pruned, "graph.kcore: peel batch")
+        pruned, n_pruned = materialize_counted(pruned, "graph.kcore: peel batch")
         rounds_left -= steps
         if n_pruned == n_edges:
             break  # fixpoint: the batch's first peel was already a no-op
@@ -904,9 +882,9 @@ def link_prediction_scores(
     against existing edges is key-shuffled on the pair. The edge
     frame is consumed three times (both union branches + the
     anti-join) and the wedge-arm frame twice (self-join), so both are
-    localCheckpoint-ed — the triangle_counts lesson: without it every
+    materialized — the triangle_counts lesson: without it every
     consumption re-runs the caller's full edge-derivation lineage."""
-    edges = edges.select("src", "dst").localCheckpoint()
+    edges = materialize(edges.select("src", "dst"), "graph.link_prediction_scores: edges")
     adj = _symmetrize(edges, "src", "dst")
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     mid = deg
@@ -917,9 +895,12 @@ def link_prediction_scores(
             )
         mid = deg.filter(F.col("d") <= max_middle_degree)
     # wedges a - m - b with a < b; middle degree rides along for AA
-    am = adj.join(mid.withColumnRenamed("u", "__m"), adj["u"] == F.col("__m")).select(
-        F.col("__m").alias("m"), F.col("v").alias("a"), F.col("d").alias("dm")
-    ).localCheckpoint()
+    am = materialize(
+        adj.join(mid.withColumnRenamed("u", "__m"), adj["u"] == F.col("__m")).select(
+            F.col("__m").alias("m"), F.col("v").alias("a"), F.col("d").alias("dm")
+        ),
+        "graph.link_prediction_scores: wedge arms",
+    )
     wedge = (
         am.alias("x")
         .join(am.alias("y"), ["m", "dm"])
@@ -981,35 +962,35 @@ def bfs_distances(
     most once ever. Work per round is proportional to the frontier's
     edge boundary, not the graph; ``max_hops`` bounds the round count.
     The settled and frontier frames are each consumed by later rounds,
-    so both are localCheckpoint-ed per round (the triangle_counts
+    so both are materialized per round (the triangle_counts
     lesson: an un-checkpointed reuse re-runs the caller's whole
     edge-derivation lineage every round).
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    edges = edges.select("src", "dst").localCheckpoint()
+    edges = materialize(edges.select("src", "dst"), "graph.bfs_distances: edges")
     adj = _symmetrize(edges, "src", "dst", u="node", v="v")
     nodes = adj.select("node").distinct()
-    settled = (
+    settled = materialize(
         seeds.select("node")
         .distinct()
         .join(nodes, "node")
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
+        .select("node", F.lit(0).cast("long").alias("dist")),
+        "graph.bfs_distances: seeds",
     )
     frontier = settled
     for hop in range(1, max_hops + 1):
-        grown = (
+        grown = materialize(
             frontier.join(adj, "node")
             .select(F.col("v").alias("node"))
             .distinct()
             .join(settled, "node", "left_anti")
-            .select("node", F.lit(hop).cast("long").alias("dist"))
-            .localCheckpoint()
+            .select("node", F.lit(hop).cast("long").alias("dist")),
+            "graph.bfs_distances: frontier",
         )
         if grown.isEmpty():
             break
-        settled = settled.unionAll(grown).localCheckpoint()
+        settled = materialize(settled.unionAll(grown), "graph.bfs_distances: settled")
         frontier = grown
     return settled
 
@@ -1067,7 +1048,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     the adjacency against the |nodes| label frame and two
     map-side-combined aggs — the argmax is a struct-min over
     (-count, label), which orders any label type, NOT a per-node
-    window sort. Adjacency and each round's labels localCheckpoint
+    window sort. Adjacency and each round's labels are materialized
     (the triangle_counts lesson: reuse without it re-runs the caller's
     edge derivation every round).
     """
@@ -1083,26 +1064,25 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         return _local_frame(
             edges.sparkSession, {"node": (t, node), "community": (t, community)}
         )
-    adj = _symmetrize(edges, "src", "dst", u="node", v="v").localCheckpoint()
-    labels = (
-        adj.select("node")
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
+    adj = _symmetrize(edges, "src", "dst", u="node", v="v")
+    adj = materialize(adj, "graph.label_propagation: adjacency")
+    labels = materialize(
+        adj.select("node").distinct().withColumn("lbl", F.col("node")),
+        "graph.label_propagation: initial labels",
     )
     for _ in range(rounds):
         cnt = adj.join(
             labels.select(F.col("node").alias("v"), "lbl"), "v"
         ).groupBy("node", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        labels = materialize(
             cnt.groupBy("node")
             .agg(
                 F.min(
                     F.struct((-F.col("c")).alias("nc"), F.col("lbl").alias("lbl"))
                 ).alias("m")
             )
-            .select("node", F.col("m.lbl").alias("lbl"))
-            .localCheckpoint()
+            .select("node", F.col("m.lbl").alias("lbl")),
+            "graph.label_propagation: round",
         )
     return labels.select("node", F.col("lbl").alias("community"))
 
@@ -1148,10 +1128,10 @@ def modularity_report(
     100 TB shape: degree and community-size aggregations are
     map-side-combined; internal edges are two equi-joins of the edge
     list against the |nodes| community frame; the edge total attaches
-    as a one-row broadcast. Reused frames localCheckpoint (the
+    as a one-row broadcast. Reused frames are materialized (the
     triangle_counts lesson)."""
-    edges = edges.select("src", "dst").localCheckpoint()
-    comm = communities.localCheckpoint()
+    edges = materialize(edges.select("src", "dst"), "graph.modularity_report: edges")
+    comm = materialize(communities, "graph.modularity_report: communities")
     m_row = edges.agg(F.count(F.lit(1)).cast("long").alias("m"))
     deg = (
         _endpoints(edges, "src", "dst", out="node")
@@ -1242,12 +1222,12 @@ def degree_assortativity(edges: DataFrame, ndigits: int = 6) -> DataFrame:
     of the edge list against it, ONE moment aggregation. No windows,
     no driver work."""
     dec = "decimal(38,0)"
-    edges = edges.select("src", "dst").localCheckpoint()
-    deg = (
-        _endpoints(edges, "src", "dst", out="node")
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint()
+    edges = materialize(edges.select("src", "dst"), "graph.degree_assortativity: edges")
+    deg = materialize(
+        _endpoints(edges, "src", "dst", out="node").groupBy("node").agg(
+            F.count(F.lit(1)).alias("d")
+        ),
+        "graph.degree_assortativity: degrees",
     )
     j = edges.join(
         deg.select(F.col("node").alias("src"), F.col("d").alias("du")), "src"
@@ -1347,7 +1327,6 @@ def personalized_pagerank(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
-    from pydala2_spark.operators.dedup import _materialize_once
 
     t = _node_type(edges.select("src"), edges.select("dst"), seeds.select("node"))
     w_t = edges.schema["w"].dataType
@@ -1377,18 +1356,18 @@ def personalized_pagerank(
             both.sparkSession, {"node": (t, node), "pr": (DoubleType(), pr)}
         )
     edges = both.filter(~F.col("__seed")).select("src", "dst", "w")
-    seeds = _materialize_once(
+    seeds = materialize(
         both.filter(F.col("__seed")).select(F.col("src").alias("node")).distinct()
     )
-    nodes = _materialize_once(
+    nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .union(seeds.select("node"))
         .distinct()
     )
     scnt = seeds.agg(F.count(F.lit(1)).alias("__s"))
-    outw = _materialize_once(edges.groupBy("src").agg(F.sum("w").alias("ow")))
-    flagged = _materialize_once(
+    outw = materialize(edges.groupBy("src").agg(F.sum("w").alias("ow")))
+    flagged = materialize(
         nodes.join(seeds.withColumn("__is_seed", F.lit(1)), "node", "left")
     )
     pr = flagged.crossJoin(F.broadcast(scnt)).select(
@@ -1402,7 +1381,7 @@ def personalized_pagerank(
     )
     base = 1.0 - damping
     for _ in range(iterations):
-        pr = _materialize_once(pr)
+        pr = materialize(pr)
         contrib = (
             edges.join(pr.withColumnRenamed("node", "src"), "src")
             .join(outw, "src")
@@ -1551,12 +1530,11 @@ def hits(
     iterated on the driver. Above the budget each update is one equi-join of the edge
     list with the |nodes| score frame plus a map-side-combined
     groupBy; the normalizer is a one-row broadcast; the raw score
-    frames localCheckpoint per iteration (the pagerank lineage
+    frames are materialized per iteration (the pagerank lineage
     lesson), and nothing collects to the driver.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    from pydala2_spark.operators.dedup import _materialize_once
 
     # hubs and authorities share the output's node column: cast both
     # to the type the final union resolves to (a no-op when they agree)
@@ -1577,9 +1555,9 @@ def hits(
                 "score": (DoubleType(), np.concatenate([h, a])),
             },
         )
-    e = _materialize_once(e.distinct())
+    e = materialize(e.distinct())
     dec = "decimal(38,12)"
-    h = _materialize_once(
+    h = materialize(
         e.select("hub").distinct().select("hub", F.lit(1.0).alias("h"))
     )
     a = None
@@ -1591,7 +1569,7 @@ def hits(
         # unmaterialized, every half-iteration paid the edge join +
         # aggregate TWICE (r14 measurement). The normalized frames are
         # a cheap projection over the checkpoint, so they stay lazy.
-        araw = _materialize_once(
+        araw = materialize(
             e.join(h, "hub")
             .groupBy("auth")
             .agg(F.sum(F.col("h").cast(dec)).alias("__ar"))
@@ -1602,7 +1580,7 @@ def hits(
             F.round(F.col("__ar").cast("double") / F.col("__as"), 12)
             .alias("a"),
         )
-        hraw = _materialize_once(
+        hraw = materialize(
             e.join(a, "auth")
             .groupBy("hub")
             .agg(F.sum(F.col("a").cast(dec)).alias("__hr"))
@@ -1720,19 +1698,19 @@ def negative_edge_samples(
     tests/test_verbs_plans.py.
     """
     from pydala2_spark.functions.skew import distributed_prefix
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    e = (
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "graph.negative_edge_samples: edges",
     )
     nodes = _endpoints(e, "a", "b", out="node").distinct()
-    ranked = distributed_prefix(nodes, ["node"], rank_col="r").localCheckpoint()
+    ranked = distributed_prefix(nodes, ["node"], rank_col="r")
+    ranked = materialize(ranked, "graph.negative_edge_samples: ranks")
     nv = ranked.agg(F.count(F.lit(1)).alias("__nv"))
     succ = (
         ranked.crossJoin(F.broadcast(nv))
@@ -1756,12 +1734,12 @@ def negative_edge_samples(
         .distinct()
         .join(e, ["a", "b"], "left_anti")
     )
-    pairs = _materialize_once(
+    pairs = materialize(
         e.select("a", "b", F.lit(1).alias("label")).unionByName(
             neg.select("a", "b", F.lit(0).alias("label"))
         )
     )
-    adj = _materialize_once(_symmetrize(e, "a", "b"))
+    adj = materialize(_symmetrize(e, "a", "b"))
     cn = (
         pairs.join(adj.select(F.col("u").alias("a"), F.col("v").alias("m")), "a")
         .join(adj.select(F.col("u").alias("b"), F.col("v").alias("m")), ["b", "m"])
@@ -1986,11 +1964,8 @@ def rich_club(
     LITERAL threshold set — no per-k passes, no subgraph
     materialization."""
     e = _canonical_edges(edges, src, dst)
-    deg = (
-        _endpoints(e, "a", "b")
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
+    deg = materialize(
+        _endpoints(e, "a", "b").groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     )
     ed = e.join(
         deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a"

@@ -51,6 +51,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.functions.sortspec import SortSpec, to_sort_columns
 from pydala2_spark.plans.fs import (
     delete_paths,
@@ -90,7 +91,7 @@ class CompactionPlan:
     group (``__key`` — partition path, interval label or "<all>"),
     its member ``files`` and their total ``rows``.
 
-    The frame is locally checkpointed lazily: the first action pins the
+    The frame is materialized lazily: the first action pins the
     row set, so the plan stays readable after the compaction deletes
     its input files, and a dry-run plan nobody inspects costs no job.
 
@@ -105,7 +106,7 @@ class CompactionPlan:
     ``preview(limit)`` caps the collect for display at 10⁶ groups."""
 
     def __init__(self, candidates: DataFrame) -> None:
-        self._df = candidates.localCheckpoint(eager=False)
+        self._df = materialize(candidates)
         self._groups: dict[str, list[str]] | None = None
         self._rows: dict[str, int] = {}
 
@@ -301,8 +302,8 @@ def plan_compact_by_timeperiod(
     Each candidate file lands in exactly one group (no double rewrite);
     groups with >1 file are compacted."""
     # the footer scan feeds TWO actions (the stat-less probe below and
-    # the candidate materialization) — one lazy checkpoint runs it once
-    st = stats if stats is not None else collect_file_stats(spark, path).localCheckpoint(eager=False)
+    # the candidate materialization) — one lazy materialization runs it once
+    st = stats if stats is not None else materialize(collect_file_stats(spark, path))
     step = _interval_seconds(interval)
     # bucket + candidate selection stay DISTRIBUTED (same rationale as
     # compaction_candidates): the driver receives one row per

@@ -38,6 +38,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 VALID_STRATEGIES = ("insert", "update", "upsert")
 
 _ORD = "__pydala_ord"
@@ -288,10 +290,9 @@ def scd2_frames(
     # probe + union); it is batch-sized, so materializing it once is
     # cheap at any scale and stops its source×current join from
     # running per branch. History itself stays lazy: at 100 TB a
-    # second scan beats a full localCheckpoint copy, and chained
-    # in-memory applies should checkpoint between batches themselves.
-    delta = _scd2_delta(history, source, keys, ts, tracked, valid_from, valid_to)
-    delta = delta.localCheckpoint(eager=False)
+    # second scan beats a full materialized copy, and chained
+    # in-memory applies should materialize between batches themselves.
+    delta = materialize(_scd2_delta(history, source, keys, ts, tracked, valid_from, valid_to))
     return merge_frames(history, delta, keys=[*keys, valid_from], strategy="upsert")
 
 
@@ -362,7 +363,7 @@ def merge(
     compression: str = "zstd",
     max_rows_per_file: int = 10_000_000,
 ) -> MergeResult:
-    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
+    from pydala2_spark.plans.fs import decoded_path, delete_paths, list_files, path_exists
     from pydala2_spark.sources.writer import cast_to_schema
 
     if strategy not in VALID_STRATEGIES:
@@ -427,13 +428,17 @@ def merge(
     src_conformed = cast_to_schema(src, tgt_schema, alter_schema=True).select(
         *target_cols, *extra_cols, _BATCH, _ORD
     )
-    deduped = _dedup_last_wins(src_conformed, keys).cache()
+    # feeds the match probe, both source splits and the split count
+    deduped = materialize(_dedup_last_wins(src_conformed, keys))
     if extra_cols:
         target = target.select(
             "*", *[F.lit(None).cast(dict(deduped.dtypes)[c]).alias(c) for c in extra_cols]
         )
         target_cols = target.columns
 
+    # _FILE keeps Spark's URI-encoded spelling (no per-row decode on the
+    # target scan); the few collected names decode to the listing's
+    # spelling before any filesystem call or listing comparison
     tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
 
     # matched target rows: null-safe equi-join with the broadcast ALWAYS
@@ -447,18 +452,21 @@ def merge(
     )
 
     if strategy in ("update", "upsert"):
-        matched_files = [r[_FILE] for r in matched_target.select(_FILE).distinct().collect()]
+        raw_files = [r[_FILE] for r in matched_target.select(_FILE).distinct().collect()]
     else:
-        matched_files = []
+        raw_files = []
+    matched_files = [decoded_path(f) for f in raw_files]
 
     # matched/unmatched SOURCE rows split on the matched-target key set:
     # that set is bounded by the source batch (each key is a source
     # key), so the broadcast again stays on the small side — never on
-    # the target, which can be arbitrarily large. localCheckpoint (not
-    # cache) pins the PRE-append listing: the appends below trigger
-    # refreshByPath, which would re-materialize a cached plan against
+    # the target, which can be arbitrarily large. The eager
+    # materialization pins the PRE-append listing: the appends below
+    # trigger refreshByPath, which would re-resolve a cached plan against
     # the new file list and leak just-inserted keys into the match set.
-    matched_keys = matched_target.select(*keys).distinct().localCheckpoint(eager=True)
+    matched_keys = materialize(
+        matched_target.select(*keys).distinct(), "merge: matched keys"
+    )
     inserts = (
         deduped.join(
             _hint_small(matched_keys, source_count),
@@ -546,7 +554,7 @@ def merge(
         # -- rewrite matched files: (their unmatched rows) ∪ (matched source)
         if updated and matched_files:
             survivors = (
-                _filter_to_files(tagged, matched_files)
+                _filter_to_files(tagged, raw_files)
                 .join(
                     _hint_small(src_keys, source_count), on=match_cond, how="left_anti"
                 )
@@ -591,8 +599,6 @@ def merge(
             merge_result=result,
             pending_deletes=matched_files if result.rewritten_files else [],
         ) from e
-    finally:
-        deduped.unpersist()
 
     result.updated = updated
     result.inserted = inserted
@@ -681,7 +687,7 @@ def delete_where(
     ``deleted_rows``, ``rewritten_files``, ``preserved_files``,
     ``matched_files``.
     """
-    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
+    from pydala2_spark.plans.fs import decoded_path, delete_paths, list_files, path_exists
 
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     all_before = (
@@ -706,7 +712,8 @@ def delete_where(
     # pushed to the scan, so min/max row-group pruning skips clean
     # files without reading data)
     per_file = matched.groupBy(_FILE).count().collect()
-    matched_files = [r[_FILE] for r in per_file]
+    raw_files = [r[_FILE] for r in per_file]
+    matched_files = [decoded_path(f) for f in raw_files]
     deleted_rows = int(sum(r["count"] for r in per_file))
     if not matched_files:
         return {
@@ -719,7 +726,7 @@ def delete_where(
     appended = False
     try:
         hit = F.coalesce(pred, F.lit(False))
-        survivors = _filter_to_files(tagged, matched_files).filter(
+        survivors = _filter_to_files(tagged, raw_files).filter(
             ~hit
         ).drop(_FILE)
         _append(survivors, target_path, partition_by, compression, max_rows_per_file)
@@ -804,7 +811,7 @@ def update_where(
     Returns ``updated_rows`` / ``matched_files`` / ``rewritten_files``
     / ``preserved_files``.
     """
-    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
+    from pydala2_spark.plans.fs import decoded_path, delete_paths, list_files, path_exists
 
     if not set:
         raise ValueError("update_where needs at least one SET assignment")
@@ -829,7 +836,8 @@ def update_where(
     tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
     matched = _delete_discovery(tagged, pred)
     per_file = matched.groupBy(_FILE).count().collect()
-    matched_files = [r[_FILE] for r in per_file]
+    raw_files = [r[_FILE] for r in per_file]
+    matched_files = [decoded_path(f) for f in raw_files]
     updated_rows = int(sum(r["count"] for r in per_file))
     if not matched_files:
         return {
@@ -856,7 +864,7 @@ def update_where(
             )
             for c in target.columns
         ]
-        replacement = _filter_to_files(tagged, matched_files).select(*cols)
+        replacement = _filter_to_files(tagged, raw_files).select(*cols)
         _append(
             replacement, target_path, partition_by, compression, max_rows_per_file
         )

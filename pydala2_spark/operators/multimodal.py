@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pydala2_spark.frames import materialize, spread
+
 # ---------------------------------------------------------------------------
 # magic-number sniffing — JVM-side only (hex prefix compare)
 # ---------------------------------------------------------------------------
@@ -65,16 +67,6 @@ _MAGIC = [
     ("ppm", "5036"),  # 'P6' binary RGB
     ("pgm", "5035"),  # 'P5' binary gray
 ]
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Parallelize the Python decode stages when the input arrives in
-    fewer partitions than cores (see operators.dedup._spread): one
-    Arrow batch stream per partition means one Python worker per
-    partition — a single-split corpus would decode on one core."""
-    from pydala2_spark.operators.dedup import _spread as _s
-
-    return _s(df)
 
 
 def sniff_format(col: str | Column) -> Column:
@@ -1570,7 +1562,7 @@ def decode_images(df: DataFrame, binary_col: str, passthrough: list[str]) -> Dat
             out["decode_error"] = [None if d else IMAGE_UNRECOGNIZED for d in dims]
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 def _grid_features(arr, dim: int) -> list[float]:
@@ -1634,7 +1626,7 @@ def extract_features(
             out["decode_error"] = errors
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 IMAGE_PIXEL_STATS_FIELDS = [
@@ -1698,7 +1690,7 @@ def image_pixel_stats(df: DataFrame, binary_col: str, passthrough: list[str]) ->
             out["decode_error"] = errors
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 GIF_FRAME_STATS_FIELDS = [
@@ -1774,7 +1766,7 @@ def gif_frame_stats(
                 )
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 AUDIO_PCM_STATS_FIELDS = [
@@ -1836,7 +1828,7 @@ def audio_pcm_stats(df: DataFrame, binary_col: str, passthrough: list[str]) -> D
             out["decode_error"] = errors
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 AUDIO_FEATURE_FIELDS = [
@@ -1958,7 +1950,7 @@ def extract_audio_features(
             out["decode_error"] = errors
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 def resize_images(
@@ -2057,7 +2049,7 @@ def resize_images(
             out["decode_error"] = errors
             yield out
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 def sample_frames(
@@ -2123,7 +2115,7 @@ def sample_frames(
             ]
             yield pd.DataFrame(out)
 
-    return _spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
+    return spread(df).select(*passthrough, binary_col).mapInPandas(batches, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2176,10 +2168,10 @@ def media_near_duplicates(
     (:func:`operators.dedup.hamming_near_pairs`); the per-item hash
     frame is materialized once across the self-join sides.
     """
-    from pydala2_spark.operators.dedup import _materialize_once, hamming_near_pairs
+    from pydala2_spark.operators.dedup import hamming_near_pairs
 
-    hashed = _materialize_once(
-        _spread(df).select(F.col(id_col), blockhash48(binary_col).alias("bh"))
+    hashed = materialize(
+        spread(df).select(F.col(id_col), blockhash48(binary_col).alias("bh"))
     )
     return hamming_near_pairs(
         hashed, "bh", id_col, BLOCKHASH_BITS, max_hamming, chunks

@@ -20,14 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """See operators.dedup._spread: parallelize the per-row vector math
-    when the corpus arrives in fewer partitions than cores (single
-    small files); a no-op on a many-file 100 TB corpus."""
-    from pydala2_spark.operators.dedup import _spread as _s
-
-    return _s(df, *cols)
+from pydala2_spark.frames import materialize, spread
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -117,7 +110,7 @@ def cosine_topk(
     pair-heavy all-pairs work see ``embedding_near_duplicates``.
     """
     q = queries.select(F.col(id_col).alias("query_id"), unit_expr(vec_col).alias("qv"))
-    c = _spread(corpus, id_col).select(F.col(id_col).alias("neighbor_id"), unit_expr(vec_col).alias("cv"))
+    c = spread(corpus, id_col).select(F.col(id_col).alias("neighbor_id"), unit_expr(vec_col).alias("cv"))
     joined = c.crossJoin(F.broadcast(q))
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
@@ -187,7 +180,7 @@ def cosine_topk_lsh(
     ``multi_probe=1`` multiplies candidate volume ~(planes+1)× while
     typically closing most of the recall gap to exact.
     """
-    c = _spread(corpus, id_col).select(
+    c = spread(corpus, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         unit_expr(vec_col).alias("cv"),
         srp_bucket(vec_col, num_planes, dim).alias("bucket"),
@@ -257,7 +250,7 @@ def cosine_topk_ivf(
         F.col("__r") <= nprobe
     ).select("query_id", "qv", cell_col)
     # probe: exact cosine only within the routed cells
-    c = _spread(corpus, id_col).select(
+    c = spread(corpus, id_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(cell_col), unit_expr(vec_col).alias("cv")
     )
     joined = c.join(F.broadcast(routed), cell_col).filter(
@@ -280,7 +273,7 @@ def label_centroids(
     """Per-label mean vector via element-wise aggregate (posexplode →
     avg per (label, dim) → collect back ordered). The groupBy keys are
     (label, pos): perfectly parallel, no driver materialization."""
-    exploded = _spread(df, label_col).select(
+    exploded = spread(df, label_col).select(
         F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "x")
     ).withColumn("x", F.col("x").cast("double"))
     # exact decimal accumulation: the centroid feeds the nprobe cell
@@ -356,7 +349,7 @@ def build_ivf_index(
     vectors are precomputed at build time so probes pay zero
     normalization. Returns the centroid frame.
     """
-    assigned = _spread(corpus, id_col).select(
+    assigned = spread(corpus, id_col).select(
         F.col(id_col),
         unit_expr(vec_col).alias("uv"),
         srp_bucket(vec_col, srp_planes, dim).alias("cell"),
@@ -534,27 +527,25 @@ def kmeans_lloyd(
       to the DuckDB oracle's.
 
     Total cost per iteration: one pass over the cast frame + one
-    k*dim-row shuffle. ``persist=True`` (default) caches the cast
-    frame MEMORY_AND_DISK — the standard iterative-ML shape (MLlib
-    does the same): seeds + every iteration + the final assignment
-    would otherwise each re-scan and re-shuffle the corpus
-    (interleaved A/B at sf0.1: 2.1-2.4 s -> 1.6-1.7 s per fit). The
-    cache is corpus-sized; it spills past memory, and LRU eviction
-    reclaims it — pass ``persist=False`` to trade repeated scans for
-    zero cache footprint.
+    k*dim-row shuffle. ``persist=True`` (default) materializes the cast
+    frame once (:func:`~pydala2_spark.frames.materialize`) — the
+    standard iterative-ML shape (MLlib caches the same way): seeds +
+    every iteration + the final assignment would otherwise each
+    re-scan and re-shuffle the corpus (interleaved A/B at sf0.1:
+    2.1-2.4 s -> 1.6-1.7 s per fit). The stored copy is corpus-sized
+    and spills past memory; it is released with the returned plan —
+    pass ``persist=False`` to trade repeated scans for zero storage.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    e = _spread(df, id_col).select(
+    e = spread(df, id_col).select(
         F.col(id_col),
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
     )
     if persist:
-        from pyspark import StorageLevel
-
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
+        e = materialize(e)
     seed_rows = (
         e.orderBy(F.col(id_col).asc()).limit(k).select(id_col, "v").collect()
     )
@@ -601,22 +592,9 @@ def kmeans_lloyd(
         cents = [(r["cid"], list(r["c"])) for r in means]
     if not assign:
         # caller only wants the fitted centroids (it will attach cids
-        # itself, e.g. as a scan-stage projection — semantic_dedup):
-        # skip the final assignment pass AND its eager checkpoint
-        if persist:
-            e.unpersist()
+        # itself, e.g. as a scan-stage projection — semantic_dedup)
         return None, cents
-    out = _assign_frame(e, cents, id_col)
-    if persist:
-        # cut the returned frame's lineage off the corpus-sized cache
-        # so it can be freed NOW: the assignment is narrow (~20 B/row
-        # vs the corpus's vectors), so one eager localCheckpoint costs
-        # a single extra pass and releases dim*8*N bytes of storage —
-        # without it the cache entry would live as long as the caller
-        # holds the result
-        out = out.localCheckpoint(eager=True)
-        e.unpersist()
-    return out, cents
+    return _assign_frame(e, cents, id_col), cents
 
 
 # -- two-stage retrieval: quantized shortlist + exact re-rank ----------
@@ -643,7 +621,7 @@ def cosine_topk_rerank(
     per-pair work to one dot product).
     """
     qz = quantize_embeddings(corpus, vec_col)
-    c1 = _spread(qz, id_col).withColumn(
+    c1 = spread(qz, id_col).withColumn(
         "__dq", dequantize_expr("q", "q_min", "q_scale")
     ).select(
         F.col(id_col).alias("neighbor_id"),
@@ -1013,10 +991,9 @@ def kcenter_coreset(
     holds k vectors, never data."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    u = _materialize_once(
-        _spread(df, id_col).select(F.col(id_col), unit_expr(vec_col).alias("__uv"))
+    u = materialize(
+        spread(df, id_col).select(F.col(id_col), unit_expr(vec_col).alias("__uv"))
     )
     seed = u.orderBy(id_col).limit(1).collect()[0]
     chosen: list[tuple] = [(seed[id_col], None, list(seed["__uv"]))]
@@ -1137,7 +1114,7 @@ def mmr_select(
         raise ValueError(f"k must be >= 2, got {k}")
     if pool < k:
         raise ValueError(f"pool must be >= k, got pool={pool} k={k}")
-    u = _spread(df, id_col).select(
+    u = spread(df, id_col).select(
         F.col(id_col), unit_expr(vec_col).alias("__uv")
     )
     q = u.orderBy(id_col).limit(1).collect()[0]
@@ -1452,7 +1429,7 @@ def hard_negatives(
         F.col(label_col).alias("__qlbl"),
         unit_expr(vec_col).alias("qv"),
     )
-    c = _spread(corpus, id_col).select(
+    c = spread(corpus, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).alias("negative_label"),
         unit_expr(vec_col).alias("cv"),
@@ -1471,15 +1448,14 @@ def hard_negatives(
     w = Window.partitionBy("query_id", "__pos").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    ranked = (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(
+    # tiny (<= |queries| * (k+1) rows) but consumed twice below —
+    # materialize so the corpus window doesn't run twice
+    ranked = materialize(
+        scored.withColumn("__rk", F.row_number().over(w)).filter(
             ((F.col("__pos") == 1) & (F.col("__rk") == 1))
             | ((F.col("__pos") == 0) & (F.col("__rk") <= k))
-        )
-        # tiny (<= |queries| * (k+1) rows) but consumed twice below —
-        # checkpoint so the corpus window doesn't run twice
-        .localCheckpoint()
+        ),
+        "hard_negatives: ranked neighbours",
     )
     neg = ranked.filter(F.col("__pos") == 0).select(
         "query_id",
@@ -1582,11 +1558,11 @@ def embedding_drift(
     buffers, pca_fit-style) was tried in r11 and REVERTED — its
     generated aggregate update blows Janino's 64 KB method limit, and
     the failed-compile-then-interpret path costs far more than the
-    explode at every scale (and saved ~nothing at 1000x). ``_spread``
+    explode at every scale (and saved ~nothing at 1000x). ``spread``
     parallelizes the explode past single-row-group corpus files."""
     dec = "decimal(38,12)"
-    spread = _spread(df, id_col)
-    e = spread.select(
+    rows = spread(df, id_col)
+    e = rows.select(
         (F.col(id_col) % 2 == 0).alias("__a"),
         F.posexplode(
             F.expr(f"transform({vec_col}, x -> cast(x as double))")
@@ -1622,7 +1598,7 @@ def embedding_drift(
         ),
         6,
     ).cast("decimal(38,6)")
-    halves = spread.select(
+    halves = rows.select(
         (F.col(id_col) % 2 == 0).alias("__a"), nm.alias("__nm")
     ).agg(
         F.count(F.when(F.col("__a"), F.lit(1))).cast("long").alias("n_a"),
@@ -1741,10 +1717,9 @@ def pair_cosine_histogram(
     arithmetic; the histogram is one map-side-combined groupBy over
     <= 21 bins with a one-row broadcast total for the shares.
     """
-    from pydala2_spark.operators.dedup import _materialize_once
 
     d = dim or vector_dim(emb, vec_col)
-    wide = _materialize_once(unit_scalar_frame(emb, vec_col, [id_col], d))
+    wide = materialize(unit_scalar_frame(emb, vec_col, [id_col], d))
     ua = wide.select(
         F.col(id_col).alias("ia"),
         F.explode(F.array(*[F.lit(int(s)) for s in strides])).alias("__s"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
+
 _BLOOM_EMPTY_SCHEMA = (
     "file_path string, word_index long, word long, "
     "num_bits long, num_hashes int, value_type string"
@@ -215,10 +217,10 @@ def analyze_dataset(
             src = spark.read.option("basePath", path).parquet(
                 *[current[k] for k in sorted(needed)]
             )
-        scan = src.select(
-            input_file_col().alias("__file"),
-            *[F.col(c) for c in needed_cols],
-        ).persist()
+        # every sidecar branch below reads this one materialized scan
+        scan = materialize(
+            src.select(input_file_col().alias("__file"), *[F.col(c) for c in needed_cols])
+        )
 
     def _scan_for(files: list[str]):
         # a branch that needs the WHOLE scan skips the membership
@@ -228,117 +230,113 @@ def analyze_dataset(
             return scan
         return scan.filter(F.col("__file").isin(files))
 
-    try:
-        for t in bloom_tasks:
-            c = t["column"]
-            vt = t["vt"]
-            if vt is None:
-                src = scan if scan is not None else spark.read.parquet(path)
-                vt = src.schema[c].dataType.simpleString()
-            parts = [t["kept"]] if t["kept"] is not None else []
-            if t["added"]:
-                # refresh casts to the sidecar's stored type (schema
-                # drift must not diverge the hash family); a fresh build
-                # hashes the native type, exactly like build_bloom_index
-                vcol = F.col(c).cast(vt) if t["kept"] is not None else F.col(c)
-                values = (
-                    _scan_for(t["added"])
-                    .select(F.col("__file").alias("file_path"), vcol.alias("__v"))
-                    .where(F.col("__v").isNotNull())
+    for t in bloom_tasks:
+        c = t["column"]
+        vt = t["vt"]
+        if vt is None:
+            src = scan if scan is not None else spark.read.parquet(path)
+            vt = src.schema[c].dataType.simpleString()
+        parts = [t["kept"]] if t["kept"] is not None else []
+        if t["added"]:
+            # refresh casts to the sidecar's stored type (schema
+            # drift must not diverge the hash family); a fresh build
+            # hashes the native type, exactly like build_bloom_index
+            vcol = F.col(c).cast(vt) if t["kept"] is not None else F.col(c)
+            values = (
+                _scan_for(t["added"])
+                .select(F.col("__file").alias("file_path"), vcol.alias("__v"))
+                .where(F.col("__v").isNotNull())
+            )
+            words = (
+                _position_words(values, "__v", t["nb"], t["nh"])
+                .groupBy("file_path", "word_index")
+                .agg(F.bit_or("word_bit").alias("word"))
+            )
+            sentinels = spark.createDataFrame(
+                [(k2, _SENTINEL, 0) for k2 in t["added"]],
+                "file_path string, word_index long, word long",
+            )
+            parts.append(
+                words.unionByName(sentinels)
+                .withColumn("num_bits", F.lit(t["nb"]).cast("long"))
+                .withColumn("num_hashes", F.lit(t["nh"]).cast("int"))
+                .withColumn("value_type", F.lit(vt))
+            )
+        new_index = parts[0] if parts else spark.createDataFrame([], _BLOOM_EMPTY_SCHEMA)
+        for p in parts[1:]:
+            new_index = new_index.unionByName(p)
+        staging = f"{t['ipath']}__staging"
+        new_index.write.mode("overwrite").parquet(staging)
+        replace_dir(spark, staging, t["ipath"])
+        out[f"bloom:{c}"] = t["meta"]
+
+    if ndv_task:
+        k = ndv_task["lg_k"]
+        parts = [ndv_task["kept"]] if ndv_task["kept"] is not None else []
+
+        def _sketch(files: list[str], col: str):
+            return (
+                _scan_for(files)
+                .select(F.col("__file").alias("file_path"), F.col(col).alias("__v"))
+                .groupBy("file_path")
+                .agg(F.hll_sketch_agg("__v", F.lit(k)).alias("sketch"))
+                .select(
+                    "file_path",
+                    F.lit(col).alias("column"),
+                    "sketch",
+                    F.lit(k).alias("lg_k"),
                 )
-                words = (
-                    _position_words(values, "__v", t["nb"], t["nh"])
-                    .groupBy("file_path", "word_index")
-                    .agg(F.bit_or("word_bit").alias("word"))
+            )
+
+        if ndv_task["build"]:
+            allf = sorted(current)
+            for c in ndv_task["new_columns"]:
+                if allf:
+                    parts.append(_sketch(allf, c))
+            markers = (
+                spark.createDataFrame(
+                    [(f, "") for f in allf], "file_path string, column string"
                 )
-                sentinels = spark.createDataFrame(
-                    [(k2, _SENTINEL, 0) for k2 in t["added"]],
-                    "file_path string, word_index long, word long",
-                )
+                .withColumn("sketch", F.lit(None).cast("binary"))
+                .withColumn("lg_k", F.lit(k))
+            )
+            parts.append(markers)
+        else:
+            allf = sorted(current)
+            for c in ndv_task["new_columns"]:
+                if allf:
+                    parts.append(_sketch(allf, c))
+            if ndv_task["added"]:
+                for c in ndv_task["tracked"]:
+                    parts.append(_sketch(ndv_task["added"], c))
                 parts.append(
-                    words.unionByName(sentinels)
-                    .withColumn("num_bits", F.lit(t["nb"]).cast("long"))
-                    .withColumn("num_hashes", F.lit(t["nh"]).cast("int"))
-                    .withColumn("value_type", F.lit(vt))
-                )
-            new_index = parts[0] if parts else spark.createDataFrame([], _BLOOM_EMPTY_SCHEMA)
-            for p in parts[1:]:
-                new_index = new_index.unionByName(p)
-            staging = f"{t['ipath']}__staging"
-            new_index.write.mode("overwrite").parquet(staging)
-            replace_dir(spark, staging, t["ipath"])
-            out[f"bloom:{c}"] = t["meta"]
-
-        if ndv_task:
-            k = ndv_task["lg_k"]
-            parts = [ndv_task["kept"]] if ndv_task["kept"] is not None else []
-
-            def _sketch(files: list[str], col: str):
-                return (
-                    _scan_for(files)
-                    .select(F.col("__file").alias("file_path"), F.col(col).alias("__v"))
-                    .groupBy("file_path")
-                    .agg(F.hll_sketch_agg("__v", F.lit(k)).alias("sketch"))
-                    .select(
-                        "file_path",
-                        F.lit(col).alias("column"),
-                        "sketch",
-                        F.lit(k).alias("lg_k"),
-                    )
-                )
-
-            if ndv_task["build"]:
-                allf = sorted(current)
-                for c in ndv_task["new_columns"]:
-                    if allf:
-                        parts.append(_sketch(allf, c))
-                markers = (
                     spark.createDataFrame(
-                        [(f, "") for f in allf], "file_path string, column string"
+                        [(f, "") for f in ndv_task["added"]],
+                        "file_path string, column string",
                     )
                     .withColumn("sketch", F.lit(None).cast("binary"))
                     .withColumn("lg_k", F.lit(k))
                 )
-                parts.append(markers)
-            else:
-                allf = sorted(current)
-                for c in ndv_task["new_columns"]:
-                    if allf:
-                        parts.append(_sketch(allf, c))
-                if ndv_task["added"]:
-                    for c in ndv_task["tracked"]:
-                        parts.append(_sketch(ndv_task["added"], c))
-                    parts.append(
-                        spark.createDataFrame(
-                            [(f, "") for f in ndv_task["added"]],
-                            "file_path string, column string",
-                        )
-                        .withColumn("sketch", F.lit(None).cast("binary"))
-                        .withColumn("lg_k", F.lit(k))
-                    )
 
-            new_index = parts[0]
-            for p in parts[1:]:
-                new_index = new_index.unionByName(p)
-            staging = f"{ndv_task['ipath']}__staging"
-            new_index.write.mode("overwrite").parquet(staging)
-            replace_dir(spark, staging, ndv_task["ipath"])
-            if ndv_task["build"]:
-                n = (
-                    spark.read.parquet(ndv_task["ipath"])
-                    .filter(F.col("column") != "")
-                    .count()
-                )
-                out["ndv"] = {
-                    "rows": n,
-                    "files": len(current),
-                    "columns": list(ndv_columns),
-                }
-            else:
-                out["ndv"] = ndv_task["meta"]
-    finally:
-        if scan is not None:
-            scan.unpersist()
+        new_index = parts[0]
+        for p in parts[1:]:
+            new_index = new_index.unionByName(p)
+        staging = f"{ndv_task['ipath']}__staging"
+        new_index.write.mode("overwrite").parquet(staging)
+        replace_dir(spark, staging, ndv_task["ipath"])
+        if ndv_task["build"]:
+            n = (
+                spark.read.parquet(ndv_task["ipath"])
+                .filter(F.col("column") != "")
+                .count()
+            )
+            out["ndv"] = {
+                "rows": n,
+                "files": len(current),
+                "columns": list(ndv_columns),
+            }
+        else:
+            out["ndv"] = ndv_task["meta"]
     return out
 
 

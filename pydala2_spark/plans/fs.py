@@ -201,6 +201,14 @@ def decoded_path_col(col):
     return schemeless_col(F.url_decode(F.regexp_replace(col, r"\+", "%2B")))
 
 
+def decoded_path(path: str) -> str:
+    """:func:`decoded_path_col` for one collected file name, scheme kept:
+    its :func:`list_files` spelling (``unquote`` keeps ``+`` literal)."""
+    from urllib.parse import unquote
+
+    return unquote(path)
+
+
 def input_file_col():
     """``input_file_name()`` in the listing's spelling
     (:func:`decoded_path_col`)."""

@@ -59,6 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pydala2_spark.frames import materialize
+
 _MANIFEST_FMT = "v{:08d}.json"
 _MAX_COMMIT_RETRIES = 50
 
@@ -773,9 +775,8 @@ class SnapshotDataset:
         # feed consumers act repeatedly, and without the checkpoint
         # each action re-runs the file-diff full-outer join (measured
         # 1.36x slower across the CDC family without it).
-        from pydala2_spark.operators.dedup import _materialize_once
 
-        j = _materialize_once(j)
+        j = materialize(j)
         pre_img = F.struct(
             *[_pre_col(c).alias(c) for c in out_cols],
             F.lit("update_preimage").alias("_change_type"),

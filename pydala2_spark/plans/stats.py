@@ -248,16 +248,12 @@ def collect_file_stats(
 def dataset_stats(spark: SparkSession, path: str) -> dict:
     """Aggregate dataset stats (`pydala/dataset.py:2033-2041` parity):
     file count, row count, total bytes, per-partition breakdown."""
-    st = collect_file_stats(spark, path).cache()
-    try:
-        agg = st.agg(
-            F.count("*").alias("files"),
-            F.sum("num_rows").alias("rows"),
-            F.sum("size_bytes").alias("bytes"),
-        ).first()
-        return {"files": agg["files"], "rows": agg["rows"] or 0, "bytes": agg["bytes"] or 0}
-    finally:
-        st.unpersist()
+    agg = collect_file_stats(spark, path).agg(
+        F.count("*").alias("files"),
+        F.sum("num_rows").alias("rows"),
+        F.sum("size_bytes").alias("bytes"),
+    ).first()
+    return {"files": agg["files"], "rows": agg["rows"] or 0, "bytes": agg["bytes"] or 0}
 
 
 def prune_files(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _dsum,
     _osum,
@@ -182,9 +183,8 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection materializes once for both the sketch and the exact
     # top-10. See functions/sketch.cms_build for the 100 TB notes.
     from pydala2_spark.functions.sketch import cms_build, cms_estimate
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    ev = _materialize_once(_t(spark, sf_dir, "events").select("user_id"))
+    ev = materialize(_t(spark, sf_dir, "events").select("user_id"))
     counters = cms_build(ev, "user_id", depth=3, width=512)
     top = (
         ev.groupBy("user_id")
@@ -257,13 +257,12 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_bottom_k,
         kmv_estimate_expr,
     )
-    from pydala2_spark.operators.dedup import _materialize_once
 
     K = 64
     ev = _t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    hs = _materialize_once(
+    hs = materialize(
         ev.select("event_type", hash60(F.col("user_id")).alias("h")).distinct()
     )
     a = hs.filter(F.col("event_type") == "click").select("h")

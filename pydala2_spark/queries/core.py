@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _app_scoped_tmp,
     _dsum,
@@ -135,7 +136,7 @@ def merge_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint between chained applies: h1 is referenced by three
     # branches of the second apply (current-rows probe, anti-join,
     # union) and would otherwise recompute its whole DAG per branch
-    h1 = scd2_frames(h0, s1, keys=["k"], ts=1).localCheckpoint(eager=False)
+    h1 = materialize(scd2_frames(h0, s1, keys=["k"], ts=1))
     s2 = base.filter(F.col("k") % 3 == 0).select(
         "k", F.round(F.col("bal") * 2, 2).alias("bal"), "seg"
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _app_scoped_tmp,
     _t,
@@ -135,9 +136,8 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"),
         F.array_join(F.expr("slice(__tk, 2, size(__tk))"), " ").alias("text"),
     )
-    pairs = minhash_lsh_pairs(
-        docs.unionByName(clones), threshold=0.5
-    ).localCheckpoint()
+    pairs = minhash_lsh_pairs(docs.unionByName(clones), threshold=0.5)
+    pairs = materialize(pairs, "dedup_minhash_eval: pairs")
     planted = clone_src.select(
         F.col("doc_id").alias("id_a"),
         (F.col("doc_id") + F.lit(10_000_000)).alias("id_b"),

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _app_scoped_tmp,
     _davg,
@@ -552,13 +553,12 @@ def doc_winnow_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.split("text", " ").alias("__tk"))
         .select("doc_id", F.explode(winnowing_fingerprints(tokens_col="__tk")).alias("f"))
     )
-    rare = (
+    # both self-join sides read this once instead of paying the
+    # fingerprint computation twice
+    rare = materialize(
         d.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("f")))
         .filter(F.col("df") <= 10)
         .drop("df")
-        # pin: both self-join sides read this once instead of paying
-        # the fingerprint computation twice
-        .localCheckpoint(eager=False)
     )
     return (
         rare.alias("a")
@@ -1325,13 +1325,12 @@ def doc_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: priorities are scan-stage expressions; the top-(k+1)
     is one TakeOrderedAndProject pass (<= k+1 rows leave any
     partition); tau and the estimates derive from that same pass
-    (sample is localCheckpointed: corpus scanned ONCE).
+    (sample is materialized: corpus scanned ONCE).
     See operators/curate.priority_sample."""
     from pydala2_spark.operators.curate import priority_sample
-    from pydala2_spark.operators.dedup import _materialize_once
 
     docs = _t(spark, sf_dir, "documents")
-    s = _materialize_once(
+    s = materialize(
         priority_sample(
             docs.select("doc_id", "lang", "n_chars"), "doc_id", "n_chars", k=64
         )
@@ -1432,7 +1431,6 @@ def doc_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the oracle. See functions/text.fix_mojibake."""
     from pydala2_spark.functions.text import fix_mojibake, mojibake_count
 
-    from pydala2_spark.operators.dedup import _materialize_once
 
     docs = _t(spark, sf_dir, "documents")
     c = F.col("text")
@@ -1443,7 +1441,7 @@ def doc_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # detect/repair chain into the Filter node too, evaluating it
     # twice per row (r14 plan audit: 352 replaces in Filter + 389 in
     # Project → one pass over 3 narrow columns)
-    out = _materialize_once(
+    out = materialize(
         docs.select(
             "doc_id",
             mojibake_count(col=c).alias("n_bad"),

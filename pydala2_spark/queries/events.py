@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _DEC,
     _davg,
@@ -1346,7 +1347,7 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = base.filter(F.col("k") % 7 == 0).select(
         "k", F.round(F.col("bal") + 100, 2).alias("bal"), "seg"
     )
-    h1 = scd2_frames(h0, s1, keys=["k"], ts=1).localCheckpoint(eager=False)
+    h1 = materialize(scd2_frames(h0, s1, keys=["k"], ts=1))
     s2 = base.filter(F.col("k") % 3 == 0).select(
         "k", F.round(F.col("bal") * 2, 2).alias("bal"), "seg"
     )
@@ -1689,7 +1690,7 @@ def ev_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to ev_cohort_retention. Every ntile is a distributed_ntile
     (range shuffle + broadcast offsets over the USER-grain frame), so
     no global window funnels the user table through one task; the
-    user frame localCheckpoints once for its three scoring passes.
+    user frame is materialized once for its three scoring passes.
     See operators/events.rfm_scores."""
     from pydala2_spark.operators.events import rfm_scores
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _t,
     query,
@@ -267,7 +268,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance (<= 3) from the size-50 part list — the blast-radius /
     recall-expansion primitive (contaminated-lot tracing, related-item
     widening). Frontier BFS: each round expands only newly-settled
-    nodes via one equi-join + anti-join, frames localCheckpoint-ed so
+    nodes via one equi-join + anti-join, frames materialized so
     reuse never re-runs the edge derivation; the oracle unrolls the
     same min-fold integer-exact. See operators/graph.bfs_distances."""
     from pydala2_spark.operators.graph import bfs_distances
@@ -555,13 +556,14 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    edges = (
+    # two consumers: the community detection and the report
+    edges = materialize(
         li.alias("x")
         .join(li.alias("y"), "o")
         .filter(F.col("x.p") < F.col("y.p"))
         .select(F.col("x.p").alias("src"), F.col("y.p").alias("dst"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "graph_modularity: edges",
     )
     return modularity_report(edges, label_propagation(edges, rounds=4))
 

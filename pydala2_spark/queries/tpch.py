@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pydala2_spark.frames import materialize
 from pydala2_spark.queries._base import (
     _DEC,
     _davg,
@@ -815,7 +816,6 @@ def q15_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # supplier's revenue row through one task; the agg max is a
     # map-side-combined reduction and the revenue frame materializes
     # once for both branches.
-    from pydala2_spark.operators.dedup import _materialize_once
 
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -823,7 +823,7 @@ def q15_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact decimal revenue → the max/equality tie-out is exact, not a
     # last-ulp double comparison that could drop/duplicate the winner
-    revenue = _materialize_once(
+    revenue = materialize(
         li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             F.sum(
                 (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_DEC)
@@ -1498,9 +1498,8 @@ def assoc_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    li = _materialize_once(li)
+    li = materialize(li)
     n = li.select("o").distinct().agg(F.count(F.lit(1)).alias("n"))
     sx = li.groupBy("p").agg(F.count(F.lit(1)).alias("s"))
     pairs = (
@@ -1609,9 +1608,8 @@ def assoc_rules_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    from pydala2_spark.operators.dedup import _materialize_once
 
-    li = _materialize_once(li)
+    li = materialize(li)
     n = li.select("o").distinct().agg(F.count(F.lit(1)).alias("n"))
     sx = li.groupBy("p").agg(F.count(F.lit(1)).alias("s"))
     pairs = (

@@ -32,6 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pydala2_spark.frames import materialize, materialize_counted
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -523,7 +526,6 @@ def curate_stream(
 
     from pydala2_spark.functions.text import quality_score
     from pydala2_spark.operators.dedup import (
-        _materialize_once,
         incremental_near_dups,
         lsh_band_signatures,
         minhash_signature,
@@ -582,7 +584,7 @@ def curate_stream(
             #    exact-vs-corpus: an exact copy estimates jaccard 1.0).
             #    Batch signatures compute ONCE and are shared between
             #    the screen and the index append.
-            mh_gated = _materialize_once(
+            mh_gated = materialize(
                 minhash_signature(gated, text, id_col, params["num_hashes"], params["k"])
             )
             dup_ids = (
@@ -597,16 +599,18 @@ def curate_stream(
                 .select(F.col("new_id").alias(id_col))
                 .distinct()
             )
-            survivors = gated.join(dup_ids, id_col, "left_anti").localCheckpoint()
-            n_keep = survivors.count()
-            new_mh = (
-                mh_gated.join(survivors.select(id_col), id_col, "left_semi")
-                .unionByName(
+            # both pin a snapshot: the appends below change the target
+            # and the index that ``gated`` and ``backfill`` read
+            survivors, n_keep = materialize_counted(
+                gated.join(dup_ids, id_col, "left_anti"), "curate_stream: survivors"
+            )
+            new_mh = materialize(
+                mh_gated.join(survivors.select(id_col), id_col, "left_semi").unionByName(
                     minhash_signature(
                         backfill, text, id_col, params["num_hashes"], params["k"]
                     )
-                )
-                .localCheckpoint()
+                ),
+                "curate_stream: new signatures",
             )
             if not new_mh.isEmpty():
                 if n_keep:

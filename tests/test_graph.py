@@ -544,6 +544,32 @@ def _both_paths(spark, monkeypatch, run):
     return local, distributed
 
 
+def test_eager_materialize_labels_its_job(spark):
+    """Every eager materialization is named: its job runs under the
+    label (tasks see it as the job description), and the caller's
+    description comes back afterwards. A lazy one runs no job."""
+    from conftest import spark_jobs
+    from pyspark import TaskContext
+
+    from pydala2_spark.frames import materialize
+
+    @F.udf("string")
+    def seen(_):
+        return TaskContext.get().getLocalProperty("spark.job.description")
+
+    df = spark.range(3).select(seen("id").alias("d"))
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        ck = materialize(df, "probe: eager")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["d"] for r in ck.collect()} == {"probe: eager"}
+    _, jobs = spark_jobs(spark, lambda: materialize(df))
+    assert jobs == 0
+
+
 @pytest.mark.parametrize("kind", ["long", "string"])
 def test_pagerank_driver_loop_matches_distributed(spark, monkeypatch, kind):
     from pydala2_spark.operators.graph import pagerank

@@ -411,3 +411,61 @@ def test_update_where_semantics_and_file_selectivity(spark, tmp_path):
     # idempotence of a no-match predicate
     out2 = update_where(spark, path, "x > 1e9", set={"x": "0.0"})
     assert out2["updated_rows"] == 0 and out2["rewritten_files"] == []
+
+
+def test_merge_and_row_dml_under_escaped_partition_dirs(spark, tmp_path):
+    """A hive dir written for a timestamp value holds a space and an
+    escaped ':' (``ts=2024-01-01 00%3A00%3A00``), which
+    ``_metadata.file_path`` reports URI-encoded (``%20`` / ``%253A``).
+    merge, delete_where and update_where must delete each replaced
+    file by its listing name: exact rows after each step, the replaced
+    files gone, and matched/preserved/rewritten lists in one spelling."""
+    from pydala2_spark.operators.merge import delete_where, merge, update_where
+    from pydala2_spark.plans.fs import list_files
+
+    p = str(tmp_path / "esc")
+    stamps = ["2024-01-01 00:00:00", "2024-01-02 12:30:00"]
+    spark.createDataFrame(
+        [(i, float(i), stamps[i % 2]) for i in range(10)], "id long, x double, ts string"
+    ).repartition("ts").write.partitionBy("ts").parquet(p)
+
+    def table():
+        return sorted((r["id"], r["x"]) for r in spark.read.parquet(p).collect())
+
+    def check_spelling(before, out):
+        matched, preserved = set(out["matched_files"]), set(out["preserved_files"])
+        after = list_files(spark, p)
+        assert all(" " in f and "%3A" in f for f in before + after)
+        assert matched and matched <= set(before)
+        assert not matched & set(after)  # replaced files gone
+        assert preserved == set(before) - matched
+        assert preserved | set(out["rewritten_files"]) == set(after)
+
+    before = list_files(spark, p)
+    assert len(before) == 2
+    src = spark.createDataFrame(
+        [(3, -3.0, stamps[1]), (10, 10.0, stamps[0])], "id long, x double, ts string"
+    )
+    r = merge(spark, p, src, strategy="upsert", key_columns=["id"], partition_by=["ts"])
+    assert (r.updated, r.inserted, r.target_count_after) == (1, 1, 11)
+    assert table() == [(i, -3.0 if i == 3 else float(i)) for i in range(11)]
+    check_spelling(
+        before,
+        {
+            "matched_files": [f for f in before if f not in r.preserved_files],
+            "preserved_files": r.preserved_files,
+            "rewritten_files": r.files,
+        },
+    )
+
+    before = list_files(spark, p)
+    out = delete_where(spark, p, "id >= 8")
+    assert out["deleted_rows"] == 3
+    assert table() == [(i, -3.0 if i == 3 else float(i)) for i in range(8)]
+    check_spelling(before, out)
+
+    before = list_files(spark, p)
+    out = update_where(spark, p, "id = 1", set={"x": "-1.0"})
+    assert out["updated_rows"] == 1
+    assert table() == [(i, -float(i) if i in (1, 3) else float(i)) for i in range(8)]
+    check_spelling(before, out)

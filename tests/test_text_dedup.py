@@ -376,6 +376,18 @@ def test_curate_corpus_quality_gate(spark, docs):
     assert len(out) == 5
 
 
+def test_curate_corpus_leaves_no_cached_frame(spark, docs):
+    """curate_corpus returns a lazy frame; the intermediate frames it
+    shares between branches must not stay pinned in the session's
+    cache manager, where they could be substituted into unrelated
+    later plans."""
+    from pydala2_spark.operators.curate import curate_corpus
+
+    spark.catalog.clearCache()
+    curate_corpus(docs, min_quality=0.0, langs=("en",)).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_bpe_token_count(spark):
     from pyspark.sql import functions as F
 

@@ -239,6 +239,39 @@ def test_small_graph_loops_job_ceiling(spark, sf_dir, name):
     assert jobs <= 6, f"{name}: {jobs} jobs"
 
 
+def test_duplicate_clusters_job_ceiling(spark):
+    """duplicate_clusters sizes its edge frame in the job that
+    materializes it (an observed count, not a second count job), then
+    fetches the budget-sized edge list once for the driver union-find."""
+    from conftest import spark_jobs
+
+    from pydala2_spark.operators.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11), (3, 1)], ["id_a", "id_b"])
+    out, jobs = spark_jobs(spark, lambda: duplicate_clusters(pairs))
+    assert out.count() == 5
+    assert jobs <= 3, jobs  # 5 with a separate count job
+
+
+def test_one_materialization_primitive():
+    """Where an intermediate frame lives is decided in one place:
+    ``pydala2_spark/frames.py``. No other module checkpoints, caches,
+    persists or unpersists a frame."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydala2_spark"
+    direct = re.compile(r"\.(localCheckpoint|persist|unpersist)\(|\.cache\(\)")
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "_materialize_once" in line or (
+                path.name != "frames.py" and direct.search(line)
+            ):
+                hits.append(f"{path.relative_to(root)}:{i}: {line.strip()}")
+    assert not hits, "\n".join(hits)
+
+
 def test_dau_wau_mau_denies_nested_loop(spark, sf_dir):
     """dau_wau_mau's trailing windows are explode(sequence(0, w-1))
     equi-joins over the user-day grain — NOT range joins. The r11
