@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -61,12 +61,22 @@ def materialize(df: DataFrame, label: str | None = None) -> DataFrame:
         return df.localCheckpoint()
 
 
-def materialize_counted(df: DataFrame, label: str) -> tuple[DataFrame, int]:
-    """Eager :func:`materialize` plus the row count from the SAME job
-    (an Observation on the checkpoint's scan): sizing costs no job."""
+def materialize_observed(
+    df: DataFrame, label: str, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Eager :func:`materialize` plus aggregate ``metrics`` (name ->
+    aggregate expression) from the SAME job (an Observation on the
+    checkpoint's scan): sizing costs no job."""
     obs = Observation()
-    ck = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")), label)
-    return ck, obs.get["n"]
+    aggs = [c.alias(name) for name, c in metrics.items()]
+    ck = materialize(df.observe(obs, *aggs), label)
+    return ck, obs.get
+
+
+def materialize_counted(df: DataFrame, label: str) -> tuple[DataFrame, int]:
+    """Eager :func:`materialize` plus the row count from the same job."""
+    ck, m = materialize_observed(df, label, n=F.count(F.lit(1)))
+    return ck, m["n"]
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

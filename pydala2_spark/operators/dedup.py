@@ -653,11 +653,14 @@ def semantic_dedup(
     100 TB design: ``k`` is the blocking knob. Cells of ~10³ vectors
     (SemDeDup uses k ≈ n/1000) make the within-cell pair count
     n·cell_size/2 — LINEAR in n at fixed cell size, never O(n²); the
-    tiny k here keeps the 2-iteration oracle CTE tractable. Cluster
-    assignment is the scan-stage k-means projection (zero shuffle —
-    `operators/similarity.kmeans_lloyd`); the unit-normalized frame
-    widens to scalar columns ONCE (codegen dot product) and feeds both
-    self-join sides; pairs filter at the rounded threshold BEFORE the
+    tiny k here keeps the 2-iteration oracle CTE tractable. The fit is
+    `operators/similarity.kmeans_lloyd` with ``assign=False``: a
+    corpus below its ``DRIVER_VECTOR_BUDGET`` is fetched once and fit
+    on the driver, a larger one runs the distributed loop; either way
+    the fit returns only the centroids. Cluster assignment is then the
+    scan-stage k-means projection (zero shuffle); the unit-normalized
+    frame widens to scalar columns ONCE (codegen dot product) and feeds
+    both self-join sides; pairs filter at the rounded threshold BEFORE the
     per-id aggregation, so only qualifying pairs reach the max-cos
     shuffle.
 

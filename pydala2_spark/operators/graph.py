@@ -22,24 +22,19 @@ Determinism design:
 
 Scale rule for the fixed-iteration loops (pagerank, personalized
 pagerank, hits, label propagation; kcore's finisher follows the same
-rule with its own budget): the operator checkpoints its edge frame
-once, counting its rows in the same job. A frame of fewer than
-:data:`DRIVER_EDGE_BUDGET` rows is fetched once through Arrow and
-iterated on the driver; a larger one runs the distributed loop,
-where nothing collects to the driver. Both paths produce the same
-rows bit for bit: the driver loop redoes Spark's DECIMAL steps in
-exact scaled integers (:func:`_half_up`, :func:`_sum_by`).
+rule with its own budget): the driver-loop rule of
+:mod:`pydala2_spark.local` with :data:`DRIVER_EDGE_BUDGET` edge rows.
+The operator checkpoints its edge frame once, counting its rows in
+the same job; a smaller frame is fetched once and iterated on the
+driver, a larger one runs the distributed loop, bit-identical.
 """
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Context, Decimal
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.errors import PySparkTypeError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DataType,
@@ -50,7 +45,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pydala2_spark.frames import job_description, materialize, materialize_counted
+from pydala2_spark.frames import materialize, materialize_counted
+from pydala2_spark.local import (
+    _fetch_local,
+    _half_up,
+    _local_frame,
+    _round,
+    _sum_by,
+    _to_double,
+    _total,
+)
 
 DRIVER_EDGE_BUDGET = 2_000_000
 """Edge frames with fewer rows than this (counted after the
@@ -92,32 +96,16 @@ def _symmetrize(
     ).select(f"__s.{u}", f"__s.{v}")
 
 
-# -- driver loops: sizing, fetch, exact decimal arithmetic -------------
-
-
-def _fetch_local(df: DataFrame, label: str) -> pa.Table:
-    """The one driver fetch of the graph operators: a single labeled
-    job returning an Arrow table. Arrow keeps nullable ``long`` ids
-    exact (``toPandas`` turns them into float64) and skips the
-    pickled-Row gateway: at kcore's 5M-row budget, ``collect()`` plus
-    a per-Row dict build measured 19.1 s against 5.2 s for an Arrow
-    transfer plus a zip over the columns. Falls back to ``collect()``
-    if Arrow conversion refuses the column types."""
-    with job_description(df.sparkSession, label):
-        try:
-            return df.toArrow()
-        except PySparkTypeError:  # raised before any job runs
-            rows = df.collect()
-    return pa.table({c: [r[i] for r in rows] for i, c in enumerate(df.columns)})
+# -- driver loops (pydala2_spark.local): sizing, encoding ---------------
 
 
 def _local_edges(df: DataFrame, op: str) -> tuple[pa.Table | None, DataFrame]:
-    """The size rule (module docstring): checkpoint ``df`` counting its
-    rows; if there are fewer than :data:`DRIVER_EDGE_BUDGET`, fetch
-    them for the driver loop (a budget of 0 forces the distributed
-    loop). Returns ``(table or None, checkpointed frame)`` — the
-    distributed loop runs on the checkpoint, so the caller's edge
-    derivation never replays."""
+    """The size rule (:mod:`pydala2_spark.local`): checkpoint ``df``
+    counting its rows; if there are fewer than
+    :data:`DRIVER_EDGE_BUDGET`, fetch them for the driver loop (a
+    budget of 0 forces the distributed loop). Returns ``(table or
+    None, checkpointed frame)`` — the distributed loop runs on the
+    checkpoint, so the caller's edge derivation never replays."""
     ck, n = materialize_counted(df, f"graph.{op}: checkpoint edges")
     if n >= DRIVER_EDGE_BUDGET:
         return None, ck
@@ -159,89 +147,6 @@ def _encode(*arrays: pa.ChunkedArray) -> tuple[pa.Array, list[np.ndarray]]:
 def _node_values(values: pa.Array, codes: np.ndarray) -> pa.Array:
     """Node ids for codes from :func:`_encode` (the null slot → null)."""
     return values.take(pa.array(codes, mask=codes == len(values)))
-
-
-def _half_up(x: np.ndarray, scale: int) -> np.ndarray:
-    """Scaled integers of Spark's ``CAST(x AS DECIMAL(38, scale))`` for
-    DOUBLE ``x`` — also the digits ``round(x, scale)`` keeps. Spark
-    rounds HALF_UP on the double's shortest decimal string
-    (``Double.toString``); numpy's ``round`` is half-even on the binary
-    value and does not match. Vectorized: ``x * 10**scale`` is within
-    ``tol`` of the scaled decimal string, so every element farther than
-    ``tol`` from a half-integer rounds to the nearest integer; the rest
-    (ties, near-ties, huge or non-finite values) go through
-    ``Decimal(repr(x))`` exactly, and non-finite values raise. Returns
-    int64, or Python ints once a value passes the int64 range."""
-    p = 10.0**scale
-    y = x * p
-    tol = np.spacing(np.abs(y)) + np.spacing(np.abs(x)) * p
-    with np.errstate(invalid="ignore"):
-        clear = (np.abs(y - np.floor(y) - 0.5) > tol) & (np.abs(y) < 2.0**52)
-    out = np.where(clear, np.rint(np.where(clear, y, 0.0)), 0.0).astype(np.int64)
-    ctx = Context(prec=60)
-    exact = {
-        i: int(
-            ctx.scaleb(Decimal(repr(float(x[i]))), scale).quantize(
-                Decimal(1), rounding=ROUND_HALF_UP, context=ctx
-            )
-        )
-        for i in np.flatnonzero(~clear)
-    }
-    if any(abs(v) >= 2**63 for v in exact.values()):
-        out = out.astype(object)  # DECIMAL(38, s) holds more than int64
-    for i, v in exact.items():
-        out[i] = v
-    return out
-
-
-def _to_double(s: np.ndarray, scale: int) -> np.ndarray:
-    """DOUBLE of DECIMAL(38, scale) values given as scaled integers,
-    correctly rounded like Spark's ``BigDecimal.doubleValue``. Below
-    2^52 both operands of the division are exact doubles, so the IEEE
-    quotient is the correctly rounded one; larger values divide as
-    Python ints, which is correctly rounded too."""
-    p = 10**scale
-    if s.dtype == object:
-        return np.array([int(v) / p for v in s], dtype=np.float64)
-    out = s.astype(np.float64) / float(p)
-    for i in np.flatnonzero(np.abs(s) >= 2**52):
-        out[i] = int(s[i]) / p
-    return out
-
-
-def _round(x: np.ndarray, scale: int) -> np.ndarray:
-    """Spark's ``round(x, scale)`` on DOUBLE: HALF_UP on the shortest
-    string, then the correctly rounded double of the result."""
-    return _to_double(_half_up(x, scale), scale)
-
-
-def _sum_by(idx: np.ndarray, vals: np.ndarray, n: int) -> np.ndarray:
-    """Exact per-index sums of scaled decimals, as Spark's DECIMAL sum
-    is exact: int64 while the total magnitude provably fits, Python
-    ints otherwise. No float ever enters a sum, so summation order
-    cannot move a bit."""
-    if vals.dtype != object and float(np.abs(vals).sum(dtype=np.float64)) < 2.0**62:
-        out = np.zeros(n, np.int64)
-    else:
-        out = np.zeros(n, object)
-        vals = vals.astype(object)
-    np.add.at(out, idx, vals)
-    return out
-
-
-def _total(vals: np.ndarray, scale: int) -> float:
-    """DOUBLE of the exact DECIMAL sum of scaled integers (an empty
-    sum is 0.0, as ``coalesce(sum, 0.0)`` gives)."""
-    return int(_sum_by(np.zeros(len(vals), np.int64), vals, 1)[0]) / 10**scale
-
-
-def _local_frame(spark: SparkSession, cols: dict) -> DataFrame:
-    """A driver loop's result as a DataFrame: ``cols`` maps each output
-    column to ``(Spark type, values)``. Built from an Arrow table, so
-    it is a local relation — collecting it runs no Spark job."""
-    schema = StructType([StructField(c, t) for c, (t, _) in cols.items()])
-    table = pa.table({c: v for c, (_, v) in cols.items()})
-    return spark.createDataFrame(table, schema)
 
 
 def _ranks_local(

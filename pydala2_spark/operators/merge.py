@@ -451,10 +451,15 @@ def merge(
         _hint_small(src_keys, source_count), on=match_cond, how="left_semi"
     )
 
-    if strategy in ("update", "upsert"):
-        raw_files = [r[_FILE] for r in matched_target.select(_FILE).distinct().collect()]
-    else:
-        raw_files = []
+    # ONE job yields both the touched-file set and the matched row
+    # count (per-file partial counts collapse map-side, as in
+    # delete_where)
+    per_file = (
+        matched_target.groupBy(_FILE).count().collect()
+        if strategy in ("update", "upsert")
+        else []
+    )
+    raw_files = [r[_FILE] for r in per_file]
     matched_files = [decoded_path(f) for f in raw_files]
 
     # matched/unmatched SOURCE rows split on the matched-target key set:
@@ -529,7 +534,7 @@ def merge(
     # the rewrite collapses every matched target row (duplicates
     # included — plain appends can leave several rows per key) into one
     # source row, so the post-merge count must subtract what matched
-    matched_target_rows = matched_target.count() if updated else 0
+    matched_target_rows = sum(r["count"] for r in per_file) if updated else 0
 
     # the entry listing is still current: nothing has written to the
     # target between the existence check and here

@@ -376,11 +376,14 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seeds. The oracle unrolls both iterations as CTEs — an ITERATIVE
     # algorithm held to an exact SQL oracle: assignments, per-dim
     # decimal-accumulated centroid means, and final within-cluster
-    # dispersion all match bit-for-bit. Spark shape: assignment is a
-    # scan-stage projection against a centroid SQL literal (no join,
-    # no shuffle); the update is one k*dim-group aggregation per
-    # iteration. See operators/similarity.kmeans_lloyd for the 100 TB
-    # notes.
+    # dispersion all match bit-for-bit. Spark shape: this corpus is
+    # below DRIVER_VECTOR_BUDGET, so the cast frame is checkpointed
+    # (its size observed in the same job), fetched once, and the fit
+    # runs in numpy with the distributed loop's arithmetic; the
+    # dispersion aggregate runs over the local assignments. See
+    # operators/similarity.kmeans_lloyd for the distributed loop (a
+    # scan-stage assignment projection and one k*dim-group aggregation
+    # per iteration) that larger corpora run.
     from pydala2_spark.operators.similarity import kmeans_lloyd
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -402,7 +405,8 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle composes the 2-iteration k-means CTE unroll with the
     # cell-blocked pair screen — per-vector verdicts AND max-cos
     # values are checked bit-for-bit. k is the blocking knob at scale
-    # (cells ~10^3 → pair count linear in corpus); see
+    # (cells ~10^3 → pair count linear in corpus); the k-means fit of
+    # this small corpus runs on the driver. See
     # operators/dedup.semantic_dedup for the 100 TB notes.
     from pydala2_spark.operators.dedup import semantic_dedup
 
@@ -500,9 +504,13 @@ def emb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized CTEs, so all six selections and their
     max-cos-at-selection values must match exactly.
 
-    100 TB shape: k scans, each a scan-stage literal-dot expression +
-    a one-row TakeOrderedAndProject; no joins, driver holds k
-    vectors. See operators/similarity.kcenter_coreset."""
+    Spark shape: this corpus is below DRIVER_VECTOR_BUDGET, so the
+    unit frame is checkpointed (its size observed in the same job),
+    fetched once, and the greedy picks run in numpy with Spark's
+    arithmetic. Above the budget, each pick is one scan of the
+    checkpoint (a literal-dot expression + a one-row
+    TakeOrderedAndProject; no joins, the driver holds k vectors). See
+    operators/similarity.kcenter_coreset."""
     from pydala2_spark.operators.similarity import kcenter_coreset
 
     emb = _t(spark, sf_dir, "embeddings")

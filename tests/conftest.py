@@ -78,3 +78,29 @@ def spark_jobs(spark, fn):
     with contextlib.suppress(Exception):
         sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def vector_loop(request, monkeypatch):
+    """Runs a test once per path of the vector loops
+    (``similarity.kmeans_lloyd`` and ``kcenter_coreset``): ``driver``
+    asserts at teardown that the vectors were fetched;
+    ``distributed`` sets the budget to 0 and makes the fetch raise —
+    the scale contract: over budget nothing reaches the driver."""
+    from pydala2_spark.operators import similarity as S
+
+    fetched = []
+    if request.param == "driver":
+        real = S._fetch_local
+        monkeypatch.setattr(
+            S, "_fetch_local", lambda df, label: fetched.append(label) or real(df, label)
+        )
+    else:
+
+        def refuse(df, label):
+            raise AssertionError(f"fetched over budget: {label}")
+
+        monkeypatch.setattr(S, "DRIVER_VECTOR_BUDGET", 0)
+        monkeypatch.setattr(S, "_fetch_local", refuse)
+    yield request.param
+    assert bool(fetched) == (request.param == "driver"), fetched

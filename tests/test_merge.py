@@ -469,3 +469,31 @@ def test_merge_and_row_dml_under_escaped_partition_dirs(spark, tmp_path):
     assert out["updated_rows"] == 1
     assert table() == [(i, -float(i) if i in (1, 3) else float(i)) for i in range(8)]
     check_spelling(before, out)
+
+
+def test_upsert_job_ceiling(spark, tmp_ds_path):
+    """An upsert finds the matched files and counts the matched target
+    rows in ONE grouped collect (it ran the broadcast semi-join of the
+    target twice: a distinct-file collect, then a count). Duplicate
+    target keys make the row count differ from the updated count."""
+    from conftest import spark_jobs
+
+    from pydala2_spark.operators.merge import merge
+    from pydala2_spark.sources.writer import Writer
+
+    w = Writer(spark, tmp_ds_path)
+    for lo in (0, 100, 200):
+        ids = list(range(lo, lo + 100))
+        w.write(t(id=ids, v=[f"v{i}" for i in ids]), mode="append")
+    w.write(t(id=[150], v=["dup"]), mode="append")  # second row for key 150
+    src = t(id=[5, 150, 151, 400], v=["A", "B", "C", "D"])
+    r, jobs = spark_jobs(
+        spark,
+        lambda: merge(spark, tmp_ds_path, src, strategy="upsert", key_columns=["id"]),
+    )
+    assert (r.updated, r.inserted) == (3, 1)
+    assert len(r.rewritten_files) >= 2 and r.preserved_files
+    # 301 before − 4 matched rows + 3 updated + 1 inserted
+    assert r.target_count_before == 301 and r.target_count_after == 301
+    assert spark.read.parquet(tmp_ds_path).count() == 301
+    assert jobs <= 20, jobs  # 23 with the two semi-join jobs

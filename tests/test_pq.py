@@ -174,7 +174,7 @@ def test_pq_topk_query_side_cap(spark, clustered):
     assert ok.select("query_id").distinct().count() == 5
 
 
-def test_kcenter_coreset_bruteforce(spark):
+def test_kcenter_coreset_bruteforce(spark, vector_loop):
     """Greedy k-center vs an in-Python replay (same rounding, same
     tiebreaks) on deterministic vectors; the selection is maximally
     spread (every non-selected point is closer to the chosen set than

@@ -204,11 +204,12 @@ def test_cc_step_materializes_stepped_once(spark):
 # -- round-4 operators vs independent references -----------------------
 
 
-def test_kmeans_matches_numpy_lloyd(spark):
+def test_kmeans_matches_numpy_lloyd(spark, vector_loop):
     """kmeans_lloyd vs a from-scratch numpy Lloyd's with the same
     deterministic seeds and iteration count: assignments must agree
     exactly on a random (non-separable) cloud — this checks the
-    DISTRIBUTED update/assign machinery, not just happy blobs."""
+    update/assign machinery of both the DISTRIBUTED loop and the
+    driver loop (``vector_loop``), not just happy blobs."""
     import numpy as np
 
     from pydala2_spark.operators.similarity import kmeans_lloyd

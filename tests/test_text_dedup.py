@@ -791,10 +791,11 @@ def test_quantized_rerank_matches_exact_topk(spark, blobs):
     assert two_stage == exact
 
 
-def test_kmeans_join_path_matches_literal_path(spark, blobs, monkeypatch):
+def test_kmeans_join_path_matches_literal_path(spark, blobs, monkeypatch, vector_loop):
     """Above _KMEANS_LITERAL_LIMIT the assignment switches from the
     SQL-literal projection to a broadcast join + min-struct reduce;
-    both must produce identical assignments and centroids."""
+    both must produce identical assignments and centroids (on the
+    driver path the limit changes nothing, and the same holds)."""
     import pydala2_spark.operators.similarity as S
 
     lit_assigned, lit_cents = S.kmeans_lloyd(blobs, k=2, iters=2, dim=8)

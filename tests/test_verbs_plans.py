@@ -239,6 +239,34 @@ def test_small_graph_loops_job_ceiling(spark, sf_dir, name):
     assert jobs <= 6, f"{name}: {jobs} jobs"
 
 
+@pytest.mark.parametrize(
+    "name,ceiling",
+    [("emb_kmeans", 5), ("emb_kcenter_coreset", 3), ("emb_semantic_dedup", 10)],
+)
+def test_small_embedding_loops_job_ceiling(spark, sf_dir, name, ceiling):
+    """Small corpora fit on the driver: k-means and k-center size the
+    vector frame in the job that materializes it (2 jobs with the
+    few-file spread shuffle), fetch it once, and iterate in numpy.
+    The counts measured at sf0.01; the per-iteration and per-pick job
+    chains issued 14, 8 and 19. The table's schema is inferred first,
+    so the job of a session's first read does not count."""
+    import os
+
+    from conftest import spark_jobs
+
+    from pydala2_spark.queries import queries
+    from pydala2_spark.sources.testdata import read_table
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        sf = sf_dir
+    read_table(spark, sf, "embeddings")
+    fn = queries()[name]
+    rows, jobs = spark_jobs(spark, lambda: fn(spark, sf).collect())
+    assert rows
+    assert jobs <= ceiling, f"{name}: {jobs} jobs"
+
+
 def test_duplicate_clusters_job_ceiling(spark):
     """duplicate_clusters sizes its edge frame in the job that
     materializes it (an observed count, not a second count job), then
