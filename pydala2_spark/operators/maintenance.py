@@ -33,12 +33,17 @@ Design notes (Spark-first, scale-first):
   `pydala/dataset.py:2122-2127`).
 - **Rewrites are partition-scoped or file-scoped**, never
   whole-dataset unless semantics demand it (global dedup / layout
-  change). Partition rewrites go through dynamic partition overwrite
-  (commit-time swap per partition); file-scoped rewrites append the
-  replacement files before deleting the replaced ones, the same
-  write-new-then-delete-old discipline as the reference
-  (`pydala/dataset.py:995-1003`) — readers pinned to the old file list
-  keep a consistent (stale) view, new readers see the compacted one.
+  change). Compactions (M1-M3) go through the package's one rewrite
+  step, :func:`pydala2_spark.sources.writer.replace_files`: append the
+  replacement files, then delete the replaced ones — the reference's
+  write-new-then-delete-old discipline (`pydala/dataset.py:995-1003`);
+  readers pinned to the old file list keep a consistent (stale) view,
+  new readers see the compacted one. A delete that leaves a replaced
+  file behind raises :class:`~pydala2_spark.errors.PartialMergeError`
+  with the exact ``pending_deletes`` instead of silently leaving its
+  rows duplicated next to their replacement.
+- **Whole-dataset rewrites** (M4, z-order, M5) write a sibling staging
+  directory and swap it in with :func:`pydala2_spark.plans.fs.replace_dir`.
 """
 
 from __future__ import annotations
@@ -57,33 +62,15 @@ from pydala2_spark.plans.fs import (
     delete_paths,
     input_file_col,
     list_files,
+    partition_columns,
     rename,
+    replace_dir,
     schemeless_col,
 )
 from pydala2_spark.plans.stats import collect_file_stats
+from pydala2_spark.sources.writer import parquet_writer, replace_files
 
 DEFAULT_MAX_ROWS_PER_FILE = 10_000_000  # reference default, pydala/dataset.py:2100
-
-
-def _publish_staging_swap(spark: SparkSession, path: str, staging: str) -> None:
-    """Atomically replace ``path`` with ``staging`` (rename old out of
-    the way, rename staging in, delete old) — and roll back if either
-    rename reports failure, so a half-swap can never leave readers
-    pointing at a missing dataset while the data sits in a side dir.
-    """
-    old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    if not rename(spark, path, old):
-        delete_paths(spark, [staging])
-        raise IOError(f"staging swap: could not move {path!r} aside to {old!r}")
-    if not rename(spark, staging, path):
-        if not rename(spark, old, path):  # roll the original back in
-            raise IOError(
-                f"staging swap failed AND rollback failed: dataset is at "
-                f"{old!r}, replacement at {staging!r}, nothing at {path!r}"
-            )
-        delete_paths(spark, [staging])
-        raise IOError(f"staging swap: could not publish {staging!r} to {path!r}")
-    delete_paths(spark, [old])
 
 
 class CompactionPlan:
@@ -236,14 +223,14 @@ def compact_partitions(
     # GROUP. Write-new-then-delete-old, so concurrent appends into the
     # same partitions survive (dynamic partition OVERWRITE would delete
     # files the planning snapshot never saw).
-    part_cols = _discover_partition_cols(spark, path)
+    part_cols = partition_columns(spark, path)
     df = spark.read.option("basePath", path).parquet(*all_files)
     if sort_by:
         # a sort_by rewrite selects EVERY partition: one range shuffle
         # on (partition cols, sort cols) gives each task a contiguous
         # key range, sortWithinPartitions orders it, and partitionBy
         # routes rows to their hive dirs — files come out sorted with
-        # (near-)non-overlapping ranges; maxRecordsPerFile bounds them
+        # (near-)non-overlapping ranges; max_rows_per_file bounds them
         range_cols = [F.col(c) for c in part_cols] + list(to_sort_columns(sort_by))
         df = df.repartitionByRange(*range_cols).sortWithinPartitions(*range_cols)
     else:
@@ -263,15 +250,9 @@ def compact_partitions(
         # each hive partition on one task; the unpartitioned dataset is
         # a single group
         df = df.repartition(*[F.col(c) for c in part_cols]) if part_cols else df.coalesce(1)
-    writer = (
-        df.write.mode("append")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
+    replace_files(
+        df, path, all_files, "compact_partitions", part_cols, compression, max_rows_per_file
     )
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(path)
-    delete_paths(spark, all_files)
     return plan
 
 
@@ -396,7 +377,7 @@ def compact_by_timeperiod(
     all_files, max_outputs = plan.files_and_max_outputs(max_rows_per_file)
     if not all_files:
         return plan
-    part_cols = _discover_partition_cols(spark, path)
+    part_cols = partition_columns(spark, path)
     # partition columns lead the order, so the partitioned writer's
     # required ordering is already met and adds no re-sort
     order = [F.col(c) for c in part_cols] + list(
@@ -424,16 +405,15 @@ def compact_by_timeperiod(
         df = df.repartition(
             F.col("__grp"), *[F.col(c) for c in part_cols]
         ).sortWithinPartitions(*order)
-        writer = (
-            df.drop("__grp")
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
+        replace_files(
+            df.drop("__grp"),
+            path,
+            all_files,
+            "compact_by_timeperiod",
+            part_cols,
+            compression,
+            max_rows_per_file,
         )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(path)
-        delete_paths(spark, all_files)
         return plan
 
     # some interval needs several output files: one write per interval,
@@ -442,17 +422,15 @@ def compact_by_timeperiod(
     for key, files in plan.groups.items():
         n_out = max(1, math.ceil(plan.rows[key] / max_rows_per_file))
         df = spark.read.option("basePath", path).parquet(*files)
-        writer = (
-            df.coalesce(n_out)
-            .sortWithinPartitions(*order)
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
+        replace_files(
+            df.coalesce(n_out).sortWithinPartitions(*order),
+            path,
+            files,
+            "compact_by_timeperiod",
+            part_cols,
+            compression,
+            max_rows_per_file,
         )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(path)
-        delete_paths(spark, files)
     return plan
 
 
@@ -472,7 +450,7 @@ def compact_by_rows(
 ) -> CompactionPlan:
     """Non-partitioned row-count compaction; delegates to M1 when the
     dataset is hive-partitioned (`pydala/dataset.py:2349-2390`)."""
-    if _discover_partition_cols(spark, path):
+    if partition_columns(spark, path):
         return compact_partitions(
             spark,
             path,
@@ -507,13 +485,7 @@ def compact_by_rows(
     df = df.repartition(n_target)
     if sort_by:
         df = df.sortWithinPartitions(*to_sort_columns(sort_by))
-    (
-        df.write.mode("append")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-        .parquet(path)
-    )
-    delete_paths(spark, files)
+    replace_files(df, path, files, "compact_by_rows", None, compression, max_rows_per_file)
     return plan
 
 
@@ -565,16 +537,8 @@ def repartition_dataset(
         df = df.sortWithinPartitions(*to_sort_columns(sort_by))
 
     staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    writer = (
-        df.write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-    )
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-
-    _publish_staging_swap(spark, path, staging)
+    parquet_writer(df, "overwrite", compression, max_rows_per_file, part_cols).parquet(staging)
+    replace_dir(spark, staging, path)
     return list_files(spark, path)
 
 
@@ -736,13 +700,8 @@ def zorder_rewrite(
     clustered = clustered.sortWithinPartitions("__z").drop("__z")
 
     staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    (
-        clustered.write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-        .parquet(staging)
-    )
-    _publish_staging_swap(spark, path, staging)
+    parquet_writer(clustered, "overwrite", compression, max_rows_per_file).parquet(staging)
+    replace_dir(spark, staging, path)
     return list_files(spark, path)
 
 
@@ -771,14 +730,11 @@ def optimize_dtypes(
     if dry_run or not plan:
         return plan
 
-    part_cols = _discover_partition_cols(spark, path)
+    part_cols = partition_columns(spark, path)
     out = apply_dtype_plan(df, plan)
     staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    writer = out.write.mode("overwrite").option("compression", compression)
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-    _publish_staging_swap(spark, path, staging)
+    parquet_writer(out, "overwrite", compression, partition_by=part_cols).parquet(staging)
+    replace_dir(spark, staging, path)
     return plan
 
 
@@ -844,17 +800,6 @@ def repair_schema(spark: SparkSession, path: str, dry_run: bool = False) -> dict
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
-
-
-def _discover_partition_cols(spark: SparkSession, path: str) -> list[str]:
-    files = list_files(spark, path, suffixes=(".parquet",))
-    if not files:
-        return []
-    rel = files[0]
-    base = path if "://" in path else "file:" + os.path.abspath(path.removeprefix("file:"))
-    if rel.startswith(base):
-        rel = rel[len(base) :]
-    return [seg.split("=", 1)[0] for seg in rel.strip("/").split("/") if "=" in seg]
 
 
 def _first_timestamp_col(df: DataFrame) -> str | None:

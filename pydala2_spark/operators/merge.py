@@ -23,11 +23,19 @@ Capability parity with ``ParquetDataset.merge`` in the reference
 Spark-first design (NOT the reference's pyarrow/duckdb transport): the
 match is a null-safe join (`<=>`); matched-file discovery uses the
 ``_metadata.file_path`` hidden column so the "which files hold these
-keys" probe is itself a distributed join; the rewrite job writes new
-files then deletes replaced ones via the Hadoop FileSystem API — the
-same code path works on file:// locally and s3a/hdfs on a cluster.
-At 100 TB an update touching 0.1% of keys rewrites only the matched
-files, not the dataset.
+keys" probe is itself a distributed join. At 100 TB an update touching
+0.1% of keys rewrites only the matched files, not the dataset.
+
+Every file rewrite here — ``merge``'s update half, ``delete_where`` and
+``update_where`` — goes through ONE step,
+:func:`pydala2_spark.sources.writer.replace_files` (append the
+replacement, then delete the replaced files through the Hadoop
+FileSystem API, the same code path on file:// and s3a/hdfs), and so
+shares one failure contract: a
+:class:`~pydala2_spark.errors.PartialMergeError` whose
+``pending_deletes`` completes the mutation. ``delete_where`` and
+``update_where`` are one core, :func:`_rewrite_where`, that differs
+only in the replacement rows (:func:`_replacement`).
 """
 
 from __future__ import annotations
@@ -53,16 +61,40 @@ _FILE = "__pydala_file"
 _FILE_LITERAL_LIMIT = 1_000
 
 
-def _filter_to_files(tagged: DataFrame, files: list[str]) -> DataFrame:
-    """Restrict the file-tagged target frame to rows from ``files``.
-    Small sets inline as an IN literal (cheap, scan-evaluable); large
-    sets join against a broadcast single-column DataFrame so the plan
-    stays O(1) in the file count."""
+def _filter_to_files(tagged: DataFrame, files: list[str], col: str = _FILE) -> DataFrame:
+    """Restrict the file-tagged target frame to rows whose ``col`` is
+    in ``files``. Small sets inline as an IN literal (cheap,
+    scan-evaluable); large sets join against a broadcast single-column
+    DataFrame so the plan stays O(1) in the file count."""
     if len(files) <= _FILE_LITERAL_LIMIT:
-        return tagged.filter(F.col(_FILE).isin(files))
+        return tagged.filter(F.col(col).isin(files))
     spark = tagged.sparkSession
-    flist = spark.createDataFrame([(f,) for f in files], f"`{_FILE}` string")
-    return tagged.join(F.broadcast(flist), on=[_FILE], how="left_semi")
+    flist = spark.createDataFrame([(f,) for f in files], f"`{col}` string")
+    return tagged.join(F.broadcast(flist), on=[col], how="left_semi")
+
+
+def _replacement(
+    touched: DataFrame, pred: Column, assigns: dict | None, helpers: list[str]
+) -> DataFrame:
+    """The rows that replace the touched files of a row-level DELETE
+    (``assigns`` None: keep the rows where ``pred`` is not TRUE) or
+    UPDATE (``assigns``: apply every SET where ``pred`` is TRUE).
+    ``helpers`` are the file-tag columns, dropped from the output.
+
+    All assignments evaluate against the PRE-update row: every new
+    value is built from the original columns, then projected — a SET
+    that swaps two columns stays correct (SQL UPDATE rules)."""
+    hit = F.coalesce(pred, F.lit(False))
+    if assigns is None:
+        return touched.filter(~hit).drop(*helpers)
+    built = {c: (F.expr(e) if isinstance(e, str) else e) for c, e in assigns.items()}
+    return touched.select(
+        *[
+            F.when(hit, built[c]).otherwise(F.col(c)).alias(c) if c in built else F.col(c)
+            for c in touched.columns
+            if c not in helpers
+        ]
+    )
 
 
 @dataclass
@@ -363,8 +395,9 @@ def merge(
     compression: str = "zstd",
     max_rows_per_file: int = 10_000_000,
 ) -> MergeResult:
-    from pydala2_spark.plans.fs import decoded_path, delete_paths, list_files, path_exists
-    from pydala2_spark.sources.writer import cast_to_schema
+    from pydala2_spark.errors import PartialMergeError
+    from pydala2_spark.plans.fs import decoded_path, list_files, partition_columns, path_exists
+    from pydala2_spark.sources.writer import cast_to_schema, parquet_writer, replace_files
 
     if strategy not in VALID_STRATEGIES:
         raise ValueError(f"invalid merge strategy {strategy!r}; choose from {VALID_STRATEGIES}")
@@ -386,7 +419,7 @@ def merge(
 
     # -- discover partitioning of an existing target (hive dirs) ---------
     if target_exists and not partition_by:
-        partition_by = _discover_partitions(spark, target_path) or None
+        partition_by = partition_columns(spark, target_path, files_at_entry) or None
 
     # -- missing / empty target: every strategy but update inserts all ---
     if not target_exists:
@@ -397,7 +430,9 @@ def merge(
         _validate_keys(keys, src_cols, "source")
         deduped = _dedup_last_wins(src, keys)
         result.inserted = deduped.count()
-        _append(deduped, target_path, partition_by, compression, max_rows_per_file)
+        parquet_writer(deduped, "append", compression, max_rows_per_file, partition_by).parquet(
+            target_path
+        )
         result.inserted_files = list_files(spark, target_path)
         result.target_count_after = result.inserted
         return result
@@ -536,79 +571,55 @@ def merge(
     # source row, so the post-merge count must subtract what matched
     matched_target_rows = sum(r["count"] for r in per_file) if updated else 0
 
-    # the entry listing is still current: nothing has written to the
-    # target between the existence check and here
-    all_files_before = files_at_entry
-
-    # Ordering matters: every plan below still READS the pre-merge file
-    # set (the DataFrame's FileIndex was pinned at load), so all appends
-    # happen first and the replaced files are deleted last. Any failure
-    # after the first append surfaces as PartialMergeError carrying the
-    # accumulated MergeResult + the not-yet-deleted files, so the caller
-    # can finish (or undo) the mutation deliberately.
-    try:
-        files_after_inserts = all_files_before
-        if inserted:
-            _append(inserts.select(*target_cols), target_path, partition_by, compression, max_rows_per_file)
-            before = set(all_files_before)
-            files_after_inserts = list_files(spark, target_path)
-            result.inserted_files = [
-                f for f in files_after_inserts if f not in before
-            ]
-
-        # -- rewrite matched files: (their unmatched rows) ∪ (matched source)
-        if updated and matched_files:
-            survivors = (
-                _filter_to_files(tagged, raw_files)
-                .join(
-                    _hint_small(src_keys, source_count), on=match_cond, how="left_anti"
-                )
-                .drop(_FILE)
-            )
-            replacement = survivors.unionByName(matched_source.select(*target_cols))
-            _append(replacement, target_path, partition_by, compression, max_rows_per_file)
-            pre_rewrite = set(files_after_inserts)
-            result.rewritten_files = [
-                f for f in list_files(spark, target_path) if f not in pre_rewrite
-            ]
-            # fs.delete returning False is a SILENT failure mode: the
-            # replaced file would stay visible next to its replacement
-            # (duplicate rows) with no error. Verify and raise into the
-            # PartialMergeError contract with the precise leftover set.
-            if delete_paths(spark, matched_files) != len(matched_files):
-                still = [f for f in matched_files if path_exists(spark, f)]
-                if still:
-                    from pydala2_spark.errors import PartialMergeError
-
-                    result.updated = updated
-                    result.inserted = inserted
-                    raise PartialMergeError(
-                        f"merge rewrote {target_path!r} but {len(still)} replaced "
-                        f"file(s) could not be deleted",
-                        merge_result=result,
-                        pending_deletes=still,
-                    )
-    except Exception as e:
-        from pydala2_spark.errors import PartialMergeError
-
-        if isinstance(e, PartialMergeError):
-            raise
-        result.updated = updated
-        result.inserted = inserted
-        # replacements fully written but originals not removed → the
-        # recovery step is exactly "delete pending_deletes"; an earlier
-        # failure leaves nothing pending (Spark's committer stages job
-        # output in _temporary, so a failed append publishes no files)
-        raise PartialMergeError(
-            f"merge mutated {target_path!r} but failed before completing: {e}",
-            merge_result=result,
-            pending_deletes=matched_files if result.rewritten_files else [],
-        ) from e
-
     result.updated = updated
     result.inserted = inserted
+    # built before any write: the rewrite's plan reads the pre-merge
+    # file set (the DataFrame's FileIndex was pinned at load)
+    replacement = (
+        _filter_to_files(tagged, raw_files)
+        .join(_hint_small(src_keys, source_count), on=match_cond, how="left_anti")
+        .drop(_FILE)
+        .unionByName(matched_source.select(*target_cols))
+        if updated and matched_files
+        else None
+    )
+
+    # Inserts append first, the rewrite deletes the replaced files
+    # last. A failure after the insert append raises PartialMergeError
+    # carrying this result, so the caller can finish (or undo) the
+    # mutation deliberately. The entry listing is still current:
+    # nothing has written to the target since the existence check.
+    files_after_inserts = files_at_entry
+    if inserted:
+        try:
+            parquet_writer(
+                inserts.select(*target_cols), "append", compression, max_rows_per_file, partition_by
+            ).parquet(target_path)
+            files_after_inserts = list_files(spark, target_path)
+        except Exception as e:
+            raise PartialMergeError(
+                f"merge mutated {target_path!r} but failed before completing: {e}",
+                merge_result=result,
+            ) from e
+        before = set(files_at_entry)
+        result.inserted_files = [f for f in files_after_inserts if f not in before]
+
+    # -- rewrite matched files: (their unmatched rows) ∪ (matched source)
+    if replacement is not None:
+        result.rewritten_files = replace_files(
+            replacement,
+            target_path,
+            matched_files,
+            "merge",
+            partition_by,
+            compression,
+            max_rows_per_file,
+            listing=files_after_inserts,
+            merge_result=result,
+        )
+
     matched_set = set(matched_files)
-    result.preserved_files = [f for f in all_files_before if f not in matched_set]
+    result.preserved_files = [f for f in files_at_entry if f not in matched_set]
     result.target_count_after = (
         target_count_before - matched_target_rows + updated + inserted
     )
@@ -627,34 +638,6 @@ def _validate_keys(keys: list[str], cols: list[str], side: str) -> None:
     missing = [k for k in keys if k not in cols]
     if missing:
         raise ValueError(f"key column(s) {missing} not present in {side} columns {cols}")
-
-
-def _append(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None,
-    compression: str,
-    max_rows_per_file: int,
-) -> None:
-    writer = (
-        df.write.mode("append")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def _discover_partitions(spark: SparkSession, path: str) -> list[str]:
-    from pydala2_spark.plans.fs import list_files
-
-    for f in list_files(spark, path):
-        segs = f.split("/")[:-1]  # directory components only
-        names = [s.split("=", 1)[0] for s in segs if "=" in s]
-        if names:
-            return names
-    return []
 
 
 def delete_where(
@@ -677,8 +660,10 @@ def delete_where(
     their names — time travel over snapshots and downstream file-based
     caches stay valid for them.
 
-    Failure contract: replacements append BEFORE originals delete
-    (same ordering as :func:`merge`); a failure in the window raises
+    Shares its core, :func:`_rewrite_where`, with :func:`update_where`
+    and its failure contract with every file rewrite
+    (:func:`pydala2_spark.sources.writer.replace_files`): replacements
+    append BEFORE originals delete; a failure after the append raises
     :class:`~pydala2_spark.errors.PartialMergeError` whose
     ``pending_deletes`` completes the operation.
 
@@ -689,91 +674,16 @@ def delete_where(
     100 TB shape: one pushed-down scan finds touched files, one scan
     of ONLY those files writes replacements; cost scales with the data
     under the predicate, not the dataset. Returns a dict with
-    ``deleted_rows``, ``rewritten_files``, ``preserved_files``,
-    ``matched_files``.
+    ``deleted_rows``, ``matched_files``, ``rewritten_files``,
+    ``preserved_files``.
     """
-    from pydala2_spark.plans.fs import decoded_path, delete_paths, list_files, path_exists
-
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    all_before = (
-        list_files(spark, target_path) if path_exists(spark, target_path) else []
+    return _rewrite_where(
+        spark, target_path, predicate, None, partition_by, compression, max_rows_per_file
     )
-    if not all_before:
-        return {
-            "deleted_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": [],
-        }
-    if partition_by is None:
-        partition_by = _discover_partitions(spark, target_path) or None
-
-    target = spark.read.parquet(target_path)
-    tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
-    matched = _delete_discovery(tagged, pred)
-
-    # ONE job yields both the touched-file set and the row count
-    # (per-file partial counts collapse map-side; the predicate is
-    # pushed to the scan, so min/max row-group pruning skips clean
-    # files without reading data)
-    per_file = matched.groupBy(_FILE).count().collect()
-    raw_files = [r[_FILE] for r in per_file]
-    matched_files = [decoded_path(f) for f in raw_files]
-    deleted_rows = int(sum(r["count"] for r in per_file))
-    if not matched_files:
-        return {
-            "deleted_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": all_before,
-        }
-
-    appended = False
-    try:
-        hit = F.coalesce(pred, F.lit(False))
-        survivors = _filter_to_files(tagged, raw_files).filter(
-            ~hit
-        ).drop(_FILE)
-        _append(survivors, target_path, partition_by, compression, max_rows_per_file)
-        appended = True
-        before = set(all_before)
-        rewritten = [f for f in list_files(spark, target_path) if f not in before]
-        if delete_paths(spark, matched_files) != len(matched_files):
-            still = [f for f in matched_files if path_exists(spark, f)]
-            if still:
-                from pydala2_spark.errors import PartialMergeError
-
-                raise PartialMergeError(
-                    f"delete_where rewrote {target_path!r} but {len(still)} "
-                    f"replaced file(s) could not be deleted",
-                    pending_deletes=still,
-                )
-    except Exception as e:
-        from pydala2_spark.errors import PartialMergeError
-
-        if isinstance(e, PartialMergeError):
-            raise
-        # replacements published → the recovery step is exactly
-        # "delete pending_deletes" (same contract as merge); a failed
-        # append publishes nothing (committer stages in _temporary),
-        # so nothing is pending then
-        raise PartialMergeError(
-            f"delete_where mutated {target_path!r} but failed before "
-            f"completing: {e}",
-            pending_deletes=matched_files if appended else [],
-        ) from e
-
-    matched_set = set(matched_files)
-    return {
-        "deleted_rows": deleted_rows,
-        "matched_files": matched_files,
-        "rewritten_files": rewritten,
-        "preserved_files": [f for f in all_before if f not in matched_set],
-    }
 
 
 def _delete_discovery(tagged: DataFrame, pred: Column) -> DataFrame:
-    """The touched-row frame ``delete_where`` scans: TRUE-only match
+    """The touched-row frame the row-level DML scans: TRUE-only match
     (coalesce keeps NULL-predicate rows alive) over the file-tagged
     target. Factored out so plan tests exercise the REAL discovery
     expression, not a re-implementation."""
@@ -790,9 +700,10 @@ def update_where(
     max_rows_per_file: int = 10_000_000,
 ) -> dict:
     """Row-level predicate UPDATE with file-selective rewrite — the
-    managed-dataset counterpart of SQL ``UPDATE t SET c = e WHERE p``,
-    and :func:`delete_where`'s sibling (same discovery, same failure
-    contract, same file economics).
+    managed-dataset counterpart of SQL ``UPDATE t SET c = e WHERE p``.
+    One core with :func:`delete_where` (:func:`_rewrite_where`: same
+    discovery, same failure contract, same file economics); only the
+    replacement rows differ.
 
     Semantics: rows where ``predicate`` is TRUE take the ``set``
     assignments (expressions may reference the row's OLD values, all
@@ -801,105 +712,81 @@ def update_where(
     Only files CONTAINING a matching row rewrite; untouched files keep
     their names, so snapshots and file-based caches stay valid.
 
-    Failure contract: replacements append BEFORE originals delete; a
-    failure in the window raises
-    :class:`~pydala2_spark.errors.PartialMergeError` whose
-    ``pending_deletes`` completes the operation.
-
     Reference analogue: none — pydala2 updates by whole-key merge
     (`pydala/dataset.py` upsert); predicate UPDATE is managed-table
     surface users expect from Delta/Iceberg.
 
-    100 TB shape: identical to delete_where — one pushed-down
-    discovery scan (min/max prunes clean files), one rewrite scan of
-    ONLY the touched files; cost scales with data under the predicate.
     Returns ``updated_rows`` / ``matched_files`` / ``rewritten_files``
     / ``preserved_files``.
     """
-    from pydala2_spark.plans.fs import decoded_path, delete_paths, list_files, path_exists
-
     if not set:
         raise ValueError("update_where needs at least one SET assignment")
+    return _rewrite_where(
+        spark, target_path, predicate, set, partition_by, compression, max_rows_per_file
+    )
+
+
+def _rewrite_where(
+    spark: SparkSession,
+    target_path: str,
+    predicate: str | Column,
+    assigns: dict | None,
+    partition_by: list[str] | None,
+    compression: str,
+    max_rows_per_file: int,
+) -> dict:
+    """The row-level DML core: a DELETE when ``assigns`` is None, an
+    UPDATE otherwise. One listing, one grouped collect over the
+    discovery frame (touched files and the row count together), one
+    rewrite of only the touched files through ``replace_files``."""
+    from pydala2_spark.plans.fs import decoded_path, list_files, partition_columns, path_exists
+    from pydala2_spark.sources.writer import replace_files
+
+    op, count_key = (
+        ("delete_where", "deleted_rows") if assigns is None else ("update_where", "updated_rows")
+    )
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     all_before = (
         list_files(spark, target_path) if path_exists(spark, target_path) else []
     )
+    untouched = {
+        count_key: 0,
+        "matched_files": [],
+        "rewritten_files": [],
+        "preserved_files": all_before,
+    }
     if not all_before:
-        return {
-            "updated_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": [],
-        }
+        return untouched
     if partition_by is None:
-        partition_by = _discover_partitions(spark, target_path) or None
+        partition_by = partition_columns(spark, target_path, all_before) or None
 
     target = spark.read.parquet(target_path)
-    missing = [c for c in set if c not in target.columns]
+    missing = [c for c in assigns or [] if c not in target.columns]
     if missing:
         raise ValueError(f"SET columns not in target: {missing}")
     tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
-    matched = _delete_discovery(tagged, pred)
-    per_file = matched.groupBy(_FILE).count().collect()
+    # ONE job yields both the touched-file set and the row count
+    # (per-file partial counts collapse map-side; the predicate is
+    # pushed to the scan, so min/max row-group pruning skips clean
+    # files without reading data)
+    per_file = _delete_discovery(tagged, pred).groupBy(_FILE).count().collect()
+    if not per_file:
+        return untouched
     raw_files = [r[_FILE] for r in per_file]
     matched_files = [decoded_path(f) for f in raw_files]
-    updated_rows = int(sum(r["count"] for r in per_file))
-    if not matched_files:
-        return {
-            "updated_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": all_before,
-        }
-
-    appended = False
-    try:
-        hit = F.coalesce(pred, F.lit(False))
-        # all assignments evaluate against the PRE-update row: build
-        # every new value from the original columns, then project —
-        # a SET that swaps two columns stays correct
-        assigns = {
-            c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
-        }
-        cols = [
-            (
-                F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c)
-                if c in assigns
-                else F.col(c)
-            )
-            for c in target.columns
-        ]
-        replacement = _filter_to_files(tagged, raw_files).select(*cols)
-        _append(
-            replacement, target_path, partition_by, compression, max_rows_per_file
-        )
-        appended = True
-        before = frozenset(all_before)
-        rewritten = [f for f in list_files(spark, target_path) if f not in before]
-        if delete_paths(spark, matched_files) != len(matched_files):
-            still = [f for f in matched_files if path_exists(spark, f)]
-            if still:
-                from pydala2_spark.errors import PartialMergeError
-
-                raise PartialMergeError(
-                    f"update_where rewrote {target_path!r} but {len(still)} "
-                    f"replaced file(s) could not be deleted",
-                    pending_deletes=still,
-                )
-    except Exception as e:
-        from pydala2_spark.errors import PartialMergeError
-
-        if isinstance(e, PartialMergeError):
-            raise
-        raise PartialMergeError(
-            f"update_where mutated {target_path!r} but failed before "
-            f"completing: {e}",
-            pending_deletes=matched_files if appended else [],
-        ) from e
-
+    rewritten = replace_files(
+        _replacement(_filter_to_files(tagged, raw_files), pred, assigns, [_FILE]),
+        target_path,
+        matched_files,
+        op,
+        partition_by,
+        compression,
+        max_rows_per_file,
+        listing=all_before,
+    )
     matched_set = frozenset(matched_files)
     return {
-        "updated_rows": updated_rows,
+        count_key: int(sum(r["count"] for r in per_file)),
         "matched_files": matched_files,
         "rewritten_files": rewritten,
         "preserved_files": [f for f in all_before if f not in matched_set],

@@ -80,10 +80,19 @@ def unit_expr(a: str) -> Column:
     Pair-wise operators normalize each vector ONCE up front so the
     per-pair work is a single dot product — at 100 TB the unit vectors
     are computed in the scan stage, not the O(pairs) join stage.
+
+    The squared norm is summed once per row, in ``aggregate``'s finish
+    lambda, and then divides every element: O(dim) per row, where a
+    sum inside the ``transform`` lambda is re-run per element. The
+    lambda variables get fresh names, so no column name can shadow
+    them.
     """
-    return F.expr(
-        f"transform({a}, x -> cast(x as double) / "
-        f"sqrt(aggregate({a}, cast(0 as double), (acc, y) -> acc + cast(y as double) * cast(y as double))))"
+    v = F.col(a)
+    return F.aggregate(
+        v,
+        F.lit(0).cast("double"),
+        lambda acc, y: acc + y.cast("double") * y.cast("double"),
+        lambda acc: F.transform(v, lambda x: x.cast("double") / F.sqrt(acc)),
     )
 
 

@@ -130,6 +130,25 @@ def copy_file(spark: SparkSession, src: str, dst: str) -> bool:
     )
 
 
+def partition_columns(
+    spark: SparkSession, path: str, files: list[str] | None = None
+) -> list[str]:
+    """Hive partition column names of the dataset at ``path``: the
+    ``k=v`` directory segments of its first partitioned data file,
+    taken relative to the :func:`qualified` base, so a ``k=v``
+    directory ABOVE the dataset (``.../run=3/ds``) is not a partition,
+    however ``path`` is spelled. ``files`` is a :func:`list_files`
+    listing of ``path`` the caller already holds; without it the
+    dataset is listed once."""
+    base = qualified(spark, path).rstrip("/") + "/"
+    for f in list_files(spark, path) if files is None else files:
+        rel = f[len(base):] if f.startswith(base) else f
+        names = [seg.split("=", 1)[0] for seg in rel.split("/")[:-1] if "=" in seg]
+        if names:
+            return names
+    return []
+
+
 def replace_dir(spark: SparkSession, staging: str, live: str) -> None:
     """Atomically swap a freshly-written staging dir into place over a
     (possibly existing) live dir: live → aside, staging → live, delete

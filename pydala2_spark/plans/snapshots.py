@@ -335,16 +335,10 @@ class SnapshotDataset:
         invisible to snapshot readers until a manifest references
         them."""
         from pydala2_spark.plans.fs import delete_paths, list_files, mkdirs, qualified, rename
+        from pydala2_spark.sources.writer import parquet_writer
 
         stage = f"{self.path}/_snapshots_stage/{uuid.uuid4().hex}"
-        writer = (
-            df.write.mode("overwrite")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage)
+        parquet_writer(df, "overwrite", compression, max_rows_per_file, partition_by).parquet(stage)
 
         qstage = qualified(self.spark, stage)
         own: list[str] = []
@@ -459,6 +453,7 @@ class SnapshotDataset:
         publish loses the optimistic race cleanly
         (SnapshotConflictError — re-run against the new head; blind
         retry could resurrect rows a racing overwrite removed)."""
+        from pydala2_spark.operators.merge import _delete_discovery, _filter_to_files, _replacement
         from pydala2_spark.plans.fs import decoded_path_col, qualified, schemeless
 
         self._publish_guard()
@@ -489,8 +484,7 @@ class SnapshotDataset:
             "__rel",
             F.substring(decoded_path_col(F.col("__f")), len(base) + 1, 1 << 30),
         )
-        hit = F.coalesce(pred, F.lit(False))
-        per_file = tagged.filter(hit).groupBy("__rel").count().collect()
+        per_file = _delete_discovery(tagged, pred).groupBy("__rel").count().collect()
         matched_rel = sorted(r["__rel"] for r in per_file)
         n_rows = int(sum(r["count"] for r in per_file))
         if not matched_rel:
@@ -508,32 +502,11 @@ class SnapshotDataset:
                 f"manifest does not track (path normalization drift?): "
                 f"{sorted(unknown)[:5]}"
             )
-        # Touched-file selection over the SAME __rel column (IN literal
-        # while small, broadcast semi-join above the merge module's
-        # file-literal limit)
-        if len(matched_rel) <= 1000:
-            touched = tagged.filter(F.col("__rel").isin(matched_rel))
-        else:
-            keys = self.spark.createDataFrame(
-                [(r,) for r in matched_rel], "__rel string"
-            )
-            touched = tagged.join(F.broadcast(keys), "__rel", "left_semi")
-        if assigns is None:
-            replacement = touched.filter(~hit).drop("__f", "__rel")
-        else:
-            built = {
-                c: (F.expr(e) if isinstance(e, str) else e)
-                for c, e in assigns.items()
-            }
-            cols = [
-                (
-                    F.when(hit, built[c]).otherwise(F.col(c)).alias(c)
-                    if c in built
-                    else F.col(c)
-                )
-                for c in df.columns
-            ]
-            replacement = touched.select(*cols)
+        # touched-file selection over the SAME __rel column, and the
+        # replacement rows of the directory dataset's row-level DML
+        replacement = _replacement(
+            _filter_to_files(tagged, matched_rel, "__rel"), pred, assigns, ["__f", "__rel"]
+        )
         own = self._stage_and_move(
             replacement, partition_by, compression, max_rows_per_file
         )

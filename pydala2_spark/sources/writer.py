@@ -16,6 +16,12 @@ Spark-first realization:
   partitions present in the batch are replaced), the job-level analogue
   of the reference's write-new-then-delete-old (`pydala/dataset.py:995-1003`).
 
+Every other module writes parquet through the two functions below:
+:func:`parquet_writer` (mode, compression, ``maxRecordsPerFile``,
+``partitionBy``) and :func:`replace_files`, the one rewrite step that
+row DML, merge and compaction share — append the replacement, then
+delete the replaced files, with one partial-failure contract.
+
 At 100 TB the same code holds: the write is a distributed job, file
 sizing is per-task, and derived date-part partition columns give
 partition pruning on every later time-ranged query.
@@ -23,17 +29,113 @@ partition pruning on every later time-ranged query.
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import TYPE_CHECKING, Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pydala2_spark.errors import PartialMergeError
 from pydala2_spark.functions.dateparts import DATEPART_EXPRS, with_datepart_columns
 from pydala2_spark.functions.sortspec import SortSpec, to_sort_columns
 
+if TYPE_CHECKING:  # pragma: no cover
+    from pydala2_spark.operators.merge import MergeResult
+
 DEFAULT_MAX_ROWS_PER_FILE = 10_000_000  # reference default, pydala/dataset.py:886
 DEFAULT_COMPRESSION = "zstd"  # reference default, pydala/dataset.py:888
+
+
+def parquet_writer(
+    df: DataFrame,
+    mode: str,
+    compression: str = DEFAULT_COMPRESSION,
+    max_rows_per_file: int | None = None,
+    partition_by: list[str] | None = None,
+) -> DataFrameWriter:
+    """The parquet write builder: ``mode`` + ``compression``, a
+    per-file row cap when ``max_rows_per_file`` is set, and hive
+    ``partitionBy`` when ``partition_by`` is non-empty. The caller
+    ends it with ``.parquet(path)``."""
+    w = df.write.mode(mode).option("compression", compression)
+    if max_rows_per_file is not None:
+        w = w.option("maxRecordsPerFile", str(max_rows_per_file))
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    return w
+
+
+def replace_files(
+    df: DataFrame,
+    path: str,
+    replaced: list[str],
+    op: str,
+    partition_by: list[str] | None = None,
+    compression: str = DEFAULT_COMPRESSION,
+    max_rows_per_file: int = DEFAULT_MAX_ROWS_PER_FILE,
+    listing: list[str] | None = None,
+    merge_result: "MergeResult | None" = None,
+) -> list[str]:
+    """Replace the files ``replaced`` under ``path`` by ``df``'s rows:
+    append ``df``, then delete ``replaced`` — the reference's
+    write-new-then-delete-old order (`pydala/dataset.py:995-1003`).
+    ``df``'s plan must have been built over the pre-append file set,
+    which is what readers pinned to the old listing keep seeing until
+    the delete.
+
+    With ``listing`` (the target's files before the append), the target
+    is listed once after the append and the files it wrote are
+    returned; without it nothing is listed and ``[]`` is returned.
+
+    Failure contract (``op`` names the mutation in the message):
+    :class:`~pydala2_spark.errors.PartialMergeError` carrying
+    ``merge_result`` (with its ``rewritten_files`` set once the append
+    is listed) and ``pending_deletes``:
+
+    - the append fails → nothing is pending (Spark's committer stages
+      job output in ``_temporary``, so a failed append publishes no
+      file);
+    - anything fails after the append → every replaced file is pending;
+    - the delete reports fewer removals than asked (``fs.delete``
+      returning False is otherwise silent: the replaced file stays
+      next to its replacement and its rows are duplicated) → each
+      replaced file is re-checked and the ones still present are
+      pending.
+
+    Deleting ``pending_deletes`` completes the mutation.
+    """
+    # looked up per call, so a patched plans.fs (tests, perfbench's
+    # fs tracing) takes effect here
+    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
+
+    spark = df.sparkSession
+    appended = False
+    try:
+        parquet_writer(df, "append", compression, max_rows_per_file, partition_by).parquet(path)
+        appended = True
+        written: list[str] = []
+        if listing is not None:
+            before = frozenset(listing)
+            written = [f for f in list_files(spark, path) if f not in before]
+            if merge_result is not None:
+                merge_result.rewritten_files = written
+        deleted = delete_paths(spark, replaced)
+    except Exception as e:
+        raise PartialMergeError(
+            f"{op} mutated {path!r} but failed before completing: {e}",
+            merge_result=merge_result,
+            pending_deletes=replaced if appended else [],
+        ) from e
+    if deleted != len(replaced):
+        still = [f for f in replaced if path_exists(spark, f)]
+        if still:
+            raise PartialMergeError(
+                f"{op} rewrote {path!r} but {len(still)} replaced file(s) "
+                f"could not be deleted",
+                merge_result=merge_result,
+                pending_deletes=still,
+            )
+    return written
 
 
 def to_spark_df(spark: SparkSession, data: Any) -> DataFrame:

@@ -899,7 +899,7 @@ def test_zorder_expr_null_column_and_bits_clamp(spark):
 def test_staging_swap_rolls_back_on_publish_failure(spark, tmp_ds_path, monkeypatch):
     """If the staging->path rename fails, the original dataset must be
     rolled back into place and nothing deleted."""
-    import pydala2_spark.operators.maintenance as M
+    import pydala2_spark.plans.fs as M
 
     spark.range(0, 100).write.parquet(tmp_ds_path)
     real_rename = M.rename
@@ -915,7 +915,7 @@ def test_staging_swap_rolls_back_on_publish_failure(spark, tmp_ds_path, monkeypa
     import pytest as _pytest
 
     with _pytest.raises(IOError):
-        M._publish_staging_swap(spark, tmp_ds_path, tmp_ds_path + "__staging_x")
+        M.replace_dir(spark, tmp_ds_path + "__staging_x", tmp_ds_path)
     monkeypatch.undo()
     # original data still fully readable at the original path
     assert spark.read.parquet(tmp_ds_path).count() == 100
@@ -1010,3 +1010,34 @@ def test_export_legacy_file_metadata_refuses_above_cap(spark, tmp_ds_path):
     # raising the cap explicitly accepts the bill and proceeds
     r = export_legacy_file_metadata(spark, tmp_ds_path, max_files=3)
     assert r["files"] == 3
+
+
+def test_compaction_job_ceilings(spark, tmp_path):
+    """Job ceilings on three appended 100-row files: compact_partitions
+    runs at most 4 Spark jobs unpartitioned and 5 partitioned,
+    compact_by_rows at most 5: the planning collects and the write
+    (the delete check after the write runs none)."""
+    from conftest import spark_jobs
+
+    def three_files(p, partitioned):
+        for lo in (0, 100, 200):
+            w = (
+                spark.range(lo, lo + 100)
+                .selectExpr("id", "concat('v', id) AS v", "id % 2 AS part")
+                .coalesce(1)
+                .write.mode("append")
+            )
+            (w.partitionBy("part") if partitioned else w).parquet(p)
+
+    for name, partitioned, run, ceiling in (
+        ("cp_flat", False, compact_partitions, 4),
+        ("cp_part", True, compact_partitions, 5),
+        ("cbr", False, compact_by_rows, 5),
+    ):
+        p = str(tmp_path / name)
+        three_files(p, partitioned)
+        before = _snapshot(spark, p)
+        _, jobs = spark_jobs(spark, lambda: run(spark, p))
+        assert _snapshot(spark, p) == before
+        assert len(list_files(spark, p)) == (2 if partitioned else 1)
+        assert jobs <= ceiling, (name, jobs)

@@ -497,3 +497,69 @@ def test_upsert_job_ceiling(spark, tmp_ds_path):
     assert r.target_count_before == 301 and r.target_count_after == 301
     assert spark.read.parquet(tmp_ds_path).count() == 301
     assert jobs <= 20, jobs  # 23 with the two semi-join jobs
+
+
+@pytest.mark.parametrize("spelling", ["plain", "uri"])
+def test_rewrites_under_kv_parent_dir(spark, tmp_path, spelling):
+    """A dataset stored under a ``k=v`` directory (``.../run=3/ds``) is
+    unpartitioned: ``run`` is a directory ABOVE its root, not a
+    partition column. Upsert, delete_where, update_where and
+    compact_partitions give exact rows, with the path spelled plain and
+    as a ``file://`` URI."""
+    from pydala2_spark.operators.maintenance import compact_partitions
+    from pydala2_spark.operators.merge import delete_where, merge, update_where
+    from pydala2_spark.plans.fs import list_files, partition_columns
+
+    base = str(tmp_path / "run=3" / "ds")
+    p = base if spelling == "plain" else f"file://{base}"
+    for lo in (0, 10):
+        spark.range(lo, lo + 10).selectExpr("id", "CAST(id AS double) AS x").coalesce(
+            1
+        ).write.mode("append").parquet(base)
+
+    def table():
+        return sorted((r["id"], r["x"]) for r in spark.read.parquet(p).collect())
+
+    want = {i: float(i) for i in range(20)}
+    assert partition_columns(spark, p) == []
+
+    r = merge(spark, p, t(id=[3, 20], x=[-3.0, 20.0]), strategy="upsert", key_columns=["id"])
+    assert (r.updated, r.inserted) == (1, 1)
+    want.update({3: -3.0, 20: 20.0})
+    assert table() == sorted(want.items())
+
+    out = delete_where(spark, p, "id >= 18")
+    assert out["deleted_rows"] == 3
+    want = {i: x for i, x in want.items() if i < 18}
+    assert table() == sorted(want.items())
+
+    out = update_where(spark, p, "id = 1", set={"x": "-1.0"})
+    assert out["updated_rows"] == 1
+    want[1] = -1.0
+    assert table() == sorted(want.items())
+
+    compact_partitions(spark, p)
+    assert len(list_files(spark, p)) == 1
+    assert table() == sorted(want.items())
+
+
+def test_row_dml_job_ceilings(spark, tmp_path):
+    """delete_where and update_where each run at most 4 Spark jobs on
+    three appended 100-row files: one grouped discovery collect plus
+    the rewrite's write."""
+    from conftest import spark_jobs
+
+    from pydala2_spark.operators.merge import delete_where, update_where
+
+    for name, run in (
+        ("delete", lambda p: delete_where(spark, p, "id % 7 = 0")),
+        ("update", lambda p: update_where(spark, p, "id % 7 = 0", set={"v": "'x'"})),
+    ):
+        p = str(tmp_path / name)
+        for lo in (0, 100, 200):
+            spark.range(lo, lo + 100).selectExpr("id", "concat('v', id) AS v").coalesce(
+                1
+            ).write.mode("append").parquet(p)
+        out, jobs = spark_jobs(spark, lambda: run(p))
+        assert len(out["matched_files"]) == 3
+        assert jobs <= 4, (name, jobs)

@@ -180,7 +180,7 @@ def test_staging_swap_rollback_when_publish_rename_fails(
     aside, staging not yet published): the swap must roll the original
     back in, delete the staging dir, and raise — readers never see a
     missing dataset."""
-    import pydala2_spark.operators.maintenance as m
+    import pydala2_spark.plans.fs as m
     from pydala2_spark.operators.maintenance import repartition_dataset
     from pydala2_spark.plans.fs import path_exists
 
@@ -219,7 +219,7 @@ def test_staging_swap_aborts_cleanly_when_aside_rename_fails(
 ):
     """Failure on the FIRST rename (dataset couldn't be moved aside):
     the original stays untouched and the staging dir is cleaned up."""
-    import pydala2_spark.operators.maintenance as m
+    import pydala2_spark.plans.fs as m
     from pydala2_spark.operators.maintenance import repartition_dataset
 
     spark.createDataFrame(
@@ -238,3 +238,97 @@ def test_staging_swap_aborts_cleanly_when_aside_rename_fails(
 
     leftovers = [d for d in os.listdir(parent) if "__staging_" in d]
     assert leftovers == [], leftovers
+
+
+# -- every file rewrite: one partial-failure contract -------------------
+
+
+def _merge_update(spark, p):
+    from pydala2_spark.operators.merge import merge
+
+    return merge(
+        spark, p, t(id=[5, 15, 25], x=[-5.0, -15.0, -25.0]), strategy="update", key_columns=["id"]
+    )
+
+
+def _delete_where(spark, p):
+    from pydala2_spark.operators.merge import delete_where
+
+    return delete_where(spark, p, "id % 10 = 5")
+
+
+def _update_where(spark, p):
+    from pydala2_spark.operators.merge import update_where
+
+    return update_where(spark, p, "id % 10 = 5", set={"x": "-x"})
+
+
+def _compact_partitions(spark, p):
+    from pydala2_spark.operators.maintenance import compact_partitions
+
+    return compact_partitions(spark, p)
+
+
+def _compact_by_rows(spark, p):
+    from pydala2_spark.operators.maintenance import compact_by_rows
+
+    return compact_by_rows(spark, p)
+
+
+def _compact_by_timeperiod(spark, p):
+    from pydala2_spark.operators.maintenance import compact_by_timeperiod
+
+    return compact_by_timeperiod(spark, p, "1d", "ts")
+
+
+def _compact_by_timeperiod_split(spark, p):
+    """The per-interval loop: 30 rows at 20 per file need two outputs."""
+    from pydala2_spark.operators.maintenance import compact_by_timeperiod
+
+    return compact_by_timeperiod(spark, p, "1d", "ts", max_rows_per_file=20)
+
+
+_ROWS = [(i, float(i)) for i in range(30)]
+_NEGATED = [(i, -x if i % 10 == 5 else x) for i, x in _ROWS]
+_REWRITES = {
+    "merge_update": (_merge_update, _NEGATED),
+    "delete_where": (_delete_where, [(i, x) for i, x in _ROWS if i % 10 != 5]),
+    "update_where": (_update_where, _NEGATED),
+    "compact_partitions": (_compact_partitions, _ROWS),
+    "compact_by_rows": (_compact_by_rows, _ROWS),
+    "compact_by_timeperiod": (_compact_by_timeperiod, _ROWS),
+    "compact_by_timeperiod_split": (_compact_by_timeperiod_split, _ROWS),
+}
+
+
+@pytest.mark.parametrize("op", list(_REWRITES))
+def test_rewrite_raises_partial_merge_error_when_delete_removes_nothing(
+    spark, tmp_ds_path, monkeypatch, op
+):
+    """``fs.delete`` returning False is silent: a rewrite that ignored
+    it left each replaced file next to its replacement, duplicating its
+    rows. Every rewrite (merge, row DML, each compaction path) raises
+    PartialMergeError whose pending_deletes are exactly the replaced
+    files; deleting them gives the exact rows."""
+    import pydala2_spark.plans.fs as fs_mod
+
+    run, want = _REWRITES[op]
+    for lo in (0, 10, 20):  # three files, one day; each holds a touched row
+        spark.range(lo, lo + 10).selectExpr(
+            "id", "CAST(id AS double) AS x", "TIMESTAMP '2024-01-01 06:00:00' AS ts"
+        ).coalesce(1).write.mode("append").parquet(tmp_ds_path)
+    replaced = fs_mod.list_files(spark, tmp_ds_path)
+    assert len(replaced) == 3
+
+    real_delete = fs_mod.delete_paths
+    monkeypatch.setattr(fs_mod, "delete_paths", lambda spark_, paths: 0)
+    with pytest.raises(PartialMergeError) as ei:
+        run(spark, tmp_ds_path)
+    monkeypatch.undo()
+
+    err = ei.value
+    assert sorted(err.pending_deletes) == replaced
+    if op == "merge_update":
+        assert err.merge_result.updated == 3 and err.merge_result.rewritten_files
+    real_delete(spark, err.pending_deletes)
+    assert read_rows(spark, tmp_ds_path, "id", "x") == want

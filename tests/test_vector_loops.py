@@ -255,3 +255,41 @@ def test_decimal_kit_is_shape_agnostic():
     big = _half_up(np.array([[1e14, 2e14], [3.5, 1.0]]), 6)
     assert big.dtype == object and big.shape == (2, 2)
     assert _to_double(big, 6).tolist() == [[1e14, 2e14], [3.5, 1.0]]
+
+
+def test_unit_expr_matches_per_element_norm_bit_for_bit(spark):
+    """``unit_expr`` sums the squared norm once per row (aggregate's
+    finish lambda). It must equal, bit for bit, the form that re-sums
+    the norm inside the per-element lambda, on random double and float
+    vectors of mixed magnitude, plus null, empty and signed-zero ones."""
+    from pyspark.sql import functions as F
+
+    from pydala2_spark.operators.similarity import unit_expr
+
+    rng = random.Random(11)
+    rows = [
+        (i, [rng.gauss(0, 1) * 10 ** rng.randint(-6, 6) for _ in range(rng.randint(1, 24))])
+        for i in range(300)
+    ] + [(300, None), (301, []), (302, [-0.0, 3.0])]
+    df = spark.createDataFrame(rows, "id long, d array<double>").withColumn(
+        "f", F.col("d").cast("array<float>")
+    )
+
+    def per_element(a):
+        return F.expr(
+            f"transform({a}, x -> cast(x as double) / sqrt(aggregate({a}, cast(0 as double), "
+            f"(acc, y) -> acc + cast(y as double) * cast(y as double))))"
+        )
+
+    def bits(v):
+        return None if v is None else [x.hex() for x in v]
+
+    got = df.select(
+        "id",
+        *[unit_expr(c).alias(f"new_{c}") for c in ("d", "f")],
+        *[per_element(c).alias(f"old_{c}") for c in ("d", "f")],
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        for c in ("d", "f"):
+            assert bits(r[f"new_{c}"]) == bits(r[f"old_{c}"]), (r["id"], c)
