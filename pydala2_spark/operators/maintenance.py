@@ -49,7 +49,6 @@ Design notes (Spark-first, scale-first):
 from __future__ import annotations
 
 import math
-import os
 import uuid
 from typing import Any
 
@@ -558,32 +557,14 @@ def _footer_minmax(
     import json as _json
 
     from pydala2_spark.plans.fs import list_files
-    from pydala2_spark.plans.stats import (
-        _SCHEME_FILESYSTEMS,
-        _read_footers,
-        collect_file_stats,
-    )
+    from pydala2_spark.plans.stats import footer_stats
 
     files = list_files(spark, path, suffixes=(".parquet",))
     if not files:
         return None
-    if len(files) <= 32:
-        base = (
-            path
-            if "://" in path
-            else "file:" + os.path.abspath(path.removeprefix("file:"))
-        )
-        per_file = [
-            {k: {"min": v[0], "max": v[1]} for k, v in r[5].items()}
-            for r in _read_footers(base, files, dict(_SCHEME_FILESYSTEMS))
-        ]
-    else:
-        per_file = [
-            {k: {"min": v["min"], "max": v["max"]} for k, v in row[0].items()}
-            for row in collect_file_stats(spark, path, files=files)
-            .select("column_stats")
-            .collect()
-        ]
+    per_file = [
+        r["column_stats"] for r in footer_stats(spark, path, files).select("column_stats").collect()
+    ]
     out: dict[str, tuple[float, float]] = {}
     for c in cols:
         mn = mx = None

@@ -14,13 +14,19 @@ dominates GDPR deletes, merge key lookups, and sample tracing.
 Both halves stay distributed — nothing value-sized ever reaches the
 driver:
 
-* **BUILD** is one Spark job: each value hashes ``k`` ways
-  (``xxhash64`` with k seed columns), positions fold into sparse
-  64-bit words with the ``bit_or`` aggregate grouped by
-  ``(file, word_index)``. Output is a parquet sidecar under
-  ``<dataset>/_bloom_index/<column>`` (underscore prefix hides it from
-  Spark scans, the reference's ``_metadata`` convention). Sidecar size
-  is bounded by ``num_bits/64`` rows per file regardless of row count.
+* **BUILD** (and the incremental refresh) is the bloom branch of the
+  one sidecar lifecycle in :mod:`pydala2_spark.plans.stats`: this
+  module supplies the plan (:func:`bloom_plan`), the state read (the
+  sentinel rows, one collect) and the rows themselves
+  (:func:`_bloom_rows`); listing, diff and staged publish are shared
+  with the StatsIndex, the NDV sketches and the fused ANALYZE. Each
+  value hashes ``k`` ways (``xxhash64`` with k seed columns),
+  positions fold into sparse 64-bit words with the ``bit_or``
+  aggregate grouped by ``(file, word_index)``. Output is a parquet
+  sidecar under ``<dataset>/_bloom_index/<column>`` (underscore prefix
+  hides it from Spark scans, the reference's ``_metadata`` convention).
+  Sidecar size is bounded by ``num_bits/64`` rows per file regardless
+  of row count.
 * **PROBE** hashes the probe values through the SAME Spark
   expressions (hash equality by construction — no Python reimpl to
   drift), joins them against the sidecar words, and keeps a file when
@@ -43,11 +49,25 @@ from pyspark.sql import functions as F
 
 from pydala2_spark.functions.safety import quote_identifier
 
+from pydala2_spark.plans.fs import path_exists
+
 # Hadoop qualifies local paths as file:/x, input_file_name() as a
 # URI-encoded file:///x — all sidecar paths are stored and compared
-# in the listing's scheme-free spelling through plans/fs.py
-from pydala2_spark.plans.fs import input_file_col as _input_file_col
-from pydala2_spark.plans.fs import schemeless as _schemeless
+# in the listing's scheme-free spelling (stats.listing, fs.input_file_col)
+from pydala2_spark.plans.stats import (
+    _FILE,
+    SidecarPlan,
+    diff_files,
+    key_rows,
+    listing,
+    read_state,
+    sync_sidecar,
+)
+
+BLOOM_SCHEMA = (
+    "file_path string, word_index long, word long, "
+    "num_bits long, num_hashes int, value_type string"
+)
 
 #: sentinel word_index marking "this file was indexed" even when the
 #: indexed column held no non-null values in it.
@@ -83,6 +103,97 @@ def _position_words(df: DataFrame, value_col: str, num_bits: int, num_hashes: in
     )
 
 
+def check_geometry(num_bits: int, num_hashes: int) -> None:
+    """Reject a geometry no probe can trust: an unvalidated
+    num_hashes=0 sidecar would make every probe silently prune ALL
+    files."""
+    if num_bits < 64 or num_bits & (num_bits - 1):
+        raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
+    if not 1 <= num_hashes <= 16:
+        raise ValueError(f"num_hashes must be in [1, 16], got {num_hashes}")
+
+
+def _bloom_rows(
+    scan: DataFrame, column: str, files: list[str], num_bits: int, num_hashes: int, value_type: str
+) -> DataFrame:
+    """The bloom rows: ``column``'s sparse words for ``files``
+    from a shared-scan frame, plus one sentinel row per file. Values
+    are cast to ``value_type``: xxhash64 is TYPE-sensitive, so schema
+    drift in appended files (int32 vs the indexed bigint) must not
+    diverge the hash family from the probe side (a no-op on a build,
+    whose type is the column's own)."""
+    values = scan.select(
+        F.col(_FILE).alias("file_path"), F.col(column).cast(value_type).alias("__v")
+    ).where(F.col("__v").isNotNull())
+    words = (
+        _position_words(values, "__v", num_bits, num_hashes)
+        .groupBy("file_path", "word_index")
+        .agg(F.bit_or("word_bit").alias("word"))
+    )
+    # sentinel row per file: marks membership in the index so the probe
+    # can tell "indexed, value absent" (prunable) from "appended after
+    # the build" (must keep). Metadata-scale.
+    sentinels = key_rows(scan.sparkSession, files).select(
+        "file_path",
+        F.lit(_SENTINEL).cast("long").alias("word_index"),
+        F.lit(0).cast("long").alias("word"),
+    )
+    return (
+        words.unionByName(sentinels)
+        .withColumn("num_bits", F.lit(num_bits).cast("long"))
+        .withColumn("num_hashes", F.lit(num_hashes).cast("int"))
+        .withColumn("value_type", F.lit(value_type))
+    )
+
+
+def _bloom_state(spark: SparkSession, ipath: str):
+    """The stored rows, and the sentinel rows (one per indexed file,
+    carrying the geometry and value type) in one collect."""
+    cols = ["file_path", "num_bits", "num_hashes", "value_type"]
+    return read_state(spark, ipath, cols, where=F.col("word_index") == _SENTINEL)
+
+
+def bloom_plan(
+    spark: SparkSession,
+    path: str,
+    current: dict[str, str],
+    column: str,
+    num_bits: int = 1 << 20,
+    num_hashes: int = 5,
+    index_path: str | None = None,
+    rebuild: bool = False,
+) -> SidecarPlan:
+    """The bloom sidecar's plan for ``column``: with stored sentinels,
+    hash the added files with the stored geometry and value type;
+    without (a missing or emptied sidecar) or on ``rebuild``, hash
+    every file with the given geometry."""
+    quote_identifier(column)  # raises on non-identifier names
+    check_geometry(num_bits, num_hashes)
+    ipath = index_path or _bloom_sidecar_path(path, column)
+    old, state = (None, []) if rebuild else _bloom_state(spark, ipath)
+    value_type = None
+    if state:
+        s = state[0]
+        num_bits, num_hashes, value_type = int(s["num_bits"]), int(s["num_hashes"]), s["value_type"]
+    elif not current:
+        raise FileNotFoundError(f"no parquet data files under {path!r} to index")
+    added, removed, kept = diff_files(current, {r["file_path"] for r in state}, old)
+
+    def derive(scan_for):
+        if not added:
+            return None
+        scan = scan_for(added)
+        vt = value_type or scan.schema[column].dataType.simpleString()
+        return _bloom_rows(scan, column, added, num_bits, num_hashes, vt)
+
+    reads = {column: added} if added else {}
+    plan = SidecarPlan(ipath, added, removed, kept, derive, BLOOM_SCHEMA, reads=reads)
+    if rebuild:  # build_bloom_index reports files and stored words
+        plan.metrics = {"words": F.count(F.when(F.col("word_index") != _SENTINEL, 1))}
+        plan.result = lambda r: {"files": r["total"], "words": r["words"]}
+    return plan
+
+
 def build_bloom_index(
     spark: SparkSession,
     dataset_path: str,
@@ -93,7 +204,7 @@ def build_bloom_index(
 ) -> dict:
     """Build (or rebuild) the bloom sidecar for ``column``.
 
-    One job: scan → k-way hash → ``bit_or`` per (file, word). With the
+    One scan: k-way hash → ``bit_or`` per (file, word). With the
     default 2^20 bits/file and k=5, a file holding 100k distinct
     values probes at ~0.8 % false-positive rate, and the sidecar costs
     at most 16384 words (≤128 KiB) per file — independent of file row
@@ -102,54 +213,9 @@ def build_bloom_index(
 
     Returns ``{"files": n, "words": w}``.
     """
-    quote_identifier(column)  # raises on non-identifier names
-    if num_bits < 64 or num_bits & (num_bits - 1):
-        raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
-    if not 1 <= num_hashes <= 16:
-        raise ValueError(f"num_hashes must be in [1, 16], got {num_hashes}")
-    from pydala2_spark.plans.fs import list_files, qualified, replace_dir
-
-    path = dataset_path.rstrip("/")
-    ipath = index_path or _bloom_sidecar_path(path, column)
-
-    df = spark.read.parquet(path)
-    value_type = df.schema[column].dataType.simpleString()
-    values = df.select(
-        _input_file_col().alias("file_path"),
-        F.col(column).alias("__v"),
-    ).where(F.col("__v").isNotNull())
-
-    words = (
-        _position_words(values, "__v", num_bits, num_hashes)
-        .groupBy("file_path", "word_index")
-        .agg(F.bit_or("word_bit").alias("word"))
+    return sync_sidecar(
+        spark, dataset_path, bloom_plan, column, num_bits, num_hashes, index_path, rebuild=True
     )
-
-    # sentinel row per physical file: marks membership in the index so
-    # the probe can distinguish "indexed, value absent" (prunable) from
-    # "appended after build" (must keep). Metadata-scale.
-    files = [
-        _schemeless(qualified(spark, f))
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    ]
-    sentinels = spark.createDataFrame(
-        [(f, _SENTINEL, 0) for f in files], "file_path string, word_index long, word long"
-    )
-
-    out = (
-        words.unionByName(sentinels)
-        .withColumn("num_bits", F.lit(num_bits).cast("long"))
-        .withColumn("num_hashes", F.lit(num_hashes).cast("int"))
-        .withColumn("value_type", F.lit(value_type))
-    )
-
-    staging = f"{ipath}__staging"
-    out.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-
-    idx = spark.read.parquet(ipath)
-    n_words = idx.where(F.col("word_index") != _SENTINEL).count()
-    return {"files": len(files), "words": n_words}
 
 
 def refresh_bloom_index(
@@ -163,69 +229,10 @@ def refresh_bloom_index(
     removed files, keep everything else by name. After a 1 %-of-files
     append, the refresh scans 1 % of the data — at millions of files
     that is the difference between a usable index and a nightly
-    rebuild. Returns ``{"added": n, "removed": m, "total": k}``.
+    rebuild. A missing (or emptied) sidecar is built with the default
+    geometry. Returns ``{"added": n, "removed": m, "total": k}``.
     """
-    quote_identifier(column)
-    from pydala2_spark.plans.fs import list_files, path_exists, qualified, replace_dir
-
-    path = dataset_path.rstrip("/")
-    ipath = index_path or _bloom_sidecar_path(path, column)
-    if not path_exists(spark, ipath):
-        out = build_bloom_index(spark, path, column, index_path=index_path)
-        return {"added": out["files"], "removed": 0, "total": out["files"]}
-
-    old = spark.read.parquet(ipath)
-    first = old.select("num_bits", "num_hashes", "value_type").first()
-    num_bits, num_hashes, value_type = (
-        int(first["num_bits"]),
-        int(first["num_hashes"]),
-        first["value_type"],
-    )
-    indexed = {r["file_path"] for r in old.select("file_path").distinct().collect()}
-    current = {
-        _schemeless(qualified(spark, f)): f
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    }
-    added = sorted(key for key in current if key not in indexed)
-    removed = indexed - set(current)
-
-    parts = [old.filter(~F.col("file_path").isin(list(removed)) if removed else F.lit(True))]
-    if added:
-        values = (
-            spark.read.parquet(*[current[k] for k in added])
-            .select(
-                _input_file_col().alias("file_path"),
-                # xxhash64 is TYPE-sensitive: cast to the sidecar's
-                # stored type so schema drift in appended files (int32
-                # vs the indexed bigint) cannot silently diverge the
-                # hash family from the probe side
-                F.col(column).cast(value_type).alias("__v"),
-            )
-            .where(F.col("__v").isNotNull())
-        )
-        words = (
-            _position_words(values, "__v", num_bits, num_hashes)
-            .groupBy("file_path", "word_index")
-            .agg(F.bit_or("word_bit").alias("word"))
-        )
-        sentinels = spark.createDataFrame(
-            [(k, _SENTINEL, 0) for k in added],
-            "file_path string, word_index long, word long",
-        )
-        parts.append(
-            words.unionByName(sentinels)
-            .withColumn("num_bits", F.lit(num_bits).cast("long"))
-            .withColumn("num_hashes", F.lit(num_hashes).cast("int"))
-            .withColumn("value_type", F.lit(value_type))
-        )
-
-    new_index = parts[0]
-    for p in parts[1:]:
-        new_index = new_index.unionByName(p)
-    staging = f"{ipath}__staging"
-    new_index.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-    return {"added": len(added), "removed": len(removed), "total": len(current)}
+    return sync_sidecar(spark, dataset_path, bloom_plan, column, index_path=index_path)
 
 
 def bloom_prune(
@@ -242,27 +249,25 @@ def bloom_prune(
     newer than the index are kept unseen (conservative).
     """
     quote_identifier(column)  # raises on non-identifier names
-    from pydala2_spark.plans.fs import list_files, path_exists, qualified
-
     path = dataset_path.rstrip("/")
     ipath = index_path or _bloom_sidecar_path(path, column)
     # schemeless form keys all comparisons; originals are what the
     # caller can hand back to spark.read.parquet
-    current = {
-        _schemeless(qualified(spark, f)): f
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    }
-    if not path_exists(spark, ipath):
-        return sorted(current.values())  # no index → no pruning
+    current = listing(spark, path)
     if not values:
-        return []
-
-    idx = spark.read.parquet(ipath)
-    first = idx.select("num_bits", "num_hashes", "value_type").first()
-    num_bits, num_hashes, value_type = first["num_bits"], first["num_hashes"], first["value_type"]
-
-    indexed = {r["file_path"] for r in idx.select("file_path").distinct().collect()}
+        return [] if path_exists(spark, ipath) else sorted(current.values())
+    idx, state = _bloom_state(spark, ipath)
+    if idx is None:
+        return sorted(current.values())  # no index → no pruning
+    indexed = {r["file_path"] for r in state}
     unknown = [orig for key, orig in current.items() if key not in indexed]
+    if not state:  # an emptied sidecar indexes nothing
+        return sorted(unknown)
+    num_bits, num_hashes, value_type = (
+        int(state[0]["num_bits"]),
+        int(state[0]["num_hashes"]),
+        state[0]["value_type"],
+    )
 
     # probe values must hash EXACTLY as the build side did, so they
     # must enter the plan in the column's native type. Direct typed
@@ -285,7 +290,7 @@ def bloom_prune(
     probe = probe_raw.select(
         F.monotonically_increasing_id().alias("value_id"), "__v"
     )
-    probe_words = _position_words(probe, "__v", int(num_bits), int(num_hashes))
+    probe_words = _position_words(probe, "__v", num_bits, num_hashes)
 
     # a file may contain a value iff all k of its bits are set there
     hits = (
@@ -294,7 +299,7 @@ def bloom_prune(
         .where(F.col("word").bitwiseAND(F.col("word_bit")) == F.col("word_bit"))
         .groupBy("file_path", "value_id")
         .agg(F.countDistinct("hash_i").alias("bits_set"))
-        .where(F.col("bits_set") == F.lit(int(num_hashes)))
+        .where(F.col("bits_set") == F.lit(num_hashes))
         .select("file_path")
         .distinct()
     )
@@ -302,6 +307,7 @@ def bloom_prune(
         current[r["file_path"]] for r in hits.collect() if r["file_path"] in current
     ]
     return sorted(set(candidates) | set(unknown))
+
 
 
 def read_bloom_pruned(

@@ -16,12 +16,19 @@ groups natively, so the stats table here serves the two remaining jobs:
    only survivors avoids even opening the losers' footers. That is
    `prune_files` + `read_pruned` below.
 
-Footers are read on the EXECUTORS (``mapPartitions`` over the file
-list), never the driver — at 1M files this is a 1M-task-free, evenly
-distributed metadata scan; the result is small (one row per file) and
-can itself be persisted as a parquet "stats dataset" and refreshed
-incrementally after writes, like the reference's
-``update_file_metadata`` (`pydala/metadata.py:398-439`).
+Footers of a large file list are read on the EXECUTORS
+(``mapPartitions`` over the file list); a write-through append's few
+files are read on the driver. Either way one footer becomes one stats
+row (:func:`_stats_row`), persisted as the ``StatsIndex`` sidecar.
+
+This module also holds the ONE sidecar lifecycle every per-file
+sidecar shares (StatsIndex, bloom, NDV sketches, fused ANALYZE) — the
+reference's ``update_file_metadata`` (`pydala/metadata.py:341-439`):
+list the data files, read the sidecar's stored state in one collect,
+diff added/removed files, derive rows for the added ones, keep the
+stored rows minus the removed ones, and publish through one staged
+swap (:func:`sync_sidecars`, :func:`publish_sidecar`). The NDV sketch
+sidecar's rows and entry points live here too.
 """
 
 from __future__ import annotations
@@ -29,11 +36,23 @@ from __future__ import annotations
 import json
 import os
 import posixpath
-from typing import Iterable
+from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pydala2_spark.frames import materialize
+from pydala2_spark.plans.fs import (
+    input_file_col,
+    list_files,
+    path_exists,
+    qualified,
+    replace_dir,
+    schemeless,
+)
 
 STATS_SCHEMA = T.StructType(
     [
@@ -64,10 +83,21 @@ STATS_SCHEMA = T.StructType(
 )
 
 
+def _partition_base(path: str) -> str:
+    """The dataset root as :func:`_hive_partitions` compares it: the
+    :func:`schemeless` absolute spelling, so ``k=v`` directories ABOVE
+    the root (``.../run=3/ds``) are never partitions, whether the root
+    is spelled plain, ``file:/`` or ``file:///``. String rules only: a
+    scheme Hadoop cannot resolve (a registered pyarrow filesystem)
+    works too."""
+    return os.path.abspath(schemeless(path))
+
+
 def _hive_partitions(base: str, file_path: str) -> dict[str, str]:
-    rel = file_path
-    if rel.startswith(base):
-        rel = rel[len(base) :].lstrip("/")
+    rel = schemeless(file_path)
+    root = base.rstrip("/") + "/"
+    if rel.startswith(root):
+        rel = rel[len(root):]
     out: dict[str, str] = {}
     for seg in posixpath.dirname(rel).split("/"):
         if "=" in seg:
@@ -184,38 +214,64 @@ def _read_footer(path: str, registry: dict | None = None):
     return md, size
 
 
+def _stats_row(path: str, md, size: int, base: str) -> tuple:
+    """The one :data:`STATS_SCHEMA` row of a parquet footer: per-column
+    min/max/null counts folded over its row groups."""
+    col_stats: dict[str, dict] = {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            c = g.column(ci)
+            s = c.statistics
+            if s is None or not s.has_min_max:
+                continue
+            cur = col_stats.setdefault(c.path_in_schema, {"min": None, "max": None, "nulls": 0})
+            if cur["min"] is None or s.min < cur["min"]:
+                cur["min"] = s.min
+            if cur["max"] is None or s.max > cur["max"]:
+                cur["max"] = s.max
+            cur["nulls"] += s.null_count or 0
+    return (
+        path,
+        size,
+        int(md.num_rows),
+        int(md.num_row_groups),
+        _hive_partitions(base, path),
+        {
+            k: (_stat_value(v["min"]), _stat_value(v["max"]), int(v["nulls"]))
+            for k, v in col_stats.items()
+        },
+        md.schema.to_arrow_schema().to_string(),
+    )
+
+
 def _read_footers(base: str, paths: Iterable[str], registry: dict | None = None):
     """Executor-side: read parquet footers only (no data pages)."""
     for p in paths:
-        md, size = _read_footer(p, registry)
-        col_stats: dict[str, dict] = {}
-        arrow_schema = md.schema.to_arrow_schema()
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                name = c.path_in_schema
-                s = c.statistics
-                if s is None or not s.has_min_max:
-                    continue
-                cur = col_stats.setdefault(name, {"min": None, "max": None, "nulls": 0})
-                if cur["min"] is None or s.min < cur["min"]:
-                    cur["min"] = s.min
-                if cur["max"] is None or s.max > cur["max"]:
-                    cur["max"] = s.max
-                cur["nulls"] += s.null_count or 0
-        yield (
-            p,
-            size,
-            int(md.num_rows),
-            int(md.num_row_groups),
-            _hive_partitions(base, p),
-            {
-                k: (_stat_value(v["min"]), _stat_value(v["max"]), int(v["nulls"]))
-                for k, v in col_stats.items()
-            },
-            arrow_schema.to_string(),
-        )
+        yield _stats_row(p, *_read_footer(p, registry), base)
+
+
+def _local_rows(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-built rows as a local relation (through Arrow): reading
+    them runs no Spark job, unlike a parallelized list."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows], to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def footer_stats(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
+    """Stats rows of ``files`` under the dataset at ``path``. Up to 32
+    files (the write-through append) the footers are read on the
+    driver: they are kilobytes, and a distributed scan would cost a
+    parallelize/mapPartitions job round-trip. Above that, the
+    distributed :func:`collect_file_stats`."""
+    if len(files) > 32:
+        return collect_file_stats(spark, path, files=files)
+    rows = list(_read_footers(_partition_base(path), files, dict(_SCHEME_FILESYSTEMS)))
+    return _local_rows(spark, rows, STATS_SCHEMA)
 
 
 def collect_file_stats(
@@ -228,13 +284,11 @@ def collect_file_stats(
     footer scan. One output row per data file. ``files`` restricts the
     scan to an explicit subset (e.g. one snapshot version's manifest)
     instead of the directory listing."""
-    from pydala2_spark.plans.fs import list_files
-
     if files is None:
         files = list_files(spark, path, suffixes=(".parquet",))
     if not files:
         return spark.createDataFrame([], STATS_SCHEMA)
-    base = path if "://" in path else "file:" + os.path.abspath(path.removeprefix("file:"))
+    base = _partition_base(path)
     n = parallelism or min(len(files), spark.sparkContext.defaultParallelism)
     rdd = spark.sparkContext.parallelize(files, n).mapPartitions(
         # registry captured BY VALUE: executors re-import this module
@@ -287,18 +341,145 @@ def prune_files(
     return [r["file_path"] for r in s.filter(keep | cond).select("file_path").collect()]
 
 
+# -- the sidecar lifecycle ---------------------------------------------------
+
+#: the shared scan's file column: the listing's schemeless spelling
+_FILE = "__file"
+
+
+@dataclass
+class SidecarPlan:
+    """One sidecar's sync, decided from its stored state before any
+    data is read: which stored rows stay, which files get new rows,
+    and which data columns those rows derive from."""
+
+    path: str  # the sidecar directory
+    added: list[str]  # files whose rows are derived now
+    removed: set[str]  # files whose stored rows are dropped
+    kept: DataFrame | None  # stored rows of the files still listed
+    derive: Callable  # scan_for -> the added files' rows (or None)
+    empty: T.StructType | str  # schema of a sidecar holding no rows
+    result: Callable = lambda counts: counts  # sync counts -> caller's dict
+    reads: dict[str, list[str]] = field(default_factory=dict)  # column -> files
+    metrics: dict = field(default_factory=dict)  # observed in the publish
+    one_file: bool = False
+
+
+def listing(spark: SparkSession, path: str) -> dict[str, str]:
+    """Every data file of the dataset: :func:`schemeless` key (how the
+    bloom/NDV sidecars store file ids, and what ``input_file_col``
+    yields) -> listing path. The listing is already qualified, so no
+    file costs a JVM call of its own."""
+    return {schemeless(f): f for f in list_files(spark, path, suffixes=(".parquet",))}
+
+
+def read_state(
+    spark: SparkSession, ipath: str, cols: list[str], where=None, distinct=False, schema=None
+):
+    """A sidecar's stored rows and its state — ``cols`` of the rows
+    matching ``where`` — in ONE collect; ``(None, [])`` when absent."""
+    if not path_exists(spark, ipath):
+        return None, []
+    old = (spark.read if schema is None else spark.read.schema(schema)).parquet(ipath)
+    state = (old if where is None else old.where(where)).select(*cols)
+    return old, (state.distinct() if distinct else state).collect()
+
+
+def diff_files(keys: Iterable[str], indexed: set[str], old: DataFrame | None):
+    """``(added, removed, kept)``: listed keys the sidecar holds no rows
+    for, stored keys no longer listed, and the stored rows minus the
+    removed keys' rows (None when nothing is indexed)."""
+    keys = set(keys)
+    removed = indexed - keys
+    kept = old if indexed else None
+    if kept is not None and removed:
+        kept = old.filter(~F.col("file_path").isin(sorted(removed)))
+    return sorted(keys - indexed), removed, kept
+
+
+def publish_sidecar(
+    spark: SparkSession, rows: DataFrame, ipath: str, one_file=False, metrics: dict | None = None
+) -> dict:
+    """The one staged publish of every sidecar: write ``rows`` beside
+    the live directory, then swap it in (``replace_dir`` — a reader
+    never sees a half-written sidecar). ``metrics`` (name -> aggregate)
+    are observed in the write job itself. ``one_file`` writes through
+    repartition(1), NOT coalesce(1): coalescing would pull the whole
+    upstream plan into one task (measured 4.2 s vs 0.5 s through the
+    shuffle on a 4-row index, r9); the shuffle moves kilobytes."""
+    obs = Observation() if metrics else None
+    if obs is not None:
+        rows = rows.observe(obs, *[agg.alias(name) for name, agg in metrics.items()])
+    staging = f"{ipath}__staging"
+    (rows.repartition(1) if one_file else rows).write.mode("overwrite").parquet(staging)
+    replace_dir(spark, staging, ipath)
+    return obs.get if obs is not None else {}
+
+
+def sync_sidecars(
+    spark: SparkSession, path: str, current: dict[str, str], plans: dict[str, SidecarPlan]
+) -> dict[str, dict]:
+    """Publish every planned sidecar: its kept rows plus the rows
+    derived for its added files. All derivations read ONE scan of the
+    files any plan needs — the directory when that is every file (an
+    explicit list of 10⁶ paths is a plan-size hazard) — materialized
+    only when two or more column branches read it (the frames.py
+    rule). ``current`` is :func:`listing`. Returns each plan's result
+    by name."""
+    needed = sorted({k for p in plans.values() for keys in p.reads.values() for k in keys})
+    branches = [c for p in plans.values() for c in p.reads]
+    scan = None
+    if needed:
+        if len(needed) == len(current):
+            src = spark.read.parquet(path)
+        else:
+            # basePath keeps hive partition columns addressable even
+            # though the read is an explicit subset
+            src = spark.read.option("basePath", path).parquet(*[current[k] for k in needed])
+        cols = [F.col(c) for c in dict.fromkeys(branches)]
+        scan = src.select(input_file_col().alias(_FILE), *cols)
+        if len(branches) > 1:
+            scan = materialize(scan)
+
+    def scan_for(keys: list[str]) -> DataFrame:
+        # a branch reading the WHOLE scan skips the membership filter:
+        # an isin() over 10⁶ literals is itself a plan-size hazard
+        return scan if len(keys) == len(needed) else scan.filter(F.col(_FILE).isin(keys))
+
+    out = {}
+    for name, p in plans.items():
+        counts = {"added": len(p.added), "removed": len(p.removed), "total": len(current)}
+        if p.kept is not None and not (p.added or p.removed or p.reads):
+            out[name] = p.result(counts)  # in sync: the stored sidecar stands
+            continue
+        parts = [f for f in (p.kept, p.derive(scan_for)) if f is not None]
+        rows = reduce(DataFrame.unionByName, parts) if parts else spark.createDataFrame([], p.empty)
+        seen = publish_sidecar(spark, rows, p.path, p.one_file, p.metrics)
+        out[name] = p.result({**counts, **seen})
+    return out
+
+
+def sync_sidecar(spark: SparkSession, dataset_path: str, plan: Callable, *args, **kw) -> dict:
+    """One sidecar through :func:`sync_sidecars`, planned by
+    ``plan(spark, path, current, *args, **kw)``."""
+    path = dataset_path.rstrip("/")
+    current = listing(spark, path)
+    return sync_sidecars(spark, path, current, {"": plan(spark, path, current, *args, **kw)})[""]
+
+
 class StatsIndex:
-    """Persistent, incrementally-refreshed stats table — the Spark
-    rebirth of the reference's metadata-sidecar lifecycle
-    (`pydala/metadata.py:105-145, 341-439`: collect footers in
-    parallel, diff new/removed files, append or rebuild).
+    """Persistent, incrementally-refreshed stats table — the min/max
+    sidecar of the lifecycle above (`pydala/metadata.py:105-145,
+    341-439`: collect footers, diff new/removed files, append or
+    rebuild).
 
     The index lives as parquet under ``<dataset>/_stats_index`` (the
     leading underscore hides it from Spark's file listing, exactly like
     the reference's ``_metadata`` sidecar convention). ``refresh()``
     footer-scans ONLY files added since the last refresh — at 100 TB
     with millions of files, a refresh after an append touches just the
-    appended files' footers, distributed across executors.
+    appended files' footers. Rows store the listing spelling of each
+    file, which readers hand straight to ``spark.read``.
     """
 
     def __init__(self, spark: SparkSession, dataset_path: str, index_path: str | None = None):
@@ -307,8 +488,6 @@ class StatsIndex:
         self.index_path = index_path or f"{self.dataset_path}/_stats_index"
 
     def exists(self) -> bool:
-        from pydala2_spark.plans.fs import list_files, path_exists
-
         return path_exists(self.spark, self.index_path) and bool(
             list_files(self.spark, self.index_path)
         )
@@ -318,58 +497,24 @@ class StatsIndex:
             self.refresh()
         return self.spark.read.schema(STATS_SCHEMA).parquet(self.index_path)
 
+    def plan(self, current: dict[str, str]) -> SidecarPlan:
+        """This index's :class:`SidecarPlan` against ``current``
+        (:func:`listing`): footers of the added files only."""
+        old, state = read_state(self.spark, self.index_path, ["file_path"], schema=STATS_SCHEMA)
+        added, removed, kept = diff_files(current.values(), {r["file_path"] for r in state}, old)
+
+        def derive(_scan_for):
+            return footer_stats(self.spark, self.dataset_path, added) if added else None
+
+        return SidecarPlan(
+            self.index_path, added, removed, kept, derive, STATS_SCHEMA, one_file=True
+        )
+
     def refresh(self) -> dict:
         """Bring the index in sync with the physical file list.
         Returns ``{"added": n, "removed": m, "total": k}``; only the
         added files' footers are read."""
-        from pydala2_spark.plans.fs import list_files, replace_dir
-
-        current = set(list_files(self.spark, self.dataset_path, suffixes=(".parquet",)))
-        if self.exists():
-            old = self.spark.read.schema(STATS_SCHEMA).parquet(self.index_path)
-            indexed = {r["file_path"] for r in old.select("file_path").collect()}
-        else:
-            old, indexed = None, set()
-
-        added = sorted(current - indexed)
-        removed = indexed - current
-
-        base = (
-            self.dataset_path
-            if "://" in self.dataset_path
-            else "file:" + os.path.abspath(self.dataset_path.removeprefix("file:"))
-        )
-        parts = []
-        if old is not None and (indexed - removed):
-            parts.append(old.filter(~F.col("file_path").isin(list(removed)) if removed else F.lit(True)))
-        if added:
-            if len(added) <= 32:
-                # small append (the write-through common case): footers
-                # are kilobytes — reading them on the driver skips a
-                # whole parallelize/mapPartitions job round-trip
-                rows = list(_read_footers(base, added, dict(_SCHEME_FILESYSTEMS)))
-                parts.append(self.spark.createDataFrame(rows, STATS_SCHEMA))
-            else:
-                n = min(len(added), self.spark.sparkContext.defaultParallelism)
-                rdd = self.spark.sparkContext.parallelize(added, n).mapPartitions(
-                    lambda it, b=base, reg=dict(_SCHEME_FILESYSTEMS): _read_footers(
-                        b, it, reg
-                    )
-                )
-                parts.append(self.spark.createDataFrame(rdd, STATS_SCHEMA))
-        new_index = parts[0] if parts else self.spark.createDataFrame([], STATS_SCHEMA)
-        for p in parts[1:]:
-            new_index = new_index.unionByName(p)
-
-        staging = f"{self.index_path}__staging"
-        # repartition(1), NOT coalesce(1): coalescing a plan whose leaves
-        # include driver-local rows makes ONE task iterate every
-        # pickled slice through the Python gateway — measured 4.2 s for
-        # a 4-row index vs 0.5 s through the shuffle (r9); the shuffle
-        # moves kilobytes here
-        new_index.repartition(1).write.mode("overwrite").parquet(staging)
-        replace_dir(self.spark, staging, self.index_path)
-        return {"added": len(added), "removed": len(removed), "total": len(current)}
+        return sync_sidecar(self.spark, self.dataset_path, lambda _s, _p, cur: self.plan(cur))
 
     def prune(self, column: str, lo=None, hi=None) -> list[str]:
         """Index-side survivors only — files the INDEX cannot rule
@@ -386,8 +531,6 @@ class StatsIndex:
         silently skipped — the same unknown ⇒ keep rule prune_files
         applies to missing column stats, applied at the file level.
         Rows outside [lo, hi] still need the caller's row filter."""
-        from pydala2_spark.plans.fs import list_files
-
         files = set(self.prune(column, lo, hi))
         indexed = {
             r["file_path"] for r in self.stats().select("file_path").collect()
@@ -431,8 +574,6 @@ def import_legacy_file_metadata(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pydala2_spark.plans.fs import path_exists, qualified, replace_dir
-
     dataset_path = dataset_path.rstrip("/")
     sidecar = f"{dataset_path}/_file_metadata"
     if not path_exists(spark, sidecar):
@@ -465,7 +606,9 @@ def import_legacy_file_metadata(
             p: m for p, m in pickle.loads(raw).items()
         }  # {path: pq.FileMetaData}
 
-    base = qualified(spark, dataset_path)
+    from pyarrow import fs as _pafs
+
+    base = _partition_base(dataset_path)
     rows, missing = [], 0
     for rel, entry in data.items():
         if isinstance(entry, dict):
@@ -477,49 +620,14 @@ def import_legacy_file_metadata(
         fpath = rel if "://" in rel or rel.startswith("/") else f"{dataset_path}/{rel}"
         qpath = qualified(spark, fpath)
         dfs, dinner = _pa_fs(qpath)
-        from pyarrow import fs as _pafs
-
         finfo = dfs.get_file_info(dinner)
         if finfo.type == _pafs.FileType.NotFound:
             missing += 1
             continue
-        col_stats: dict[str, dict] = {}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                s = c.statistics
-                if s is None or not s.has_min_max:
-                    continue
-                cur = col_stats.setdefault(
-                    c.path_in_schema, {"min": None, "max": None, "nulls": 0}
-                )
-                if cur["min"] is None or s.min < cur["min"]:
-                    cur["min"] = s.min
-                if cur["max"] is None or s.max > cur["max"]:
-                    cur["max"] = s.max
-                cur["nulls"] += s.null_count or 0
-        rows.append(
-            (
-                qpath,
-                int(finfo.size),
-                int(md.num_rows),
-                int(md.num_row_groups),
-                _hive_partitions(base, qpath),
-                {
-                    k: (_stat_value(v["min"]), _stat_value(v["max"]), int(v["nulls"]))
-                    for k, v in col_stats.items()
-                },
-                md.schema.to_arrow_schema().to_string(),
-            )
-        )
+        rows.append(_stats_row(qpath, md, int(finfo.size), base))
 
     idx = StatsIndex(spark, dataset_path, index_path)
-    staging = f"{idx.index_path}__staging"
-    spark.createDataFrame(rows, STATS_SCHEMA).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(staging)  # repartition not coalesce: see StatsIndex.refresh
-    replace_dir(spark, staging, idx.index_path)
+    publish_sidecar(spark, _local_rows(spark, rows, STATS_SCHEMA), idx.index_path, one_file=True)
     return {"imported": len(rows), "missing": missing}
 
 
@@ -555,8 +663,6 @@ def export_legacy_file_metadata(
     ``max_files`` explicitly to accept the memory bill.
     Returns ``{"files": n, "bytes": sidecar_size, "compressed": bool}``.
     """
-    from pydala2_spark.plans.fs import list_files, qualified, schemeless
-
     path = dataset_path.rstrip("/")
     files = list_files(spark, path, suffixes=(".parquet",))
     if len(files) > max_files:
@@ -603,7 +709,7 @@ def export_legacy_file_metadata(
             ),
         ).orderBy("path")
         for p, b64, num_rows, num_cols, created_by, fmt in blob_df.toLocalIterator():
-            rel = schemeless(qualified(spark, p))
+            rel = schemeless(p)
             # boundary-safe strip: '/data/ds' must not match '/data/ds2/x'
             if rel.startswith(base.rstrip("/") + "/"):
                 rel = rel[len(base.rstrip("/")) + 1:]
@@ -661,6 +767,94 @@ def read_pruned(
 # -- mergeable NDV sketches -------------------------------------------------
 
 
+# column "" marks a file's membership
+NDV_SCHEMA = "file_path string, column string, sketch binary, lg_k int"
+
+_KEY_SCHEMA = T.StructType([T.StructField("file_path", T.StringType())])
+
+
+def key_rows(spark: SparkSession, keys: list[str]) -> DataFrame:
+    """One ``file_path`` row per key, as a local relation: the
+    per-file membership rows (bloom sentinels, NDV markers) cost no
+    job of their own."""
+    return _local_rows(spark, [(k,) for k in keys], _KEY_SCHEMA)
+
+
+def ndv_sidecar_path(dataset_path: str) -> str:
+    return f"{dataset_path.rstrip('/')}/_ndv_sketches"
+
+
+def _sketch_rows(scan: DataFrame, column: str, lg_k: int) -> DataFrame:
+    """The NDV rows: one HLL sketch of ``column`` per file."""
+    return (
+        scan.select(F.col(_FILE).alias("file_path"), F.col(column).alias("__v"))
+        .groupBy("file_path")
+        .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
+        .select("file_path", F.lit(column).alias("column"), "sketch", F.lit(lg_k).alias("lg_k"))
+    )
+
+
+def ndv_plan(
+    spark: SparkSession,
+    path: str,
+    current: dict[str, str],
+    columns: list[str],
+    lg_k: int,
+    index_path: str | None = None,
+    rebuild: bool = False,
+    require: bool = False,
+) -> SidecarPlan:
+    """The NDV sidecar's plan: with stored state, sketch the tracked
+    columns for the added files and a requested column the sidecar
+    does not track yet for EVERY listed file (else it would estimate
+    zero forever); without (or on ``rebuild``), sketch ``columns`` over
+    every file at ``lg_k``. ``require`` raises on a missing or empty
+    sidecar instead. Every added file gets a marker row (column ""): a
+    zero-row file emits no sketch, and without a membership record
+    ``estimate_ndv``'s staleness guard would flag it forever."""
+    from pydala2_spark.functions.safety import quote_identifier
+
+    for c in columns:
+        quote_identifier(c)
+    ipath = index_path or ndv_sidecar_path(path)
+    cols = ["file_path", "column", "lg_k"]
+    old, state = (None, []) if rebuild else read_state(spark, ipath, cols, distinct=True)
+    if require and not state:
+        raise ValueError(
+            f"no NDV sidecar at {ipath!r}; run build_ndv_sketches(spark, path, "
+            f"columns=[...]) first (a refresh cannot know which columns to sketch)"
+            if old is None
+            else f"NDV sidecar at {ipath!r} is empty; re-run build_ndv_sketches"
+        )
+    lg_k = int(state[0]["lg_k"]) if state else lg_k
+    tracked = list(dict.fromkeys(r["column"] for r in state if r["column"]))
+    new_columns = [c for c in columns if c not in tracked]
+    added, removed, kept = diff_files(current, {r["file_path"] for r in state}, old)
+    reads = {c: added for c in tracked if added}
+    reads.update({c: sorted(current) for c in new_columns if current})
+
+    def derive(scan_for):
+        parts = [_sketch_rows(scan_for(keys), c, lg_k) for c, keys in reads.items()]
+        if added:
+            parts.append(
+                key_rows(spark, added).select(
+                    "file_path",
+                    F.lit("").alias("column"),
+                    F.lit(None).cast("binary").alias("sketch"),
+                    F.lit(lg_k).alias("lg_k"),
+                )
+            )
+        return reduce(DataFrame.unionByName, parts) if parts else None
+
+    plan = SidecarPlan(ipath, added, removed, kept, derive, NDV_SCHEMA, reads=reads)
+    if state:
+        plan.result = lambda r: {**r, "new_columns": new_columns}
+    else:  # a build reports its sketch rows, files and columns
+        plan.metrics = {"rows": F.count(F.when(F.col("column") != "", 1))}
+        plan.result = lambda r: {"rows": r["rows"], "files": r["total"], "columns": list(columns)}
+    return plan
+
+
 def build_ndv_sketches(
     spark: SparkSession,
     dataset_path: str,
@@ -677,50 +871,9 @@ def build_ndv_sketches(
     sidecar (``StatsIndex``) answers range questions; this answers
     cardinality questions (compaction sizing, dictionary-encoding
     decisions, join-side estimation) at the same metadata scale.
+    Returns ``{"rows": sketches, "files": n, "columns": columns}``.
     """
-    from pydala2_spark.functions.safety import quote_identifier
-    from pydala2_spark.plans.fs import replace_dir
-
-    for c in columns:
-        quote_identifier(c)
-    path = dataset_path.rstrip("/")
-    ipath = index_path or ndv_sidecar_path(path)
-
-    df = spark.read.parquet(path)
-    from pydala2_spark.plans.fs import input_file_col
-
-    fp = input_file_col()
-    parts = None
-    for c in columns:
-        p = (
-            df.select(fp.alias("file_path"), F.col(c).alias("__v"))
-            .groupBy("file_path")
-            .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
-            .select("file_path", F.lit(c).alias("column"), "sketch")
-        )
-        parts = p if parts is None else parts.unionByName(p)
-    # marker row (column="") per PHYSICAL file: a zero-row file emits
-    # no group above, and without a membership record the staleness
-    # guard in estimate_ndv would flag it forever
-    from pydala2_spark.plans.fs import list_files as _lf
-    from pydala2_spark.plans.fs import qualified as _q
-    from pydala2_spark.plans.fs import schemeless as _sl
-
-    phys = [_sl(_q(spark, f)) for f in _lf(spark, path, suffixes=(".parquet",))]
-    markers = spark.createDataFrame(
-        [(f, "") for f in phys], "file_path string, column string"
-    ).withColumn("sketch", F.lit(None).cast("binary"))
-    out = parts.unionByName(markers).withColumn("lg_k", F.lit(lg_k))
-
-    staging = f"{ipath}__staging"
-    out.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-    n = spark.read.parquet(ipath).filter(F.col("column") != "").count()
-    return {"rows": n, "files": len(phys), "columns": list(columns)}
-
-
-def ndv_sidecar_path(dataset_path: str) -> str:
-    return f"{dataset_path.rstrip('/')}/_ndv_sketches"
+    return sync_sidecar(spark, dataset_path, ndv_plan, columns, lg_k, index_path, rebuild=True)
 
 
 def refresh_ndv_sketches(
@@ -736,98 +889,9 @@ def refresh_ndv_sketches(
 
     ``columns`` EXTENDS the tracked set: a requested column the sidecar
     doesn't hold yet is sketched over ALL current files (one extra
-    full-column scan, once) — without this, asking for a new column
-    would silently yield estimates of zero forever.
+    full-column scan, once). Raises on a missing or empty sidecar.
     Returns ``{"added": n, "removed": m, "total": k, "new_columns": c}``."""
-    from pydala2_spark.plans.fs import (
-        input_file_col,
-        list_files,
-        qualified,
-        replace_dir,
-        schemeless,
-    )
-
-    from pydala2_spark.plans.fs import path_exists
-
-    path = dataset_path.rstrip("/")
-    ipath = index_path or ndv_sidecar_path(path)
-    if not path_exists(spark, ipath):
-        raise ValueError(
-            f"no NDV sidecar at {ipath!r}; run build_ndv_sketches(spark, "
-            f"path, columns=[...]) first (a refresh cannot know which "
-            f"columns to sketch)"
-        )
-    old = spark.read.parquet(ipath)
-    first = old.select("lg_k").first()
-    if first is None:
-        raise ValueError(
-            f"NDV sidecar at {ipath!r} is empty; re-run build_ndv_sketches"
-        )
-    lg_k = int(first["lg_k"])
-    tracked = [
-        r["column"] for r in old.select("column").distinct().collect() if r["column"]
-    ]
-    new_columns = [c for c in (columns or []) if c not in tracked]
-    indexed = {r["file_path"] for r in old.select("file_path").distinct().collect()}
-    current = {
-        schemeless(qualified(spark, f)): f
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    }
-    added = sorted(k for k in current if k not in indexed)
-    removed = indexed - set(current)
-
-    parts = [old.filter(~F.col("file_path").isin(list(removed)) if removed else F.lit(True))]
-    if new_columns and current:
-        # new columns need sketches for EVERY current file, not just
-        # the appended ones
-        all_df = spark.read.parquet(*current.values())
-        fp_all = input_file_col()
-        for c in new_columns:
-            parts.append(
-                all_df.select(fp_all.alias("file_path"), F.col(c).alias("__v"))
-                .groupBy("file_path")
-                .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
-                .select(
-                    "file_path",
-                    F.lit(c).alias("column"),
-                    "sketch",
-                    F.lit(lg_k).alias("lg_k"),
-                )
-            )
-    if added:
-        df = spark.read.parquet(*[current[k] for k in added])
-        fp = input_file_col()
-        for c in tracked:
-            parts.append(
-                df.select(fp.alias("file_path"), F.col(c).alias("__v"))
-                .groupBy("file_path")
-                .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
-                .select(
-                    "file_path",
-                    F.lit(c).alias("column"),
-                    "sketch",
-                    F.lit(lg_k).alias("lg_k"),
-                )
-            )
-        parts.append(
-            spark.createDataFrame(
-                [(k, "") for k in added], "file_path string, column string"
-            )
-            .withColumn("sketch", F.lit(None).cast("binary"))
-            .withColumn("lg_k", F.lit(lg_k))
-        )
-    new_index = parts[0]
-    for p in parts[1:]:
-        new_index = new_index.unionByName(p)
-    staging = f"{ipath}__staging"
-    new_index.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-    return {
-        "added": len(added),
-        "removed": len(removed),
-        "total": len(current),
-        "new_columns": new_columns,
-    }
+    return sync_sidecar(spark, dataset_path, ndv_plan, columns or [], 12, index_path, require=True)
 
 
 def estimate_ndv(
@@ -849,24 +913,26 @@ def estimate_ndv(
     conservatively (unknown ⇒ keep), but there is no conservative
     cardinality, so the only honest answers are "rebuild the sketches"
     or an explicit opt-in to a lower bound."""
-    from pydala2_spark.plans.fs import list_files, qualified, schemeless
-
     path = dataset_path.rstrip("/")
     ipath = index_path or ndv_sidecar_path(path)
     raw = spark.read.parquet(ipath)
     sk = raw.filter(F.col("column") == column)
     if files is None:
-        files = [qualified(spark, f) for f in list_files(spark, path, suffixes=(".parquet",))]
+        files = list_files(spark, path, suffixes=(".parquet",))
     wanted = [schemeless(f) for f in files]
     need_filter = True
     if not missing_ok:
-        # membership comes from the marker rows (column="") so zero-row
-        # files count as sketched; older sidecars without markers fall
-        # back to the per-column rows
-        members = raw.filter(F.col("column") == "")
-        if members.isEmpty():
-            members = sk
-        sketched = {r["file_path"] for r in members.select("file_path").distinct().collect()}
+        # one collect: membership comes from the marker rows (column="")
+        # so zero-row files count as sketched — sidecars without markers
+        # fall back to the per-column rows
+        state = (
+            raw.filter(F.col("column").isin("", column))
+            .select("file_path", "column")
+            .distinct()
+            .collect()
+        )
+        sk_files = {r["file_path"] for r in state if r["column"] == column}
+        sketched = {r["file_path"] for r in state if r["column"] == ""} or sk_files
         missing = [f for f in wanted if f not in sketched]
         if missing:
             raise ValueError(
@@ -876,15 +942,10 @@ def estimate_ndv(
             )
         # sidecar holds exactly the wanted set → the membership filter
         # is a no-op; skip it (an isin over 10⁶ literal paths is a
-        # plan-size hazard at scale). The check runs on BOTH the marker
-        # membership AND the per-column sketch rows: a directory-read
-        # build can sketch a stray non-.parquet-suffixed file that the
-        # marker list (from the suffixed listing) never covers, and an
-        # unfiltered union would silently inflate the estimate with it.
-        # Kept (filtered) whenever either set differs from wanted.
-        sk_files = {
-            r["file_path"] for r in sk.select("file_path").distinct().collect()
-        }
+        # plan-size hazard at scale). Both the markers AND the sketch
+        # rows must match: a directory-read build can sketch a stray
+        # non-.parquet-suffixed file the marker list never covers, and
+        # an unfiltered union would silently inflate the estimate.
         need_filter = sketched != set(wanted) or not sk_files <= set(wanted)
     if need_filter:
         sk = sk.filter(F.col("file_path").isin(wanted))

@@ -360,3 +360,86 @@ def test_sidecars_key_every_file_under_escaped_partition_dirs(spark, tmp_ds_path
     probe_hits_every_file()
     assert estimate_ndv(spark, tmp_ds_path, "id") == 80
     assert StatsIndex(spark, tmp_ds_path).read_pruned("id", 0, 79).count() == 80
+
+
+# Job counts of the sidecar paths before they shared one lifecycle,
+# measured on this test's layout (40-row single-file appends, each
+# dataset read once first) on a 4-core machine. Ceilings, not targets.
+PARENT_JOBS = {
+    "stats_refresh_first": 2,
+    "stats_refresh_append": 3,
+    "build_bloom_index": 6,
+    "build_ndv_sketches": 6,
+    "refresh_bloom_index": 7,
+    "refresh_ndv_sketches": 9,
+    "bloom_prune": 9,
+    "analyze_dataset": 18,
+}
+
+
+def test_sidecar_job_ceilings(spark, tmp_path):
+    """No sidecar path issues more Spark jobs than it did when each
+    sidecar carried its own copy of the lifecycle."""
+    from conftest import spark_jobs
+
+    def fresh(name, n):
+        p = str(tmp_path / name)
+        _write_batches(spark, p, n)
+        spark.read.parquet(p).count()
+        return p
+
+    def jobs(fn):
+        return spark_jobs(spark, fn)[1]
+
+    seen = {}
+    p = fresh("stats", 3)
+    seen["stats_refresh_first"] = jobs(lambda: StatsIndex(spark, p).refresh())
+    _write_batches(spark, p, 1)
+    seen["stats_refresh_append"] = jobs(lambda: StatsIndex(spark, p).refresh())
+
+    from pydala2_spark.plans.bloom import build_bloom_index
+
+    p = fresh("side", 3)
+    seen["build_bloom_index"] = jobs(lambda: build_bloom_index(spark, p, "id"))
+    seen["build_ndv_sketches"] = jobs(lambda: build_ndv_sketches(spark, p, ["id"]))
+    _write_batches(spark, p, 1)
+    seen["refresh_bloom_index"] = jobs(lambda: refresh_bloom_index(spark, p, "id"))
+    seen["refresh_ndv_sketches"] = jobs(lambda: refresh_ndv_sketches(spark, p))
+    _write_batches(spark, p, 1)
+    build_bloom_index(spark, p, "id")
+    seen["bloom_prune"] = jobs(lambda: bloom_prune(spark, p, "id", [7]))
+
+    p = fresh("analyze", 3)
+    analyze_dataset(spark, p, bloom_columns=["id"], ndv_columns=["id"])
+    _write_batches(spark, p, 1)
+    seen["analyze_dataset"] = jobs(
+        lambda: analyze_dataset(spark, p, bloom_columns=["id"], ndv_columns=["id"])
+    )
+    over = {k: (n, PARENT_JOBS[k]) for k, n in seen.items() if n > PARENT_JOBS[k]}
+    assert not over, f"(jobs, ceiling) over the ceiling: {over}; all: {seen}"
+
+
+def test_single_sidecar_calls_never_materialize(spark, tmp_ds_path, monkeypatch):
+    """One bloom column is one branch of the shared scan: nothing reads
+    it twice, so no single-sidecar call checkpoints it. Two branches
+    (the fused analyze of two columns) do."""
+    from pydala2_spark import frames
+    from pydala2_spark.plans import stats
+    from pydala2_spark.plans.bloom import build_bloom_index
+
+    calls = []
+
+    def spy(df, label=None):
+        calls.append(label)
+        return df
+
+    monkeypatch.setattr(frames, "materialize", spy)
+    monkeypatch.setattr(stats, "materialize", spy)
+    _write_batches(spark, tmp_ds_path, 2)
+    build_bloom_index(spark, tmp_ds_path, "id")
+    _write_batches(spark, tmp_ds_path, 1)
+    assert refresh_bloom_index(spark, tmp_ds_path, "id")["added"] == 1
+    assert refresh_bloom_index(spark, tmp_ds_path, "name")["added"] == 3  # missing → built
+    assert calls == []
+    analyze_dataset(spark, tmp_ds_path, bloom_columns=["timestamp"], ndv_columns=["id"])
+    assert len(calls) == 1

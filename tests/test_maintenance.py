@@ -189,6 +189,37 @@ def test_stats_index_on_uri_path(spark, tmp_ds_path):
     assert df.filter((F.col("id") >= 60) & (F.col("id") <= 70)).count() == 11
 
 
+def test_stats_partition_base_ignores_kv_dirs_above_the_root(spark, tmp_path):
+    """A ``k=v`` directory ABOVE the dataset root is not a partition,
+    however the root is spelled: the footer scan, the StatsIndex
+    refresh and the compaction plan agree for the plain, ``file:/``
+    and ``file:///`` spellings: no row reads ``{"run": "3"}`` and the
+    flat dataset's group is ``<root>``, not ``run=3``."""
+    import shutil
+
+    from pydala2_spark.operators.maintenance import plan_compact_partitions
+    from pydala2_spark.plans.stats import StatsIndex
+
+    flat = str(tmp_path / "run=3" / "ds")
+    parted = str(tmp_path / "run=3" / "pds")
+    _write_fragmented(spark, flat, n_batches=2, rows=10)
+    _write_fragmented(spark, parted, n_batches=2, rows=10, partition_by=["part"])
+    for spelled in (lambda p: p, lambda p: f"file:{p}", lambda p: f"file://{p}"):
+        for root, want in ((flat, [{}]), (parted, [{"part": "p0"}, {"part": "p1"}])):
+            path = spelled(root)
+            got = [r["partitions"] for r in collect_file_stats(spark, path).collect()]
+            assert sorted(got, key=str) == sorted(want * 2, key=str), (path, got)
+            shutil.rmtree(f"{root}/_stats_index", ignore_errors=True)
+            StatsIndex(spark, path).refresh()
+            got = [r["partitions"] for r in StatsIndex(spark, path).stats().collect()]
+            assert sorted(got, key=str) == sorted(want * 2, key=str), (path, got)
+        assert set(plan_compact_partitions(spark, spelled(flat)).groups) == {"<root>"}
+        assert set(plan_compact_partitions(spark, spelled(parted)).groups) == {
+            "part=p0",
+            "part=p1",
+        }
+
+
 def test_compaction_execution_never_materializes_groups(spark, tmp_ds_path, monkeypatch):
     """The executing fast paths must consume the plan as DataFrames
     (flat file list, one-row aggregates, pairs_df join side) — the

@@ -300,6 +300,31 @@ def test_one_materialization_primitive():
     assert not hits, "\n".join(hits)
 
 
+def test_one_sidecar_publish():
+    """Every sidecar reaches storage through one staged publish,
+    ``plans/stats.publish_sidecar``: no other code under ``plans/``
+    spells the staging directory."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydala2_spark" / "plans"
+    tree = ast.parse((root / "stats.py").read_text())
+    (helper,) = [
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "publish_sidecar"
+    ]
+    inside, outside = [], []
+    for path in sorted(root.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "__staging" not in line:
+                continue
+            if path.name == "stats.py" and helper.lineno <= i <= helper.end_lineno:
+                inside.append(i)
+            else:
+                outside.append(f"{path.name}:{i}: {line.strip()}")
+    assert inside, "publish_sidecar no longer stages"
+    assert not outside, "\n".join(outside)
+
+
 def test_dau_wau_mau_denies_nested_loop(spark, sf_dir):
     """dau_wau_mau's trailing windows are explode(sequence(0, w-1))
     equi-joins over the user-day grain — NOT range joins. The r11
