@@ -26,7 +26,6 @@ its own stored files and reads only the files it needs.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from pydala2_spark.plans.bloom import bloom_plan, check_geometry
 from pydala2_spark.plans.stats import StatsIndex, listing, ndv_plan, sync_sidecars
@@ -62,34 +61,17 @@ def analyze_dataset(
 
 
 def existing_sidecar_columns(spark: SparkSession, dataset_path: str) -> dict:
-    """Discover which skipping sidecars the layout already carries —
-    ``{"bloom": [cols], "ndv": [cols]}`` — from metadata only (one
-    directory listing for bloom, one sidecar-parquet column scan for
-    NDV; neither touches data files). The write-through refresh uses
-    this so a plain ``update_metadata=True`` maintains exactly the
-    sidecars an operator previously opted into, no more."""
+    """The bloom sidecars the layout already carries — ``{"bloom":
+    [cols]}`` — from one directory listing (no Spark job)."""
     from pydala2_spark.plans.fs import _fs_and_path, path_exists
-    from pydala2_spark.plans.stats import ndv_sidecar_path
 
-    path = dataset_path.rstrip("/")
-    out: dict = {"bloom": [], "ndv": []}
-    broot = f"{path}/_bloom_index"
+    out: dict = {"bloom": []}
+    broot = f"{dataset_path.rstrip('/')}/_bloom_index"
     if path_exists(spark, broot):
         fs, hpath, _ = _fs_and_path(spark, broot)
-        for st in fs.listStatus(hpath):
-            if st.isDirectory():
-                out["bloom"].append(st.getPath().getName())
-        out["bloom"].sort()
-    npath = ndv_sidecar_path(path)
-    if path_exists(spark, npath):
-        rows = (
-            spark.read.parquet(npath)
-            .select("column")
-            .filter(F.col("column") != "")
-            .distinct()
-            .collect()
+        out["bloom"] = sorted(
+            st.getPath().getName() for st in fs.listStatus(hpath) if st.isDirectory()
         )
-        out["ndv"] = sorted(r["column"] for r in rows)
     return out
 
 
@@ -100,15 +82,18 @@ def refresh_metadata(spark: SparkSession, dataset_path: str) -> dict:
     rebuild). Here: the min/max StatsIndex always refreshes, and every
     bloom / NDV sidecar that already exists on the layout refreshes
     incrementally — new files' data is read ONCE, shared across all
-    sidecars, via :func:`analyze_dataset`. Sidecars the caller never
-    built are not invented (building one is an explicit opt-in with
-    geometry choices); use ``Catalog.analyze`` / ``analyze_dataset``
-    to add one.
+    sidecars (``sync_sidecars``); NDV refreshes the columns its own
+    state read finds. Sidecars the caller never built are not invented
+    (building one is an explicit opt-in with geometry choices); use
+    ``Catalog.analyze`` / ``analyze_dataset`` to add one.
     """
-    found = existing_sidecar_columns(spark, dataset_path)
-    return analyze_dataset(
-        spark,
-        dataset_path,
-        bloom_columns=found["bloom"],
-        ndv_columns=found["ndv"],
-    )
+    path = dataset_path.rstrip("/")
+    current = listing(spark, path)
+    plans = {"stats": StatsIndex(spark, path).plan(current)}
+    for c in existing_sidecar_columns(spark, path)["bloom"]:
+        plans[f"bloom:{c}"] = bloom_plan(spark, path, current, c)
+    # no requested column: the stored state supplies the columns and lg_k
+    ndv = ndv_plan(spark, path, current, [], 12)
+    if ndv is not None:
+        plans["ndv"] = ndv
+    return sync_sidecars(spark, path, current, plans)

@@ -35,11 +35,12 @@ driver:
   use case; screening one dataset against another at scale is a join
   (`operators/curate.py` decontamination), not a bloom probe.
 
-Conservative rules match `prune_files`: files missing from the
-sidecar (appended after the build) are always kept; a file whose
-column is entirely NULL cannot contain a (non-null) probe value and
-is prunable. The only driver-side materialization is the candidate
-FILE LIST — metadata-scale, one string per surviving file.
+The skip rule is the min/max sidecar's (``stats.kept_files``): a
+listed file is kept when the probe hits it or the sidecar does not
+index it (appended after the build); a file whose column is entirely
+NULL cannot hold a (non-null) probe value and is prunable. Only the
+candidate FILE LIST reaches the driver; ``stats.read_survivors``
+reads it.
 """
 
 from __future__ import annotations
@@ -58,9 +59,11 @@ from pydala2_spark.plans.stats import (
     _FILE,
     SidecarPlan,
     diff_files,
+    kept_files,
     key_rows,
     listing,
     read_state,
+    read_survivors,
     sync_sidecar,
 )
 
@@ -148,9 +151,11 @@ def _bloom_rows(
 
 def _bloom_state(spark: SparkSession, ipath: str):
     """The stored rows, and the sentinel rows (one per indexed file,
-    carrying the geometry and value type) in one collect."""
+    carrying the geometry and value type) in one collect. The stored
+    schema is fixed, so no job infers it."""
     cols = ["file_path", "num_bits", "num_hashes", "value_type"]
-    return read_state(spark, ipath, cols, where=F.col("word_index") == _SENTINEL)
+    sentinel = F.col("word_index") == _SENTINEL
+    return read_state(spark, ipath, cols, where=sentinel, schema=BLOOM_SCHEMA)
 
 
 def bloom_plan(
@@ -246,23 +251,18 @@ def bloom_prune(
 
     No false negatives: every file actually holding one of the values
     survives. False positives at the sidecar's configured rate. Files
-    newer than the index are kept unseen (conservative).
+    newer than the index are kept unseen, files deleted since the last
+    refresh are dropped (:func:`stats.kept_files`).
     """
     quote_identifier(column)  # raises on non-identifier names
     path = dataset_path.rstrip("/")
     ipath = index_path or _bloom_sidecar_path(path, column)
-    # schemeless form keys all comparisons; originals are what the
-    # caller can hand back to spark.read.parquet
-    current = listing(spark, path)
+    listed = listing(spark, path).values()
     if not values:
-        return [] if path_exists(spark, ipath) else sorted(current.values())
+        return [] if path_exists(spark, ipath) else sorted(listed)
     idx, state = _bloom_state(spark, ipath)
-    if idx is None:
-        return sorted(current.values())  # no index → no pruning
-    indexed = {r["file_path"] for r in state}
-    unknown = [orig for key, orig in current.items() if key not in indexed]
-    if not state:  # an emptied sidecar indexes nothing
-        return sorted(unknown)
+    if not state:  # no (or an emptied) sidecar indexes nothing
+        return kept_files(listed, [])
     num_bits, num_hashes, value_type = (
         int(state[0]["num_bits"]),
         int(state[0]["num_hashes"]),
@@ -303,11 +303,8 @@ def bloom_prune(
         .select("file_path")
         .distinct()
     )
-    candidates = [
-        current[r["file_path"]] for r in hits.collect() if r["file_path"] in current
-    ]
-    return sorted(set(candidates) | set(unknown))
-
+    hit = {r["file_path"] for r in hits.collect()}
+    return kept_files(listed, [(r["file_path"], r["file_path"] in hit) for r in state])
 
 
 def read_bloom_pruned(
@@ -317,9 +314,7 @@ def read_bloom_pruned(
     values: list,
     index_path: str | None = None,
 ) -> DataFrame:
-    """Scan only the bloom-surviving files; the caller still applies
-    the row-level ``isin`` filter (pruning is file-granular)."""
+    """Scan only the bloom-surviving files (partition columns kept);
+    the caller still applies the row-level ``isin`` filter."""
     files = bloom_prune(spark, dataset_path, column, values, index_path)
-    if not files:
-        return spark.read.parquet(dataset_path).limit(0)
-    return spark.read.parquet(*files)
+    return read_survivors(spark, dataset_path.rstrip("/"), files)

@@ -889,25 +889,20 @@ class SnapshotDataset:
         self, column: str, lo=None, hi=None, version: int | None = None
     ) -> DataFrame:
         """Version-pinned file-pruned scan: footer-scan ONLY this
-        version's manifest files (distributed), drop files whose
-        min/max prove no row matches [lo, hi], and read the survivors.
-        Time travel and file skipping compose — the caller still
-        applies the row-level filter (pruning is conservative)."""
-        from pydala2_spark.plans.stats import collect_file_stats, prune_files
+        version's manifest files, drop files whose min/max prove no
+        row matches [lo, hi], and read the survivors (the pruned read
+        of ``plans/stats``). Time travel and file skipping compose —
+        the caller still applies the row-level filter."""
+        from pydala2_spark.plans.stats import footer_stats, kept_files, read_survivors, survival
 
         if version is None:
             version = self.current_version()
         if version is None:
             raise ValueError(f"no snapshots at {self.path!r}")
-        m = self._read_manifest(version)
-        if not m["files"]:
-            return self.read(version)
-        abs_files = [f"{self.path}/{rel}" for rel in m["files"]]
-        stats = collect_file_stats(self.spark, self.path, files=abs_files)
-        keep = prune_files(stats, column, lo, hi)
-        if not keep:
-            return self.read(version).limit(0)
-        return self.spark.read.option("basePath", self.path).parquet(*keep)
+        files = [f"{self.path}/{rel}" for rel in self._read_manifest(version)["files"]]
+        stats = footer_stats(self.spark, self.path, files)
+        keep = kept_files(files, survival(stats, column, lo, hi))
+        return read_survivors(self.spark, self.path, keep, lambda: self.read(version))
 
     # -- rollback ---------------------------------------------------------
 

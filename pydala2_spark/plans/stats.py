@@ -13,8 +13,13 @@ groups natively, so the stats table here serves the two remaining jobs:
    the compaction candidate selection without reading data;
 2. **file-level skipping at 100 TB** — when a dataset has millions of
    files, pre-filtering the *file list* on min/max stats and loading
-   only survivors avoids even opening the losers' footers. That is
-   `prune_files` + `read_pruned` below.
+   only survivors avoids even opening the losers' footers.
+
+File skipping has ONE path (min/max here, bloom, explain_pruning):
+:func:`survival` collects ``(file, survives)`` per stats row once;
+:func:`kept_files` keeps a LISTED file that survives or that the
+sidecar does not index (unknown ⇒ keep); :func:`read_survivors` reads
+them with ``basePath`` at the root, so partition columns survive.
 
 Footers of a large file list are read on the EXECUTORS
 (``mapPartitions`` over the file list); a write-through append's few
@@ -310,15 +315,11 @@ def dataset_stats(spark: SparkSession, path: str) -> dict:
     return {"files": agg["files"], "rows": agg["rows"] or 0, "bytes": agg["bytes"] or 0}
 
 
-def prune_files(
-    stats: DataFrame,
-    column: str,
-    lo=None,
-    hi=None,
-) -> list[str]:
-    """Conservative file-level pruning on min/max stats: keep a file
-    unless its stats PROVE no row can match (reference semantics:
-    `pydala/helpers/metadata.py:145-213` — unknown stats ⇒ keep).
+def survival(stats: DataFrame, column: str, lo=None, hi=None) -> list[tuple[str, bool]]:
+    """``(file_path, survives)`` for EVERY stats row, in one collect:
+    a file survives unless its min/max stats PROVE no row can match
+    (reference semantics: `pydala/helpers/metadata.py:145-213` —
+    unknown stats ⇒ keep).
 
     ``lo``/``hi`` bound the wanted value range (inclusive). Values are
     compared through the JSON-string encoding, cast to the literal's
@@ -338,7 +339,37 @@ def prune_files(
     if hi is not None:
         t = "double" if isinstance(hi, (int, float)) else "string"
         cond = cond & F.coalesce(cmin.try_cast(t) <= F.lit(hi), F.lit(True))
-    return [r["file_path"] for r in s.filter(keep | cond).select("file_path").collect()]
+    return [tuple(r) for r in s.select("file_path", (keep | cond).alias("survives")).collect()]
+
+
+def prune_files(stats: DataFrame, column: str, lo=None, hi=None) -> list[str]:
+    """The stats rows' files that :func:`survival` keeps (index-only:
+    :func:`kept_files` adds the files ``stats`` has no row for)."""
+    return [f for f, survives in survival(stats, column, lo, hi) if survives]
+
+
+def kept_files(listed: Iterable[str], pairs: Iterable[tuple[str, bool]]) -> list[str]:
+    """THE file-skip rule: a LISTED file is kept when ``pairs``
+    (``(stored path, survives)``) mark it a survivor or hold no row for
+    it (an append since the last refresh); a stored file no longer
+    listed (deleted or rewritten since) is never returned. Paths
+    compare :func:`schemeless`ly; the result is in ``listed``'s
+    spelling, sorted."""
+    survives: dict[str, bool] = {}
+    for f, s in pairs:
+        k = schemeless(f)
+        survives[k] = survives.get(k, False) or bool(s)
+    return sorted(f for f in listed if survives.get(schemeless(f), True))
+
+
+def read_survivors(spark: SparkSession, root: str, files: list[str], empty=None) -> DataFrame:
+    """THE survivor read: ``files`` with ``basePath`` at the dataset
+    ``root``, so hive partition columns come back as in a full scan;
+    with no survivor, the dataset's empty frame (``empty()``, default
+    the root's read)."""
+    if not files:
+        return (empty() if empty is not None else spark.read.parquet(root)).limit(0)
+    return spark.read.option("basePath", root).parquet(*files)
 
 
 # -- the sidecar lifecycle ---------------------------------------------------
@@ -523,23 +554,13 @@ class StatsIndex:
         return prune_files(self.stats(), column, lo, hi)
 
     def read_pruned(self, column: str, lo=None, hi=None) -> DataFrame:
-        """Pruned scan that is SAFE under a stale index: survivors
-        from the min/max sidecar, UNIONED with every live file the
-        index has not seen (one extra directory listing — metadata
-        cost). A file missing from the sidecar (append since the last
-        refresh, or a lost write-through race) is scanned, never
-        silently skipped — the same unknown ⇒ keep rule prune_files
-        applies to missing column stats, applied at the file level.
-        Rows outside [lo, hi] still need the caller's row filter."""
-        files = set(self.prune(column, lo, hi))
-        indexed = {
-            r["file_path"] for r in self.stats().select("file_path").collect()
-        }
-        current = list_files(self.spark, self.dataset_path, suffixes=(".parquet",))
-        files.update(f for f in current if f not in indexed)
-        if not files:
-            return self.spark.read.parquet(self.dataset_path).limit(0)
-        return self.spark.read.parquet(*sorted(files))
+        """Pruned scan, SAFE under a stale index (:func:`kept_files`):
+        a file the index has not seen is scanned, a file deleted since
+        the last refresh is not read. Partition columns are kept; rows
+        outside [lo, hi] still need the caller's row filter."""
+        listed = listing(self.spark, self.dataset_path).values()
+        files = kept_files(listed, survival(self.stats(), column, lo, hi))
+        return read_survivors(self.spark, self.dataset_path, files)
 
 
 def import_legacy_file_metadata(
@@ -754,14 +775,16 @@ def read_pruned(
     """Scan only the files that can contain rows with ``column`` in
     [lo, hi] — the reference's ``ParquetDataset.scan``
     (`pydala/dataset.py:1200-1246`) rebuilt on a Spark file subset.
+    ``stats`` defaults to the listed files' footers; any stats frame
+    goes through :func:`kept_files`.
 
-    The returned DataFrame still needs the row-level filter applied by
-    the caller (pruning is conservative, file granularity)."""
-    st = stats if stats is not None else collect_file_stats(spark, path)
-    files = prune_files(st, column, lo, hi)
-    if not files:
-        return spark.read.parquet(path).limit(0)
-    return spark.read.parquet(*files)
+    The returned DataFrame keeps hive partition columns and still needs
+    the row-level filter applied by the caller (pruning is
+    conservative, file granularity)."""
+    path = path.rstrip("/")
+    listed = sorted(listing(spark, path).values())
+    st = stats if stats is not None else footer_stats(spark, path, listed)
+    return read_survivors(spark, path, kept_files(listed, survival(st, column, lo, hi)))
 
 
 # -- mergeable NDV sketches -------------------------------------------------
@@ -803,13 +826,14 @@ def ndv_plan(
     index_path: str | None = None,
     rebuild: bool = False,
     require: bool = False,
-) -> SidecarPlan:
+) -> SidecarPlan | None:
     """The NDV sidecar's plan: with stored state, sketch the tracked
     columns for the added files and a requested column the sidecar
     does not track yet for EVERY listed file (else it would estimate
     zero forever); without (or on ``rebuild``), sketch ``columns`` over
     every file at ``lg_k``. ``require`` raises on a missing or empty
-    sidecar instead. Every added file gets a marker row (column ""): a
+    sidecar instead; without either, nothing tracked or requested
+    plans nothing (None). Every added file gets a marker row (column ""): a
     zero-row file emits no sketch, and without a membership record
     ``estimate_ndv``'s staleness guard would flag it forever."""
     from pydala2_spark.functions.safety import quote_identifier
@@ -817,8 +841,9 @@ def ndv_plan(
     for c in columns:
         quote_identifier(c)
     ipath = index_path or ndv_sidecar_path(path)
-    cols = ["file_path", "column", "lg_k"]
-    old, state = (None, []) if rebuild else read_state(spark, ipath, cols, distinct=True)
+    old, state = (None, []) if rebuild else read_state(
+        spark, ipath, ["file_path", "column", "lg_k"], distinct=True, schema=NDV_SCHEMA
+    )
     if require and not state:
         raise ValueError(
             f"no NDV sidecar at {ipath!r}; run build_ndv_sketches(spark, path, "
@@ -828,6 +853,8 @@ def ndv_plan(
         )
     lg_k = int(state[0]["lg_k"]) if state else lg_k
     tracked = list(dict.fromkeys(r["column"] for r in state if r["column"]))
+    if not (tracked or columns or rebuild or require):
+        return None
     new_columns = [c for c in columns if c not in tracked]
     added, removed, kept = diff_files(current, {r["file_path"] for r in state}, old)
     reads = {c: added for c in tracked if added}

@@ -611,7 +611,8 @@ class ParquetDataset(BaseDataset):
 
     def scan(self, column: str, lo=None, hi=None) -> DataFrame:
         """File-pruned scan on min/max stats (`pydala/dataset.py:1200-1246`);
-        caller still applies the row-level filter."""
+        hive partition columns are kept, and the caller still applies
+        the row-level filter."""
         from pydala2_spark.plans.stats import read_pruned
 
         return read_pruned(self.spark, self.path, column, lo, hi)
@@ -637,8 +638,9 @@ class ParquetDataset(BaseDataset):
         return build_bloom_index(self.spark, self.path, column, **kw)
 
     def scan_point(self, column: str, values: list) -> DataFrame:
-        """Bloom-pruned scan for ``column IN (values)``; caller still
-        applies the row-level filter (no false negatives)."""
+        """Bloom-pruned scan for ``column IN (values)``; hive partition
+        columns are kept, and the caller still applies the row-level
+        filter (no false negatives)."""
         from pydala2_spark.plans.bloom import read_bloom_pruned
 
         return read_bloom_pruned(self.spark, self.path, column, values)
@@ -658,40 +660,32 @@ class ParquetDataset(BaseDataset):
         "files_to_scan": k, "skipped_pct": p}`` where the final scan
         set is the INTERSECTION of the applicable sidecars' keep lists
         (each is conservative — no false negatives — so intersecting
-        stays correct). A sidecar that does not exist keeps everything
+        stays correct). Counts follow the pruned reads' one skip rule
+        (``plans/stats.kept_files``), so they name the files
+        ``StatsIndex.read_pruned`` / ``scan_point`` read (partition
+        columns kept). A sidecar that does not exist keeps everything
         and reports ``None`` for its count, which is itself the
         actionable signal: "this predicate would skip nothing until
         you ANALYZE". Metadata-only — no data files are opened.
         """
         from pydala2_spark.plans.bloom import _bloom_sidecar_path, bloom_prune
-        from pydala2_spark.plans.fs import list_files, path_exists, schemeless
-        from pydala2_spark.plans.stats import StatsIndex
+        from pydala2_spark.plans.fs import path_exists
+        from pydala2_spark.plans.stats import StatsIndex, kept_files, listing, survival
 
-        total = list_files(self.spark, self.path, suffixes=(".parquet",))
-        keep = {schemeless(f) for f in total}
+        total = sorted(listing(self.spark, self.path).values())
+        keep = set(total)
         stats_kept = bloom_kept = None
         idx = StatsIndex(self.spark, self.path)
         if (lo is not None or hi is not None) and idx.exists():
-            kept = {schemeless(f) for f in idx.prune(column, lo, hi)}
-            # conservative like bloom_prune: files the (possibly stale)
-            # index has NO row for cannot be proven skippable — a file
-            # appended after the last refresh must report as scanned
-            indexed = {
-                schemeless(r["file_path"])
-                for r in idx.stats().select("file_path").collect()
-            }
-            kept |= keep - indexed
+            kept = kept_files(total, survival(idx.stats(), column, lo, hi))
             stats_kept = len(kept)
-            keep &= kept
+            keep &= set(kept)
         if values is not None and path_exists(
             self.spark, _bloom_sidecar_path(self.path, column)
         ):
-            kept = {
-                schemeless(f)
-                for f in bloom_prune(self.spark, self.path, column, values)
-            }
+            kept = bloom_prune(self.spark, self.path, column, values)
             bloom_kept = len(kept)
-            keep &= kept
+            keep &= set(kept)
         n = len(total)
         return {
             "total_files": n,

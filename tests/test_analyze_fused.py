@@ -281,6 +281,78 @@ def test_read_pruned_safe_under_stale_index(spark, tmp_ds_path):
     assert len(idx.prune("id", 5000, 5039)) == 0
 
 
+def _write_partitioned(spark, path, n_files, rows=40):
+    """``n_files`` single-file appends under hive ``year=`` dirs, ids
+    disjoint per file (file i holds ids 40*i .. 40*i+39)."""
+    for i in range(n_files):
+        pdf = make_simple_pdf(rows, seed=i * rows)
+        pdf["year"] = 2000 + i % 2
+        spark.createDataFrame(pdf).repartition(1).write.mode("append").partitionBy(
+            "year"
+        ).parquet(path)
+
+
+def test_pruned_reads_keep_partition_columns(spark, tmp_ds_path):
+    """Every pruned entry point returns the full scan's columns on a
+    hive-partitioned dataset — the partition column included — and
+    the same rows as a filtered full scan."""
+    from pydala2_spark.plans.bloom import build_bloom_index, read_bloom_pruned
+    from pydala2_spark.plans.snapshots import SnapshotDataset
+    from pydala2_spark.sources.dataset import ParquetDataset
+
+    _write_partitioned(spark, tmp_ds_path, 4)
+    full = spark.read.parquet(tmp_ds_path)
+    assert "year" in full.columns
+    want = sorted(tuple(r) for r in full.where("id BETWEEN 50 AND 60").collect())
+    idx = StatsIndex(spark, tmp_ds_path)
+    idx.refresh()
+    build_bloom_index(spark, tmp_ds_path, "id")
+    ds = ParquetDataset(tmp_ds_path, spark=spark)
+    reads = {
+        "StatsIndex.read_pruned": idx.read_pruned("id", 50, 60),
+        "Dataset.scan": ds.scan("id", 50, 60),
+        "Dataset.scan_point": ds.scan_point("id", list(range(50, 61))),
+        "read_bloom_pruned": read_bloom_pruned(spark, tmp_ds_path, "id", list(range(50, 61))),
+    }
+    for name, df in reads.items():
+        assert df.columns == full.columns, (name, df.columns)
+        got = sorted(tuple(r) for r in df.select(*full.columns).where("id BETWEEN 50 AND 60").collect())
+        assert got == want, name
+    # nothing survives: still the dataset's columns
+    assert idx.read_pruned("id", 10_000, 10_001).columns == full.columns
+
+    snap = SnapshotDataset(spark, f"{tmp_ds_path}_snap")
+    snap.commit(full, partition_by=["year"])
+    assert snap.read_pruned("id", 50, 60).columns == snap.read().columns
+    assert "year" in snap.read().columns
+
+
+def test_read_pruned_after_out_of_band_delete(spark, tmp_ds_path):
+    """A file deleted after the last refresh (``delete_where``,
+    ``update_where`` and compaction do that with the default
+    ``update_metadata=False``) is not read: the pruned read returns
+    exactly the live rows in range, and ``explain_pruning`` counts
+    only listed files."""
+    import glob
+    import os
+
+    from pydala2_spark.sources.dataset import ParquetDataset
+
+    _write_partitioned(spark, tmp_ds_path, 3)
+    StatsIndex(spark, tmp_ds_path).refresh()
+    os.remove(sorted(glob.glob(f"{tmp_ds_path}/year=2000/*.parquet"))[0])
+    r = ParquetDataset(tmp_ds_path, spark=spark).explain_pruning("id", 0, 119)
+    assert r["total_files"] == 2
+    assert r["stats_kept"] <= r["total_files"]
+    assert r["files_to_scan"] == 2
+
+    live = spark.read.parquet(tmp_ds_path).where("id BETWEEN 0 AND 119")
+    want = sorted(tuple(r) for r in live.collect())
+    got = StatsIndex(spark, tmp_ds_path).read_pruned("id", 0, 119).where("id BETWEEN 0 AND 119")
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert len(want) == 80
+
+
 def test_sidecars_key_every_file_under_escaped_partition_dirs(spark, tmp_ds_path):
     """A hive dir written for a timestamp string holds a space and an
     escaped ':' (``ts=2024-01-01 00%3A00%3A00``), which
@@ -416,6 +488,48 @@ def test_sidecar_job_ceilings(spark, tmp_path):
         lambda: analyze_dataset(spark, p, bloom_columns=["id"], ndv_columns=["id"])
     )
     over = {k: (n, PARENT_JOBS[k]) for k, n in seen.items() if n > PARENT_JOBS[k]}
+    assert not over, f"(jobs, ceiling) over the ceiling: {over}; all: {seen}"
+
+
+# Job counts of the pruned reads once they shared one survivors collect,
+# one skip rule and one survivor read, measured on a 4-core machine
+# (parent: StatsIndex.read_pruned 3, bloom_prune 6, refresh_metadata on
+# an unchanged 3-file dataset with bloom + NDV sidecars 9).
+PRUNED_READ_JOBS = {
+    "stats_read_pruned": 2,
+    "bloom_prune": 5,
+    "refresh_metadata_unchanged": 4,
+}
+
+
+def test_pruned_read_job_ceilings(spark, tmp_path):
+    """The range read is one stats collect plus the survivor read; the
+    bloom state read infers no schema; the write-through refresh reads
+    each sidecar's state once."""
+    from conftest import spark_jobs
+
+    from pydala2_spark.plans.analyze import refresh_metadata
+    from pydala2_spark.plans.bloom import build_bloom_index
+
+    def jobs(fn):
+        return spark_jobs(spark, fn)[1]
+
+    seen = {}
+    p = str(tmp_path / "part")
+    _write_partitioned(spark, p, 5)
+    spark.read.parquet(p).count()
+    idx = StatsIndex(spark, p)
+    idx.refresh()
+    seen["stats_read_pruned"] = jobs(lambda: idx.read_pruned("id", 50, 60))
+    build_bloom_index(spark, p, "id")
+    seen["bloom_prune"] = jobs(lambda: bloom_prune(spark, p, "id", [7]))
+
+    p = str(tmp_path / "refresh")
+    _write_batches(spark, p, 3)
+    spark.read.parquet(p).count()
+    analyze_dataset(spark, p, bloom_columns=["id"], ndv_columns=["id"])
+    seen["refresh_metadata_unchanged"] = jobs(lambda: refresh_metadata(spark, p))
+    over = {k: (n, PRUNED_READ_JOBS[k]) for k, n in seen.items() if n > PRUNED_READ_JOBS[k]}
     assert not over, f"(jobs, ceiling) over the ceiling: {over}; all: {seen}"
 
 

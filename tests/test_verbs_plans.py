@@ -325,6 +325,81 @@ def test_one_sidecar_publish():
     assert not outside, "\n".join(outside)
 
 
+def test_one_pruned_read():
+    """File skipping has one spelling of each part: only
+    ``plans/stats.kept_files`` decides which listed files a pruned read
+    keeps, and only ``plans/stats.read_survivors`` reads the survivors.
+    Every pruned entry point reaches both and reads no parquet itself;
+    no other function builds the "not indexed ⇒ keep" set."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pydala2_spark"
+    funcs = {}
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.FunctionDef):
+                funcs.setdefault(node.name, []).append((path.name, node))
+
+    def names(node):
+        return {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+
+    def reaches(node, target):
+        todo, seen = [node], set()
+        while todo:
+            used = names(todo.pop())
+            if target in used:
+                return True
+            for name in used - seen:
+                seen.add(name)
+                todo += [f for _, f in funcs.get(name, [])]
+        return False
+
+    entry = {
+        ("stats.py", "read_pruned"): 2,  # module function + StatsIndex method
+        ("bloom.py", "read_bloom_pruned"): 1,
+        ("snapshots.py", "read_pruned"): 1,
+        ("dataset.py", "scan"): 1,
+        ("dataset.py", "scan_point"): 1,
+    }
+    for (file, name), count in entry.items():
+        found = [f for fname, f in funcs[name] if fname == file]
+        assert len(found) == count, (file, name)
+        for f in found:
+            assert reaches(f, "read_survivors"), (file, name)
+            assert reaches(f, "kept_files"), (file, name)
+            assert "parquet" not in names(f), (file, name)
+    explain = [f for fname, f in funcs["explain_pruning"] if fname == "dataset.py"]
+    assert explain and all(reaches(f, "kept_files") for f in explain)
+
+    # the rule's one spelling: no other function decides a keep from
+    # membership in (or difference with) a sidecar's indexed set
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = [
+            (n.lineno, n.end_lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef) and n.name in ("kept_files", "diff_files")
+        ]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Compare) and any(isinstance(o, ast.NotIn) for o in node.ops):
+                operands = node.comparators
+            elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.Sub):
+                operands = [node.right]
+            else:
+                continue
+            if any(isinstance(c, ast.Name) and c.id == "indexed" for c in operands) and not any(
+                a <= node.lineno <= b for a, b in allowed
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_dau_wau_mau_denies_nested_loop(spark, sf_dir):
     """dau_wau_mau's trailing windows are explode(sequence(0, w-1))
     equi-joins over the user-day grain — NOT range joins. The r11
