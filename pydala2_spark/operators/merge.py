@@ -26,6 +26,32 @@ match is a null-safe join (`<=>`); matched-file discovery uses the
 keys" probe is itself a distributed join. At 100 TB an update touching
 0.1% of keys rewrites only the matched files, not the dataset.
 
+Job accounting of one upsert into an existing target. Before, six
+queries each paid their own broadcast and AQE stage jobs: a source
+count, a target count, a grouped per-file collect, a matched-keys
+checkpoint, a partition-immutability join count and a split aggregate
+(25 jobs on a 3-append ``year``-partitioned layout, 4 cores). Now
+(12 jobs on that layout), each phase under its own job description:
+
+- ``merge: source`` — one job materializes the deduplicated source;
+  its row count and the raw ``source_count`` (observed before the
+  dedup window) come from that job;
+- ``merge: discovery`` — the target's schema read, then one scan of
+  the target's keys, moving partition columns and
+  ``_metadata.file_path`` joined to the broadcast source keys,
+  materialized as the matched rows ``(keys, file, moved)``; the
+  target row count is observed on the scan, and the job's metrics give
+  the matched row count, the moved count (the immutability guard) and
+  the matched file set (bounded by the listing the driver holds);
+- ``merge: split`` — the distinct matched keys over that small
+  checkpoint: each is one deduplicated source row, so the
+  update/insert split costs no second target pass;
+- ``merge: insert`` and ``merge: rewrite`` — the two writes; their
+  semi- and anti-joins read the checkpoint's keys.
+
+A missing target keeps its own two counts (source rows, deduplicated
+rows) before its one insert.
+
 Every file rewrite here — ``merge``'s update half, ``delete_where`` and
 ``update_where`` — goes through ONE step,
 :func:`pydala2_spark.sources.writer.replace_files` (append the
@@ -41,12 +67,18 @@ only in the replacement rows (:func:`_replacement`).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pydala2_spark.frames import materialize
+from pydala2_spark.frames import (
+    job_description,
+    materialize,
+    materialize_counted,
+    materialize_observed,
+)
 
 VALID_STRATEGIES = ("insert", "update", "upsert")
 
@@ -406,181 +438,158 @@ def merge(
 
     src = _normalize_source(spark, source)
     src_cols = [c for c in src.columns if c not in (_BATCH, _ORD)]
-    source_count = src.count()
 
     # one listing serves the existence check AND the pre-merge file
-    # set below — nothing writes to the target in between (r15: each
-    # Hadoop listing is ~0.1 s of driver fs round-trips; merge paid 6,
-    # needs 3)
+    # set below — nothing writes to the target in between
     files_at_entry = (
         list_files(spark, target_path) if path_exists(spark, target_path) else []
     )
-    target_exists = bool(files_at_entry)
-
-    # -- discover partitioning of an existing target (hive dirs) ---------
-    if target_exists and not partition_by:
+    if files_at_entry and not partition_by:
         partition_by = partition_columns(spark, target_path, files_at_entry) or None
 
     # -- missing / empty target: every strategy but update inserts all ---
-    if not target_exists:
+    if not files_at_entry:
+        with job_description(spark, "merge: source"):
+            source_count = src.count()
         result = MergeResult(strategy=strategy, source_count=source_count)
         if strategy == "update" or source_count == 0:
             return result
         keys = key_columns or src_cols
         _validate_keys(keys, src_cols, "source")
         deduped = _dedup_last_wins(src, keys)
-        result.inserted = deduped.count()
-        parquet_writer(deduped, "append", compression, max_rows_per_file, partition_by).parquet(
-            target_path
-        )
+        with job_description(spark, "merge: source"):
+            result.inserted = deduped.count()
+        with job_description(spark, "merge: insert"):
+            parquet_writer(
+                deduped, "append", compression, max_rows_per_file, partition_by
+            ).parquet(target_path)
         result.inserted_files = list_files(spark, target_path)
         result.target_count_after = result.inserted
         return result
 
-    target = spark.read.parquet(target_path)
+    with job_description(spark, "merge: discovery"):
+        target = spark.read.parquet(target_path)
     target_cols = target.columns
-    target_count_before = target.count()
-    result = MergeResult(
-        strategy=strategy,
-        source_count=source_count,
-        target_count_before=target_count_before,
-        target_count_after=target_count_before,
-    )
-    if source_count == 0:
-        result.preserved_files = list_files(spark, target_path)
-        return result
+
+    def unchanged() -> MergeResult:
+        with job_description(spark, "merge: discovery"):
+            n = target.count()
+        return MergeResult(
+            strategy=strategy,
+            target_count_before=n,
+            target_count_after=n,
+            preserved_files=files_at_entry,
+        )
 
     keys = key_columns or [c for c in src_cols if c in target_cols]
-    _validate_keys(keys, src_cols, "source")
-    _validate_keys(keys, target_cols, "target")
+    try:
+        if not keys:
+            raise ValueError(f"source columns {src_cols} share no column with the target")
+        _validate_keys(keys, src_cols, "source")
+        _validate_keys(keys, target_cols, "target")
+    except ValueError:
+        with job_description(spark, "merge: source"):
+            if not src.isEmpty():
+                raise
+        return unchanged()  # an empty source is a no-op whatever its keys
 
-    # -- conform source to the target schema -----------------------------
+    # -- source job: conform to the target schema, dedup, materialize ----
     # cast common columns to target types, add typed nulls for missing
     # ones, keep extra source columns only under alter_schema, and keep
-    # the ordering columns through the cast.
+    # the ordering columns through the cast. The raw row count is
+    # observed before the dedup window, in the same job.
     extra_cols = [c for c in src_cols if c not in target_cols] if alter_schema else []
-    tgt_schema = target.schema
-    src_conformed = cast_to_schema(src, tgt_schema, alter_schema=True).select(
+    src_conformed = cast_to_schema(src, target.schema, alter_schema=True).select(
         *target_cols, *extra_cols, _BATCH, _ORD
     )
-    # feeds the match probe, both source splits and the split count
-    deduped = materialize(_dedup_last_wins(src_conformed, keys))
+    raw = Observation()
+    deduped, n_deduped = materialize_counted(
+        _dedup_last_wins(src_conformed.observe(raw, F.count(F.lit(1)).alias("n")), keys),
+        "merge: source",
+    )
+    source_count = int(raw.get["n"])
+    if source_count == 0:
+        return unchanged()
     if extra_cols:
         target = target.select(
             "*", *[F.lit(None).cast(dict(deduped.dtypes)[c]).alias(c) for c in extra_cols]
         )
         target_cols = target.columns
 
+    # -- discovery job: the matched target rows, materialized ------------
     # _FILE keeps Spark's URI-encoded spelling (no per-row decode on the
     # target scan); the few collected names decode to the listing's
     # spelling before any filesystem call or listing comparison
     tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
-
-    # matched target rows: null-safe equi-join with the broadcast ALWAYS
-    # on the source side (merge batches are small relative to the target
-    # at scale) — and size-gated, so a huge backfill batch degrades to a
-    # shuffle join instead of OOMing the driver.
-    src_keys = deduped.select(*keys)
-    match_cond = _null_safe_cond(tagged, src_keys, keys)
-    matched_target = tagged.join(
-        _hint_small(src_keys, source_count), on=match_cond, how="left_semi"
+    # partition columns outside the key can move under an update: the
+    # source side carries them, renamed, into the same join
+    moved_cols = (
+        [c for c in partition_by or [] if c not in keys] if strategy != "insert" else []
     )
+    alias = {c: f"__s{i}" for i, c in enumerate([*keys, *moved_cols])}
 
-    # ONE job yields both the touched-file set and the matched row
-    # count (per-file partial counts collapse map-side, as in
-    # delete_where)
-    per_file = (
-        matched_target.groupBy(_FILE).count().collect()
-        if strategy in ("update", "upsert")
-        else []
+    def same(cols: list[str]) -> Column:
+        return reduce(Column.__and__, [F.col(c).eqNullSafe(F.col(alias[c])) for c in cols])
+
+    def renamed(df: DataFrame, cols: list[str]) -> DataFrame:
+        return df.select(*[F.col(c).alias(alias[c]) for c in cols])
+
+    key_cond = same(keys)
+    # the broadcast is ALWAYS on the source side (merge batches are small
+    # relative to the target at scale) and size-gated, so a huge
+    # backfill batch degrades to a shuffle join instead of OOMing the
+    # driver. The target count is observed on the scan, so the one
+    # target pass also sizes it. The eager checkpoint pins the
+    # PRE-append match: the appends below trigger refreshByPath, which
+    # would re-resolve a lazy plan against the new file list.
+    scanned = Observation()
+    matched, found = materialize_observed(
+        tagged.select(*keys, *moved_cols, _FILE)
+        .observe(scanned, F.count(F.lit(1)).alias("n"))
+        .join(_hint_small(renamed(deduped, list(alias)), n_deduped), key_cond, "inner")
+        .select(*keys, _FILE, (~same(moved_cols) if moved_cols else F.lit(False)).alias("__moved")),
+        "merge: discovery",
+        rows=F.count(F.lit(1)),
+        moved=F.count(F.when(F.col("__moved"), 1)),
+        files=F.collect_set(_FILE),
     )
-    raw_files = [r[_FILE] for r in per_file]
+    target_count_before = int(scanned.get["n"])
+    # -- partition immutability guard ------------------------------------
+    if found["moved"]:
+        raise ValueError(
+            f"update would change partition column(s) {partition_by} for {found['moved']} "
+            "matched row(s); partition columns are immutable under merge"
+        )
+    raw_files = sorted(found["files"]) if strategy != "insert" else []
     matched_files = [decoded_path(f) for f in raw_files]
 
-    # matched/unmatched SOURCE rows split on the matched-target key set:
-    # that set is bounded by the source batch (each key is a source
-    # key), so the broadcast again stays on the small side — never on
-    # the target, which can be arbitrarily large. The eager
-    # materialization pins the PRE-append listing: the appends below
-    # trigger refreshByPath, which would re-resolve a cached plan against
-    # the new file list and leak just-inserted keys into the match set.
-    matched_keys = materialize(
-        matched_target.select(*keys).distinct(), "merge: matched keys"
-    )
-    inserts = (
-        deduped.join(
-            _hint_small(matched_keys, source_count),
-            on=_null_safe_cond(deduped, matched_keys, keys),
-            how="left_anti",
-        )
-        if strategy in ("insert", "upsert")
-        else None
-    )
-    matched_source = (
-        deduped.join(
-            _hint_small(matched_keys, source_count),
-            on=_null_safe_cond(deduped, matched_keys, keys),
-            how="left_semi",
-        )
-        if strategy in ("update", "upsert")
-        else None
+    # -- split: each distinct matched key is one deduped source row ------
+    matched_keys = 0
+    if found["rows"]:
+        with job_description(spark, "merge: split"):
+            matched_keys = matched.select(*keys).distinct().count()
+    updated = matched_keys if strategy != "insert" else 0
+    inserted = n_deduped - matched_keys if strategy != "update" else 0
+    result = MergeResult(
+        strategy=strategy,
+        source_count=source_count,
+        inserted=inserted,
+        updated=updated,
+        target_count_before=target_count_before,
+        target_count_after=target_count_before,
     )
 
-    # -- partition immutability guard ------------------------------------
-    if partition_by and matched_source is not None and matched_files:
-        moved = (
-            matched_target.alias("t")
-            .join(
-                matched_source.alias("s"),
-                on=_null_safe_cond(matched_target, matched_source, keys),
-                how="inner",
-            )
-            .filter(
-                ~_all_eq_null_safe("t", "s", partition_by)
-            )
-            .count()
-        )
-        if moved:
-            raise ValueError(
-                f"update would change partition column(s) {partition_by} for {moved} matched row(s); "
-                "partition columns are immutable under merge"
-            )
-
-    # ONE flagged pass counts both splits (r15: two broadcast-join
-    # count jobs → one aggregate; the values are identical — the
-    # semi/anti frames partition `deduped` on the same matched-keys
-    # set this left join flags, and matched_keys rows are distinct so
-    # the 1:<=1 join preserves row multiplicity)
-    if strategy == "upsert":
-        mk_flagged = matched_keys.select(*keys, F.lit(1).alias("__matched"))
-        flagged = deduped.join(
-            _hint_small(mk_flagged, source_count),
-            on=_null_safe_cond(deduped, mk_flagged, keys),
-            how="left",
-        )
-        split_row = flagged.agg(
-            F.count(F.when(F.col("__matched").isNotNull(), 1)).alias("u"),
-            F.count(F.when(F.col("__matched").isNull(), 1)).alias("i"),
-        ).first()
-        updated, inserted = int(split_row["u"]), int(split_row["i"])
-    else:
-        updated = matched_source.count() if matched_source is not None else 0
-        inserted = inserts.count() if inserts is not None else 0
-    # the rewrite collapses every matched target row (duplicates
-    # included — plain appends can leave several rows per key) into one
-    # source row, so the post-merge count must subtract what matched
-    matched_target_rows = sum(r["count"] for r in per_file) if updated else 0
-
-    result.updated = updated
-    result.inserted = inserted
+    # the semi/anti joins read the checkpoint's keys: bounded by the
+    # source batch, so the broadcast stays on the small side
+    mkeys = _hint_small(renamed(matched, keys), found["rows"])
     # built before any write: the rewrite's plan reads the pre-merge
     # file set (the DataFrame's FileIndex was pinned at load)
     replacement = (
         _filter_to_files(tagged, raw_files)
-        .join(_hint_small(src_keys, source_count), on=match_cond, how="left_anti")
+        .join(mkeys, key_cond, "left_anti")
         .drop(_FILE)
-        .unionByName(matched_source.select(*target_cols))
-        if updated and matched_files
+        .unionByName(deduped.join(mkeys, key_cond, "left_semi").select(*target_cols))
+        if updated
         else None
     )
 
@@ -592,9 +601,14 @@ def merge(
     files_after_inserts = files_at_entry
     if inserted:
         try:
-            parquet_writer(
-                inserts.select(*target_cols), "append", compression, max_rows_per_file, partition_by
-            ).parquet(target_path)
+            with job_description(spark, "merge: insert"):
+                parquet_writer(
+                    deduped.join(mkeys, key_cond, "left_anti").select(*target_cols),
+                    "append",
+                    compression,
+                    max_rows_per_file,
+                    partition_by,
+                ).parquet(target_path)
             files_after_inserts = list_files(spark, target_path)
         except Exception as e:
             raise PartialMergeError(
@@ -606,32 +620,28 @@ def merge(
 
     # -- rewrite matched files: (their unmatched rows) ∪ (matched source)
     if replacement is not None:
-        result.rewritten_files = replace_files(
-            replacement,
-            target_path,
-            matched_files,
-            "merge",
-            partition_by,
-            compression,
-            max_rows_per_file,
-            listing=files_after_inserts,
-            merge_result=result,
-        )
+        with job_description(spark, "merge: rewrite"):
+            result.rewritten_files = replace_files(
+                replacement,
+                target_path,
+                matched_files,
+                "merge",
+                partition_by,
+                compression,
+                max_rows_per_file,
+                listing=files_after_inserts,
+                merge_result=result,
+            )
 
     matched_set = set(matched_files)
     result.preserved_files = [f for f in files_at_entry if f not in matched_set]
+    # the rewrite collapses every matched target row (duplicates
+    # included — plain appends can leave several rows per key) into one
+    # source row, so the post-merge count subtracts what matched
     result.target_count_after = (
-        target_count_before - matched_target_rows + updated + inserted
+        target_count_before - (found["rows"] if updated else 0) + updated + inserted
     )
     return result
-
-
-def _all_eq_null_safe(left_alias: str, right_alias: str, cols: list[str]):
-    cond = None
-    for c in cols:
-        e = F.col(f"{left_alias}.{c}").eqNullSafe(F.col(f"{right_alias}.{c}"))
-        cond = e if cond is None else (cond & e)
-    return cond
 
 
 def _validate_keys(keys: list[str], cols: list[str], side: str) -> None:

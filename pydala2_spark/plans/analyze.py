@@ -63,16 +63,9 @@ def analyze_dataset(
 def existing_sidecar_columns(spark: SparkSession, dataset_path: str) -> dict:
     """The bloom sidecars the layout already carries — ``{"bloom":
     [cols]}`` — from one directory listing (no Spark job)."""
-    from pydala2_spark.plans.fs import _fs_and_path, path_exists
+    from pydala2_spark.plans.fs import child_dirs
 
-    out: dict = {"bloom": []}
-    broot = f"{dataset_path.rstrip('/')}/_bloom_index"
-    if path_exists(spark, broot):
-        fs, hpath, _ = _fs_and_path(spark, broot)
-        out["bloom"] = sorted(
-            st.getPath().getName() for st in fs.listStatus(hpath) if st.isDirectory()
-        )
-    return out
+    return {"bloom": child_dirs(spark, f"{dataset_path.rstrip('/')}/_bloom_index")}
 
 
 def refresh_metadata(spark: SparkSession, dataset_path: str) -> dict:

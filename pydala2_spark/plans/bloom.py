@@ -292,16 +292,19 @@ def bloom_prune(
     )
     probe_words = _position_words(probe, "__v", num_bits, num_hashes)
 
-    # a file may contain a value iff all k of its bits are set there
+    # a file may contain a value iff all k of its bits are set there.
+    # The sidecar holds one row per (file_path, word_index) and the
+    # probe one per (value_id, hash_i), so each hash of a value joins at
+    # most one row per file: a plain count is the distinct-hash count,
+    # in one shuffle (the set below drops repeated files)
     hits = (
         idx.where(F.col("word_index") != _SENTINEL)
         .join(F.broadcast(probe_words), "word_index")
         .where(F.col("word").bitwiseAND(F.col("word_bit")) == F.col("word_bit"))
         .groupBy("file_path", "value_id")
-        .agg(F.countDistinct("hash_i").alias("bits_set"))
-        .where(F.col("bits_set") == F.lit(num_hashes))
+        .count()
+        .where(F.col("count") == F.lit(num_hashes))
         .select("file_path")
-        .distinct()
     )
     hit = {r["file_path"] for r in hits.collect()}
     return kept_files(listed, [(r["file_path"], r["file_path"] in hit) for r in state])

@@ -9,6 +9,18 @@ Python dependencies.
 
 Only driver-side, small-metadata operations live here (list, delete,
 rename, exists); data always moves through DataFrame jobs.
+
+Every listing in the package is one walk, :func:`_walk`: a
+per-directory ``fs.listStatus`` descent, the shape Spark's own file
+index lists with. It never asks for a located status
+(``fs.listFiles`` / ``listLocatedStatus``): building a
+``LocatedFileStatus`` loads the entry's permissions, and on the local
+filesystem without the native Hadoop library each load forks a
+subprocess — about 6.5 ms per entry: 28 files in 7 partition
+directories took 213 ms to list, the walk takes 20 ms (4 vCPUs).
+Hidden directories (``_``/``.``) are not descended under the
+data-visibility rule, so a listing never reads ``_stats_index/`` or
+``_bloom_index/<col>/``.
 """
 
 from __future__ import annotations
@@ -18,11 +30,18 @@ from pyspark.sql import SparkSession
 DATA_FILE_SUFFIXES = (".parquet", ".csv", ".json", ".orc", ".avro")
 
 
+# Hadoop's Path class per JVM view: resolving
+# ``jvm.org.apache.hadoop.fs.Path`` takes one reflection round trip per
+# package segment (2.8 ms measured, 13x the constructor call itself)
+_PATH_CLASS: dict = {}
+
+
 def _fs_and_path(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    if jvm not in _PATH_CLASS:
+        _PATH_CLASS[jvm] = jvm.org.apache.hadoop.fs.Path
+    hpath = _PATH_CLASS[jvm](path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return fs, hpath, jvm
 
 
@@ -31,33 +50,60 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _walk(fs, hpath, descend):
+    """``(path, status, is_dir)`` of every entry below ``hpath``, one
+    ``fs.listStatus`` per directory; a directory is entered only when
+    ``descend(path)``. A file ``hpath`` yields its own status."""
+    todo = [hpath]
+    while todo:
+        for status in fs.listStatus(todo.pop()):
+            hp = status.getPath()
+            p = hp.toString()
+            is_dir = bool(status.isDirectory())
+            if is_dir and descend(p):
+                todo.append(hp)
+            yield p, status, is_dir
+
+
+# leading characters of a hidden file or directory name
+HIDDEN = ("_", ".")
+
+
 def iter_file_statuses(spark: SparkSession, path: str, hide: str = "segment"):
     """ONE recursive walk yielding ``(path, size_bytes, mtime_ms)`` per
     visible file — the shared substrate for list_files / file_sizes /
     file_mtimes, so the hidden-file rule lives in exactly one place.
 
     ``hide="segment"`` (Spark's data-visibility rule) hides a file when
-    ANY path segment below the base starts with ``_``/``.``;
-    ``hide="name"`` hides only by final name — the mirroring rule
-    (LocalCache intentionally copies sidecar CONTENTS like
-    ``_snapshots/v*.json`` whose own names are plain).
+    ANY path segment below the base starts with ``_``/``.``: hidden
+    directories are skipped without being listed. ``hide="name"``
+    hides only by final name and descends into every directory — the
+    mirroring rule (LocalCache intentionally copies sidecar CONTENTS
+    like ``_snapshots/v*.json`` whose own names are plain).
     """
     fs, hpath, _ = _fs_and_path(spark, path)
     if not fs.exists(hpath):
         return
     base = fs.makeQualified(hpath).toString()
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath().toString()
-        if hide == "name":
-            hidden = p.rsplit("/", 1)[-1].startswith(("_", "."))
-        else:
-            rel = p[len(base):] if p.startswith(base) else p
-            hidden = any(seg.startswith(("_", ".")) for seg in rel.split("/") if seg)
-        if hidden:
-            continue
-        yield p, int(status.getLen()), int(status.getModificationTime())
+
+    def shown(p: str) -> bool:
+        # a file ``path`` is the base itself: no segment below it
+        hidden = p.rsplit("/", 1)[-1].startswith(HIDDEN)
+        return not hidden or (hide == "segment" and p == base)
+
+    for p, status, is_dir in _walk(fs, hpath, lambda d: hide == "name" or shown(d)):
+        if not is_dir and shown(p):
+            yield p, int(status.getLen()), int(status.getModificationTime())
+
+
+def child_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Sorted names of the directories directly under ``path`` (none
+    when it does not exist) — the same walk, not descended."""
+    fs, hpath, _ = _fs_and_path(spark, path)
+    if not fs.exists(hpath):
+        return []
+    entries = _walk(fs, hpath, lambda d: False)
+    return sorted(p.rsplit("/", 1)[-1] for p, _, is_dir in entries if is_dir)
 
 
 def list_files(spark: SparkSession, path: str, suffixes=DATA_FILE_SUFFIXES) -> list[str]:
@@ -80,7 +126,7 @@ def delete_paths(spark: SparkSession, paths: list[str]) -> int:
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, hsrc, jvm = _fs_and_path(spark, src)
-    return bool(fs.rename(hsrc, jvm.org.apache.hadoop.fs.Path(dst)))
+    return bool(fs.rename(hsrc, _PATH_CLASS[jvm](dst)))
 
 
 def mkdirs(spark: SparkSession, path: str) -> bool:

@@ -939,7 +939,8 @@ def estimate_ndv(
     ``missing_ok=True`` — the min/max and bloom sidecars degrade
     conservatively (unknown ⇒ keep), but there is no conservative
     cardinality, so the only honest answers are "rebuild the sketches"
-    or an explicit opt-in to a lower bound."""
+    or an explicit opt-in to a lower bound. A column the sidecar does
+    not sketch raises a ``ValueError`` naming the sketched columns."""
     path = dataset_path.rstrip("/")
     ipath = index_path or ndv_sidecar_path(path)
     raw = spark.read.parquet(ipath)
@@ -977,6 +978,16 @@ def estimate_ndv(
     if need_filter:
         sk = sk.filter(F.col("file_path").isin(wanted))
     row = sk.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("ndv")
+        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("ndv"),
+        F.count("sketch").alias("sketches"),
     ).first()
+    if not row["sketches"]:
+        # no sketch read: an untracked column must not pass for an empty
+        # one (the marker rows cover every file whatever the column)
+        tracked = sorted(r["column"] for r in raw.select("column").distinct().collect())
+        if column not in tracked:
+            raise ValueError(
+                f"the NDV sidecar at {ipath!r} has no sketches of {column!r}; "
+                f"sketched columns: {[c for c in tracked if c]}"
+            )
     return int(row["ndv"] or 0)

@@ -59,8 +59,8 @@ def pytest_configure(config):
     )
 
 
-def spark_jobs(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it issued,
+def _group_jobs(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it issued,
     counted through a job group of its own and ``statusTracker()``
     (which works with the UI disabled)."""
     import contextlib
@@ -77,7 +77,26 @@ def spark_jobs(spark, fn):
     # job-start events reach the tracker through the async listener bus
     with contextlib.suppress(Exception):
         sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def spark_jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it issued."""
+    out, ids = _group_jobs(spark, fn)
+    return out, len(ids)
+
+
+def spark_job_labels(spark, fn):
+    """``fn()``'s result and the description of each Spark job it
+    issued, in job order, read from the status store (jobs outside any
+    labelled block carry the probe's own "job-count probe")."""
+    out, ids = _group_jobs(spark, fn)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    labels = []
+    for jid in ids:
+        d = store.job(jid).description()
+        labels.append(d.get() if d.isDefined() else None)
+    return out, labels
 
 
 @pytest.fixture(params=["driver", "distributed"])

@@ -499,6 +499,10 @@ PRUNED_READ_JOBS = {
     "stats_read_pruned": 2,
     "bloom_prune": 5,
     "refresh_metadata_unchanged": 4,
+    # bloom_prune again, once its hits collect counts in one shuffle:
+    # 3 jobs for that collect, where a countDistinct and a distinct
+    # took 4
+    "bloom_prune_one_shuffle": 4,
 }
 
 
@@ -523,6 +527,7 @@ def test_pruned_read_job_ceilings(spark, tmp_path):
     seen["stats_read_pruned"] = jobs(lambda: idx.read_pruned("id", 50, 60))
     build_bloom_index(spark, p, "id")
     seen["bloom_prune"] = jobs(lambda: bloom_prune(spark, p, "id", [7]))
+    seen["bloom_prune_one_shuffle"] = seen["bloom_prune"]
 
     p = str(tmp_path / "refresh")
     _write_batches(spark, p, 3)
@@ -531,6 +536,18 @@ def test_pruned_read_job_ceilings(spark, tmp_path):
     seen["refresh_metadata_unchanged"] = jobs(lambda: refresh_metadata(spark, p))
     over = {k: (n, PRUNED_READ_JOBS[k]) for k, n in seen.items() if n > PRUNED_READ_JOBS[k]}
     assert not over, f"(jobs, ceiling) over the ceiling: {over}; all: {seen}"
+
+
+def test_estimate_ndv_raises_on_an_unsketched_column(spark, tmp_ds_path):
+    """The marker rows cover every file whatever the column, so an
+    untracked column must not read as an empty one (0): it raises and
+    names the sketched columns, with and without ``missing_ok``."""
+    _write_batches(spark, tmp_ds_path, 2)
+    build_ndv_sketches(spark, tmp_ds_path, ["id"])
+    assert estimate_ndv(spark, tmp_ds_path, "id") == 80
+    for missing_ok in (False, True):
+        with pytest.raises(ValueError, match=r"no sketches of 'name'.*\['id'\]"):
+            estimate_ndv(spark, tmp_ds_path, "name", missing_ok=missing_ok)
 
 
 def test_single_sidecar_calls_never_materialize(spark, tmp_ds_path, monkeypatch):

@@ -220,6 +220,62 @@ def test_stats_partition_base_ignores_kv_dirs_above_the_root(spark, tmp_path):
         }
 
 
+def test_listing_hides_by_segment_or_by_name(spark, tmp_path):
+    """The one listing walk on a hand-built tree under a ``k=v`` parent
+    directory: ``hide="segment"`` (list_files, file_mtimes) never
+    returns a file below a ``_``/``.`` directory, ``hide="name"``
+    (file_sizes) returns every file whose own name is plain, sidecar
+    contents included. Plain and ``file://`` roots list alike, a file
+    root lists itself, a missing root lists nothing."""
+    import os
+
+    from pydala2_spark.plans.fs import child_dirs, file_mtimes, file_sizes
+
+    root = tmp_path / "run=3" / "ds"
+    tree = {
+        "year=2020/part-0.parquet": b"a" * 3,
+        "year=2020/.part-0.parquet.crc": b"c",
+        "year=2021/part-1.parquet": b"b" * 5,
+        "year=2021/notes.txt": b"n" * 2,
+        "_SUCCESS": b"",
+        ".part-9.parquet.crc": b"c",
+        "_stats_index/part-s.parquet": b"s" * 7,
+        "_bloom_index/o_custkey/part-b.parquet": b"b" * 11,
+        "_staging_x/part-z.parquet": b"z" * 13,
+        ".hidden/part-h.parquet": b"h" * 17,
+    }
+    for rel, data in tree.items():
+        f = root / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(data)
+    uri = f"file:{root}"
+    visible = ["year=2020/part-0.parquet", "year=2021/notes.txt", "year=2021/part-1.parquet"]
+    by_name = visible + [
+        "_bloom_index/o_custkey/part-b.parquet",
+        "_stats_index/part-s.parquet",
+        "_staging_x/part-z.parquet",
+        ".hidden/part-h.parquet",
+    ]
+    for spelled in (str(root), f"file://{root}", f"{root}/"):
+        data = [f"{uri}/{r}" for r in visible if r.endswith(".parquet")]
+        assert list_files(spark, spelled) == data
+        assert list_files(spark, spelled, suffixes=None) == [f"{uri}/{r}" for r in visible]
+        assert file_mtimes(spark, spelled) == {
+            f"{uri}/{r}": os.stat(root / r).st_mtime_ns // 10**6 for r in visible
+        }
+        assert file_sizes(spark, spelled) == {f"{uri}/{r}": len(tree[r]) for r in by_name}
+        assert child_dirs(spark, spelled) == sorted(
+            [".hidden", "_bloom_index", "_staging_x", "_stats_index", "year=2020", "year=2021"]
+        )
+    assert child_dirs(spark, f"{root}/_bloom_index") == ["o_custkey"]
+    one = f"{root}/year=2020/part-0.parquet"
+    assert list_files(spark, one) == [f"file:{one}"]
+    sidecar = f"{root}/_stats_index/part-s.parquet"
+    assert list_files(spark, sidecar) == [f"file:{sidecar}"]
+    assert file_sizes(spark, f"{root}/_SUCCESS") == {}
+    assert list_files(spark, f"{root}/missing") == [] and child_dirs(spark, f"{root}/missing") == []
+
+
 def test_compaction_execution_never_materializes_groups(spark, tmp_ds_path, monkeypatch):
     """The executing fast paths must consume the plan as DataFrames
     (flat file list, one-row aggregates, pairs_df join side) — the

@@ -203,6 +203,16 @@ def test_merge_empty_source_noop(spark, tmp_ds_path):
     assert rows(ds, "id", "v") == [(1, "a")]
 
 
+def test_merge_rejects_a_source_sharing_no_column(spark, tmp_ds_path):
+    """Inferred keys need a shared column: with none the merge raises
+    before any write (an empty key set matched every target row)."""
+    ds = Dataset(tmp_ds_path, spark)
+    ds.merge(t(id=[1, 2], v=["a", "b"]), strategy="upsert", key_columns=["id"])
+    with pytest.raises(ValueError, match="share no column"):
+        ds.merge(t(other=[9]), strategy="upsert")
+    assert rows(ds, "id", "v") == [(1, "a"), (2, "b")]
+
+
 def test_merge_source_families(spark, tmp_ds_path):
     import duckdb
     import pandas as pd
@@ -497,6 +507,52 @@ def test_upsert_job_ceiling(spark, tmp_ds_path):
     assert r.target_count_before == 301 and r.target_count_after == 301
     assert spark.read.parquet(tmp_ds_path).count() == 301
     assert jobs <= 20, jobs  # 23 with the two semi-join jobs
+
+
+# Jobs of one upsert on the year-partitioned layout below, measured on a
+# 4-core machine: 12 once the target is scanned once (parent: 25, a
+# source count, a target count, a grouped file collect, a matched-keys
+# checkpoint, a partition-guard join and a split aggregate, each with
+# its own broadcast and AQE stage jobs).
+PARTITIONED_UPSERT_JOBS = 12
+MERGE_LABELS = {f"merge: {phase}" for phase in ("source", "discovery", "split", "insert", "rewrite")}
+
+
+def test_partitioned_upsert_scans_the_target_once(spark, tmp_ds_path):
+    """One source job, one discovery job over the target (the target
+    count, the matched files and the partition guard come from its
+    metrics), one split count over the matched-rows checkpoint, then the
+    two writes. Every job carries a ``merge: <phase>`` label."""
+    from conftest import spark_job_labels
+
+    from pydala2_spark.operators.merge import merge
+    from pydala2_spark.plans.fs import list_files
+    from pydala2_spark.sources.writer import Writer
+
+    w = Writer(spark, tmp_ds_path)
+    for lo in (0, 100, 200):
+        ids = list(range(lo, lo + 100))
+        w.write(
+            t(id=ids, v=[f"v{i}" for i in ids], year=[2020 + i % 3 for i in ids]),
+            mode="append",
+            partition_by=["year"],
+        )
+    src = t(id=[5, 150, 151, 400], v=["A", "B", "C", "D"], year=[2022, 2020, 2021, 2020])
+    files = list_files(spark, tmp_ds_path)
+    r, labels = spark_job_labels(
+        spark, lambda: merge(spark, tmp_ds_path, src, strategy="upsert", key_columns=["id"])
+    )
+    assert (r.source_count, r.updated, r.inserted) == (4, 3, 1)
+    assert (r.target_count_before, r.target_count_after) == (300, 301)
+    assert len(files) - len(r.preserved_files) == 3  # one matched file per year
+    assert r.rewritten_files and not set(r.rewritten_files) & set(files)
+    assert [f.split("/")[-2] for f in r.inserted_files] == ["year=2020"]
+    got = sorted(map(tuple, spark.read.parquet(tmp_ds_path).select("id", "v", "year").collect()))
+    want = {i: (f"v{i}", 2020 + i % 3) for i in range(300)}
+    want.update({5: ("A", 2022), 150: ("B", 2020), 151: ("C", 2021), 400: ("D", 2020)})
+    assert got == sorted((i, v, y) for i, (v, y) in want.items())
+    assert len(labels) <= PARTITIONED_UPSERT_JOBS, labels
+    assert set(labels) == MERGE_LABELS, labels
 
 
 @pytest.mark.parametrize("spelling", ["plain", "uri"])

@@ -400,6 +400,32 @@ def test_one_pruned_read():
     assert not offenders, offenders
 
 
+def test_one_listing_substrate():
+    """Every directory listing goes through ``plans/fs.py``, and that
+    module lists one directory at a time: no other module calls
+    ``listFiles``, ``listStatus`` or ``listLocatedStatus``, and
+    ``plans/fs.py`` never asks for a located status (``listFiles`` /
+    ``listLocatedStatus``), whose construction loads each entry's
+    permissions."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydala2_spark"
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("listFiles", "listStatus", "listLocatedStatus")
+            ):
+                calls.append((str(path.relative_to(root)), node.func.attr, node.lineno))
+    outside = [c for c in calls if c[0] != "plans/fs.py"]
+    located = [c for c in calls if c[1] != "listStatus"]
+    assert not outside and not located, (outside, located)
+    assert any(c[0] == "plans/fs.py" for c in calls)
+
+
 def test_dau_wau_mau_denies_nested_loop(spark, sf_dir):
     """dau_wau_mau's trailing windows are explode(sequence(0, w-1))
     equi-joins over the user-day grain — NOT range joins. The r11
