@@ -11,18 +11,23 @@ Layout::
 
     <dataset>/part-*.parquet            data files (plain parquet layout)
     <dataset>/_snapshots/v00000001.json one manifest per committed version
-    <dataset>/_snapshots_stage/<token>/ per-commit staging (transient)
+    <dataset>/_staging_<token>/         per-commit staging (transient)
 
-A commit writes its data files into a private staging directory,
-moves them into the dataset root (invisible to snapshot readers —
-they only follow manifests), then publishes a manifest via
-write-temp + atomic rename. Rename-to-existing fails on Hadoop
-filesystems, which gives optimistic concurrency for free: a commit
-that loses the race re-reads the new head, merges its (privately
-owned) files against the new parent, and retries the next version
-number. A crash at ANY point leaves every prior version readable;
-the only debris is orphaned data files, which ``vacuum`` removes
-because no manifest references them.
+A commit writes its data files through the append's publish step
+(``sources/writer.publish_staged``: a private staging directory, one
+retry of a failed write, then a move into the dataset root, invisible
+to snapshot readers — they only follow manifests), then publishes a
+manifest via write-temp + atomic rename. Rename-to-existing fails on
+Hadoop filesystems, which gives optimistic concurrency for free: every
+operation claims its version through one loop (``_commit``) that
+re-reads the head after a lost race, re-derives its file list against
+the new parent, and retries the next version number. A crash at ANY
+point leaves every prior version readable; the only debris is
+orphaned data files, which ``vacuum`` removes because no manifest
+references them. A move that fails raises the append's
+:class:`~pydala2_spark.errors.PartialWriteError` and publishes no
+manifest: the files already moved are such orphans, the rest stay in
+the staging directory it names.
 
 OBJECT STORES: the rename-based optimistic lock requires atomic
 fail-on-existing rename, which object stores do not provide (S3A
@@ -322,39 +327,44 @@ class SnapshotDataset:
 
     # -- commit -----------------------------------------------------------
 
-    def _stage_and_move(
-        self,
-        df: DataFrame,
-        partition_by: list[str] | None,
-        compression: str,
-        max_rows_per_file: int,
-    ) -> list[str]:
-        """Write ``df`` into a private staging dir, move the files into
-        the dataset root (names only — no data copy on a same-FS
-        rename), and return their root-relative paths. The files are
-        invisible to snapshot readers until a manifest references
-        them."""
-        from pydala2_spark.plans.fs import delete_paths, list_files, mkdirs, qualified, rename
-        from pydala2_spark.sources.writer import parquet_writer
+    def _commit(self, operation: str, step, schema_json: str | None = None, **fields) -> dict | None:
+        """The one optimistic commit loop. Each try reads the head and
+        calls ``step(head_manifest)`` (None when there is no version
+        yet), which returns the new version's files — or None to
+        abandon the commit, or raises to abort it. The manifest carries
+        ``operation``, those files, ``schema_json`` (the head's when
+        None) and ``fields``; :meth:`_try_publish` claims the version,
+        and a lost race re-reads the head."""
+        for _ in range(_MAX_COMMIT_RETRIES):
+            head = self.current_version()
+            m = self._read_manifest(head) if head is not None else None
+            files = step(m)
+            if files is None:
+                return None
+            manifest = {
+                "version": (head or 0) + 1,
+                "parent": head,
+                "operation": operation,
+                "files": sorted(set(files)),
+                "schema_json": m["schema_json"] if schema_json is None else schema_json,
+                "ts": time.time(),
+                **fields,
+            }
+            if self._try_publish(manifest):
+                return manifest
+        raise SnapshotConflictError(
+            f"{operation} lost the manifest race {_MAX_COMMIT_RETRIES} times at {self.path!r}"
+        )
 
-        stage = f"{self.path}/_snapshots_stage/{uuid.uuid4().hex}"
-        parquet_writer(df, "overwrite", compression, max_rows_per_file, partition_by).parquet(stage)
+    def _listing(self):
+        """``(rel, path, size_bytes, mtime_ms)`` of every visible file
+        under the root, in one walk; ``rel`` is the manifest spelling
+        (relative to the qualified root the listing reports)."""
+        from pydala2_spark.plans.fs import iter_file_statuses, qualified
 
-        qstage = qualified(self.spark, stage)
-        own: list[str] = []
-        for f in list_files(self.spark, stage, suffixes=(".parquet",)):
-            qf = f if f.startswith(qstage) else qualified(self.spark, f)
-            rel = qf[len(qstage) :].lstrip("/")
-            dest = f"{self.path}/{rel}"
-            parent_dir = posixpath.dirname(dest)
-            if parent_dir != self.path:
-                mkdirs(self.spark, parent_dir)
-            if not rename(self.spark, f, dest):
-                delete_paths(self.spark, [stage])
-                raise IOError(f"could not move staged file into dataset: {rel}")
-            own.append(rel)
-        delete_paths(self.spark, [stage])
-        return own
+        base = qualified(self.spark, self.path).rstrip("/") + "/"
+        for p, size, mtime in iter_file_statuses(self.spark, self.path):
+            yield (p[len(base):] if p.startswith(base) else p), p, size, mtime
 
     def commit(
         self,
@@ -375,31 +385,17 @@ class SnapshotDataset:
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        self._publish_guard()
+        from pydala2_spark.sources.writer import parquet_writer, publish_staged
 
-        own = self._stage_and_move(df, partition_by, compression, max_rows_per_file)
-        schema_json = df.schema.json()
-        for _ in range(_MAX_COMMIT_RETRIES):
-            head = self.current_version()
-            parent_files = (
-                self._read_manifest(head)["files"]
-                if (mode == "append" and head is not None)
-                else []
-            )
-            manifest = {
-                "version": (head or 0) + 1,
-                "parent": head,
-                "operation": mode,
-                "files": sorted(set(parent_files) | set(own)),
-                "added": sorted(own),
-                "schema_json": schema_json,
-                "ts": time.time(),
-                **({"extra": extra} if extra else {}),
-            }
-            if self._try_publish(manifest):
-                return manifest
-        raise SnapshotConflictError(
-            f"lost the manifest race {_MAX_COMMIT_RETRIES} times at {self.path!r}"
+        self._publish_guard()
+        w = parquet_writer(df, "error", compression, max_rows_per_file, partition_by)
+        own = publish_staged(self.spark, w, self.path)
+        return self._commit(
+            mode,
+            lambda m: (m["files"] if mode == "append" and m else []) + own,
+            df.schema.json(),
+            added=sorted(own),
+            **({"extra": extra} if extra else {}),
         )
 
     def last_stream_batch(self, checkpoint_id: str) -> int | None:
@@ -455,6 +451,7 @@ class SnapshotDataset:
         retry could resurrect rows a racing overwrite removed)."""
         from pydala2_spark.operators.merge import _delete_discovery, _filter_to_files, _replacement
         from pydala2_spark.plans.fs import decoded_path_col, qualified, schemeless
+        from pydala2_spark.sources.writer import parquet_writer, publish_staged
 
         self._publish_guard()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -507,28 +504,23 @@ class SnapshotDataset:
         replacement = _replacement(
             _filter_to_files(tagged, matched_rel, "__rel"), pred, assigns, ["__f", "__rel"]
         )
-        own = self._stage_and_move(
-            replacement, partition_by, compression, max_rows_per_file
-        )
-        manifest = {
-            "version": head + 1,
-            "parent": head,
-            "operation": "delete_where" if assigns is None else "update_where",
-            "files": sorted(
-                [f for f in m["files"] if f not in matched_set] + list(own)
-            ),
-            "added": sorted(own),
-            "removed": matched_rel,
-            "schema_json": m["schema_json"],
-            "ts": time.time(),
-        }
-        if not self._try_publish(manifest):
-            raise SnapshotConflictError(
-                f"concurrent commit won version {head + 1} at {self.path!r} "
-                f"during row-level {manifest['operation']}; re-run against "
-                f"the new head (staged files are unreferenced and will be "
-                f"vacuumed as orphans)"
-            )
+        w = parquet_writer(replacement, "error", compression, max_rows_per_file, partition_by)
+        own = publish_staged(self.spark, w, self.path)
+        operation = "delete_where" if assigns is None else "update_where"
+
+        def step(cur: dict | None) -> list[str]:
+            # no retry: blind re-derivation could resurrect rows a
+            # racing overwrite removed
+            if cur is None or cur["version"] != head:
+                raise SnapshotConflictError(
+                    f"concurrent commit won version {head + 1} at {self.path!r} "
+                    f"during row-level {operation}; re-run against "
+                    f"the new head (staged files are unreferenced and will be "
+                    f"vacuumed as orphans)"
+                )
+            return [f for f in cur["files"] if f not in matched_set] + own
+
+        self._commit(operation, step, added=sorted(own), removed=matched_rel)
         return {"rows": n_rows, "matched_files": matched_rel, "version": head + 1}
 
     # -- tags (named immutable versions) -----------------------------------
@@ -798,23 +790,17 @@ class SnapshotDataset:
         atomic publish. To recluster everything (not just small files)
         pass ``small_file_max_bytes`` larger than any file.
         """
-        from pydala2_spark.plans.fs import file_sizes, qualified
+        from pydala2_spark.sources.writer import parquet_writer, publish_staged
 
         self._publish_guard()
         head = self.current_version()
         if head is None:
             return None
         m = self._read_manifest(head)
-        base = qualified(self.spark, self.path)
-        sizes = file_sizes(self.spark, self.path)
-        rel_size = {
-            (q[len(base) :].lstrip("/") if q.startswith(base) else q): s
-            for q, s in sizes.items()
-        }
+        rel_size = {rel: size for rel, _, size, _ in self._listing()}
         smalls = [f for f in m["files"] if rel_size.get(f, 0) <= small_file_max_bytes]
         if len(smalls) < 2:
             return None
-        survivors = [f for f in m["files"] if f not in set(smalls)]
 
         total = sum(rel_size.get(f, 0) for f in smalls)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
@@ -823,7 +809,6 @@ class SnapshotDataset:
         )
         if cluster_by:
             from pydala2_spark.operators.maintenance import zorder_expr
-            from pyspark.sql import functions as F
 
             df = (
                 df.withColumn("__z", zorder_expr(df, list(cluster_by)))
@@ -833,40 +818,26 @@ class SnapshotDataset:
             )
         else:
             df = df.repartition(int(n_out))
-        own = self._stage_and_move(df, None, compression, 10_000_000)
+        w = parquet_writer(df, "error", compression, 10_000_000)
+        own = publish_staged(self.spark, w, self.path)
+        small_set = set(smalls)
 
-        schema_json = m["schema_json"]
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version()
-            if cur != head:
-                # another commit landed mid-compaction: keep its files,
-                # swap only small→compacted — but ONLY if every small
-                # file is still referenced by the new head. An
-                # overwrite (or a racing compact) that dropped any of
-                # them means our rewrite contains rows the new head
-                # deleted; publishing would resurrect them. Abandon:
-                # our moved files are unreferenced debris for vacuum.
-                latest = self._read_manifest(cur)
-                if not set(smalls) <= set(latest["files"]):
-                    from pydala2_spark.plans.fs import delete_paths
+        def step(cur: dict | None) -> list[str] | None:
+            # swap only small→compacted, keeping whatever else the head
+            # holds — but ONLY while every small file is still
+            # referenced. A concurrent overwrite (or a racing compact)
+            # that dropped any of them means our rewrite holds rows the
+            # head deleted; publishing would resurrect them. Abandon,
+            # deleting our moved (unreferenced) files.
+            files = cur["files"] if cur else []
+            if not small_set <= set(files):
+                from pydala2_spark.plans.fs import delete_paths
 
-                    delete_paths(self.spark, [f"{self.path}/{rel}" for rel in own])
-                    return None
-                survivors = [f for f in latest["files"] if f not in set(smalls)]
-                schema_json = latest["schema_json"]
-                head = cur
-            manifest = {
-                "version": (head or 0) + 1,
-                "parent": head,
-                "operation": "compact",
-                "files": sorted(set(survivors) | set(own)),
-                "added": sorted(own),
-                "schema_json": schema_json,
-                "ts": time.time(),
-            }
-            if self._try_publish(manifest):
-                return manifest
-        raise SnapshotConflictError(f"compact lost the manifest race at {self.path!r}")
+                delete_paths(self.spark, [f"{self.path}/{rel}" for rel in own])
+                return None
+            return [f for f in files if f not in small_set] + own
+
+        return self._commit("compact", step, added=sorted(own))
 
     def file_stats(self, version: int | None = None):
         """Footer-only stats table over exactly one version's manifest
@@ -916,33 +887,21 @@ class SnapshotDataset:
         already removed. (A vacuum racing BETWEEN the check and the
         publish can still win — don't run retention and rollback for
         the same dataset concurrently.)"""
-        from pydala2_spark.plans.fs import path_exists
-
         self._publish_guard()
         target = self._read_manifest(version)  # raises if absent
-        gone = [
-            rel for rel in target["files"]
-            if not path_exists(self.spark, f"{self.path}/{rel}")
-        ]
+        present = {rel for rel, _, _, _ in self._listing()}
+        gone = [rel for rel in target["files"] if rel not in present]
         if gone:
             raise ValueError(
                 f"cannot roll back to version {version}: {len(gone)} of its "
                 f"file(s) were vacuumed (e.g. {gone[0]})"
             )
-        for _ in range(_MAX_COMMIT_RETRIES):
-            head = self.current_version()
-            manifest = {
-                "version": (head or 0) + 1,
-                "parent": head,
-                "operation": f"rollback:{version}",
-                "files": target["files"],
-                "added": [],
-                "schema_json": target["schema_json"],
-                "ts": time.time(),
-            }
-            if self._try_publish(manifest):
-                return manifest
-        raise SnapshotConflictError(f"rollback lost the manifest race at {self.path!r}")
+        return self._commit(
+            f"rollback:{version}",
+            lambda m: target["files"],
+            target["schema_json"],
+            added=[],
+        )
 
     # -- vacuum -----------------------------------------------------------
 
@@ -966,14 +925,7 @@ class SnapshotDataset:
         Iceberg orphan-retention rule). Pass 0 only when no writer can
         be active.
         """
-        import time as _time
-
-        from pydala2_spark.plans.fs import (
-            delete_paths,
-            file_mtimes,
-            list_files,
-            qualified,
-        )
+        from pydala2_spark.plans.fs import delete_paths
 
         versions = self.versions()
         if not versions:
@@ -997,22 +949,14 @@ class SnapshotDataset:
         for v in drop_versions:
             dropped_referenced.update(self._read_manifest(v)["files"])
 
-        base = qualified(self.spark, self.path)
-        mtimes = file_mtimes(self.spark, self.path)
-        cutoff_ms = (_time.time() - orphan_grace_seconds) * 1000
-        doomed = []
-        for f in list_files(self.spark, self.path, suffixes=(".parquet",)):
-            q = qualified(self.spark, f)
-            rel = q[len(base) :].lstrip("/") if q.startswith(base) else q
-            if rel in referenced:
-                continue
-            # a file listed but missing from the mtimes walk appeared
-            # BETWEEN the two listings — i.e. it is being committed
-            # right now; treat unknown age as "just created" (keep),
-            # never as infinitely old
-            mtime = mtimes.get(q, mtimes.get(f))
-            if rel in dropped_referenced or (mtime is not None and mtime <= cutoff_ms):
-                doomed.append(f)
+        cutoff_ms = (time.time() - orphan_grace_seconds) * 1000
+        doomed = [
+            p
+            for rel, p, _, mtime in self._listing()
+            if p.endswith(".parquet")
+            and rel not in referenced
+            and (rel in dropped_referenced or mtime <= cutoff_ms)
+        ]
         n_files = delete_paths(self.spark, doomed)
         n_manifests = delete_paths(
             self.spark, [self._manifest_path(v) for v in drop_versions]

@@ -394,27 +394,35 @@ class BaseDataset:
         """
         from pydala2_spark.sources.writer import Writer
 
-        update_metadata = bool(kwargs.pop("update_metadata", False))
-        if update_metadata and self.format != "parquet":
+        if kwargs.get("update_metadata") and self.format != "parquet":
             raise ValueError(
                 "update_metadata=True requires a parquet dataset (the "
                 f"skipping sidecars are parquet-footer-derived); format={self.format!r}"
             )
-        writer = Writer(self.spark, self.path, format=self.format)
-        writer.write(
+        self._mutate(
+            Writer(self.spark, self.path, format=self.format).write,
             data,
             mode=mode,
             partition_by=kwargs.pop("partition_by", None) or self.partitioning or None,
             timestamp_column=kwargs.pop("timestamp_column", None) or self.timestamp_column,
             **kwargs,
         )
+
+    write = write_to_dataset
+
+    def _mutate(self, op, *args, **kw):
+        """The tail every mutating facade call shares: run ``op`` with
+        ``kw`` minus ``update_metadata``, drop the cached frame, and
+        with ``update_metadata=True`` fold the touched files into the
+        skipping sidecars (`pydala/dataset.py:1479-1530`)."""
+        update_metadata = bool(kw.pop("update_metadata", False))
+        out = op(*args, **kw)
         self.clear_cache()
         if update_metadata:
             from pydala2_spark.plans.analyze import refresh_metadata
 
             refresh_metadata(self.spark, self.path)
-
-    write = write_to_dataset
+        return out
 
     def vacuum(self) -> None:
         """Delete every data file of the dataset (`pydala/dataset.py:607-638`).
@@ -518,24 +526,21 @@ class ParquetDataset(BaseDataset):
         (added AND rewritten-away) into the existing skipping sidecars."""
         from pydala2_spark.operators.merge import merge as _merge
 
-        update_metadata = bool(kw.pop("update_metadata", False))
-        result = _merge(
-            self.spark,
-            target_path=self.path,
-            source=data,
-            strategy=strategy,
-            key_columns=key_columns,
-            partition_by=partition_by or self.partitioning or None,
-            **kw,
-        )
-        if partition_by and not self.partitioning:
-            self.partitioning = list(partition_by)
-        self.clear_cache()
-        if update_metadata:
-            from pydala2_spark.plans.analyze import refresh_metadata
+        def run(**opts):
+            result = _merge(
+                self.spark,
+                target_path=self.path,
+                source=data,
+                strategy=strategy,
+                key_columns=key_columns,
+                partition_by=partition_by or self.partitioning or None,
+                **opts,
+            )
+            if partition_by and not self.partitioning:
+                self.partitioning = list(partition_by)
+            return result
 
-            refresh_metadata(self.spark, self.path)
-        return result
+        return self._mutate(run, **kw)
 
     def delete_where(self, predicate, **kw) -> dict:
         """Row-level predicate DELETE with file-selective rewrite —
@@ -545,20 +550,9 @@ class ParquetDataset(BaseDataset):
         skipping sidecars in the same call."""
         from pydala2_spark.operators.merge import delete_where as _dw
 
-        update_metadata = bool(kw.pop("update_metadata", False))
-        out = _dw(
-            self.spark,
-            self.path,
-            predicate,
-            partition_by=self.partitioning or None,
-            **kw,
+        return self._mutate(
+            _dw, self.spark, self.path, predicate, partition_by=self.partitioning or None, **kw
         )
-        self.clear_cache()
-        if update_metadata:
-            from pydala2_spark.plans.analyze import refresh_metadata
-
-            refresh_metadata(self.spark, self.path)
-        return out
 
     def update_where(self, predicate, set: dict, **kw) -> dict:
         """Row-level predicate UPDATE with file-selective rewrite —
@@ -569,8 +563,8 @@ class ParquetDataset(BaseDataset):
         skipping sidecars in the same call."""
         from pydala2_spark.operators.merge import update_where as _uw
 
-        update_metadata = bool(kw.pop("update_metadata", False))
-        out = _uw(
+        return self._mutate(
+            _uw,
             self.spark,
             self.path,
             predicate,
@@ -578,12 +572,6 @@ class ParquetDataset(BaseDataset):
             partition_by=self.partitioning or None,
             **kw,
         )
-        self.clear_cache()
-        if update_metadata:
-            from pydala2_spark.plans.analyze import refresh_metadata
-
-            refresh_metadata(self.spark, self.path)
-        return out
 
     def refresh_metadata(self) -> dict:
         """Explicit sidecar sync — the same fused refresh that

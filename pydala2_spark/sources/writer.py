@@ -16,11 +16,13 @@ Spark-first realization:
   partitions present in the batch are replaced), the job-level analogue
   of the reference's write-new-then-delete-old (`pydala/dataset.py:995-1003`).
 
-Every other module writes parquet through the two functions below:
+Every other module writes parquet through the functions below:
 :func:`parquet_writer` (mode, compression, ``maxRecordsPerFile``,
-``partitionBy``) and :func:`replace_files`, the one rewrite step that
+``partitionBy``); :func:`replace_files`, the one rewrite step that
 row DML, merge and compaction share — append the replacement, then
-delete the replaced files, with one partial-failure contract.
+delete the replaced files, with one partial-failure contract; and
+:func:`publish_staged`, the one stage-and-move publish that appends
+and snapshot commits share.
 
 At 100 TB the same code holds: the write is a distributed job, file
 sizing is per-task, and derived date-part partition columns give
@@ -56,8 +58,8 @@ def parquet_writer(
     """The parquet write builder: ``mode`` + ``compression``, a
     per-file row cap when ``max_rows_per_file`` is set, and hive
     ``partitionBy`` when ``partition_by`` is non-empty. The caller
-    ends it with ``.parquet(path)``."""
-    w = df.write.mode(mode).option("compression", compression)
+    ends it with ``.parquet(path)`` or ``.save(path)``."""
+    w = df.write.format("parquet").mode(mode).option("compression", compression)
     if max_rows_per_file is not None:
         w = w.option("maxRecordsPerFile", str(max_rows_per_file))
     if partition_by:
@@ -136,6 +138,60 @@ def replace_files(
                 pending_deletes=still,
             )
     return written
+
+
+def publish_staged(spark: SparkSession, w: DataFrameWriter, root: str) -> list[str]:
+    """Save ``w`` into a hidden staging dir under ``root``, move each
+    staged file to the same relative path under ``root``, and return
+    the root-relative paths published — the one publish step of
+    appends (:meth:`Writer.write`) and snapshot commits
+    (``plans/snapshots``).
+
+    A failed save leaves data only under ``_staging_<token>`` (readers
+    skip ``_``-prefixed paths); it is deleted and the save retried
+    once, so a retry can never double-append (the failure mode of a
+    naive save-again retry). The moves are renames of names, not data:
+    one listing of the staging dir, one ``mkdirs`` per distinct
+    partition directory, one rename per file. If a move fails,
+    :class:`~pydala2_spark.errors.PartialWriteError` carries the files
+    already moved and the staging dir still holding the rest
+    (reference contract, `pydala/io.py:41-55`).
+    """
+    import posixpath
+    import uuid
+
+    from pydala2_spark.errors import PartialWriteError
+    from pydala2_spark.plans.fs import delete_paths, list_files, mkdirs, rename
+
+    root = root.rstrip("/")
+    token = uuid.uuid4().hex[:12]
+    staging = f"{root}/_staging_{token}"
+    for attempt in (1, 2):
+        try:
+            w.save(staging)
+            break
+        except Exception:
+            delete_paths(spark, [staging])
+            if attempt == 2:
+                raise
+    published: list[str] = []
+    try:
+        sep = f"/_staging_{token}/"
+        moves = [(f, f.split(sep, 1)[1]) for f in list_files(spark, staging)]
+        for d in sorted({posixpath.dirname(rel) for _, rel in moves} - {""}):
+            mkdirs(spark, f"{root}/{d}")
+        for f, rel in moves:
+            if not rename(spark, f, f"{root}/{rel}"):
+                raise IOError(f"rename failed: {f} -> {root}/{rel}")
+            published.append(rel)
+    except Exception as e:
+        raise PartialWriteError(
+            f"staged write to {root!r} failed during publish: {e}",
+            files=[f"{root}/{rel}" for rel in published],
+            staging_dir=staging,
+        ) from e
+    delete_paths(spark, [staging])
+    return published
 
 
 def to_spark_df(spark: SparkSession, data: Any) -> DataFrame:
@@ -298,39 +354,31 @@ class Writer:
             # min/max stats for later pruning; no global shuffle.
             df = df.sortWithinPartitions(*to_sort_columns(sort_by))
 
-        def build(target_mode: str):
-            w = (
-                df.write.format(self.format)
-                .mode(target_mode)
-                .option("maxRecordsPerFile", str(max_rows_per_file))
-            )
-            if self.format == "parquet":
-                w = w.option("compression", compression)
-                # NATIVE parquet bloom filters: written into each
-                # row group's metadata, so ANY parquet reader (Spark,
-                # DuckDB, Trino) prunes row groups on point lookups —
-                # the in-file complement to plans/bloom.py's per-FILE
-                # sidecars (those skip whole files without opening
-                # them; these skip row groups inside opened files).
-                # expected.ndv sizes the filter (default 1M NDV writes
-                # ~1 MiB per column per row group — pass the real
-                # cardinality to shrink it ~NDV/1M-fold)
-                for c in bloom_filter_columns or []:
-                    w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-                    ndv = (
-                        bloom_filter_ndv.get(c)
-                        if isinstance(bloom_filter_ndv, dict)
-                        else bloom_filter_ndv
-                    )
-                    if ndv:
-                        w = w.option(
-                            f"parquet.bloom.filter.expected.ndv#{c}", str(int(ndv))
-                        )
-            if self.format == "csv":
-                w = w.option("header", "true")
-            if partition_cols:
-                w = w.partitionBy(*partition_cols)
-            return w
+        w = df.write.format(self.format).option("maxRecordsPerFile", str(max_rows_per_file))
+        if self.format == "parquet":
+            w = w.option("compression", compression)
+            # NATIVE parquet bloom filters: written into each
+            # row group's metadata, so ANY parquet reader (Spark,
+            # DuckDB, Trino) prunes row groups on point lookups —
+            # the in-file complement to plans/bloom.py's per-FILE
+            # sidecars (those skip whole files without opening
+            # them; these skip row groups inside opened files).
+            # expected.ndv sizes the filter (default 1M NDV writes
+            # ~1 MiB per column per row group — pass the real
+            # cardinality to shrink it ~NDV/1M-fold)
+            for c in bloom_filter_columns or []:
+                w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
+                ndv = (
+                    bloom_filter_ndv.get(c)
+                    if isinstance(bloom_filter_ndv, dict)
+                    else bloom_filter_ndv
+                )
+                if ndv:
+                    w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(int(ndv)))
+        if self.format == "csv":
+            w = w.option("header", "true")
+        if partition_cols:
+            w = w.partitionBy(*partition_cols)
 
         # Retry policy (reference retries dataset writes x2,
         # `pydala/io.py:624-664`), made IDEMPOTENT per mode:
@@ -344,77 +392,29 @@ class Writer:
         # - error: never retried — after a failed first attempt the
         #   path may exist, and the retry would bury the real error
         #   under path-already-exists;
-        # - append: staged (below) — a naive re-run after a partial
-        #   commit would double-append.
+        # - append: staged (publish_staged) — a naive re-run after a
+        #   partial commit would double-append.
         from pyspark.errors import AnalysisException
 
         from pydala2_spark.plans.fs import path_exists
 
-        if mode != "append":
-            pre_existing = mode == "ignore" and path_exists(self.spark, self.path)
-            try:
-                build(mode).save(self.path)
-            except AnalysisException:
-                raise  # deterministic (schema/path) — retrying can't help
-            except Exception:
-                if mode == "error":
-                    raise
-                if mode == "ignore" and not pre_existing:
-                    raise
-                build(mode).save(self.path)
+        if mode == "append":
+            publish_staged(self.spark, w.mode("error"), self.path)
             return
-
-        self._append_staged(build)
+        pre_existing = mode == "ignore" and path_exists(self.spark, self.path)
+        w = w.mode(mode)
+        try:
+            w.save(self.path)
+        except AnalysisException:
+            raise  # deterministic (schema/path) — retrying can't help
+        except Exception:
+            if mode == "error":
+                raise
+            if mode == "ignore" and not pre_existing:
+                raise
+            w.save(self.path)
 
     execute = write
-
-    def _append_staged(self, build) -> None:
-        """Append = write to a hidden staging dir, then publish by
-        renaming files into place.
-
-        The job commit and every publish step are rename-based, so a
-        first attempt that dies mid-write leaves data only under
-        ``_staging_*`` (readers skip ``_``-prefixed paths) and the
-        retry re-runs against a clean slate — no double-append, the
-        failure mode of the naive save-again retry. If the PUBLISH
-        itself dies partway, PartialWriteError carries what moved and
-        where the rest still lives (reference contract,
-        `pydala/io.py:41-55`).
-        """
-        import uuid
-
-        from pydala2_spark.errors import PartialWriteError
-        from pydala2_spark.plans.fs import delete_paths, list_files, mkdirs, rename
-
-        spark = self.spark
-        token = uuid.uuid4().hex[:12]
-        staging = f"{self.path.rstrip('/')}/_staging_{token}"
-        for attempt in (1, 2):
-            try:
-                build("error").save(staging)
-                break
-            except Exception:
-                delete_paths(spark, [staging])
-                if attempt == 2:
-                    raise
-        published: list[str] = []
-        sep = f"/_staging_{token}/"
-        try:
-            for f in list_files(spark, staging):
-                rel = f.split(sep, 1)[1]
-                dst = f"{self.path.rstrip('/')}/{rel}"
-                if "/" in rel:
-                    mkdirs(spark, dst.rsplit("/", 1)[0])
-                if not rename(spark, f, dst):
-                    raise IOError(f"rename failed: {f} -> {dst}")
-                published.append(dst)
-        except Exception as e:
-            raise PartialWriteError(
-                f"append to {self.path!r} failed during publish: {e}",
-                files=published,
-                staging_dir=staging,
-            ) from e
-        delete_paths(spark, [staging])
 
 
 # -- bucketed write (co-located joins) --------------------------------

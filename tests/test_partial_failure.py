@@ -90,6 +90,31 @@ def test_append_publish_failure_surfaces_partial_write_error(
     assert read_rows(spark, tmp_ds_path, "id", "v") == [(1, "a"), (2, "b")]
 
 
+def test_snapshot_commit_move_failure_publishes_no_version(spark, tmp_ds_path, monkeypatch):
+    """Snapshot commits publish through the append's staged step: a
+    move that fails raises the same PartialWriteError, no manifest is
+    published, and readers stay on the previous version."""
+    import pydala2_spark.plans.fs as fs
+    from pydala2_spark.plans.snapshots import SnapshotDataset
+
+    ds = SnapshotDataset(spark, tmp_ds_path)
+    ds.commit(spark.createDataFrame([(1, "a")], "id long, v string"))
+
+    def failing_rename(spark_, src, dst):
+        raise IOError("injected publish failure")
+
+    monkeypatch.setattr(fs, "rename", failing_rename)
+    with pytest.raises(PartialWriteError) as ei:
+        ds.commit(spark.createDataFrame([(2, "b")], "id long, v string"))
+    monkeypatch.undo()
+
+    err = ei.value
+    assert err.files == [] and "/_staging_" in err.staging_dir
+    assert fs.list_files(spark, err.staging_dir), "unmoved files stay staged"
+    assert ds.versions() == [1]
+    assert sorted((r["id"], r["v"]) for r in ds.read().collect()) == [(1, "a")]
+
+
 def test_error_mode_not_retried(spark, tmp_ds_path):
     from pydala2_spark.sources.writer import Writer
 

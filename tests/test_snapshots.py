@@ -187,6 +187,41 @@ def test_empty_commit_and_schema_recovery(spark, tmp_ds_path):
     assert got.columns == ["id", "tag"]
 
 
+def test_manifest_keys_per_operation(spark, tmp_ds_path):
+    """Every operation claims its version through one commit loop; the
+    on-disk manifest keeps exactly each operation's keys (``removed``
+    only on row-level DML, ``extra`` only when given)."""
+    base = {"version", "parent", "operation", "files", "added", "schema_json", "ts"}
+    ds = SnapshotDataset(spark, tmp_ds_path)
+    got = {
+        "append": ds.commit(_df(spark, 0, 10, "a")),
+        "append+extra": ds.commit(_df(spark, 10, 20, "b"), extra={"k": 1}),
+        "overwrite": ds.commit(_df(spark, 0, 5, "c").repartition(2), mode="overwrite"),
+    }
+    ds.commit(_df(spark, 5, 8, "d"))
+    got["compact"] = ds.compact()
+    got["rollback"] = ds.rollback(2)
+    for op, pred, kw in (("delete_where", "id = 3", {}), ("update_where", "id = 4", {"set": {"tag": "'u'"}})):
+        v = getattr(ds, op)(pred, **kw)["version"]
+        got[op] = ds._read_manifest(v)
+    want = {
+        "append": base,
+        "append+extra": base | {"extra"},
+        "overwrite": base,
+        "compact": base,
+        "rollback": base,
+        "delete_where": base | {"removed"},
+        "update_where": base | {"removed"},
+    }
+    for op, m in got.items():
+        assert set(m) == want[op], op
+        assert m == ds._read_manifest(m["version"]), op  # returned == on disk
+        assert (m["parent"] or 0) == m["version"] - 1, op
+    assert got["rollback"]["operation"] == "rollback:2" and got["rollback"]["added"] == []
+    assert got["compact"]["operation"] == "compact"
+    assert got["append+extra"]["extra"] == {"k": 1}
+
+
 def test_read_without_snapshots_raises(spark, tmp_ds_path):
     ds = SnapshotDataset(spark, tmp_ds_path)
     with pytest.raises(ValueError):

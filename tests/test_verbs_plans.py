@@ -325,6 +325,45 @@ def test_one_sidecar_publish():
     assert not outside, "\n".join(outside)
 
 
+def test_one_staged_publish():
+    """Appends and snapshot commits publish through one step,
+    ``sources/writer.publish_staged``: only ``sources/writer.py``
+    spells the ``_staging_`` directory (the ``__staging`` side dirs of
+    whole-directory swaps are another mechanism), nothing spells a
+    snapshot-private stage, and every snapshot version is claimed from
+    one commit loop."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pydala2_spark"
+    staging = re.compile(r"(?<!_)_staging_")
+    gone = ("_snapshots_stage", "_append_staged", "_stage_and_move")
+    spellers, hits = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        text = path.read_text()
+        hits += [f"{rel}: {g}" for g in gone if g in text]
+        tree = ast.parse(text)
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+        }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
+                if staging.search(n.value):
+                    spellers.add(rel)
+    assert not hits, hits
+    assert spellers == {"sources/writer.py"}, spellers
+
+    snap = (root / "plans" / "snapshots.py").read_text()
+    assert snap.count("self._try_publish(") == 1, "one commit loop claims versions"
+    assert snap.count("range(_MAX_COMMIT_RETRIES)") == 1
+
+
 def test_one_pruned_read():
     """File skipping has one spelling of each part: only
     ``plans/stats.kept_files`` decides which listed files a pruned read
