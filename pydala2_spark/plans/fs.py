@@ -176,6 +176,23 @@ def copy_file(spark: SparkSession, src: str, dst: str) -> bool:
     )
 
 
+def root_relative(spark: SparkSession, path: str):
+    """The function spelling a file listed under ``path`` relative to
+    it (the manifest spelling): listings report paths under the
+    :func:`qualified` base, whatever spelling ``path`` has; a path
+    outside that base is returned as is."""
+    base = qualified(spark, path).rstrip("/") + "/"
+    return lambda f: f[len(base):] if f.startswith(base) else f
+
+
+def rel_statuses(spark: SparkSession, path: str):
+    """:func:`iter_file_statuses` with each file's :func:`root_relative`
+    spelling first: ``(rel, path, size_bytes, mtime_ms)``."""
+    rel = root_relative(spark, path)
+    for p, size, mtime in iter_file_statuses(spark, path):
+        yield rel(p), p, size, mtime
+
+
 def partition_columns(
     spark: SparkSession, path: str, files: list[str] | None = None
 ) -> list[str]:
@@ -186,10 +203,9 @@ def partition_columns(
     however ``path`` is spelled. ``files`` is a :func:`list_files`
     listing of ``path`` the caller already holds; without it the
     dataset is listed once."""
-    base = qualified(spark, path).rstrip("/") + "/"
+    rel = root_relative(spark, path)
     for f in list_files(spark, path) if files is None else files:
-        rel = f[len(base):] if f.startswith(base) else f
-        names = [seg.split("=", 1)[0] for seg in rel.split("/")[:-1] if "=" in seg]
+        names = [seg.split("=", 1)[0] for seg in rel(f).split("/")[:-1] if "=" in seg]
         if names:
             return names
     return []

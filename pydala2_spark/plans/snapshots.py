@@ -22,12 +22,14 @@ Hadoop filesystems, which gives optimistic concurrency for free: every
 operation claims its version through one loop (``_commit``) that
 re-reads the head after a lost race, re-derives its file list against
 the new parent, and retries the next version number. A crash at ANY
-point leaves every prior version readable; the only debris is
-orphaned data files, which ``vacuum`` removes because no manifest
-references them. A move that fails raises the append's
-:class:`~pydala2_spark.errors.PartialWriteError` and publishes no
-manifest: the files already moved are such orphans, the rest stay in
-the staging directory it names.
+point leaves every prior version readable. A write or move that fails
+publishes no manifest: a move failure deletes the staging directory
+and raises the append's :class:`~pydala2_spark.errors.PartialWriteError`,
+and the files already moved are orphans, which ``vacuum`` removes
+because no manifest references them. Only a process that dies
+mid-publish leaves its ``_staging_<token>`` directory behind; vacuum
+does not list ``_``-prefixed directories, so that one is removed by
+hand.
 
 OBJECT STORES: the rename-based optimistic lock requires atomic
 fail-on-existing rename, which object stores do not provide (S3A
@@ -356,15 +358,32 @@ class SnapshotDataset:
             f"{operation} lost the manifest race {_MAX_COMMIT_RETRIES} times at {self.path!r}"
         )
 
-    def _listing(self):
-        """``(rel, path, size_bytes, mtime_ms)`` of every visible file
-        under the root, in one walk; ``rel`` is the manifest spelling
-        (relative to the qualified root the listing reports)."""
-        from pydala2_spark.plans.fs import iter_file_statuses, qualified
+    def _stage(
+        self, df: DataFrame, compression: str, max_rows_per_file: int, partition_by=None
+    ) -> list[str]:
+        """Move ``df``'s rows into the root as unreferenced files through
+        the append's publish step and return their root-relative paths.
+        No manifest can adopt files left staged, so a failed move
+        deletes the staging dir before re-raising the
+        :class:`~pydala2_spark.errors.PartialWriteError` (its
+        ``staging_dir`` is then None); the files already moved are
+        orphans :meth:`vacuum` reclaims."""
+        from pydala2_spark.errors import PartialWriteError
+        from pydala2_spark.plans.fs import delete_paths
+        from pydala2_spark.sources.writer import parquet_writer, publish_staged
 
-        base = qualified(self.spark, self.path).rstrip("/") + "/"
-        for p, size, mtime in iter_file_statuses(self.spark, self.path):
-            yield (p[len(base):] if p.startswith(base) else p), p, size, mtime
+        w = parquet_writer(
+            df,
+            compression=compression,
+            max_rows_per_file=max_rows_per_file,
+            partition_by=partition_by,
+        )
+        try:
+            return publish_staged(self.spark, w, self.path)
+        except PartialWriteError as e:
+            delete_paths(self.spark, [e.staging_dir])
+            e.staging_dir = None
+            raise
 
     def commit(
         self,
@@ -385,11 +404,8 @@ class SnapshotDataset:
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        from pydala2_spark.sources.writer import parquet_writer, publish_staged
-
         self._publish_guard()
-        w = parquet_writer(df, "error", compression, max_rows_per_file, partition_by)
-        own = publish_staged(self.spark, w, self.path)
+        own = self._stage(df, compression, max_rows_per_file, partition_by)
         return self._commit(
             mode,
             lambda m: (m["files"] if mode == "append" and m else []) + own,
@@ -451,7 +467,6 @@ class SnapshotDataset:
         retry could resurrect rows a racing overwrite removed)."""
         from pydala2_spark.operators.merge import _delete_discovery, _filter_to_files, _replacement
         from pydala2_spark.plans.fs import decoded_path_col, qualified, schemeless
-        from pydala2_spark.sources.writer import parquet_writer, publish_staged
 
         self._publish_guard()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -504,8 +519,7 @@ class SnapshotDataset:
         replacement = _replacement(
             _filter_to_files(tagged, matched_rel, "__rel"), pred, assigns, ["__f", "__rel"]
         )
-        w = parquet_writer(replacement, "error", compression, max_rows_per_file, partition_by)
-        own = publish_staged(self.spark, w, self.path)
+        own = self._stage(replacement, compression, max_rows_per_file, partition_by)
         operation = "delete_where" if assigns is None else "update_where"
 
         def step(cur: dict | None) -> list[str]:
@@ -790,14 +804,14 @@ class SnapshotDataset:
         atomic publish. To recluster everything (not just small files)
         pass ``small_file_max_bytes`` larger than any file.
         """
-        from pydala2_spark.sources.writer import parquet_writer, publish_staged
+        from pydala2_spark.plans.fs import rel_statuses
 
         self._publish_guard()
         head = self.current_version()
         if head is None:
             return None
         m = self._read_manifest(head)
-        rel_size = {rel: size for rel, _, size, _ in self._listing()}
+        rel_size = {rel: size for rel, _, size, _ in rel_statuses(self.spark, self.path)}
         smalls = [f for f in m["files"] if rel_size.get(f, 0) <= small_file_max_bytes]
         if len(smalls) < 2:
             return None
@@ -818,8 +832,7 @@ class SnapshotDataset:
             )
         else:
             df = df.repartition(int(n_out))
-        w = parquet_writer(df, "error", compression, 10_000_000)
-        own = publish_staged(self.spark, w, self.path)
+        own = self._stage(df, compression, 10_000_000)
         small_set = set(smalls)
 
         def step(cur: dict | None) -> list[str] | None:
@@ -887,9 +900,11 @@ class SnapshotDataset:
         already removed. (A vacuum racing BETWEEN the check and the
         publish can still win — don't run retention and rollback for
         the same dataset concurrently.)"""
+        from pydala2_spark.plans.fs import rel_statuses
+
         self._publish_guard()
         target = self._read_manifest(version)  # raises if absent
-        present = {rel for rel, _, _, _ in self._listing()}
+        present = {rel for rel, _, _, _ in rel_statuses(self.spark, self.path)}
         gone = [rel for rel in target["files"] if rel not in present]
         if gone:
             raise ValueError(
@@ -925,7 +940,7 @@ class SnapshotDataset:
         Iceberg orphan-retention rule). Pass 0 only when no writer can
         be active.
         """
-        from pydala2_spark.plans.fs import delete_paths
+        from pydala2_spark.plans.fs import delete_paths, rel_statuses
 
         versions = self.versions()
         if not versions:
@@ -952,7 +967,7 @@ class SnapshotDataset:
         cutoff_ms = (time.time() - orphan_grace_seconds) * 1000
         doomed = [
             p
-            for rel, p, _, mtime in self._listing()
+            for rel, p, _, mtime in rel_statuses(self.spark, self.path)
             if p.endswith(".parquet")
             and rel not in referenced
             and (rel in dropped_referenced or mtime <= cutoff_ms)

@@ -526,21 +526,19 @@ class ParquetDataset(BaseDataset):
         (added AND rewritten-away) into the existing skipping sidecars."""
         from pydala2_spark.operators.merge import merge as _merge
 
-        def run(**opts):
-            result = _merge(
-                self.spark,
-                target_path=self.path,
-                source=data,
-                strategy=strategy,
-                key_columns=key_columns,
-                partition_by=partition_by or self.partitioning or None,
-                **opts,
-            )
-            if partition_by and not self.partitioning:
-                self.partitioning = list(partition_by)
-            return result
-
-        return self._mutate(run, **kw)
+        result = self._mutate(
+            _merge,
+            self.spark,
+            target_path=self.path,
+            source=data,
+            strategy=strategy,
+            key_columns=key_columns,
+            partition_by=partition_by or self.partitioning or None,
+            **kw,
+        )
+        if partition_by and not self.partitioning:
+            self.partitioning = list(partition_by)
+        return result
 
     def delete_where(self, predicate, **kw) -> dict:
         """Row-level predicate DELETE with file-selective rewrite —

@@ -50,7 +50,7 @@ DEFAULT_COMPRESSION = "zstd"  # reference default, pydala/dataset.py:888
 
 def parquet_writer(
     df: DataFrame,
-    mode: str,
+    mode: str = "error",
     compression: str = DEFAULT_COMPRESSION,
     max_rows_per_file: int | None = None,
     partition_by: list[str] | None = None,
@@ -166,6 +166,8 @@ def publish_staged(spark: SparkSession, w: DataFrameWriter, root: str) -> list[s
     root = root.rstrip("/")
     token = uuid.uuid4().hex[:12]
     staging = f"{root}/_staging_{token}"
+    # error mode: a retry never saves into a half-written staging dir
+    w = w.mode("error")
     for attempt in (1, 2):
         try:
             w.save(staging)
@@ -399,7 +401,7 @@ class Writer:
         from pydala2_spark.plans.fs import path_exists
 
         if mode == "append":
-            publish_staged(self.spark, w.mode("error"), self.path)
+            publish_staged(self.spark, w, self.path)
             return
         pre_existing = mode == "ignore" and path_exists(self.spark, self.path)
         w = w.mode(mode)

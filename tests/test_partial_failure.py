@@ -93,26 +93,44 @@ def test_append_publish_failure_surfaces_partial_write_error(
 def test_snapshot_commit_move_failure_publishes_no_version(spark, tmp_ds_path, monkeypatch):
     """Snapshot commits publish through the append's staged step: a
     move that fails raises the same PartialWriteError, no manifest is
-    published, and readers stay on the previous version."""
+    published and readers stay on the previous version. No manifest
+    can adopt the files left staged, so the staging dir is deleted;
+    the file already moved is an orphan that vacuum removes."""
     import pydala2_spark.plans.fs as fs
     from pydala2_spark.plans.snapshots import SnapshotDataset
 
     ds = SnapshotDataset(spark, tmp_ds_path)
     ds.commit(spark.createDataFrame([(1, "a")], "id long, v string"))
 
-    def failing_rename(spark_, src, dst):
-        raise IOError("injected publish failure")
+    real_rename, calls = fs.rename, []
 
-    monkeypatch.setattr(fs, "rename", failing_rename)
+    def failing_second_rename(spark_, src, dst):
+        calls.append(src)
+        if len(calls) > 1:
+            raise IOError("injected publish failure")
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fs, "rename", failing_second_rename)
     with pytest.raises(PartialWriteError) as ei:
-        ds.commit(spark.createDataFrame([(2, "b")], "id long, v string"))
+        # two partition values: two staged files in two directories
+        two = spark.createDataFrame([(2, "b"), (3, "c")], "id long, v string")
+        ds.commit(two, partition_by=["v"])
     monkeypatch.undo()
 
     err = ei.value
-    assert err.files == [] and "/_staging_" in err.staging_dir
-    assert fs.list_files(spark, err.staging_dir), "unmoved files stay staged"
+    assert len(err.files) == 1 and err.staging_dir is None
+    assert not [d for d in fs.child_dirs(spark, tmp_ds_path) if d.startswith("_staging_")]
     assert ds.versions() == [1]
     assert sorted((r["id"], r["v"]) for r in ds.read().collect()) == [(1, "a")]
+
+    def data_files():
+        listed = fs.rel_statuses(spark, tmp_ds_path)
+        return sorted(rel for rel, _, _, _ in listed if rel.endswith(".parquet"))
+
+    v1 = ds._read_manifest(1)["files"]
+    assert len(data_files()) == len(v1) + 1, "the moved file is an orphan until vacuum"
+    ds.vacuum(orphan_grace_seconds=0)
+    assert data_files() == v1
 
 
 def test_error_mode_not_retried(spark, tmp_ds_path):
